@@ -605,7 +605,7 @@ object Bench {
     // space + 20M background edges. Unsalted, the hub's whole adjacency
     // lands in ONE CSR block (~16x the median block — a straggler task
     // while the other cores idle); salted at threshold 2M it splits
-    // across k=5 pid slots. Same gatherSum, same result, timed both ways.
+    // across k=5 pid slots. Same sum scan, same result, timed both ways.
     if (full && budgetLeft(0.8)) safe("skew_salting") {
       import graft.graph.EdgeBlocks
       val p = spark.sparkContext.defaultParallelism
@@ -625,25 +625,25 @@ object Bench {
       // state values are 1.0 and every per-dst sum is an exact
       // integer-valued double (< 2^53), so the total is order-independent
       // and the salted/unsalted checksums compare EXACTLY.
-      def gatherChk(blocks: org.apache.spark.sql.Dataset[
-          EdgeBlocks.EdgeBlock], salts: Option[DataFrame]): (Double, Double) =
+      def gatherChk(csr: EdgeBlocks.CsrGraph): (Double, Double) =
         time {
-          EdgeBlocks.gatherSum(blocks, state, p, salts)
-            .agg(sum(col("sum_value"))).head().getDouble(0)
+          EdgeBlocks.scan(csr, EdgeBlocks.Combine.Sum, state, p)
+            .agg(sum(col("msg"))).head().getDouble(0)
         }.swap
-      val plain = EdgeBlocks.build(edges, p).persist()
-      plain.count()
-      val (tPlain, chkPlain) =
-        Seq.fill(3)(gatherChk(plain, None)).minBy(_._1)
+      def packed(salts: Option[DataFrame]) = {
+        val b = EdgeBlocks.build(edges, p, salts).persist()
+        b.count()
+        EdgeBlocks.CsrGraph(b, salts)
+      }
+      val plain = packed(None)
+      val (tPlain, chkPlain) = Seq.fill(3)(gatherChk(plain)).minBy(_._1)
       plain.unpersist()
       val salts = EdgeBlocks.hubSalts(edges, 2000000L, p)
       val k = salts.map(_.where(col("vid") === 0L).head().getInt(1))
         .getOrElse(1)
-      val salted = EdgeBlocks.build(edges, p, salts).persist()
-      salted.count()
-      val (tSalted, chkSalted) =
-        Seq.fill(3)(gatherChk(salted, salts)).minBy(_._1)
-      salted.unpersist(); salts.foreach(_.unpersist())
+      val salted = packed(salts)
+      val (tSalted, chkSalted) = Seq.fill(3)(gatherChk(salted)).minBy(_._1)
+      salted.unpersist()
       edges.unpersist(); state.unpersist()
       fields("skew_salting") =
         s"""{"edges":$ne,"hub_degree":$hubDeg,"salt_k":$k,""" +

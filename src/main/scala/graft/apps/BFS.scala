@@ -1,6 +1,7 @@
 package graft.apps
 
-import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.SimpleGraph
+import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -26,12 +27,9 @@ object BFS {
       else spark.sessionState.conf.numShufflePartitions
     val maxRounds = math.min(depthLimit.toLong, 10000L).toInt
 
-    val tier = Strategy.tier(g.numVertices)
-    val bcast = tier == Strategy.Broadcast
-    lazy val edges = g.preparedEdges("dir", g.edges.select("src", "dst"),
-      if (bcast) "dst" else "src", p)
-    lazy val csr =
-      g.preparedBlocks("csr", g.edges.select("src", "dst"), p)
+    // min over a constant-1 state = "dsts with at least one frontier
+    // in-neighbor"
+    val gather = g.gather("dir", Combine.Min, g.numVertices, p)
 
     // state: (vid, depth [-1 = unreached], _changed = in current frontier)
     val init = g.vertices.select(
@@ -44,17 +42,8 @@ object BFS {
       init, maxRounds,
       step = (state, round, prevChanged) => {
         val frontier = state.where(col("_changed") === 1)
-          .select(col("vid").as("src"))
-        val reached =
-          if (tier == Strategy.CsrGather)
-            // gatherMin over a constant-1 state = "dsts with at least one
-            // frontier in-neighbor" — the edge blocks never move
-            graft.graph.EdgeBlocks.gatherMin(csr.blocks,
-              frontier.select(col("src").as("vid"), lit(1L).as("value")),
-              p, csr.salts).select(col("vid"))
-          else edges
-            .join(Strategy.frontier(frontier, bcast, prevChanged), "src")
-            .select(col("dst").as("vid")).distinct()
+          .select(col("vid"), lit(1L).as("value"))
+        val reached = gather(frontier, prevChanged).select(col("vid"))
         state.join(reached.withColumn("hit", lit(1)), Seq("vid"), "left")
           .select(
             col("vid"),

@@ -1,6 +1,7 @@
 package graft.apps
 
-import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.SimpleGraph
+import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -34,19 +35,10 @@ object CDLP {
     val p = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
 
-    val tier = Strategy.tier(g.numVertices)
-    val bcast = tier == Strategy.Broadcast
-    val bothTag = if (!g.directed) "dir" else "both"
-    lazy val edges = g.preparedEdges(bothTag,
-      g.bothDirections.select("src", "dst"),
-      if (bcast) "dst" else "src", p)
-    // CSR tier (10^9+ vertices): the in+out adjacency is packed once into
-    // partition-local blocks; per round only P label bundles move and the
-    // per-(dst, label) counts come back pre-combined per block
-    // (EdgeBlocks.gatherLabelCount), so the big groupBy(dst, label) never
-    // sees |E| rows.
-    lazy val csr = g.preparedBlocks(s"$bothTag-csr",
-      g.bothDirections.select("src", "dst"), p)
+    // Per-(dst, label) counts over the in+out adjacency; at the CSR tier
+    // they come back pre-combined per block, so the big
+    // groupBy(dst, label) never sees |E| rows.
+    val gather = g.gather("both", Combine.LabelCount, g.numVertices, p)
 
     val init = g.vertices.select(col("vid"), col("vid").as("label"))
       .repartition(p, col("vid"))
@@ -55,15 +47,8 @@ object CDLP {
       init, maxRound,
       step = (state, _) => {
         val counts =
-          if (tier == Strategy.CsrGather)
-            graft.graph.EdgeBlocks.gatherLabelCount(csr.blocks,
-              state.select(col("vid"), col("label")), p, csr.salts)
-          else edges
-            .join(Strategy.state(
-              state.select(col("vid").as("src"), col("label")), bcast),
-              "src")
-            .groupBy(col("dst").as("vid"), col("label"))
-            .agg(count(lit(1)).as("cnt"))
+          gather(state.select(col("vid"), col("label").as("value")), -1L)
+            .select(col("vid"), col("label"), col("msg").as("cnt"))
         val pick = counts
           .groupBy(col("vid"))
           .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))

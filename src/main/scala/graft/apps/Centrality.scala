@@ -1,33 +1,12 @@
 package graft.apps
 
-import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.SimpleGraph
+import graft.graph.EdgeBlocks.Combine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Degree / eigenvector / Katz centrality, reference semantics. */
 object Centrality {
-
-  /** Per-round Σ_{in-nbr} state message — the gatherSum shape every power
-    * iteration (eigenvector, Katz, HITS) shares, tier-dispatched like
-    * PageRank: broadcast state / co-partitioned shuffle / CSR block gather
-    * at 10^9+ vertices (EdgeBlocks.gatherSum — P state bundles move, the
-    * edges never reshuffle). Output columns: (vid, mx). */
-  private[apps] def sumMsgs(
-      tier: Strategy.Tier,
-      edges: => DataFrame,
-      csr: => graft.graph.EdgeBlocks.CsrGraph,
-      state: DataFrame,
-      valueCol: String,
-      p: Int): DataFrame =
-    if (tier == Strategy.CsrGather)
-      graft.graph.EdgeBlocks.gatherSum(csr.blocks,
-        state.select(col("vid"), col(valueCol).as("value")), p, csr.salts)
-        .select(col("vid"), col("sum_value").as("mx"))
-    else edges
-      .join(Strategy.state(
-        state.select(col("vid").as("src"), col(valueCol)),
-        tier == Strategy.Broadcast), "src")
-      .groupBy(col("dst").as("vid")).agg(sum(col(valueCol)).as("mx"))
 
   /** Degree centrality = degree/(n-1)
     * (apps/centrality/degree/degree_centrality.h; in/out/both variants per
@@ -61,12 +40,8 @@ object Centrality {
     val spark = g.spark
     val p = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val tier = Strategy.tier(g.numVertices)
-    val bcast = tier == Strategy.Broadcast
-    lazy val edges = g.preparedEdges("dir", g.edges.select("src", "dst"),
-      if (bcast) "dst" else "src", p)
-    lazy val csr = g.preparedBlocks("csr", g.edges.select("src", "dst"), p)
     val n = g.numVertices.toDouble
+    val gather = g.gather("dir", Combine.Sum, n.toLong, p)
 
     var state = g.vertices.select(col("vid"), lit(1.0 / n).as("x"))
       .repartition(p, col("vid")).localCheckpoint(true)
@@ -75,7 +50,8 @@ object Centrality {
     var lastCk: DataFrame = null
     while (!done && round < maxRound) {
       round += 1
-      val msgs = Centrality.sumMsgs(tier, edges, csr, state, "x", p)
+      val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
+        .select(col("vid"), col("msg").as("mx"))
       // one materialization per round; norm/delta are aggs over it
       val raw = state.join(msgs, Seq("vid"), "left").select(
         col("vid"), col("x").as("x_last"),
@@ -109,12 +85,8 @@ object Centrality {
     val spark = g.spark
     val p = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val tier = Strategy.tier(g.numVertices)
-    val bcast = tier == Strategy.Broadcast
-    lazy val edges = g.preparedEdges("dir", g.edges.select("src", "dst"),
-      if (bcast) "dst" else "src", p)
-    lazy val csr = g.preparedBlocks("csr", g.edges.select("src", "dst"), p)
     val n = g.numVertices.toDouble
+    val gather = g.gather("dir", Combine.Sum, n.toLong, p)
 
     var state = g.vertices.select(col("vid"), lit(0.0).as("x"))
       .repartition(p, col("vid")).localCheckpoint(true)
@@ -124,7 +96,8 @@ object Centrality {
     var lastCk: DataFrame = null
     while (!done && round < maxRound) {
       round += 1
-      val msgs = Centrality.sumMsgs(tier, edges, csr, state, "x", p)
+      val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
+        .select(col("vid"), col("msg").as("mx"))
       val next = state.join(msgs, Seq("vid"), "left").select(
         col("vid"), col("x").as("x_last"),
         (lit(alpha) * coalesce(col("mx"), lit(0.0)) + lit(beta)).as("x"))

@@ -1,6 +1,7 @@
 package graft.apps
 
-import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.SimpleGraph
+import graft.graph.EdgeBlocks.Combine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,16 +33,10 @@ object HITS {
       else spark.sessionState.conf.numShufflePartitions
 
     val n = g.numVertices.toDouble
-    val tier = Strategy.tier(n.toLong)
-    val bcast = tier == Strategy.Broadcast
-    val key = if (bcast) "dst" else "src"
-    lazy val edges =
-      g.preparedEdges("dir", g.edges.select("src", "dst"), key, p)
-    lazy val revEdges = g.preparedEdges("rev",
-      g.edges.select(col("dst").as("src"), col("src").as("dst")), key, p)
-    lazy val csr = g.preparedBlocks("csr", g.edges.select("src", "dst"), p)
-    lazy val revCsr = g.preparedBlocks("rev-csr",
-      g.edges.select(col("dst").as("src"), col("src").as("dst")), p)
+    // auth(u) = sum of hub over in-neighbors: flow src->dst on the edges;
+    // hub(u) = sum of auth over out-neighbors: flow dst->src (reversed).
+    val toAuth = g.gather("dir", Combine.Sum, n.toLong, p)
+    val toHub = g.gather("rev", Combine.Sum, n.toLong, p)
 
     var state = g.vertices.select(col("vid"),
       lit(1.0 / n).as("hub"), lit(0.0).as("auth"))
@@ -52,15 +47,15 @@ object HITS {
     var done = false
     var lastCk: org.apache.spark.sql.DataFrame = null
     while (!done && step < maxRound) {
-      // auth(u) = sum of hub over in-neighbors: flow src->dst on edges.
-      val authMsgs = Centrality.sumMsgs(tier, edges, csr, state, "hub", p)
-        .select(col("vid"), col("mx").as("na"))
+      val authMsgs =
+        toAuth(state.select(col("vid"), col("hub").as("value")), -1L)
+          .select(col("vid"), col("msg").as("na"))
       val s1 = state.join(authMsgs, Seq("vid"), "left").select(
         col("vid"), col("hub").as("hub_last"),
         coalesce(col("na"), lit(0.0)).as("auth"))
-      // hub(u) = sum of auth over out-neighbors: flow dst->src (revEdges).
-      val hubMsgs = Centrality.sumMsgs(tier, revEdges, revCsr, s1, "auth", p)
-        .select(col("vid"), col("mx").as("nh"))
+      val hubMsgs =
+        toHub(s1.select(col("vid"), col("auth").as("value")), -1L)
+          .select(col("vid"), col("msg").as("nh"))
       // ONE materialization per round; the max/eps scalars and the
       // normalized state are cheap projections over the checkpointed frame.
       val s2 = s1.join(hubMsgs, Seq("vid"), "left").select(

@@ -1,6 +1,7 @@
 package graft.apps
 
-import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.SimpleGraph
+import graft.graph.EdgeBlocks.Combine
 import graft.pregel.Iterate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -34,12 +35,7 @@ object KShell {
     val spark = g.spark
     val p = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val tier = Strategy.tier(g.numVertices)
-    val bcast = tier == Strategy.Broadcast
-    val undTag = if (g.simpleEdges && !g.directed) "dir" else "und"
-    lazy val edges = g.preparedEdges(undTag, g.undirectedDedup,
-      if (bcast) "dst" else "src", p)
-    lazy val csr = g.preparedBlocks(s"csr-$undTag", g.undirectedDedup, p)
+    val gather = g.gather("und", Combine.Collect, g.numVertices, p)
 
     val init = g.undirectedDegrees
       .select(col("vid"), col("deg").cast("long").as("core"))
@@ -56,17 +52,8 @@ object KShell {
       init, maxRounds,
       step = (state, _) => {
         val nbrEst =
-          if (tier == Strategy.CsrGather)
-            graft.graph.EdgeBlocks.gatherCollect(csr.blocks,
-              state.select(col("vid"), col("core").as("value")), p,
-              csr.salts)
-              .select(col("vid"), col("values").as("ests"))
-          else edges
-            .join(Strategy.state(
-              state.select(col("vid").as("src"), col("core")), bcast),
-              "src")
-            .groupBy(col("dst").as("vid"))
-            .agg(collect_list(col("core")).as("ests"))
+          gather(state.select(col("vid"), col("core").as("value")), -1L)
+            .select(col("vid"), col("msg").as("ests"))
         state.join(nbrEst, Seq("vid"), "left").select(
           col("vid"),
           when(col("ests").isNull, lit(0L))

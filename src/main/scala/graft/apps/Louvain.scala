@@ -1,6 +1,6 @@
 package graft.apps
 
-import graft.graph.SimpleGraph
+import graft.graph.{EdgeBlocks, SimpleGraph, Strategy}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -109,36 +109,33 @@ object Louvain {
       .localCheckpoint(true)
     val spark = edges.sparkSession
     val nNodes = k.count()
-    val tier = graft.graph.Strategy.tier(nNodes)
+    val tier = Strategy.tier(nNodes)
     // commTot is one row per community (≤ one per vertex, shrinking every
     // round) — on the giant-community tail of phase 1 the scored join
     // keyed by community id concentrates on few keys, so broadcast the
     // community-totals side whenever the working graph is small enough
     // (same tier threshold as the superstep apps); past that size the
     // sort-merge join with AQE-less fixed shape is the scale-safe default.
-    val hintCommTot = tier == graft.graph.Strategy.Broadcast
-    // CSR tier (10^9+ working-graph vertices — i.e. level 0 of the full
-    // link graph): the per-round edges ⋈ assign join re-sorts and moves
-    // the weighted edge relation every move round; pack it once into
-    // weighted CSR blocks instead and gather neighbor-community weight
-    // sums with only (vid, comm) bundles and (vid, comm, w) partials on
-    // the wire. Tier equality is EXACT, not approximate: Louvain weights
+    val hintCommTot = tier == Strategy.Broadcast
+    val p = spark.sessionState.conf.numShufflePartitions
+    // w(v -> c) per round: a label-sum gather of the neighbors' community
+    // over the weighted working edges. The working graph changes every
+    // level, so its CSR blocks (packed only at the CsrGather tier — level
+    // 0 of a 10^9+-vertex link graph) live for this phase: the weighted
+    // edge relation then never moves or re-sorts per round, and only
+    // (vid, comm) bundles and (vid, comm, w) partials are on the wire.
+    // Giant-community hubs are exactly the skew Louvain concentrates as
+    // phase 1 progresses, so the blocks are hub-salted like every CSR
+    // build. Tier equality is EXACT, not approximate: Louvain weights
     // stay integral through contraction, so per-block partial sums hit
     // the same integer-valued doubles in any addition order (within
-    // 2^53) and the move argmax is unchanged (LouvainSpec forces the
+    // 2^53) and the move argmax is unchanged (LouvainSpec forces each
     // tier and asserts identical assignments).
-    val useCsr = tier == graft.graph.Strategy.CsrGather
-    val p = spark.sessionState.conf.numShufflePartitions
-    val (wBlocks, wSalts) = if (useCsr) {
-      val e = edges.select(col("src"), col("dst"), col("w").as("weight"))
-      // Giant-community hubs are exactly the skew Louvain concentrates as
-      // phase 1 progresses — salt high-degree srcs like every CSR build.
-      val salts = graft.graph.EdgeBlocks.hubSalts(
-        e, graft.graph.EdgeBlocks.saltThreshold, p)
-      val b = graft.graph.EdgeBlocks.buildWeighted(e, p, salts).persist()
-      b.count() // materialize once; rounds reuse the cached blocks
-      (b, salts)
-    } else (null, None)
+    val wEdges = edges.select(col("src"), col("dst"), col("w").as("weight"))
+    var packed: Option[EdgeBlocks.CsrGraph] = None
+    val nbrGather = EdgeBlocks.superstep(tier, EdgeBlocks.Combine.LabelSum,
+      p, _ => wEdges, {
+        val b = EdgeBlocks.pack(wEdges, p); packed = Some(b); b })
     var round = 0
     // Moves are parity-gated (odd rounds move only to smaller comm ids,
     // even only to larger), so one zero-move round only proves the ALLOWED
@@ -150,19 +147,10 @@ object Louvain {
       round += 1
       val commTot = assign.groupBy("comm").agg(sum(col("k")).as("tot"))
       // w(v -> c) over real neighbor edges. The edges are symmetric, so
-      // gathering src-labels to dst over the blocks equals gathering
-      // dst-labels to src — the same relation the join path builds.
+      // gathering src labels to dst equals gathering dst labels to src.
       val nbrW =
-        if (useCsr)
-          graft.graph.EdgeBlocks.gatherLabelSum(wBlocks,
-            assign.select(col("vid"), col("comm").as("label")), p, wSalts)
-            .select(col("vid"), col("label").as("c"),
-              col("sum_w").as("wvc"))
-        else edges
-          .join(assign.select(col("vid").as("dst"), col("comm").as("c")),
-            "dst")
-          .groupBy(col("src").as("vid"), col("c"))
-          .agg(sum(col("w")).as("wvc"))
+        nbrGather(assign.select(col("vid"), col("comm").as("value")), -1L)
+          .select(col("vid"), col("label").as("c"), col("msg").as("wvc"))
       // Ensure the current community is always a candidate (wvc = 0 when
       // v has no neighbor inside it).
       val cands = nbrW
@@ -211,8 +199,7 @@ object Louvain {
       prevCk = next
       assign = next.drop("_moved")
     }
-    if (wBlocks != null) wBlocks.unpersist()
-    wSalts.foreach(_.unpersist())
+    packed.foreach(_.unpersist())
     assign.select("vid", "comm")
   }
 

@@ -1,6 +1,7 @@
 package graft.apps
 
-import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.SimpleGraph
+import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -41,17 +42,7 @@ object PageRank {
       else spark.sessionState.conf.numShufflePartitions
 
     val n = g.numVertices.toDouble
-    val tier = Strategy.tier(n.toLong)
-    val bcast = tier == Strategy.Broadcast
-    // bcast path: partition by dst once, so every round's groupBy(dst)
-    // aggregates in place with no exchange; shuffle path: partition by src
-    // so the per-round state join reuses the exchange instead; CSR path
-    // (10^9+ vertices) packs edges once into partition-local CSR blocks and
-    // per round ships only P state bundles (EdgeBlocks.gatherSum).
-    lazy val edges = g.preparedEdges("dir", g.edges.select("src", "dst"),
-      if (bcast) "dst" else "src", p)
-    lazy val csr =
-      g.preparedBlocks("csr", g.edges.select("src", "dst"), p)
+    val gather = g.gather("dir", Combine.Sum, n.toLong, p)
     val degrees = g.preparedOutDegrees(p) // cached (vid, deg)
     val danglingVnum =
       degrees.where(col("deg") === 0L).count().toDouble
@@ -72,16 +63,9 @@ object PageRank {
       step = (state, round) => {
         val base = bases(round)
         val contrib = state.where(col("deg") > 0)
-          .select(col("vid").as("src"), (col("rank") / col("deg")).as("c"))
-        val msgs =
-          if (tier == Strategy.CsrGather)
-            graft.graph.EdgeBlocks.gatherSum(csr.blocks,
-              contrib.select(col("src").as("vid"), col("c").as("value")),
-              p, csr.salts)
-              .select(col("vid"), col("sum_value").as("msum"))
-          else
-            edges.join(Strategy.state(contrib, bcast), "src")
-              .groupBy(col("dst").as("vid")).agg(sum(col("c")).as("msum"))
+          .select(col("vid"), (col("rank") / col("deg")).as("value"))
+        val msgs = gather(contrib, -1L)
+          .select(col("vid"), col("msg").as("msum"))
         state.join(msgs, Seq("vid"), "left").select(
           col("vid"), col("deg"),
           when(col("deg") === 0L, lit(base))

@@ -1,6 +1,7 @@
 package graft.apps
 
 import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,13 +29,7 @@ object SSSP {
     val p = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
 
-    val tier = Strategy.tier(g.numVertices)
-    val bcast = tier == Strategy.Broadcast
-    lazy val edges = g.preparedEdges("dirw",
-      g.edges.select("src", "dst", "weight"),
-      if (bcast) "dst" else "src", p)
-    lazy val csr = g.preparedWeightedBlocks("csrw",
-      g.edges.select("src", "dst", "weight"), p)
+    val gather = g.gather("dirw", Combine.MinPlus, g.numVertices, p)
 
     val inf = Double.MaxValue
     val init = g.vertices.select(
@@ -47,17 +42,9 @@ object SSSP {
       init, maxRounds,
       step = (state, _, prevChanged) => {
         val frontier = state.where(col("_changed") === 1)
-          .select(col("vid").as("src"), col("dist"))
-        val relax =
-          if (tier == Strategy.CsrGather)
-            graft.graph.EdgeBlocks.gatherMinPlus(csr.blocks,
-              frontier.select(col("src").as("vid"),
-                col("dist").as("value")), p, csr.salts)
-              .select(col("vid"), col("min_value").as("nd"))
-          else edges
-            .join(Strategy.frontier(frontier, bcast, prevChanged), "src")
-            .groupBy(col("dst").as("vid"))
-            .agg(min(col("dist") + col("weight")).as("nd"))
+          .select(col("vid"), col("dist").as("value"))
+        val relax = gather(frontier, prevChanged)
+          .select(col("vid"), col("msg").as("nd"))
         state.join(relax, Seq("vid"), "left").select(
           col("vid"),
           least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
@@ -143,7 +130,8 @@ object SSSP {
       step = (state, _) => {
         val frontier = state.where(col("_changed") === 1)
           .select(col("vid").as("src"), col("source"), col("dist"))
-        val relax = edges.join(Strategy.state(frontier, bcast), "src")
+        val relax = edges
+          .join(Strategy.frontier(frontier, bcast, -1L), "src")
           .groupBy(col("dst").as("vid"), col("source"))
           .agg(min(col("dist") + col("weight")).as("nd"))
         state.join(relax, Seq("vid", "source"), "left").select(

@@ -1,6 +1,7 @@
 package graft.apps
 
-import graft.graph.{SimpleGraph, Strategy}
+import graft.graph.SimpleGraph
+import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -41,13 +42,7 @@ object WCC {
     val p = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
 
-    val tier = Strategy.tier(g.numVertices)
-    val bcast = tier == Strategy.Broadcast
-    val undTag = if (g.simpleEdges && !g.directed) "dir" else "und"
-    lazy val edges = g.preparedEdges(undTag, g.undirectedDedup,
-      if (bcast) "dst" else "src", p)
-    lazy val csr =
-      g.preparedBlocks(s"csr-$undTag", g.undirectedDedup, p)
+    val gather = g.gather("und", Combine.Min, g.numVertices, p)
 
     // state: (vid, comp, _changed); round 0 = PEval: everyone "changed".
     val init = g.vertices
@@ -58,17 +53,9 @@ object WCC {
       init, maxRounds,
       step = (state, _, prevChanged) => {
         val frontier = state.where(col("_changed") === 1)
-          .select(col("vid").as("src"), col("comp"))
-        val msgs =
-          if (tier == Strategy.CsrGather)
-            graft.graph.EdgeBlocks.gatherMin(csr.blocks,
-              frontier.select(col("src").as("vid"),
-                col("comp").as("value")), p, csr.salts)
-              .select(col("vid"), col("min_value").as("mc"))
-          else
-            edges
-              .join(Strategy.frontier(frontier, bcast, prevChanged), "src")
-              .groupBy(col("dst").as("vid")).agg(min(col("comp")).as("mc"))
+          .select(col("vid"), col("comp").as("value"))
+        val msgs = gather(frontier, prevChanged)
+          .select(col("vid"), col("msg").as("mc"))
         state.join(msgs, Seq("vid"), "left").select(
           col("vid"),
           least(col("comp"), coalesce(col("mc"), col("comp"))).as("comp"),

@@ -1,47 +1,132 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
-/** Partition-local CSR adjacency blocks (north rule): each row holds one
-  * partition's compressed adjacency — the Spark re-expression of the
-  * reference fragment's `ie_offsets_begin/end` + flat `NbrUnit` arrays
-  * (analytical_engine/core/fragment/arrow_projected_fragment.h:431-470).
+/** The superstep gather, and the partition-local CSR adjacency blocks its
+  * largest tier runs on.
   *
+  * Every superstep app gathers messages along edges and combines them per
+  * vertex (the reference's IncEval plus message combiner). [[superstep]]
+  * is that step, keyed by a [[Combine]]; it owns the tier choice of
+  * [[Strategy]]: at the Broadcast and Shuffle tiers it plans
+  * `edges ⋈ state → groupBy(dst[, label]).agg(…)`, at the CsrGather tier
+  * it runs [[scan]] over the blocks.
+  *
+  * Blocks (north rule): each row holds one partition's compressed
+  * adjacency — the Spark re-expression of the reference fragment's
+  * `ie_offsets_begin/end` + flat `NbrUnit` arrays
+  * (analytical_engine/core/fragment/arrow_projected_fragment.h:431-470).
   * Edges are hash-partitioned by src (pid = pmod(xxhash64(src), P), the
   * role of the reference's vid_parser fid bits), sorted, and packed once;
-  * a gather-sum superstep then joins P state-bundles against P block rows
-  * (a P-row join, not an |E|-row join) and scans arrays locally — the
-  * edge table is never reshuffled per iteration.
+  * a gather then joins P state-bundles against P block rows (a P-row join,
+  * not an |E|-row join) and scans arrays locally — the edge table is never
+  * reshuffled per iteration.
   *
   * Neighbor ids are stored densified per block (`dstIndex` into the sorted
-  * `dstUnique`), so the per-superstep gather accumulates into a flat
-  * primitive double array — no hash map, no boxing, in the |E| loop
-  * (the r1 HashMap.merge formulation was ~30x slower than the join path;
-  * this one is array arithmetic, like the reference's dense
-  * `vertex_array_t` accumulators).
+  * `dstUnique`), so the per-superstep gather accumulates into flat
+  * primitive arrays — no hash map, no boxing, in the |E| loop (the r1
+  * HashMap.merge formulation was ~30x slower than the join path; this one
+  * is array arithmetic, like the reference's dense `vertex_array_t`
+  * accumulators).
   */
 object EdgeBlocks {
 
+  /** One pid's CSR adjacency. `weights` runs parallel to `dstIndex` on a
+    * weighted build (the reference's NbrUnit carries eid -> edata the same
+    * way) and is empty otherwise. */
   final case class EdgeBlock(
       pid: Int,
       srcIds: Array[Long],     // distinct sorted srcs in this partition
       dstOffsets: Array[Int],  // len = srcIds.length + 1 (CSR offsets)
       dstIndex: Array[Int],    // flat neighbor array, densified
-      dstUnique: Array[Long])  // sorted distinct dsts; dstUnique(dstIndex(j))
-
-  final case class VertexValue(vid: Long, value: Double)
-  final case class Partial(vid: Long, partial: Double)
+      dstUnique: Array[Long],  // sorted distinct dsts; dstUnique(dstIndex(j))
+      weights: Array[Double])
 
   /** Blocks + the salt table they were built with (pass both to gathers;
     * a salt table from a different build routes bundles to wrong pids). */
   final case class CsrGraph(
-      blocks: Dataset[EdgeBlock], salts: Option[DataFrame])
-  final case class WeightedCsrGraph(
-      blocks: Dataset[WeightedEdgeBlock], salts: Option[DataFrame])
+      blocks: Dataset[EdgeBlock], salts: Option[DataFrame]) {
+    def unpersist(): Unit = {
+      blocks.unpersist(); salts.foreach(_.unpersist())
+    }
+  }
 
-  def pidOf(c: org.apache.spark.sql.Column, p: Int) =
+  /** How a gather combines what a vertex receives. The state is
+    * (vid, value); every edge src -> dst whose src has a state row sends
+    * value(src) — plus the edge weight for MinPlus — and the result holds
+    * one row per receiving dst, or per (dst, value(src)) for the label
+    * combines:
+    *
+    *   Sum         (vid, msg: double)               Σ value
+    *   Min         (vid, msg: long)                 min value
+    *   MinPlus     (vid, msg: double)               min (value + weight)
+    *   Collect     (vid, msg: array<long>)          every value
+    *   LabelCount  (vid, label: long, msg: long)    count of edges
+    *   LabelSum    (vid, label: long, msg: double)  Σ weight
+    *
+    * Each equals `edges ⋈ state → groupBy(dst[, label]).agg(…)`, duplicate
+    * state vids included (every duplicate row joins every edge). */
+  sealed abstract class Combine(
+      private[graph] val valueType: String,
+      val byLabel: Boolean,
+      val weighted: Boolean) extends Product with Serializable
+
+  object Combine {
+    case object Sum extends Combine("double", false, false)
+    case object Min extends Combine("long", false, false)
+    case object MinPlus extends Combine("double", false, true)
+    case object Collect extends Combine("long", false, false)
+    case object LabelCount extends Combine("long", true, false)
+    case object LabelSum extends Combine("long", true, true)
+  }
+  import Combine._
+
+  /** One superstep's gather: (state, frontierRows) => messages, where
+    * `frontierRows` is the state's row count when the caller knows it
+    * (frontier apps pass last round's change count) and -1 otherwise. */
+  type Gather = (DataFrame, Long) => DataFrame
+
+  /** The gather over one edge view (src, dst [, weight]) for a whole run,
+    * at a tier decided once. `edges(key)` returns the view placed
+    * (hash-partitioned and cached) by `key`; `blocks` packs it into CSR
+    * blocks. Both are forced on the first round that needs them.
+    *
+    *   - Broadcast: the view is placed by dst, so the groupBy(dst)
+    *     aggregates in place, and the state is broadcast — one map-side
+    *     hash join plus one tiny exchange of partial aggregates.
+    *   - Shuffle: the view is placed by src, so the state join reuses the
+    *     placement; small frontiers are still broadcast
+    *     ([[Strategy.frontier]]).
+    *   - CsrGather: [[scan]] over the blocks.
+    */
+  def superstep(tier: Strategy.Tier, c: Combine, p: Int,
+      edges: String => DataFrame, blocks: => CsrGraph): Gather =
+    if (tier == Strategy.CsrGather) {
+      lazy val csr = blocks
+      (state, _) => scan(csr, c, state, p)
+    } else {
+      val bcast = tier == Strategy.Broadcast
+      lazy val placed = edges(if (bcast) "dst" else "src")
+      val keys = col("dst").as("vid") +:
+        (if (c.byLabel) Seq(col("value").as("label")) else Nil)
+      val msg = c match {
+        case Sum => sum(col("value"))
+        case Min => min(col("value"))
+        case MinPlus => min(col("value") + col("weight"))
+        case Collect => collect_list(col("value"))
+        case LabelCount => count(lit(1))
+        case LabelSum => sum(col("weight"))
+      }
+      (state, frontierRows) => placed
+        .join(Strategy.frontier(state.select(col("vid").as("src"),
+          col("value").cast(c.valueType).as("value")), bcast, frontierRows),
+          "src")
+        .groupBy(keys: _*).agg(msg.as("msg"))
+    }
+
+  def pidOf(c: Column, p: Int): Column =
     pmod(xxhash64(c), lit(p)).cast("int")
 
   // ---------------------------------------------------------------------
@@ -53,10 +138,9 @@ object EdgeBlocks {
   // adjacency across k = ceil(deg/threshold) pid slots —
   // pid_i = (pid_base + i) mod p for i in [0, k) — and the state-bundle
   // router replicates that ONE state row to the same k slots, so every
-  // gather sees a consistent (block, bundle) pairing. All six gathers
-  // merge per-block partials with an associative groupBy (sum/min/
-  // flatten/label-sum), which is exactly why splitting a src across
-  // blocks is semantics-transparent.
+  // gather sees a consistent (block, bundle) pairing. The final merge of
+  // per-block partials is an associative groupBy (sum/min/flatten), which
+  // is exactly why splitting a src across blocks is semantics-transparent.
   //
   // The pid arithmetic stays in [0, 2p) before the final pmod — never
   // raw xxhash64 + chunk, which can overflow Long under ANSI mode.
@@ -66,12 +150,11 @@ object EdgeBlocks {
 
   /** Salt-table default: split a src only when its out-degree exceeds 8M
     * edges (a meaningful fraction of a 10^12/32k ≈ 3e7-edge block; at
-    * test scale nothing triggers). Override with GRAFT_SALT_THRESHOLD /
-    * -Dgraft.salt.threshold for benches and specs. */
+    * test scale nothing triggers). Override with -Dgraft.salt.threshold
+    * for benches and specs. */
   def saltThreshold: Long =
-    sys.env.get("GRAFT_SALT_THRESHOLD")
-      .orElse(sys.props.get("graft.salt.threshold"))
-      .map(_.toLong).getOrElse(8L * 1000 * 1000)
+    sys.props.get("graft.salt.threshold").map(_.toLong)
+      .getOrElse(8L * 1000 * 1000)
 
   /** (vid, k) for every src whose out-degree exceeds `threshold`:
     * k = min(ceil(deg/threshold), p) pid slots. One degree aggregation at
@@ -109,74 +192,74 @@ object EdgeBlocks {
         .drop("k")
   }
 
-  /** State-side routing: a (vid, value) state row goes to pid slot(s)
+  /** State-side routing: a (vid, lv, dv) state row goes to pid slot(s)
     * (base + i) mod p for i in [0, k) — one row for normal vertices, k
-    * replicas for salted hubs — then bundles per pid. Shared by all six
-    * gathers. */
+    * replicas for salted hubs — then bundles per pid. */
   private def bundleState(st: DataFrame, p: Int, salts: Option[DataFrame])
       : DataFrame = {
+    val row = Seq(col("vid"), col("lv"), col("dv"))
     val routed = salts match {
       case None =>
-        st.select(pidOf(col("vid"), p).as("pid"), col("vid"), col("value"))
+        st.select(pidOf(col("vid"), p).as("pid") +: row: _*)
       case Some(s) =>
         st.join(broadcast(s), Seq("vid"), "left")
-          .select(col("vid"), col("value"),
-            explode(sequence(lit(0), coalesce(col("k"), lit(1)) - 1))
-              .as("i"))
+          .select(row :+ explode(sequence(lit(0),
+            coalesce(col("k"), lit(1)) - 1)).as("i"): _*)
           .select(
             pmod(pmod(xxhash64(col("vid")), lit(p)) + col("i").cast("long"),
-              lit(p)).cast("int").as("pid"),
-            col("vid"), col("value"))
+              lit(p)).cast("int").as("pid") +: row: _*)
     }
-    routed.groupBy("pid")
-      .agg(collect_list(struct(col("vid"), col("value"))).as("vals"))
+    routed.groupBy("pid").agg(collect_list(struct(row: _*)).as("vals"))
   }
 
-  /** Pack an edge DataFrame (src, dst) into P CSR blocks — one block per
-    * pid. (repartition hashes the pid column, so one Spark partition can
-    * hold several pids; blocks therefore split on pid boundaries.)
-    * With `salts`, hub srcs' adjacency splits across their k pid slots —
-    * pass the SAME salt table to every gather over these blocks. */
+  /** Pack an edge DataFrame (src, dst [, weight]) into P CSR blocks — one
+    * block per pid; a `weight` column fills `weights`. (repartition hashes
+    * the pid column, so one Spark partition can hold several pids; blocks
+    * therefore split on pid boundaries.) With `salts`, hub srcs' adjacency
+    * splits across their k pid slots — pass the SAME salt table to every
+    * gather over these blocks. */
   def build(edges: DataFrame, p: Int,
       salts: Option[DataFrame] = None): Dataset[EdgeBlock] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    edgePid(salts, edges.select(col("src"), col("dst")), p)
-      .select(col("src"), col("dst"), col("pid"))
+    val weighted = edges.columns.contains("weight")
+    val w = if (weighted) col("weight").cast("double") else lit(0.0)
+    edgePid(salts, edges.select(col("src"), col("dst"), w.as("weight")), p)
+      .select(col("src"), col("dst"), col("weight"), col("pid"))
       .repartition(p, col("pid"))
       .sortWithinPartitions(col("pid"), col("src"), col("dst"))
-      .as[(Long, Long, Int)]
+      .as[(Long, Long, Double, Int)]
       .mapPartitions { it =>
         new Iterator[EdgeBlock] {
           private val buf = it.buffered
           def hasNext: Boolean = buf.hasNext
           def next(): EdgeBlock = {
-            val pid = buf.head._3
-            val srcs = mutable.ArrayBuffer[Long]()
-            val offs = mutable.ArrayBuffer[Int](0)
-            val dsts = mutable.ArrayBuffer[Long]()
+            val pid = buf.head._4
+            val srcs = mutable.ArrayBuilder.make[Long]
+            val offs = mutable.ArrayBuilder.make[Int]
+            val dsts = mutable.ArrayBuilder.make[Long]
+            val ws = mutable.ArrayBuilder.make[Double]
+            var n = 0
             var last = Long.MinValue
-            var started = false
-            while (buf.hasNext && buf.head._3 == pid) {
-              val (s, d, _) = buf.next()
-              if (!started || s != last) {
-                if (started) offs += dsts.length
-                srcs += s; last = s; started = true
-              }
+            while (buf.hasNext && buf.head._4 == pid) {
+              val (s, d, wt, _) = buf.next()
+              if (n == 0 || s != last) { offs += n; srcs += s; last = s }
               dsts += d
+              if (weighted) ws += wt
+              n += 1
             }
-            offs += dsts.length
+            offs += n
             // Densify neighbors: sorted unique dsts + per-edge index.
-            val flat = dsts.toArray
+            val flat = dsts.result()
             val uniq = {
               val a = flat.clone(); java.util.Arrays.sort(a)
-              var n = 0
+              var u = 0
               var i = 0
               while (i < a.length) {
-                if (n == 0 || a(n - 1) != a(i)) { a(n) = a(i); n += 1 }
+                if (u == 0 || a(u - 1) != a(i)) { a(u) = a(i); u += 1 }
                 i += 1
               }
-              java.util.Arrays.copyOf(a, n)
+              java.util.Arrays.copyOf(a, u)
             }
             val idx = new Array[Int](flat.length)
             var i = 0
@@ -184,7 +267,8 @@ object EdgeBlocks {
               idx(i) = java.util.Arrays.binarySearch(uniq, flat(i))
               i += 1
             }
-            EdgeBlock(pid, srcs.toArray, offs.toArray, idx, uniq)
+            EdgeBlock(pid, srcs.result(), offs.result(), idx, uniq,
+              ws.result())
           }
         }
       }
@@ -192,431 +276,186 @@ object EdgeBlocks {
       // per-round join would RESHUFFLE the whole multi-GB block relation
       // every superstep (measured: 10x slowdown). One extra build-time
       // exchange re-establishes HashPartitioning(pid) on the cached
-      // relation; gatherSum's bundle side arrives with the same
+      // relation; the bundle side of every scan arrives with the same
       // partitioning and the blocks never move again.
       .repartition(p, col("pid"))
   }
 
-  /** gather-sum: for a vertex-value table (vid, value), compute for every
-    * dst with at least one contributing src the sum of src values over the
-    * CSR blocks. Shuffles per call: one groupBy(pid) of the (small) vertex
-    * state and one groupBy(vid) of per-block partials — the edges stay
-    * put. Inside a block: merge-join the sorted state bundle against the
-    * sorted srcIds, accumulate into a flat double array indexed by the
-    * densified neighbor ids. */
-  def gatherSum(blocks: Dataset[EdgeBlock], state: DataFrame, p: Int,
-      salts: Option[DataFrame] = None): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val bundles = bundleState(
-      state.select(col("vid"), col("value").cast("double").as("value")),
-      p, salts)
-    blocks.toDF()
-      .join(bundles, "pid")
-      .as[(Int, Array[Long], Array[Int], Array[Int], Array[Long],
-        Array[VertexValue])]
-      .mapPartitions { it =>
-        it.flatMap { case (_, srcs, offs, idx, uniq, vals) =>
-          val sorted = vals.sortBy(_.vid)
-          val acc = new Array[Double](uniq.length)
-          val touched = new Array[Boolean](uniq.length)
-          var si = 0
-          var vi = 0
-          while (si < srcs.length && vi < sorted.length) {
-            val s = srcs(si)
-            val v = sorted(vi).vid
-            if (s < v) si += 1
-            else if (s > v) vi += 1
-            else {
-              // Fold an equal-vid run in the state (duplicate vids sum,
-              // matching what groupBy(vid).agg(sum) of the bundle would
-              // produce) before scanning the adjacency once.
-              var value = sorted(vi).value
-              vi += 1
-              while (vi < sorted.length && sorted(vi).vid == s) {
-                value += sorted(vi).value; vi += 1
-              }
-              var j = offs(si)
-              val end = offs(si + 1)
-              while (j < end) {
-                val k = idx(j)
-                acc(k) += value
-                touched(k) = true
-                j += 1
-              }
-              si += 1
-            }
-          }
-          val out = mutable.ArrayBuffer[Partial]()
-          var k = 0
-          while (k < uniq.length) {
-            if (touched(k)) out += Partial(uniq(k), acc(k))
-            k += 1
-          }
-          out.iterator
-        }
-      }
-      .groupBy("vid").agg(sum(col("partial")).as("sum_value"))
+  /** Salt, build, cache and materialize the blocks of an edge view. */
+  def pack(edges: DataFrame, p: Int): CsrGraph = {
+    val salts = hubSalts(edges, saltThreshold, p)
+    val b = build(edges, p, salts).persist()
+    b.count()
+    CsrGraph(b, salts)
   }
 
-  final case class VertexLongValue(vid: Long, value: Long)
-  final case class LongPartial(vid: Long, partial: Long)
+  /** A state row inside a bundle: the value rides in `lv` for the long
+    * combines and in `dv` for the double ones. */
+  final case class VertexValue(vid: Long, lv: Long, dv: Double)
 
-  /** CSR block with a per-edge weight array parallel to dstIndex (the
-    * reference's NbrUnit carries eid -> edata the same way,
-    * arrow_projected_fragment.h:431-470). */
-  final case class WeightedEdgeBlock(
-      pid: Int,
-      srcIds: Array[Long],
-      dstOffsets: Array[Int],
-      dstIndex: Array[Int],
-      dstUnique: Array[Long],
-      weights: Array[Double])
+  /** One block's contribution to one dst (and label). */
+  final case class Partial(vid: Long, label: Long, lv: Long, dv: Double,
+      lvs: Array[Long])
 
-  /** Pack (src, dst, weight) into P weighted CSR blocks — the layout of
-    * [[build]] plus the parallel weight array. */
-  def buildWeighted(edges: DataFrame, p: Int,
-      salts: Option[DataFrame] = None): Dataset[WeightedEdgeBlock] = {
-    val spark = edges.sparkSession
+  /** The CsrGather tier of [[superstep]]: the combine of a (vid, value)
+    * state over the blocks, with the output of [[Combine]]. Shuffles per
+    * call: one groupBy(pid) of the (small) vertex state and one
+    * groupBy(vid[, label]) of per-block partials — the edges stay put. */
+  def scan(csr: CsrGraph, c: Combine, state: DataFrame, p: Int)
+      : DataFrame = {
+    val spark = csr.blocks.sparkSession
     import spark.implicits._
-    edgePid(salts, edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("weight")), p)
-      .select(col("src"), col("dst"), col("weight"), col("pid"))
-      .repartition(p, col("pid"))
-      .sortWithinPartitions(col("pid"), col("src"), col("dst"))
-      .as[(Long, Long, Double, Int)]
-      .mapPartitions { it =>
-        new Iterator[WeightedEdgeBlock] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): WeightedEdgeBlock = {
-            val pid = buf.head._4
-            val srcs = mutable.ArrayBuffer[Long]()
-            val offs = mutable.ArrayBuffer[Int](0)
-            val dsts = mutable.ArrayBuffer[Long]()
-            val ws = mutable.ArrayBuffer[Double]()
-            var last = Long.MinValue
-            var started = false
-            while (buf.hasNext && buf.head._4 == pid) {
-              val (s, d, w, _) = buf.next()
-              if (!started || s != last) {
-                if (started) offs += dsts.length
-                srcs += s; last = s; started = true
-              }
-              dsts += d; ws += w
-            }
-            offs += dsts.length
-            val flat = dsts.toArray
-            val uniq = {
-              val a = flat.clone(); java.util.Arrays.sort(a)
-              var n = 0
-              var i = 0
-              while (i < a.length) {
-                if (n == 0 || a(n - 1) != a(i)) { a(n) = a(i); n += 1 }
-                i += 1
-              }
-              java.util.Arrays.copyOf(a, n)
-            }
-            val idx = new Array[Int](flat.length)
-            var i = 0
-            while (i < flat.length) {
-              idx(i) = java.util.Arrays.binarySearch(uniq, flat(i))
-              i += 1
-            }
-            WeightedEdgeBlock(pid, srcs.toArray, offs.toArray, idx, uniq,
-              ws.toArray)
-          }
-        }
-      }
-      // same partitioning-erasure handling as build()
-      .repartition(p, col("pid"))
-  }
-
-  final case class DoublePartial(vid: Long, partial: Double)
-
-  /** gather-min-plus over a DOUBLE-valued state (the SSSP relax shape):
-    * for every dst with at least one contributing src, the minimum of
-    * (src value + edge weight). Same two-small-shuffles structure as
-    * gatherSum — the weighted blocks never move. */
-  def gatherMinPlus(blocks: Dataset[WeightedEdgeBlock], state: DataFrame,
-      p: Int, salts: Option[DataFrame] = None): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val bundles = bundleState(
-      state.select(col("vid"), col("value").cast("double").as("value")),
-      p, salts)
-    blocks.toDF()
-      .join(bundles, "pid")
+    val value = col("value").cast(c.valueType)
+    val st =
+      if (c.valueType == "double")
+        state.select(col("vid"), lit(0L).as("lv"), value.as("dv"))
+      else state.select(col("vid"), value.as("lv"), lit(0.0).as("dv"))
+    val (keys, partial) = c match {
+      case Sum => (Seq("vid"), sum(col("dv")))
+      case Min => (Seq("vid"), min(col("lv")))
+      case MinPlus => (Seq("vid"), min(col("dv")))
+      case Collect => (Seq("vid"), flatten(collect_list(col("lvs"))))
+      case LabelCount => (Seq("vid", "label"), sum(col("dv")).cast("long"))
+      case LabelSum => (Seq("vid", "label"), sum(col("dv")))
+    }
+    csr.blocks.toDF()
+      .join(bundleState(st, p, csr.salts), "pid")
       .as[(Int, Array[Long], Array[Int], Array[Int], Array[Long],
         Array[Double], Array[VertexValue])]
-      .mapPartitions { it =>
-        it.flatMap { case (_, srcs, offs, idx, uniq, ws, vals) =>
-          val sorted = vals.sortBy(_.vid)
-          val acc = new Array[Double](uniq.length)
-          java.util.Arrays.fill(acc, Double.MaxValue)
-          var si = 0
-          var vi = 0
-          while (si < srcs.length && vi < sorted.length) {
-            val s = srcs(si)
-            val v = sorted(vi).vid
-            if (s < v) si += 1
-            else if (s > v) vi += 1
-            else {
-              // equal-vid runs take the MIN source value
-              var value = sorted(vi).value
-              vi += 1
-              while (vi < sorted.length && sorted(vi).vid == s) {
-                if (sorted(vi).value < value) value = sorted(vi).value
-                vi += 1
-              }
-              var j = offs(si)
-              val end = offs(si + 1)
-              while (j < end) {
-                val k = idx(j)
-                val cand = value + ws(j)
-                if (cand < acc(k)) acc(k) = cand
-                j += 1
-              }
-              si += 1
-            }
-          }
-          val out = mutable.ArrayBuffer[DoublePartial]()
-          var k = 0
-          while (k < uniq.length) {
-            if (acc(k) != Double.MaxValue)
-              out += DoublePartial(uniq(k), acc(k))
-            k += 1
-          }
-          out.iterator
-        }
-      }
-      .groupBy("vid").agg(min(col("partial")).as("min_value"))
+      .mapPartitions(_.flatMap { case (pid, srcs, offs, idx, uniq, ws, vals) =>
+        walk(c, EdgeBlock(pid, srcs, offs, idx, uniq, ws), vals)
+      })
+      .groupBy(keys.map(col): _*).agg(partial.as("msg"))
   }
 
-  final case class ArrayPartial(vid: Long, partial: Array[Long])
+  private val byVid: java.util.Comparator[VertexValue] =
+    (a: VertexValue, b: VertexValue) => java.lang.Long.compare(a.vid, b.vid)
 
-  /** gather-collect over a LONG-valued state (the k-shell h-index shape):
-    * for every dst with at least one contributing src, the ARRAY of
-    * contributing src values (per-block partial arrays flattened by one
-    * groupBy — the edges stay put; only state bundles and value arrays
-    * move, never the edge relation). */
-  def gatherCollect(blocks: Dataset[EdgeBlock], state: DataFrame, p: Int,
-      salts: Option[DataFrame] = None): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val bundles = bundleState(
-      state.select(col("vid"), col("value").cast("long").as("value")),
-      p, salts)
-    blocks.toDF()
-      .join(bundles, "pid")
-      .as[(Int, Array[Long], Array[Int], Array[Int], Array[Long],
-        Array[VertexLongValue])]
-      .mapPartitions { it =>
-        it.flatMap { case (_, srcs, offs, idx, uniq, vals) =>
-          val sorted = vals.sortBy(_.vid)
-          val acc =
-            Array.fill(uniq.length)(null: mutable.ArrayBuffer[Long])
-          var si = 0
-          var vi = 0
-          while (si < srcs.length && vi < sorted.length) {
-            val s = srcs(si)
-            val v = sorted(vi).vid
-            if (s < v) si += 1
-            else if (s > v) vi += 1
-            else {
-              var j = offs(si)
-              val end = offs(si + 1)
-              // duplicate state vids append each value, matching what a
-              // plain join + collect_list would produce
-              var run = vi
-              while (run < sorted.length && sorted(run).vid == s) {
-                j = offs(si)
-                while (j < end) {
-                  val k = idx(j)
-                  if (acc(k) == null) acc(k) = mutable.ArrayBuffer[Long]()
-                  acc(k) += sorted(run).value
-                  j += 1
-                }
-                run += 1
-              }
-              vi = run
-              si += 1
-            }
-          }
-          val out = mutable.ArrayBuffer[ArrayPartial]()
-          var k = 0
-          while (k < uniq.length) {
-            if (acc(k) != null) out += ArrayPartial(uniq(k), acc(k).toArray)
-            k += 1
-          }
-          out.iterator
-        }
-      }
-      .groupBy("vid")
-      .agg(flatten(collect_list(col("partial"))).as("values"))
-  }
-
-  final case class LabelPartial(vid: Long, label: Long, partial: Double)
-
-  /** gather-label-sum over a LONG-labeled state on WEIGHTED blocks (the
-    * Louvain neighbor-community-weight shape): for every dst with at
-    * least one contributing src, the per-(dst, label(src)) sum of edge
-    * weights. On a SYMMETRIC edge relation this equals
-    * w(v -> c) = Σ weights from v to neighbors labeled c — the quantity
-    * Louvain's move scoring needs — with the same two-small-shuffles
-    * structure as gatherSum: one groupBy(pid) of the (vid, label) state
-    * and one groupBy(vid, label) of per-block partials; the weighted
-    * edge relation never moves or re-sorts per round. Per-dst label
-    * sums accumulate in primitive-keyed LongMaps (no tuple boxing in
-    * the |E| loop). */
-  def gatherLabelSum(blocks: Dataset[WeightedEdgeBlock], state: DataFrame,
-      p: Int, salts: Option[DataFrame] = None): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val bundles = bundleState(
-      state.select(col("vid"), col("label").cast("long").as("value")),
-      p, salts)
-    blocks.toDF()
-      .join(bundles, "pid")
-      .as[(Int, Array[Long], Array[Int], Array[Int], Array[Long],
-        Array[Double], Array[VertexLongValue])]
-      .mapPartitions { it =>
-        it.flatMap { case (_, srcs, offs, idx, uniq, ws, vals) =>
-          labelGatherWalk(srcs, offs, idx, uniq, vals, j => ws(j))
-        }
-      }
-      .groupBy("vid", "label").agg(sum(col("partial")).as("sum_w"))
-  }
-
-  /** The shared merge-join walk of both label gathers: per
-    * (dst, label(src)) accumulate `weightOf(edge)` over the CSR block.
-    * Counts ride the same Double accumulator (exact to 2^53 — far past
-    * any per-dst degree), so sum and count differ only in the weight
-    * function and the final cast. */
-  private def labelGatherWalk(
-      srcs: Array[Long], offs: Array[Int], idx: Array[Int],
-      uniq: Array[Long], vals: Array[VertexLongValue],
-      weightOf: Int => Double): Iterator[LabelPartial] = {
-    val sorted = vals.sortBy(_.vid)
-    val acc = Array.fill(uniq.length)(null: mutable.LongMap[Double])
+  /** The merge-join walk shared by every combine: the bundle, sorted by
+    * vid, against the block's sorted srcIds. For each matched src the
+    * combine is dispatched once; its loop then runs over the src's
+    * adjacency on primitive arrays. A run of duplicate state vids acts as
+    * the join does: Sum adds the run, Min and MinPlus take its minimum
+    * (the same result per edge), Collect and the label combines visit the
+    * adjacency once per row. Label sums and counts share a Double
+    * accumulator (exact to 2^53 — far past any per-dst degree). */
+  private def walk(c: Combine, b: EdgeBlock, vals: Array[VertexValue])
+      : Iterator[Partial] = {
+    val srcs = b.srcIds
+    val offs = b.dstOffsets
+    val idx = b.dstIndex
+    val uniq = b.dstUnique
+    val ws = b.weights
+    require(!c.weighted || ws.length == idx.length,
+      s"$c needs blocks built from a weighted edge view")
+    java.util.Arrays.sort(vals, byVid)
+    val n = uniq.length
+    val touched = new Array[Boolean](n)
+    val dacc = if (c == Sum || c == MinPlus) new Array[Double](n) else null
+    val lacc = if (c == Min) new Array[Long](n) else null
+    val lists =
+      if (c == Collect) new Array[mutable.ArrayBuilder.ofLong](n) else null
+    val labels =
+      if (c.byLabel) new Array[mutable.LongMap[Double]](n) else null
     var si = 0
     var vi = 0
-    while (si < srcs.length && vi < sorted.length) {
+    while (si < srcs.length && vi < vals.length) {
       val s = srcs(si)
-      val v = sorted(vi).vid
+      val v = vals(vi).vid
       if (s < v) si += 1
       else if (s > v) vi += 1
       else {
-        // labels are one row per vid (an assignment); skip any
-        // duplicate-vid run defensively, keeping the first
-        val label = sorted(vi).value
-        vi += 1
-        while (vi < sorted.length && sorted(vi).vid == s) vi += 1
-        var j = offs(si)
-        val end = offs(si + 1)
-        while (j < end) {
-          val k = idx(j)
-          if (acc(k) == null) acc(k) = mutable.LongMap.empty[Double]
-          val m = acc(k)
-          m.update(label, m.getOrElse(label, 0.0) + weightOf(j))
-          j += 1
+        var end = vi + 1
+        while (end < vals.length && vals(end).vid == s) end += 1
+        val from = offs(si)
+        val to = offs(si + 1)
+        c match {
+          case Sum =>
+            var x = 0.0
+            var r = vi
+            while (r < end) { x += vals(r).dv; r += 1 }
+            var j = from
+            while (j < to) {
+              val k = idx(j)
+              dacc(k) += x; touched(k) = true
+              j += 1
+            }
+          case Min =>
+            var x = vals(vi).lv
+            var r = vi + 1
+            while (r < end) { if (vals(r).lv < x) x = vals(r).lv; r += 1 }
+            var j = from
+            while (j < to) {
+              val k = idx(j)
+              if (!touched(k) || x < lacc(k)) { lacc(k) = x; touched(k) = true }
+              j += 1
+            }
+          case MinPlus =>
+            var x = vals(vi).dv
+            var r = vi + 1
+            while (r < end) { if (vals(r).dv < x) x = vals(r).dv; r += 1 }
+            var j = from
+            while (j < to) {
+              val k = idx(j)
+              val cand = x + ws(j)
+              if (!touched(k) || cand < dacc(k)) {
+                dacc(k) = cand; touched(k) = true
+              }
+              j += 1
+            }
+          case Collect =>
+            var r = vi
+            while (r < end) {
+              val x = vals(r).lv
+              var j = from
+              while (j < to) {
+                val k = idx(j)
+                if (lists(k) == null) {
+                  lists(k) = new mutable.ArrayBuilder.ofLong; touched(k) = true
+                }
+                lists(k) += x
+                j += 1
+              }
+              r += 1
+            }
+          case LabelCount | LabelSum =>
+            val weighted = c.weighted
+            var r = vi
+            while (r < end) {
+              val label = vals(r).lv
+              var j = from
+              while (j < to) {
+                val k = idx(j)
+                if (labels(k) == null) {
+                  labels(k) = mutable.LongMap.empty[Double]; touched(k) = true
+                }
+                val m = labels(k)
+                m.update(label,
+                  m.getOrElse(label, 0.0) + (if (weighted) ws(j) else 1.0))
+                j += 1
+              }
+              r += 1
+            }
         }
+        vi = end
         si += 1
       }
     }
-    val out = mutable.ArrayBuffer[LabelPartial]()
+    // One partial per touched dst (per dst label for the label combines);
+    // scan's groupBy merges them across blocks.
+    val out = mutable.ArrayBuffer[Partial]()
     var k = 0
-    while (k < uniq.length) {
-      if (acc(k) != null)
-        acc(k).foreach { case (l, w) =>
-          out += LabelPartial(uniq(k), l, w) }
+    while (k < n) {
+      if (touched(k)) c match {
+        case Sum | MinPlus => out += Partial(uniq(k), 0L, 0L, dacc(k), null)
+        case Min => out += Partial(uniq(k), 0L, lacc(k), 0.0, null)
+        case Collect => out += Partial(uniq(k), 0L, 0L, 0.0, lists(k).result())
+        case LabelCount | LabelSum =>
+          labels(k).foreach { case (l, w) =>
+            out += Partial(uniq(k), l, 0L, w, null) }
+      }
       k += 1
     }
     out.iterator
-  }
-
-  /** gather-label-count over a LONG-labeled state on UNWEIGHTED blocks
-    * (the CDLP neighbor-label-multiset shape): for every dst with at
-    * least one contributing src, the per-(dst, label(src)) count of
-    * incoming edges — duplicate edges count twice, matching the
-    * LDBC-Graphalytics multiset rule that the plain
-    * `edges ⋈ labels -> groupBy(dst, label).count` path computes. Same
-    * two-small-shuffles structure as gatherLabelSum; per-dst label
-    * counts accumulate in primitive-keyed LongMaps. */
-  def gatherLabelCount(blocks: Dataset[EdgeBlock], state: DataFrame,
-      p: Int, salts: Option[DataFrame] = None): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val bundles = bundleState(
-      state.select(col("vid"), col("label").cast("long").as("value")),
-      p, salts)
-    blocks.toDF()
-      .join(bundles, "pid")
-      .as[(Int, Array[Long], Array[Int], Array[Int], Array[Long],
-        Array[VertexLongValue])]
-      .mapPartitions { it =>
-        it.flatMap { case (_, srcs, offs, idx, uniq, vals) =>
-          labelGatherWalk(srcs, offs, idx, uniq, vals, _ => 1.0)
-        }
-      }
-      .groupBy("vid", "label")
-      .agg(sum(col("partial")).cast("long").as("cnt"))
-  }
-
-  /** gather-min over a LONG-valued vertex state (the WCC/label shape):
-    * for every dst with at least one contributing src, the minimum src
-    * value. Same two-small-shuffles structure as gatherSum. */
-  def gatherMin(blocks: Dataset[EdgeBlock], state: DataFrame, p: Int,
-      salts: Option[DataFrame] = None): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val bundles = bundleState(
-      state.select(col("vid"), col("value").cast("long").as("value")),
-      p, salts)
-    blocks.toDF()
-      .join(bundles, "pid")
-      .as[(Int, Array[Long], Array[Int], Array[Int], Array[Long],
-        Array[VertexLongValue])]
-      .mapPartitions { it =>
-        it.flatMap { case (_, srcs, offs, idx, uniq, vals) =>
-          val sorted = vals.sortBy(_.vid)
-          val acc = new Array[Long](uniq.length)
-          java.util.Arrays.fill(acc, Long.MaxValue)
-          var si = 0
-          var vi = 0
-          while (si < srcs.length && vi < sorted.length) {
-            val s = srcs(si)
-            val v = sorted(vi).vid
-            if (s < v) si += 1
-            else if (s > v) vi += 1
-            else {
-              // Equal-vid runs in the state take the MIN (what
-              // groupBy(vid).agg(min) of the bundle would produce).
-              var value = sorted(vi).value
-              vi += 1
-              while (vi < sorted.length && sorted(vi).vid == s) {
-                if (sorted(vi).value < value) value = sorted(vi).value
-                vi += 1
-              }
-              var j = offs(si)
-              val end = offs(si + 1)
-              while (j < end) {
-                val k = idx(j)
-                if (value < acc(k)) acc(k) = value
-                j += 1
-              }
-              si += 1
-            }
-          }
-          val out = mutable.ArrayBuffer[LongPartial]()
-          var k = 0
-          while (k < uniq.length) {
-            if (acc(k) != Long.MaxValue) out += LongPartial(uniq(k), acc(k))
-            k += 1
-          }
-          out.iterator
-        }
-      }
-      .groupBy("vid").agg(min(col("partial")).as("min_value"))
   }
 }

@@ -56,40 +56,52 @@ final case class SimpleGraph(
   def preparedOutDegrees(p: Int): DataFrame =
     preparedEdges("outdeg", outDegrees, "vid", p)
 
-  /** Memoized CSR block packing of an edge view (Strategy.CsrGather tier):
-    * built and cached once per (tag, p), like preparedEdges. Hub srcs
-    * above EdgeBlocks.saltThreshold get their adjacency salted across
-    * multiple pid slots (north rule: skew handling); the salt table is
-    * cached alongside and must be passed to every gather over these
-    * blocks. */
+  /** The named edge views the superstep apps gather over, as
+    * (memo tag, frame):
+    *   dir  (src, dst) as stored;   dirw (src, dst, weight);
+    *   rev  (src, dst) reversed;    und  [[undirectedDedup]];
+    *   both [[bothDirections]].
+    * A view that equals the stored edges takes the `dir` tag, so it is
+    * placed and cached once. */
+  private def edgeView(name: String): (String, DataFrame) = name match {
+    case "dir" => ("dir", edges.select("src", "dst"))
+    case "dirw" => ("dirw", edges.select("src", "dst", "weight"))
+    case "rev" =>
+      ("rev", edges.select(col("dst").as("src"), col("src").as("dst")))
+    case "und" =>
+      if (simpleEdges && !directed) edgeView("dir")
+      else ("und", undirectedDedup)
+    case "both" =>
+      if (!directed) edgeView("dir")
+      else ("both", bothDirections.select("src", "dst"))
+    case other => throw new IllegalArgumentException(
+      s"unknown edge view '$other' (dir, dirw, rev, und, both)")
+  }
+
+  /** Memoized CSR block packing of a named edge view (Strategy.CsrGather
+    * tier): built and cached once per (view, p), like preparedEdges. Hub
+    * srcs above EdgeBlocks.saltThreshold get their adjacency salted
+    * across multiple pid slots (north rule: skew handling); the salt
+    * table is cached alongside. */
   @transient private lazy val blockCache =
     scala.collection.mutable.Map[(String, Int), EdgeBlocks.CsrGraph]()
-  def preparedBlocks(tag: String, df: => DataFrame, p: Int)
-      : EdgeBlocks.CsrGraph =
+  def preparedBlocks(view: String, p: Int): EdgeBlocks.CsrGraph = {
+    val (tag, df) = edgeView(view)
     blockCache.synchronized {
-      blockCache.getOrElseUpdate((tag, p), {
-        val d = df
-        val salts = EdgeBlocks.hubSalts(d, EdgeBlocks.saltThreshold, p)
-        val b = EdgeBlocks.build(d, p, salts).persist()
-        b.count()
-        EdgeBlocks.CsrGraph(b, salts)
-      })
+      blockCache.getOrElseUpdate((tag, p), EdgeBlocks.pack(df, p))
     }
+  }
 
-  /** Memoized weighted CSR block packing (SSSP's CsrGather tier). */
-  @transient private lazy val wblockCache =
-    scala.collection.mutable.Map[(String, Int), EdgeBlocks.WeightedCsrGraph]()
-  def preparedWeightedBlocks(tag: String, df: => DataFrame, p: Int)
-      : EdgeBlocks.WeightedCsrGraph =
-    wblockCache.synchronized {
-      wblockCache.getOrElseUpdate((tag, p), {
-        val d = df
-        val salts = EdgeBlocks.hubSalts(d, EdgeBlocks.saltThreshold, p)
-        val b = EdgeBlocks.buildWeighted(d, p, salts).persist()
-        b.count()
-        EdgeBlocks.WeightedCsrGraph(b, salts)
-      })
-    }
+  /** The superstep gather of `combine` over a named edge view for one
+    * app run ([[EdgeBlocks.superstep]]). The tier is decided here, once,
+    * from the caller's vertex count; the view is placed (or packed into
+    * blocks) on the first round and memoized on this graph. */
+  def gather(view: String, combine: EdgeBlocks.Combine, numVertices: Long,
+      p: Int): EdgeBlocks.Gather = {
+    val (tag, df) = edgeView(view)
+    EdgeBlocks.superstep(Strategy.tier(numVertices), combine, p,
+      key => preparedEdges(tag, df, key, p), preparedBlocks(view, p))
+  }
 
   /** Both-direction edge view, for algorithms that traverse in+out
     * (LoadStrategy::kBothOutIn). For undirected graphs edges are already
@@ -190,16 +202,8 @@ final case class SimpleGraph(
       prepCache.clear()
     }
     blockCache.synchronized {
-      blockCache.values.foreach { g =>
-        g.blocks.unpersist(); g.salts.foreach(_.unpersist())
-      }
+      blockCache.values.foreach(_.unpersist())
       blockCache.clear()
-    }
-    wblockCache.synchronized {
-      wblockCache.values.foreach { g =>
-        g.blocks.unpersist(); g.salts.foreach(_.unpersist())
-      }
-      wblockCache.clear()
     }
     vertices.unpersist()
     edges.unpersist()

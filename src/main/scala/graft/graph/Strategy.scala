@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions.broadcast
   *      arrays locally. Mirrors the reference fragment's CSR layout
   *      (arrow_projected_fragment.h:431-470).
   *
-  * Overrides for testing/benching: GRAFT_FORCE_SHUFFLE /
-  * -Dgraft.force.shuffle pins tier 2, GRAFT_FORCE_CSR / -Dgraft.force.csr
+  * [[EdgeBlocks.superstep]] plans each tier's gather. Overrides for
+  * testing/benching: -Dgraft.force.shuffle pins tier 2, -Dgraft.force.csr
   * pins tier 3.
   */
 object Strategy {
@@ -41,12 +41,9 @@ object Strategy {
   val maxShuffleVertices: Long = 1L * 1000 * 1000 * 1000
 
   private def forceShuffle: Boolean =
-    sys.env.contains("GRAFT_FORCE_SHUFFLE") ||
-      sys.props.contains("graft.force.shuffle")
+    sys.props.contains("graft.force.shuffle")
 
-  private def forceCsr: Boolean =
-    sys.env.contains("GRAFT_FORCE_CSR") ||
-      sys.props.contains("graft.force.csr")
+  private def forceCsr: Boolean = sys.props.contains("graft.force.csr")
 
   def tier(numVertices: Long): Tier =
     if (forceCsr) CsrGather
@@ -57,10 +54,6 @@ object Strategy {
 
   def smallEnoughToBroadcast(numVertices: Long): Boolean =
     tier(numVertices) == Broadcast
-
-  /** Hint the state side of an edges-join when the graph is small. */
-  def state(df: DataFrame, broadcastState: Boolean): DataFrame =
-    if (broadcastState) broadcast(df) else df
 
   /** Frontier deltas at most this many rows get broadcast even in the
     * Shuffle tier (~16 bytes/row -> 64 MiB at the default). Override with
@@ -76,7 +69,8 @@ object Strategy {
     * frame Spark will NOT discover that on its own; the superstep driver
     * already knows the exact delta size from the previous round's
     * convergence count, so the hint costs zero extra jobs.
-    * `prevChanged` = -1 means unknown -> no hint. */
+    * `prevChanged` = -1 means unknown -> hint only when `broadcastState`
+    * (the whole state is small). */
   def frontier(df: DataFrame, broadcastState: Boolean, prevChanged: Long)
       : DataFrame =
     if (broadcastState ||

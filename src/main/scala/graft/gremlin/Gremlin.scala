@@ -252,31 +252,37 @@ object Gremlin {
     }
     if (rels.isEmpty && edgeLabel.isDefined)
       throw ParseException(s"unknown edge label '${edgeLabel.get}'")
-    def oneWay(from: ((String, String, String), DataFrame) => Option[
-        (String, String, DataFrame)]): Seq[(String, DataFrame)] =
-      rels.flatMap { case (key, e) => from(key, e) }.flatMap {
-        case (fromL, toL, edges) =>
-          st.frames.get(fromL).map { f =>
-            val hopped = f.select(col("vid").as("__from") +: carried(f): _*)
-              .join(edges.select(col("src").as("__from"),
-                col("dst").as("vid")), "__from")
-              .drop("__from")
-            toL -> hopped.join(g.vertexLabels(toL), Seq("vid"))
-          }
+    val ways: Seq[(String, String, DataFrame)] = {
+      val fwd = rels.map { case ((s, _, d), e) => (s, d, e) }
+      val rev = rels.map { case ((s, _, d), e) =>
+        (d, s, e.select(col("dst").as("src"), col("src").as("dst"))) }
+      dir match {
+        case "out" => fwd
+        case "in" => rev
+        case "both" => fwd ++ rev
       }
-    val parts: Seq[(String, DataFrame)] = dir match {
-      case "out" => oneWay { case ((s, _, d), e) => Some((s, d, e)) }
-      case "in" => oneWay { case ((s, _, d), e) =>
-        Some((d, s, e.select(col("dst").as("src"), col("src").as("dst")))) }
-      case "both" =>
-        oneWay { case ((s, _, d), e) => Some((s, d, e)) } ++
-          oneWay { case ((s, _, d), e) => Some((d, s,
-            e.select(col("dst").as("src"), col("src").as("dst")))) }
     }
-    val merged = parts.groupBy(_._1).map { case (l, fs) =>
-      l -> fs.map(_._2).reduce(_.unionByName(_))
+    def landFrom(from: String => Option[DataFrame]): Map[String, DataFrame] =
+      ways.flatMap { case (fromL, toL, edges) =>
+        from(fromL).map { f =>
+          val hopped = f.select(col("vid").as("__from") +: carried(f): _*)
+            .join(edges.select(col("src").as("__from"),
+              col("dst").as("vid")), "__from")
+            .drop("__from")
+          toL -> hopped.join(g.vertexLabels(toL), Seq("vid"))
+        }
+      }.groupBy(_._1).map { case (l, fs) =>
+        l -> fs.map(_._2).reduce(_.unionByName(_))
+      }
+    val landed = landFrom(st.frames.get)
+    if (landed.nonEmpty || st.frames.isEmpty) VState(landed)
+    else {
+      // No live label has a matching relation: the hop reaches no vertex.
+      // Land an empty frame on every label the hop could reach, so the
+      // terminals answer count() = 0 and empty bags instead of failing.
+      val none = st.frames.values.head.where(lit(false))
+      VState(landFrom(_ => Some(none)))
     }
-    VState(merged)
   }
 
   /** Lowest-common-schema union of the live label frames: (label, vid)

@@ -96,15 +96,15 @@ object Pregel {
           }
         val toDst = sendToDst.map { m =>
           edges
-            .join(Strategy.state(state.select(col("vid").as("src"),
-              col("state").as("src_state")), bcast), "src")
+            .join(Strategy.frontier(state.select(col("vid").as("src"),
+              col("state").as("src_state")), bcast, -1L), "src")
             .select(col("dst").as("vid"), m.as("msg"))
             .where(col("msg").isNotNull)
         }
         val toSrc = sendToSrc.map { m =>
           edges
-            .join(Strategy.state(state.select(col("vid").as("dst"),
-              col("state").as("dst_state")), bcast), "dst")
+            .join(Strategy.frontier(state.select(col("vid").as("dst"),
+              col("state").as("dst_state")), bcast, -1L), "dst")
             .select(col("src").as("vid"), m.as("msg"))
             .where(col("msg").isNotNull)
         }

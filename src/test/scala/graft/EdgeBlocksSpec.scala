@@ -1,17 +1,19 @@
 package graft
 
-import graft.graph.EdgeBlocks
+import graft.graph.{EdgeBlocks, Strategy}
+import graft.graph.EdgeBlocks.Combine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
 
-/** Randomized equivalence oracles for the CSR block gathers: every gather
-  * must produce exactly the rows of its plain join + groupBy formulation
-  * on arbitrary (multi-)graphs, arbitrary partial states, duplicate state
-  * vids, and any block count. These are the kernels the 10^9+-vertex tier
-  * of every superstep app (PageRank/WCC/BFS/SSSP/KShell/Louvain) rides on,
-  * so they get direct generative coverage, not just app-level spot checks.
+/** Randomized equivalence oracles for the superstep gather: every combine,
+  * at every tier, must produce exactly the rows of its plain join +
+  * groupBy formulation on arbitrary (multi-)graphs, arbitrary partial
+  * states, duplicate state vids, and any block count. Every superstep app
+  * (PageRank/WCC/BFS/SSSP/KShell/CDLP/HITS/Centrality/Louvain) gathers
+  * through it, so it gets direct generative coverage, not just app-level
+  * spot checks.
   */
 class EdgeBlocksSpec extends SparkSpec {
 
@@ -26,7 +28,7 @@ class EdgeBlocksSpec extends SparkSpec {
     }.toDF("src", "dst", "weight").repartition(5)
 
   /** State over a random subset of vids; optionally with duplicate vids
-    * (the gathers document fold semantics for those). */
+    * (each duplicate row joins every edge, as in the plain join). */
   private def randomState(rng: Random, nV: Int, dups: Boolean): DataFrame = {
     val base = (0 until nV).filter(_ => rng.nextBoolean()).map { v =>
       (v.toLong, rng.nextInt(100).toLong)
@@ -44,106 +46,69 @@ class EdgeBlocksSpec extends SparkSpec {
     (5L, 40, 200, 1, false) // everything in one block
   )
 
-  test("gatherSum == join + groupBy(dst).sum on random graphs") {
+  /** The plain join + groupBy formulation of each combine over
+    * (src, dst, weight) edges and a (vid, value) state — what every tier
+    * of the gather must reproduce, row for row. */
+  private def oracle(c: Combine, edges: DataFrame, state: DataFrame)
+      : DataFrame = {
+    val j = edges.join(state.select(col("vid").as("src"), col("value")),
+      "src")
+    val byDst = j.groupBy(col("dst").as("vid"))
+    val byLabel = j.groupBy(col("dst").as("vid"), col("value").as("label"))
+    c match {
+      case Combine.Sum => byDst.agg(sum(col("value").cast("double")).as("msg"))
+      case Combine.Min => byDst.agg(min(col("value")).as("msg"))
+      case Combine.MinPlus =>
+        byDst.agg(min(col("value").cast("double") + col("weight")).as("msg"))
+      case Combine.Collect =>
+        byDst.agg(collect_list(col("value")).as("msg"))
+      case Combine.LabelCount => byLabel.agg(count(lit(1)).as("msg"))
+      case Combine.LabelSum => byLabel.agg(sum(col("weight")).as("msg"))
+    }
+  }
+
+  /** Collect's arrays are compared sorted: their order is unspecified. */
+  private def sorted(c: Combine, df: DataFrame): DataFrame =
+    if (c == Combine.Collect) df.withColumn("msg", sort_array(col("msg")))
+    else df
+
+  /** Blocks of the edges a combine reads: weighted ones only when the
+    * combine needs the weight, so both block shapes are exercised. */
+  private def blocksFor(c: Combine, edges: DataFrame, p: Int,
+      salts: Option[DataFrame] = None): EdgeBlocks.CsrGraph = {
+    val e = if (c.weighted) edges else edges.select("src", "dst")
+    EdgeBlocks.CsrGraph(EdgeBlocks.build(e, p, salts), salts)
+  }
+
+  private val tiers =
+    Seq(Strategy.Broadcast, Strategy.Shuffle, Strategy.CsrGather)
+
+  // One generative oracle per combine. Each runs the five trials under
+  // every tier of the gather: the two join plans and the CSR scan.
+  private val oracleTests = Seq(
+    Combine.Sum -> "gatherSum == join + groupBy(dst).sum on random graphs",
+    Combine.Min -> "gatherMin == join + groupBy(dst).min on random graphs",
+    Combine.MinPlus -> ("gatherMinPlus == join + groupBy(dst).min(value + " +
+      "w) on random weighted graphs"),
+    Combine.LabelSum -> ("gatherLabelSum == join + groupBy(dst, " +
+      "label(src)).sum(w) on random weighted graphs"),
+    Combine.LabelCount -> ("gatherLabelCount == join + groupBy(dst, " +
+      "label(src)).count on random multigraphs"),
+    Combine.Collect -> ("gatherCollect == join + collect_list " +
+      "(order-insensitive) on random graphs"))
+
+  for ((c, name) <- oracleTests) test(name) {
     for ((seed, nV, nE, p, dups) <- trials) {
       val rng = new Random(seed)
       val edges = randomEdges(rng, nV, nE)
       val state = randomState(rng, nV, dups)
-      val blocks = EdgeBlocks.build(edges.select("src", "dst"), p)
-      val got = EdgeBlocks.gatherSum(blocks, state, p)
-      val want = edges
-        .join(state.select(col("vid").as("src"),
-          col("value").cast("double").as("value")), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(sum(col("value")).as("sum_value"))
-      assertSameRows(got, want, s"gatherSum seed=$seed")
-    }
-  }
-
-  test("gatherMin == join + groupBy(dst).min on random graphs") {
-    for ((seed, nV, nE, p, dups) <- trials) {
-      val rng = new Random(seed)
-      val edges = randomEdges(rng, nV, nE)
-      val state = randomState(rng, nV, dups)
-      val blocks = EdgeBlocks.build(edges.select("src", "dst"), p)
-      val got = EdgeBlocks.gatherMin(blocks, state, p)
-      val want = edges
-        .join(state.select(col("vid").as("src"), col("value")), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(min(col("value")).as("min_value"))
-      assertSameRows(got, want, s"gatherMin seed=$seed")
-    }
-  }
-
-  test("gatherMinPlus == join + groupBy(dst).min(value + w) on random " +
-      "weighted graphs") {
-    for ((seed, nV, nE, p, dups) <- trials) {
-      val rng = new Random(seed)
-      val edges = randomEdges(rng, nV, nE)
-      val state = randomState(rng, nV, dups)
-      val blocks = EdgeBlocks.buildWeighted(edges, p)
-      val got = EdgeBlocks.gatherMinPlus(blocks, state, p)
-      val want = edges
-        .join(state.select(col("vid").as("src"),
-          col("value").cast("double").as("value")), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(min(col("value") + col("weight")).as("min_value"))
-      assertSameRows(got, want, s"gatherMinPlus seed=$seed")
-    }
-  }
-
-  test("gatherLabelSum == join + groupBy(dst, label(src)).sum(w) on " +
-      "random weighted graphs") {
-    for ((seed, nV, nE, p, _) <- trials) {
-      val rng = new Random(seed)
-      val edges = randomEdges(rng, nV, nE)
-      // labels are an assignment: one row per vid (Louvain's shape)
-      val state = randomState(rng, nV, dups = false)
-        .withColumnRenamed("value", "label")
-      val blocks = EdgeBlocks.buildWeighted(edges, p)
-      val got = EdgeBlocks.gatherLabelSum(blocks, state, p)
-      val want = edges
-        .join(state.select(col("vid").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("vid"), col("label"))
-        .agg(sum(col("weight")).as("sum_w"))
-      assertSameRows(got, want, s"gatherLabelSum seed=$seed")
-    }
-  }
-
-  test("gatherLabelCount == join + groupBy(dst, label(src)).count on " +
-      "random multigraphs") {
-    for ((seed, nV, nE, p, _) <- trials) {
-      val rng = new Random(seed)
-      val edges = randomEdges(rng, nV, nE)
-      // labels are an assignment: one row per vid (CDLP's shape)
-      val state = randomState(rng, nV, dups = false)
-        .withColumnRenamed("value", "label")
-      val blocks = EdgeBlocks.build(edges.select("src", "dst"), p)
-      val got = EdgeBlocks.gatherLabelCount(blocks, state, p)
-      val want = edges
-        .join(state.select(col("vid").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("vid"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      assertSameRows(got, want, s"gatherLabelCount seed=$seed")
-    }
-  }
-
-  test("gatherCollect == join + collect_list (order-insensitive) on " +
-      "random graphs") {
-    for ((seed, nV, nE, p, dups) <- trials) {
-      val rng = new Random(seed)
-      val edges = randomEdges(rng, nV, nE)
-      val state = randomState(rng, nV, dups)
-      val blocks = EdgeBlocks.build(edges.select("src", "dst"), p)
-      val got = EdgeBlocks.gatherCollect(blocks, state, p)
-        .select(col("vid"), sort_array(col("values")).as("values"))
-      val want = edges
-        .join(state.select(col("vid").as("src"), col("value")), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(sort_array(collect_list(col("value"))).as("values"))
-      val g = got.as[(Long, Seq[Long])].collect().toMap
-      val w = want.as[(Long, Seq[Long])].collect().toMap
-      assert(g == w, s"gatherCollect seed=$seed: ${g.size} vs ${w.size}")
+      val csr = blocksFor(c, edges, p)
+      val want = sorted(c, oracle(c, edges, state))
+      for (tier <- tiers) {
+        val got = EdgeBlocks.superstep(tier, c, p, _ => edges, csr)(
+          state, -1L)
+        assertSameRows(sorted(c, got), want, s"$c $tier seed=$seed")
+      }
     }
   }
 
@@ -174,7 +139,6 @@ class EdgeBlocksSpec extends SparkSpec {
     assert(k == p, "k = min(ceil(400/25) = 16, p = 6) = 6")
 
     val blocks = EdgeBlocks.build(edges.select("src", "dst"), p, salts)
-    val wblocks = EdgeBlocks.buildWeighted(edges, p, salts)
     // The hub's adjacency must actually split across blocks...
     val hubBlocks = blocks.collect().count(_.srcIds.contains(0L))
     assert(hubBlocks >= 2, s"hub adjacency in $hubBlocks block(s)")
@@ -182,65 +146,23 @@ class EdgeBlocksSpec extends SparkSpec {
     assert(blocks.collect().map(_.dstIndex.length).sum == 700)
 
     val state = randomState(rng, nV, dups = true)
-    val sumGot = EdgeBlocks.gatherSum(blocks, state, p, salts)
-    val sumWant = edges
-      .join(state.select(col("vid").as("src"),
-        col("value").cast("double").as("value")), "src")
-      .groupBy(col("dst").as("vid"))
-      .agg(sum(col("value")).as("sum_value"))
-    assertSameRows(sumGot, sumWant, "salted gatherSum")
-
-    val minGot = EdgeBlocks.gatherMin(blocks, state, p, salts)
-    val minWant = edges
-      .join(state.select(col("vid").as("src"), col("value")), "src")
-      .groupBy(col("dst").as("vid"))
-      .agg(min(col("value")).as("min_value"))
-    assertSameRows(minGot, minWant, "salted gatherMin")
-
-    val mpGot = EdgeBlocks.gatherMinPlus(wblocks, state, p, salts)
-    val mpWant = edges
-      .join(state.select(col("vid").as("src"),
-        col("value").cast("double").as("value")), "src")
-      .groupBy(col("dst").as("vid"))
-      .agg(min(col("value") + col("weight")).as("min_value"))
-    assertSameRows(mpGot, mpWant, "salted gatherMinPlus")
-
-    val labels = randomState(rng, nV, dups = false)
-      .withColumnRenamed("value", "label")
-    val lsGot = EdgeBlocks.gatherLabelSum(wblocks, labels, p, salts)
-    val lsWant = edges
-      .join(labels.select(col("vid").as("src"), col("label")), "src")
-      .groupBy(col("dst").as("vid"), col("label"))
-      .agg(sum(col("weight")).as("sum_w"))
-    assertSameRows(lsGot, lsWant, "salted gatherLabelSum")
-
-    val lcGot = EdgeBlocks.gatherLabelCount(blocks, labels, p, salts)
-    val lcWant = edges
-      .join(labels.select(col("vid").as("src"), col("label")), "src")
-      .groupBy(col("dst").as("vid"), col("label"))
-      .agg(count(lit(1)).as("cnt"))
-    assertSameRows(lcGot, lcWant, "salted gatherLabelCount")
-
-    val clGot = EdgeBlocks.gatherCollect(blocks, state, p, salts)
-      .select(col("vid"), sort_array(col("values")).as("values"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val clWant = edges
-      .join(state.select(col("vid").as("src"), col("value")), "src")
-      .groupBy(col("dst").as("vid"))
-      .agg(sort_array(collect_list(col("value"))).as("values"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(clGot == clWant, "salted gatherCollect")
+    for ((c, _) <- oracleTests) {
+      val got = EdgeBlocks.scan(blocksFor(c, edges, p, salts), c, state, p)
+      assertSameRows(sorted(c, got), sorted(c, oracle(c, edges, state)),
+        s"salted $c")
+    }
     salts.foreach(_.unpersist())
   }
 
   test("empty state and disjoint state both gather to zero rows") {
     val rng = new Random(9L)
     val edges = randomEdges(rng, 20, 60)
-    val blocks = EdgeBlocks.build(edges.select("src", "dst"), 4)
+    val csr = EdgeBlocks.CsrGraph(
+      EdgeBlocks.build(edges.select("src", "dst"), 4), None)
     val empty = Seq.empty[(Long, Long)].toDF("vid", "value")
-    assert(EdgeBlocks.gatherSum(blocks, empty, 4).count() == 0L)
+    assert(EdgeBlocks.scan(csr, Combine.Sum, empty, 4).count() == 0L)
     // vids outside the graph's vertex range contribute nothing
     val disjoint = Seq((1000L, 5L), (2000L, 7L)).toDF("vid", "value")
-    assert(EdgeBlocks.gatherMin(blocks, disjoint, 4).count() == 0L)
+    assert(EdgeBlocks.scan(csr, Combine.Min, disjoint, 4).count() == 0L)
   }
 }

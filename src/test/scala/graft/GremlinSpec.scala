@@ -43,6 +43,17 @@ class GremlinSpec extends SparkSpec {
     assert(Gremlin.run(modern, "g.V().count()").head().getLong(0) == 6L)
   }
 
+  test("a hop that reaches no vertex yields empty results, not an error") {
+    // software has no outgoing 'created' edge, person no incoming one
+    for (q <- Seq("g.V().hasLabel('software').out('created')",
+        "g.V().hasLabel('person').in('created')")) {
+      assert(Gremlin.run(modern, s"$q.count()").head().getLong(0) == 0L, q)
+      assert(Gremlin.run(modern, s"$q.values('name')").count() == 0L, q)
+      assert(Gremlin.run(modern, s"$q.order().by('name')").count() == 0L, q)
+      assert(Gremlin.run(modern, q).count() == 0L, q)
+    }
+  }
+
   test("V(ids) starts from the given vertices across labels") {
     assert(Gremlin.run(modern, "g.V(1, 3).count()").head()
       .getLong(0) == 2L)

@@ -93,11 +93,12 @@ class LouvainSpec extends SparkSpec {
       clique(41L to 46L) ++ Seq((6L, 21L), (26L, 41L), (46L, 1L))
     val g = graphOf(pairs)
     val base = asMap(Louvain.run(g))
-    sys.props("graft.force.csr") = "true"
-    try {
-      val csr = asMap(Louvain.run(g))
-      assert(csr == base, "CSR tier changed the Louvain result")
-    } finally sys.props.remove("graft.force.csr")
+    for (prop <- Seq("graft.force.shuffle", "graft.force.csr")) {
+      sys.props(prop) = "true"
+      try assert(asMap(Louvain.run(g)) == base,
+        s"$prop changed the Louvain result")
+      finally sys.props.remove(prop)
+    }
   }
 
   test("co-purchase sf0.001: deterministic, covers all vertices, " +

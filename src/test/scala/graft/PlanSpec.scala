@@ -103,6 +103,46 @@ class PlanSpec extends SparkSpec {
       s"no partial aggregation:\n$plan")
   }
 
+  test("broadcast-tier gather: one broadcast exchange and no shuffle " +
+      "exchange, for every combine") {
+    import graft.graph.SimpleGraph
+    import graft.graph.EdgeBlocks.Combine
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import spark.implicits._
+    val rng = new scala.util.Random(5L)
+    val edges = Seq.fill(200)((rng.nextInt(40).toLong,
+      rng.nextInt(40).toLong, 1.0 + rng.nextInt(5))).toDF("src", "dst",
+      "weight")
+    val g = SimpleGraph((0L until 40L).toDF("vid"), edges, directed = true)
+    // the edge view each app gathers each combine over
+    val views = Map(Combine.Sum -> "dir", Combine.Min -> "und",
+      Combine.MinPlus -> "dirw", Combine.Collect -> "und",
+      Combine.LabelCount -> "both", Combine.LabelSum -> "dirw")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val n = g.numVertices
+      val p = spark.sessionState.conf.numShufflePartitions
+      // superstep state arrives checkpointed, with no plan of its own
+      val state = g.vertices.select(col("vid"), col("vid").as("value"))
+        .localCheckpoint(true)
+      for ((c, view) <- views) {
+        val plan = g.gather(view, c, n, p)(state, -1L)
+          .queryExecution.executedPlan
+        // Nodes of the plan tree itself: the cached view's InMemoryRelation
+        // prints the exchanges that built it, which run once, not per round.
+        val bx = plan.collect { case b: BroadcastExchangeExec => b }
+        val sx = plan.collect { case x: ShuffleExchangeExec => x }
+        assert(bx.size == 1 && sx.isEmpty, s"$c over $view: " +
+          s"${bx.size} broadcast(s), ${sx.size} shuffle(s) in\n$plan")
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      g.unload()
+    }
+  }
+
   test("snapshot scan: manifest pruning composes with parquet pushdown") {
     import graft.sources.SnapshotTable
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}

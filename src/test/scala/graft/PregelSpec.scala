@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.{EdgeBlocks, SimpleGraph}
+import graft.graph.EdgeBlocks.Combine
 import graft.multimodal.Multimodal
 import graft.pregel.Pregel
 import org.apache.spark.sql.functions._
@@ -18,6 +19,17 @@ class PregelSpec extends SparkSpec {
     SimpleGraph(verts.toDF("vid"), dirEdges.toDF("src", "dst"),
       directed = true)
   }
+
+  /** Runs `f` under each forced non-default tier: the co-partitioned
+    * shuffle join, then the CSR block gather. `f` gets the property. */
+  private def underForcedTiers(f: String => Unit): Unit =
+    for (prop <- Seq("graft.force.shuffle", "graft.force.csr")) {
+      sys.props(prop) = "true"
+      try f(prop) finally sys.props.remove(prop)
+    }
+
+  private def csrOf(df: org.apache.spark.sql.DataFrame, p: Int) =
+    EdgeBlocks.CsrGraph(EdgeBlocks.build(df, p), None)
 
   test("pregel pagerank variant (no dangling redistribution, " +
       "pagerank_pregel.h) matches in-JVM recurrence") {
@@ -78,8 +90,8 @@ class PregelSpec extends SparkSpec {
   test("EdgeBlocks gatherSum == join+groupBy gather") {
     import spark.implicits._
     val state = verts.map(v => (v, v * 1.5)).toDF("vid", "value")
-    val blocks = EdgeBlocks.build(g.edges, 4)
-    val got = EdgeBlocks.gatherSum(blocks, state, 4).collect()
+    val got = EdgeBlocks.scan(csrOf(g.edges, 4), Combine.Sum, state, 4)
+      .collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = dirEdges.groupBy(_._2).view
       .mapValues(_.map(_._1 * 1.5).sum).toMap
@@ -91,24 +103,22 @@ class PregelSpec extends SparkSpec {
     val und = g.toUndirected
     val want = WCC.run(und).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    sys.props("graft.force.csr") = "true"
-    try {
+    underForcedTiers { tier =>
       val got = WCC.run(und).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, "csr wcc differs")
-    } finally sys.props.remove("graft.force.csr")
+      assert(got == want, s"$tier wcc differs")
+    }
   }
 
   test("PageRank via forced CSR gather tier == default tier") {
     import graft.apps.PageRank
     val want = PageRank.run(g, 0.85, 10).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    sys.props("graft.force.csr") = "true"
-    try {
+    underForcedTiers { tier =>
       val got = PageRank.run(g, 0.85, 10).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assertAllClose(got, want, 1e-12, "csr pagerank")
-    } finally sys.props.remove("graft.force.csr")
+      assertAllClose(got, want, 1e-12, s"$tier pagerank")
+    }
   }
 
   test("SSSP/BFS/KShell via forced CSR gather tier == default tier") {
@@ -122,30 +132,28 @@ class PregelSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val wantK = KShell.coreNumbers(und).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    sys.props("graft.force.csr") = "true"
-    try {
+    underForcedTiers { tier =>
       val gotS = SSSP.run(wg, 1L).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assertAllClose(gotS, wantS, 1e-12, "csr sssp")
+      assertAllClose(gotS, wantS, 1e-12, s"$tier sssp")
       val gotB = BFS.run(g, 1L).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotB == wantB, "csr bfs differs")
+      assert(gotB == wantB, s"$tier bfs differs")
       val gotK = KShell.coreNumbers(und).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotK == wantK, "csr kshell differs")
-    } finally sys.props.remove("graft.force.csr")
+      assert(gotK == wantK, s"$tier kshell differs")
+    }
   }
 
   test("CDLP via forced CSR gather tier == default tier") {
     import graft.apps.CDLP
     val want = CDLP.run(g, 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    sys.props("graft.force.csr") = "true"
-    try {
+    underForcedTiers { tier =>
       val got = CDLP.run(g, 10).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, "csr cdlp differs")
-    } finally sys.props.remove("graft.force.csr")
+      assert(got == want, s"$tier cdlp differs")
+    }
   }
 
   test("HITS/eigenvector/Katz via forced CSR gather tier == default tier") {
@@ -157,18 +165,17 @@ class PregelSpec extends SparkSpec {
     val wantH = asHub(HITS.run(g, 0.001, 30))
     val wantE = asC(Centrality.eigenvector(g, 1e-8, 50))
     val wantK = asC(Centrality.katz(g))
-    sys.props("graft.force.csr") = "true"
-    try {
+    underForcedTiers { tier =>
       val gotH = asHub(HITS.run(g, 0.001, 30))
-      assert(gotH.keySet == wantH.keySet, "csr hits vid set differs")
+      assert(gotH.keySet == wantH.keySet, s"$tier hits vid set differs")
       gotH.foreach { case (v, (h, a)) =>
-        assert(math.abs(h - wantH(v)._1) < 1e-12, s"csr hits hub $v")
-        assert(math.abs(a - wantH(v)._2) < 1e-12, s"csr hits auth $v")
+        assert(math.abs(h - wantH(v)._1) < 1e-12, s"$tier hits hub $v")
+        assert(math.abs(a - wantH(v)._2) < 1e-12, s"$tier hits auth $v")
       }
       assertAllClose(asC(Centrality.eigenvector(g, 1e-8, 50)), wantE,
-        1e-12, "csr eigenvector")
-      assertAllClose(asC(Centrality.katz(g)), wantK, 1e-12, "csr katz")
-    } finally sys.props.remove("graft.force.csr")
+        1e-12, s"$tier eigenvector")
+      assertAllClose(asC(Centrality.katz(g)), wantK, 1e-12, s"$tier katz")
+    }
   }
 
   test("hub-salted CSR tier == default tier on a skewed star graph") {
@@ -196,7 +203,7 @@ class PregelSpec extends SparkSpec {
       // The memoized blocks PageRank just used really are salted: the
       // hub's adjacency spans several blocks.
       val p = spark.sessionState.conf.numShufflePartitions
-      val csr = sg.preparedBlocks("csr", sg.edges.select("src", "dst"), p)
+      val csr = sg.preparedBlocks("dir", p)
       assert(csr.salts.isDefined, "salt table expected at threshold 10")
       val hubBlocks = csr.blocks.collect().count(_.srcIds.contains(1L))
       assert(hubBlocks >= 2, s"hub adjacency in $hubBlocks block(s)")
@@ -229,12 +236,12 @@ class PregelSpec extends SparkSpec {
 
   test("gatherSum/gatherMin fold duplicate state vids (sum / min)") {
     import spark.implicits._
-    val blocks = EdgeBlocks.build(g.edges, 4)
-    // vid 1 appears twice in the state: contributions must SUM (gatherSum)
-    // and MIN (gatherMin), matching a groupBy-combined bundle.
+    val csr = csrOf(g.edges, 4)
+    // vid 1 appears twice in the state: contributions must SUM (Sum) and
+    // MIN (Min), as each duplicate row joins every edge.
     val dup = (verts.map(v => (v, v * 1.5))
       ++ Seq((1L, 10.0))).toDF("vid", "value")
-    val gotSum = EdgeBlocks.gatherSum(blocks, dup, 4).collect()
+    val gotSum = EdgeBlocks.scan(csr, Combine.Sum, dup, 4).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val contribOf = verts.map(v => v -> v * 1.5).toMap
       .updated(1L, 1.5 + 10.0)
@@ -244,7 +251,7 @@ class PregelSpec extends SparkSpec {
 
     val dupL = (verts.map(v => (v, v * 10L)) ++ Seq((3L, 7L)))
       .toDF("vid", "value")
-    val gotMin = EdgeBlocks.gatherMin(blocks, dupL, 4).collect()
+    val gotMin = EdgeBlocks.scan(csr, Combine.Min, dupL, 4).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val minOf = verts.map(v => v -> v * 10L).toMap.updated(3L, 7L)
     val wantMin = dirEdges.groupBy(_._2).view
