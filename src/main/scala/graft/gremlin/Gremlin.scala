@@ -164,14 +164,17 @@ object Gremlin {
         val args = Seq.newBuilder[Arg]
         if (peek != TPunct(')')) {
           args += arg()
-          while (peek == TPunct(',')) { pos += 1; args += arg() }
+          // has(key, pred): a call in the predicate slot is a predicate
+          while (peek == TPunct(',')) {
+            pos += 1; args += arg(predSlot = name == "has")
+          }
         }
         expect(')')
         Step(name, args.result())
       case t => throw ParseException(s"expected step name, got $t")
     }
 
-    private def arg(): Arg = peek match {
+    private def arg(predSlot: Boolean = false): Arg = peek match {
       case TStr(s) => pos += 1; SArg(s)
       case TNum(s) =>
         pos += 1
@@ -187,6 +190,10 @@ object Gremlin {
         }
         expect(')')
         PredArg(name, as.result())
+      case TIdent(name)
+          if predSlot && toks.lift(pos + 1).contains(TPunct('(')) =>
+        throw ParseException(s"unknown predicate '$name' — expected one " +
+          s"of ${predNames.toSeq.sorted.mkString(", ")}")
       case TIdent(name)
           if toks.lift(pos + 1).contains(TPunct('(')) =>
         // anonymous sub-traversal: out('x').in() inside repeat(...)
@@ -750,13 +757,15 @@ object Gremlin {
           // only b rows ever reach one place. A range offset re-ranks
           // just that b-row prefix (the sort keys may be non-unique, so
           // the window over the SAME keys keeps the slice deterministic
-          // up to key ties, exactly Gremlin's contract).
+          // up to key ties, exactly Gremlin's contract), then re-sorts
+          // the at most b survivors so range() keeps limit()'s order.
           out = out.limit(b.toInt)
           if (a > 0) {
             val w = org.apache.spark.sql.expressions.Window
               .orderBy(sortCols: _*)
             out = out.withColumn("__rn", row_number().over(w))
               .where(col("__rn") > a).drop("__rn")
+              .orderBy(sortCols: _*)
           }
         case "by" =>
           throw ParseException("stray .by() — only order()/groupCount() " +

@@ -1,9 +1,8 @@
 package graft.pregel
 
+import graft.sources.SnapshotTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
 
 /** Per-iteration lineage + convergence metrics, one row per superstep
   * (north rule: "checkpoints per-iteration vertex state ... with
@@ -17,20 +16,28 @@ final case class IterMetrics(
     wallMs: Long)
 
 /** Where to durably checkpoint iteration state. `dir=None` keeps only
-  * in-memory `localCheckpoint`s (lineage cut, not resumable).
-  * `snapshot=true` checkpoints through [[graft.sources.SnapshotTable]]
-  * instead of bare per-iteration parquet dirs: each superstep becomes an
-  * atomically-committed snapshot of one versioned table per runId, with
-  * the convergence metrics in the manifest summary and per-FILE lineage
-  * in the manifest itself — the north rule's "checkpoints per-iteration
+  * in-memory `localCheckpoint`s (lineage cut, not resumable). With a dir,
+  * every superstep becomes an atomically-committed snapshot of one
+  * [[graft.sources.SnapshotTable]] per runId (`dir/runId`), with the
+  * convergence metrics in the manifest summary and per-FILE lineage in
+  * the manifest itself — the north rule's "checkpoints per-iteration
   * vertex state to Iceberg[-class tables] with per-partition lineage and
   * convergence metrics for resumable runs" in one artifact, plus time
-  * travel to any earlier iteration's full vertex state. */
+  * travel to any earlier iteration's full vertex state.
+  *
+  * `snapshot` is kept for source compatibility only: snapshots are the
+  * one checkpoint format, and `snapshot = false` (the removed
+  * bare-parquet format) is refused. `perfbench` still passes
+  * `snapshot = true`; a later benchmark-only change can drop that
+  * argument, and then this field can go. */
 final case class CheckpointConfig(
     dir: Option[String] = None,
     runId: String = "run",
-    every: Int = 1,
-    snapshot: Boolean = false)
+    snapshot: Boolean = true) {
+  require(snapshot, "CheckpointConfig(snapshot = false): the bare-parquet " +
+    "checkpoint format was removed; checkpoints are SnapshotTable " +
+    "snapshots (leave snapshot at its default)")
+}
 
 /** The superstep driver loop — the Spark-side equivalent of the reference's
   * `DefaultWorker::Query` PEval/IncEval loop
@@ -39,10 +46,10 @@ final case class CheckpointConfig(
   * `ToTerminate` becomes "changed == 0" computed from the new state.
   *
   * Every round the new state is checkpointed (in-memory `localCheckpoint`,
-  * plus parquet when a dir is configured) — without the lineage cut the plan
-  * grows superlinearly with iterations (SURVEY.md §7.4). On a cluster the
-  * parquet checkpoint doubles as the resume point: `run` scans the dir and
-  * restarts from the newest complete iteration of the same runId.
+  * plus one SnapshotTable commit when a dir is configured) — without the
+  * lineage cut the plan grows superlinearly with iterations (SURVEY.md
+  * §7.4). The snapshot table doubles as the resume point: `run` restarts
+  * from its current version, validated against the manifest lineage.
   */
 object Iterate {
 
@@ -87,31 +94,19 @@ object Iterate {
     val spark = init.sparkSession
     var metrics = Vector.empty[IterMetrics]
 
-    // Resume: newest complete parquet checkpoint for this runId. If that
-    // iteration has per-partition lineage on record, the resumed state is
-    // validated against it (row total + content checksum) before any new
-    // round runs — a truncated or foreign checkpoint fails loudly instead
-    // of resuming from corrupt state.
+    // Resume: the current snapshot of this runId's table, validated
+    // against its manifest lineage (per-file rows + content checksum)
+    // before any new round runs — a truncated or foreign checkpoint fails
+    // loudly instead of resuming from corrupt state.
     var startRound = 0
     var state: DataFrame = null
-    checkpoint.dir.foreach { d =>
-      if (checkpoint.snapshot) {
-        val table = s"$d/${checkpoint.runId}"
-        graft.sources.SnapshotTable.currentVersionOpt(spark, table)
-          .foreach { v =>
-            val m = graft.sources.SnapshotTable.manifest(spark, table, v)
-            startRound = m.summary("iteration").toInt
-            graft.sources.SnapshotTable.validate(spark, table, v)
-            state = graft.sources.SnapshotTable
-              .readVersion(spark, table, v)
-          }
-      } else {
-        val found = latestCheckpoint(d, checkpoint.runId)
-        found.foreach { case (round, path) =>
-          startRound = round
-          state = spark.read.parquet(path)
-          validateLineage(d, checkpoint.runId, round, state)
-        }
+    val table = checkpoint.dir.map(d => s"$d/${checkpoint.runId}")
+    table.foreach { t =>
+      SnapshotTable.currentVersionOpt(spark, t).foreach { v =>
+        startRound = SnapshotTable.manifest(spark, t, v)
+          .summary("iteration").toInt
+        SnapshotTable.validate(spark, t, v)
+        state = SnapshotTable.readVersion(spark, t, v)
       }
     }
     if (state == null) state = init.localCheckpoint(true)
@@ -168,29 +163,15 @@ object Iterate {
       val m = IterMetrics(checkpoint.runId, round, changed, rows,
         spark.sessionState.conf.numShufflePartitions, wall)
       metrics :+= m
-      if (sys.env.contains("GRAFT_ITER_VERBOSE"))
-        println(s"[iter] ${checkpoint.runId} round=$round " +
-          s"changed=$changed wallMs=$wall")
-      checkpoint.dir.foreach { d =>
-        if (round % checkpoint.every == 0) {
-          if (checkpoint.snapshot) {
-            graft.sources.SnapshotTable.overwrite(
-              next, s"$d/${checkpoint.runId}",
-              summary = Map(
-                "runId" -> checkpoint.runId,
-                "iteration" -> round.toString,
-                "changed" -> changed.toString,
-                "stateRows" -> rows.toString,
-                "numPartitions" -> m.numPartitions.toString,
-                "wallMs" -> wall.toString))
-            appendMetrics(d, m)
-          } else {
-            next.write.mode("overwrite")
-              .parquet(s"$d/${checkpoint.runId}/iter_$round")
-            appendMetrics(d, m)
-            appendLineage(d, checkpoint.runId, round, next)
-          }
-        }
+      table.foreach { t =>
+        SnapshotTable.overwrite(next, t,
+          summary = Map(
+            "runId" -> checkpoint.runId,
+            "iteration" -> round.toString,
+            "changed" -> changed.toString,
+            "stateRows" -> rows.toString,
+            "numPartitions" -> m.numPartitions.toString,
+            "wallMs" -> wall.toString))
       }
       if (prev ne init) prev.unpersist()
       prev = next
@@ -205,87 +186,5 @@ object Iterate {
     val out = if (prev.columns.contains("_changed"))
       prev.drop("_changed") else prev
     Result(out, metrics, round)
-  }
-
-  private def latestCheckpoint(dir: String, runId: String)
-      : Option[(Int, String)] = {
-    val base = Paths.get(dir, runId)
-    if (!Files.isDirectory(base)) return None
-    val iters = Files.list(base).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("iter_"))
-      .filter(p => Files.exists(p.resolve("_SUCCESS")))
-      .map(p => (p.getFileName.toString.stripPrefix("iter_").toInt,
-        p.toString))
-      .toSeq
-    if (iters.isEmpty) None else Some(iters.maxBy(_._1))
-  }
-
-  /** Per-partition lineage (north rule: "per-partition lineage"): one
-    * line per (iteration, partition) with row count and an
-    * order-independent content checksum (sum of per-row xxhash64 in
-    * DECIMAL(38,0) — ANSI-safe, no long overflow). Written next to each
-    * durable checkpoint; `validateLineage` replays it on resume. The agg
-    * collects one row PER PARTITION (P rows), never data rows. */
-  private def appendLineage(dir: String, runId: String, round: Int,
-      state: DataFrame): Unit = {
-    val cols = state.columns.map(col)
-    val parts = state
-      .groupBy(spark_partition_id().as("part"))
-      .agg(count(lit(1)).as("rows"),
-        sum(xxhash64(cols: _*).cast("decimal(38,0)")).as("checksum"))
-      .orderBy("part")
-      .collect()
-    val p = Paths.get(dir, runId, "lineage.jsonl")
-    Files.createDirectories(p.getParent)
-    val lines = parts.map { r =>
-      s"""{"runId":"$runId","iteration":$round,""" +
-      s""""partition":${r.getInt(0)},"rows":${r.getLong(1)},""" +
-      s""""checksum":"${r.getDecimal(2)}"}"""
-    }.mkString("", "\n", "\n")
-    Files.writeString(p, lines, StandardOpenOption.CREATE,
-      StandardOpenOption.APPEND)
-  }
-
-  /** Check a resumed checkpoint against its recorded lineage: total rows
-    * and the (partitioning-independent) sum of per-partition checksums
-    * must match. Partition boundaries themselves may legally differ on
-    * re-read — the checksum is a sum of per-row hashes, so it is invariant
-    * to how rows landed in partitions. No-op when no lineage was written
-    * for the round. */
-  private def validateLineage(dir: String, runId: String, round: Int,
-      state: DataFrame): Unit = {
-    val p = Paths.get(dir, runId, "lineage.jsonl")
-    if (!Files.exists(p)) return
-    val iterRe = """"iteration":(\d+)""".r
-    val rowsRe = """"rows":(\d+)""".r
-    val sumRe = """"checksum":"(-?\d+)"""".r
-    val recs = Files.readAllLines(p).asScala
-      .filter(l => iterRe.findFirstMatchIn(l)
-        .exists(_.group(1).toInt == round))
-    if (recs.isEmpty) return
-    val wantRows = recs.map(l =>
-      rowsRe.findFirstMatchIn(l).get.group(1).toLong).sum
-    val wantSum = recs.map(l =>
-      BigDecimal(sumRe.findFirstMatchIn(l).get.group(1))).sum
-    val cols = state.columns.map(col)
-    val got = state.agg(count(lit(1)).as("rows"),
-      sum(xxhash64(cols: _*).cast("decimal(38,0)")).as("checksum")).head()
-    require(got.getLong(0) == wantRows,
-      s"checkpoint $runId/iter_$round row count ${got.getLong(0)} != " +
-        s"lineage total $wantRows — refusing to resume from corrupt state")
-    require(BigDecimal(got.getDecimal(1)) == wantSum,
-      s"checkpoint $runId/iter_$round content checksum mismatch vs " +
-        "lineage — refusing to resume from corrupt state")
-  }
-
-  private def appendMetrics(dir: String, m: IterMetrics): Unit = {
-    val p = Paths.get(dir, m.runId, "metrics.jsonl")
-    Files.createDirectories(p.getParent)
-    val line =
-      s"""{"runId":"${m.runId}","iteration":${m.iteration},""" +
-      s""""changed":${m.changed},"rows":${m.rows},""" +
-      s""""numPartitions":${m.numPartitions},"wallMs":${m.wallMs}}""" + "\n"
-    Files.writeString(p, line, StandardOpenOption.CREATE,
-      StandardOpenOption.APPEND)
   }
 }

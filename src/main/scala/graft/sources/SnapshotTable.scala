@@ -497,8 +497,9 @@ object SnapshotTable {
   /** Per-file (rows, content checksum, per-column min/max/null stats) of
     * a just-written commit dir — ONE distributed agg, returns one row per
     * file, never data rows. The checksum is the sum of per-row xxhash64
-    * in DECIMAL(38,0) (order-independent, ANSI-overflow-safe — same
-    * contract as the superstep lineage in graft.pregel.Iterate). */
+    * in DECIMAL(38,0) (order-independent, ANSI-overflow-safe — the
+    * contract [[validate]] re-derives on every superstep resume in
+    * graft.pregel.Iterate). */
   private def fileLineage(onDisk: DataFrame): Seq[FileLineage] = {
     val cols = onDisk.columns.map(col)
     val statCols = statableCols(onDisk.schema)
@@ -827,7 +828,8 @@ object SnapshotTable {
 
   /** Re-derive every file's (rows, checksum) of a snapshot and compare
     * with its manifest lineage — refuses silently-corrupted or truncated
-    * data exactly like the superstep resume validation. */
+    * data; graft.pregel.Iterate runs it before resuming from a superstep
+    * checkpoint. */
   def validate(spark: SparkSession, table: String, version: Int): Unit = {
     val m = manifest(spark, table, version)
     if (m.files.isEmpty) return

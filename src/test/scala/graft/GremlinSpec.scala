@@ -171,8 +171,11 @@ class GremlinSpec extends SparkSpec {
       == Seq("peter", "josh"))
     val mid = Gremlin.run(modern,
       "g.V().hasLabel('person').order().by('age', desc).range(1, 3)")
-    assert(mid.select("name").collect().map(_.getString(0)).toSet
-      == Set("josh", "marko"))
+    assert(mid.select("name").collect().map(_.getString(0)).toSeq
+      == Seq("josh", "marko"))
+    val tail = Gremlin.run(modern, "g.V().order().by('name').range(2, 5)")
+    assert(tail.select("name").collect().map(_.getString(0)).toSeq
+      == Seq("marko", "peter", "ripple"))
   }
 
   test("order on a multi-label bag uses the common columns only") {
@@ -336,6 +339,8 @@ class GremlinSpec extends SparkSpec {
       .contains("matches no vertex label"))
     assert(bad("g.V().has('mass', gt(1)).count()")
       .contains("no live vertex label"))
+    assert(bad("g.V().has('age', gt2(30)).count()")
+      .contains("unknown predicate 'gt2'"))
     assert(bad("g.V().out('likes').count()")
       .contains("unknown edge label"))
     assert(bad("g.X().count()").contains("g.V("))

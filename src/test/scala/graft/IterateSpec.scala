@@ -1,8 +1,10 @@
 package graft
 
 import graft.pregel.{CheckpointConfig, Iterate}
+import graft.sources.SnapshotTable
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Superstep runner: convergence, metrics, checkpoint + resume. */
 class IterateSpec extends SparkSpec {
@@ -47,40 +49,56 @@ class IterateSpec extends SparkSpec {
       stopWhenUnchanged = false, checkpoint = cp)
     assert(resumed.state.head().getInt(1) == 10)
     assert(resumed.metrics.size == 6, "only rounds 5..10 re-ran")
-    // metrics.jsonl has per-iteration lineage
-    val lines = Files.readAllLines(
-      java.nio.file.Paths.get(dir, "r1", "metrics.jsonl"))
-    assert(lines.size() == 10)
-    assert(lines.get(0).contains("\"iteration\":1"))
-    // lineage.jsonl has per-PARTITION lineage: every iteration's rows
-    // sum to the state size (1 here) and carry a content checksum.
-    val lin = Files.readAllLines(
-      java.nio.file.Paths.get(dir, "r1", "lineage.jsonl"))
-    assert(lin.size() == 10, "one single-row partition per iteration")
-    assert(lin.get(0).contains("\"partition\":"))
-    assert(lin.get(0).contains("\"rows\":1"))
-    assert(lin.get(0).contains("\"checksum\":\""))
+    // One snapshot per iteration, each carrying its superstep's
+    // convergence metrics in the manifest summary.
+    val table = s"$dir/r1"
+    val hist = SnapshotTable.snapshots(spark, table)
+    assert(hist.map(_.summary("iteration")) == (1 to 10).map(_.toString))
+    // Per-file lineage: every iteration's file rows sum to the state
+    // size (1 here) and carry a content checksum.
+    hist.foreach { m =>
+      assert(m.files.map(_.rows).sum == 1L, s"v${m.version} rows")
+      assert(m.files.forall(_.checksum.nonEmpty), s"v${m.version} checksum")
+    }
   }
 
   test("resume refuses a checkpoint that contradicts its lineage") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-ckpt-bad").toString
-    val init = Seq((1L, 0), (2L, 10)).toDF("vid", "n")
+    // one partition, so each snapshot is one two-row data file
+    val init = Seq((1L, 0), (2L, 10)).toDF("vid", "n").coalesce(1)
     val cp = CheckpointConfig(Some(dir), runId = "r1")
     Iterate.run(init, 3, (s, _) =>
       s.select(col("vid"), (col("n") + 1).as("n")),
       stopWhenUnchanged = false, checkpoint = cp)
-    // Corrupt the newest checkpoint's content without touching lineage:
-    // overwrite iter_3 with iter_2's (different) rows.
-    val p2 = java.nio.file.Paths.get(dir, "r1", "iter_2")
-    val p3 = java.nio.file.Paths.get(dir, "r1", "iter_3")
-    spark.read.parquet(p2.toString).write
-      .mode("overwrite").parquet(p3.toString)
+    // Truncate the newest checkpoint without touching its manifest:
+    // overwrite v3's data file with one that holds fewer rows.
+    val table = s"$dir/r1"
+    val Seq(file) = SnapshotTable.manifest(spark, table, 3).files
+    assert(file.rows == 2L)
+    val victim = java.nio.file.Paths.get(table, file.path)
+    val shorter = Files.createTempDirectory("graft-ckpt-short").toString
+    spark.read.parquet(victim.toString).limit(1)
+      .coalesce(1).write.mode("overwrite").parquet(shorter)
+    val part = Files.list(java.nio.file.Paths.get(shorter)).iterator()
+      .asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.copy(part, victim,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(
+      victim.resolveSibling(s".${victim.getFileName}.crc"))
     val e = intercept[IllegalArgumentException] {
       Iterate.run(init, 5, (s, _) =>
         s.select(col("vid"), (col("n") + 1).as("n")),
         stopWhenUnchanged = false, checkpoint = cp)
     }
-    assert(e.getMessage.contains("checksum mismatch"))
+    assert(e.getMessage.contains("contradicts its lineage"))
+  }
+
+  test("snapshot = false (the removed bare-parquet format) is refused") {
+    val e = intercept[IllegalArgumentException] {
+      CheckpointConfig(Some("ckpt"), snapshot = false)
+    }
+    assert(e.getMessage.contains("bare-parquet"))
+    assert(e.getMessage.contains("removed"))
   }
 }

@@ -225,18 +225,18 @@ class TinyGraphSpec extends SparkSpec {
     val cp = graft.pregel.CheckpointConfig(Some(dir), runId = "pr")
     // "Crashed" run: only 4 of the 10 rounds complete.
     PageRank.run(gDir, 0.85, 4, checkpoint = cp)
-    // Resumed run to 10 rounds must pick up at the round-4 parquet
+    // Resumed run to 10 rounds must pick up at the round-4 snapshot
     // checkpoint and match a straight 10-round run exactly (the dangling
     // base recurrence is a pure function of the global round index, so
     // the resumed rounds 5..10 see the same bases).
     val resumed = asMapD(PageRank.run(gDir, 0.85, 10, checkpoint = cp))
     val straight = asMapD(PageRank.run(gDir, 0.85, 10))
     assertAllClose(resumed, straight, 1e-12, "resumed pagerank")
-    // metrics.jsonl proves rounds 5..10 ran ONCE on top of 1..4 (a
-    // recompute-from-scratch would have appended 10 more rows -> 14).
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(dir, "pr", "metrics.jsonl"))
-    assert(lines.size() == 10, s"expected 10 metric rows, ${lines.size()}")
+    // The snapshot history proves rounds 5..10 ran ONCE on top of 1..4
+    // (a recompute-from-scratch would have committed 10 more -> 14).
+    val iters = graft.sources.SnapshotTable.snapshots(spark, s"$dir/pr")
+      .map(_.summary("iteration").toInt)
+    assert(iters == (1 to 10), s"expected iterations 1..10, got $iters")
   }
 
   test("graph ops: subgraph, reverse, undirected, degrees") {
