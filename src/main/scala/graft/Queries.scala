@@ -3,7 +3,7 @@ package graft
 import graft.apps._
 import graft.graph.SimpleGraph
 import graft.graphbuild.CoPurchase
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, LineageCut, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,8 +42,8 @@ object Queries {
         // capped levels/rounds for the catalog entries: local moves
         // saturate in the first rounds on this graph; the driver budget is
         // shared by ~56 queries (API defaults stay higher for real runs)
-        Louvain.run(CoPurchase.graph(spark, dir), maxLevels = 2,
-          maxRoundsPerLevel = 6).localCheckpoint(true))
+        LineageCut.localCheckpoint(Louvain.run(CoPurchase.graph(spark, dir),
+          maxLevels = 2, maxRoundsPerLevel = 6)).df)
     }
 
   // ---------- graph queries (part co-purchase graph) ----------
@@ -72,10 +72,10 @@ object Queries {
     val g = CoPurchase.graph(spark, dir)
     val edges = g.edges.select(col("src"), col("dst"))
     val bucket = pmod(xxhash64(col("src"), col("dst")), lit(5))
-    val delta = edges.where(bucket === 0).localCheckpoint(true)
+    val delta = LineageCut.localCheckpoint(edges.where(bucket === 0)).df
     val base = edges.where(bucket =!= 0)
-    val prev = WCC.run(graft.graph.SimpleGraph(
-      g.vertices, base, directed = false)).localCheckpoint(true)
+    val prev = LineageCut.localCheckpoint(WCC.run(graft.graph.SimpleGraph(
+      g.vertices, base, directed = false))).df
     val incr = WCC.runIncremental(prev, delta)
     val full = wcc(spark, dir)
     val mismatches = incr
@@ -97,8 +97,8 @@ object Queries {
     val g = CoPurchase.graph(spark, dir)
     val edges = g.edges.select(col("src"), col("dst"))
     val bucket = pmod(xxhash64(col("src"), col("dst")), lit(5))
-    val delta = edges.where(bucket === 0).localCheckpoint(true)
-    val base = edges.where(bucket =!= 0).localCheckpoint(true)
+    val delta = LineageCut.localCheckpoint(edges.where(bucket === 0)).df
+    val base = LineageCut.localCheckpoint(edges.where(bucket =!= 0)).df
     val prev = Triangles.run(graft.graph.SimpleGraph(
       g.vertices, base, directed = false))
     val incr = Triangles.runIncremental(prev, base, delta)
@@ -657,8 +657,8 @@ object Queries {
   def dfsCheck(spark: SparkSession, dir: String): DataFrame = {
     val g = CoPurchase.graph(spark, dir)
     val src = minVid(g)
-    val visited = DFS.run(g, src).where(col("rank") >= 0)
-      .localCheckpoint(true)
+    val visited =
+      LineageCut.localCheckpoint(DFS.run(g, src).where(col("rank") >= 0)).df
     // (a) symmetric difference with the BFS-reachable set is empty
     val reach = BFS.run(g, src).where(col("depth") >= 0).select("vid")
     val aBad = visited.select("vid").unionByName(reach)
@@ -731,8 +731,8 @@ object Queries {
     val off = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
     val planted = docs.select((col("doc_id") + off).as("doc_id"),
       concat(col("text"), lit(" zzz")).as("text"))
-    val sh = graft.text.Dedup.simhash(docs.unionByName(planted))
-      .localCheckpoint(true)
+    val sh = LineageCut.localCheckpoint(
+      graft.text.Dedup.simhash(docs.unionByName(planted))).df
     val a = sh.toDF("ia", "sa")
     val nearAvg = a.join(sh.toDF("ib", "sb"),
         col("ib") === col("ia") + off)
@@ -786,7 +786,8 @@ object Queries {
     val planted = docs.where(col("doc_id") < 20)
       .select((col("doc_id") + off).as("doc_id"), col("text"))
     val all = docs.unionByName(planted)
-    val res = graft.text.Dedup.dedupClusters(all).localCheckpoint(true)
+    val res =
+      LineageCut.localCheckpoint(graft.text.Dedup.dedupClusters(all)).df
     val a = res.toDF("ia", "ca", "ka")
     val together = a.where(col("ia") < 20)
       .join(res.toDF("ib", "cb", "kb"), col("ib") === col("ia") + off)
@@ -825,10 +826,9 @@ object Queries {
     val off = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
     val planted = docs.where(col("doc_id") < 20)
       .select((col("doc_id") + off).as("doc_id"), col("text"))
-    val fp = docs.unionByName(planted).select(col("doc_id"),
-      col("text"),
-      graft.text.TextStats.fingerprint(col("text")).as("fp"))
-      .localCheckpoint(true)
+    val fp = LineageCut.localCheckpoint(docs.unionByName(planted)
+      .select(col("doc_id"), col("text"),
+        graft.text.TextStats.fingerprint(col("text")).as("fp"))).df
     val a = fp.toDF("ia", "ta", "fa")
     val b = fp.toDF("ib", "tb", "fb")
     val same = a.join(b, col("ib") === col("ia") + off)
@@ -1113,8 +1113,8 @@ object Queries {
     import graft.text.Dedup
     val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
     val off = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
-    val originals = docs.dropDuplicates("text")
-      .orderBy(col("doc_id")).limit(20).localCheckpoint(true)
+    val originals = LineageCut.localCheckpoint(docs.dropDuplicates("text")
+      .orderBy(col("doc_id")).limit(20)).df
     val plants = originals
       .select((col("doc_id") + off).as("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("graft-incr-check")
@@ -1249,8 +1249,9 @@ object Queries {
     import graft.sources.SnapshotTable
     import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual,
       LessThanOrEqual}
-    val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
-      .orderBy(col("doc_id")).limit(800).localCheckpoint(true)
+    val docs = LineageCut.localCheckpoint(t(spark, dir, "documents")
+      .select(col("doc_id"), col("text"))
+      .orderBy(col("doc_id")).limit(800)).df
     val root = java.nio.file.Files.createTempDirectory("graft-bloom-check")
     val table = root.resolve("t").toString
     val ok = try {

@@ -2,7 +2,7 @@ package graft.apps
 
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** Degree / eigenvector / Katz centrality, reference semantics. */
@@ -43,8 +43,9 @@ object Centrality {
     val n = g.numVertices.toDouble
     val gather = g.gather("dir", Combine.Sum, n.toLong, p)
 
-    var state = g.vertices.select(col("vid"), lit(1.0 / n).as("x"))
-      .repartition(p, col("vid")).localCheckpoint(true)
+    var state = LineageCut.localCheckpoint(g.vertices
+      .select(col("vid"), lit(1.0 / n).as("x"))
+      .repartition(p, col("vid"))).df
     var round = 0
     var done = false
     var lastCk: DataFrame = null
@@ -53,10 +54,10 @@ object Centrality {
       val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
         .select(col("vid"), col("msg").as("mx"))
       // one materialization per round; norm/delta are aggs over it
-      val raw = state.join(msgs, Seq("vid"), "left").select(
-        col("vid"), col("x").as("x_last"),
-        (col("x") + coalesce(col("mx"), lit(0.0))).as("x"))
-        .localCheckpoint(true)
+      val raw = LineageCut.localCheckpoint(
+        state.join(msgs, Seq("vid"), "left").select(
+          col("vid"), col("x").as("x_last"),
+          (col("x") + coalesce(col("mx"), lit(0.0))).as("x"))).df
       val norm = math.sqrt(
         raw.agg(sum(col("x") * col("x"))).head().getDouble(0))
       val delta = raw.agg(sum(abs(col("x") / norm - col("x_last"))))
@@ -66,8 +67,8 @@ object Centrality {
       state = raw.select(col("vid"), (col("x") / norm).as("x"))
       if (delta < n * tolerance) done = true
     }
-    state.select(col("vid"), col("x").as("centrality"))
-      .localCheckpoint(true)
+    LineageCut.localCheckpoint(
+      state.select(col("vid"), col("x").as("centrality"))).df
   }
 
   /** Katz centrality (apps/centrality/katz/katz_centrality.h:60-160):
@@ -88,8 +89,9 @@ object Centrality {
     val n = g.numVertices.toDouble
     val gather = g.gather("dir", Combine.Sum, n.toLong, p)
 
-    var state = g.vertices.select(col("vid"), lit(0.0).as("x"))
-      .repartition(p, col("vid")).localCheckpoint(true)
+    var state = LineageCut.localCheckpoint(g.vertices
+      .select(col("vid"), lit(0.0).as("x"))
+      .repartition(p, col("vid"))).df
     var round = 0
     var done = false
     var totalSum = 0.0
@@ -98,10 +100,10 @@ object Centrality {
       round += 1
       val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
         .select(col("vid"), col("msg").as("mx"))
-      val next = state.join(msgs, Seq("vid"), "left").select(
-        col("vid"), col("x").as("x_last"),
-        (lit(alpha) * coalesce(col("mx"), lit(0.0)) + lit(beta)).as("x"))
-        .localCheckpoint(true)
+      val next = LineageCut.localCheckpoint(
+        state.join(msgs, Seq("vid"), "left").select(
+          col("vid"), col("x").as("x_last"),
+          (lit(alpha) * coalesce(col("mx"), lit(0.0)) + lit(beta)).as("x"))).df
       val r = next.agg(sum(abs(col("x") - col("x_last"))),
         sum(col("x") * col("x"))).head()
       val delta = r.getDouble(0)

@@ -2,7 +2,7 @@ package graft.apps
 
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** HITS — alternating authority/hub power iteration with per-round
@@ -38,10 +38,9 @@ object HITS {
     val toAuth = g.gather("dir", Combine.Sum, n.toLong, p)
     val toHub = g.gather("rev", Combine.Sum, n.toLong, p)
 
-    var state = g.vertices.select(col("vid"),
+    var state = LineageCut.localCheckpoint(g.vertices.select(col("vid"),
       lit(1.0 / n).as("hub"), lit(0.0).as("auth"))
-      .repartition(p, col("vid"))
-      .localCheckpoint(true)
+      .repartition(p, col("vid"))).df
 
     var step = 0
     var done = false
@@ -58,10 +57,10 @@ object HITS {
           .select(col("vid"), col("msg").as("nh"))
       // ONE materialization per round; the max/eps scalars and the
       // normalized state are cheap projections over the checkpointed frame.
-      val s2 = s1.join(hubMsgs, Seq("vid"), "left").select(
-        col("vid"), col("hub_last"), col("auth"),
-        coalesce(col("nh"), lit(0.0)).as("hub"))
-        .localCheckpoint(true)
+      val s2 = LineageCut.localCheckpoint(
+        s1.join(hubMsgs, Seq("vid"), "left").select(
+          col("vid"), col("hub_last"), col("auth"),
+          coalesce(col("nh"), lit(0.0)).as("hub"))).df
 
       val r = s2.agg(max(col("hub")), max(col("auth"))).head()
       val maxH = r.getDouble(0)
@@ -89,6 +88,6 @@ object HITS {
       state.select(col("vid"), (col("hub") / sh).as("hub"),
         (col("auth") / sa).as("auth"))
     } else state
-    out.localCheckpoint(true)
+    LineageCut.localCheckpoint(out).df
   }
 }

@@ -1,6 +1,6 @@
 package graft.apps
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** LPA-U2I — weighted feature propagation on a bipartite (user, item)
@@ -54,22 +54,21 @@ object LPAU2I {
     val outNbrInDegSum = e.join(inDegItems, "dst")
       .groupBy(col("src").as("vid")).agg(sum(col("indeg")).as("onids"))
 
-    var uState = users.select(col("vid"), col("features"))
+    var uState = LineageCut.localCheckpoint(users
+      .select(col("vid"), col("features"))
       .join(outDeg, Seq("vid"), "left")
       .join(outNbrInDegSum, Seq("vid"), "left")
-      .na.fill(0, Seq("outdeg", "onids"))
-      .localCheckpoint(true)
+      .na.fill(0, Seq("outdeg", "onids"))).df
 
     var itemFeatures: DataFrame = null
     for (step <- 2 to maxRound) {
       if (step % 2 == 0) {
         // u2i: item features = weighted sum of adjacent user features
-        itemFeatures = weightedSum(
+        itemFeatures = LineageCut.localCheckpoint(weightedSum(
           e.join(uState.select(col("vid").as("src"), col("features")),
             "src"),
           "dst", "features")
-          .select(col("vid").as("dst"), col("wsum").as("ifeat"))
-          .localCheckpoint(true)
+          .select(col("vid").as("dst"), col("wsum").as("ifeat"))).df
       } else {
         // i2u: pull item features back, then the other-users normalization
         val tmp = weightedSum(e.join(itemFeatures, "dst"), "src", "ifeat")
@@ -82,8 +81,8 @@ object LPAU2I {
           (f, t) => when(f === 0.0 || f === 1.0, f)
             .when(denom =!= 0.0, (t - col("outdeg") * f) / denom)
             .otherwise(f))
-        uState = joined.select(col("vid"), newFeat.as("features"),
-          col("outdeg"), col("onids")).localCheckpoint(true)
+        uState = LineageCut.localCheckpoint(joined.select(col("vid"),
+          newFeat.as("features"), col("outdeg"), col("onids"))).df
       }
     }
     e.unpersist()

@@ -1,7 +1,7 @@
 package graft.apps
 
 import graft.graph.{EdgeBlocks, SimpleGraph, Strategy}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** Louvain community detection — modularity maximization by iterated
@@ -40,14 +40,13 @@ object Louvain {
       maxLevels: Int = 5,
       maxRoundsPerLevel: Int = 20): DataFrame = {
     // Level-0 working graph: symmetric deduped unit-weight edges.
-    var edges = g.undirectedDedup
-      .select(col("src"), col("dst"), lit(1.0).as("w"))
-      .localCheckpoint(true)
-    var nodes = g.vertices.select(col("vid"), lit(0.0).as("selfw"))
-      .localCheckpoint(true)
+    var edges = LineageCut.localCheckpoint(g.undirectedDedup
+      .select(col("src"), col("dst"), lit(1.0).as("w"))).df
+    var nodes = LineageCut.localCheckpoint(
+      g.vertices.select(col("vid"), lit(0.0).as("selfw"))).df
     // overall: original vid -> current community (a node id of the level).
-    var overall = g.vertices.select(col("vid"), col("vid").as("comm"))
-      .localCheckpoint(true)
+    var overall = LineageCut.localCheckpoint(
+      g.vertices.select(col("vid"), col("vid").as("comm"))).df
 
     var level = 0
     var done = false
@@ -56,11 +55,10 @@ object Louvain {
       val assign = onePhase(edges, nodes, maxRoundsPerLevel)
       val nComms = assign.select("comm").distinct().count()
       val nNodes = nodes.count()
-      overall = overall
+      overall = LineageCut.localCheckpoint(overall
         .join(assign.select(col("vid").as("comm"), col("comm").as("nc")),
           "comm")
-        .select(col("vid"), col("nc").as("comm"))
-        .localCheckpoint(true)
+        .select(col("vid"), col("nc").as("comm"))).df
       if (nComms == nNodes) done = true
       else {
         // Contract: communities become nodes; symmetric inter edges kept,
@@ -79,11 +77,11 @@ object Louvain {
         val selfSum = nodes
           .join(assign, "vid")
           .groupBy(col("comm").as("vid")).agg(sum(col("selfw")).as("sw"))
-        edges = inter.localCheckpoint(true)
-        nodes = selfSum.join(intra, Seq("vid"), "left")
-          .select(col("vid"),
-            (col("sw") + coalesce(col("iw"), lit(0.0))).as("selfw"))
-          .localCheckpoint(true)
+        edges = LineageCut.localCheckpoint(inter).df
+        nodes = LineageCut.localCheckpoint(
+          selfSum.join(intra, Seq("vid"), "left")
+            .select(col("vid"),
+              (col("sw") + coalesce(col("iw"), lit(0.0))).as("selfw"))).df
       }
     }
     // Canonical labels: min original member vid per community.
@@ -96,17 +94,16 @@ object Louvain {
   private def onePhase(edges: DataFrame, nodes: DataFrame,
       maxRounds: Int): DataFrame = {
     // k(v) = weighted degree incl. selfw; 2m = sum k.
-    val k = nodes
+    val k = LineageCut.localCheckpoint(nodes
       .join(edges.groupBy(col("src").as("vid")).agg(sum(col("w")).as("kw")),
         Seq("vid"), "left")
       .select(col("vid"),
-        (coalesce(col("kw"), lit(0.0)) + col("selfw")).as("k"))
-      .localCheckpoint(true)
+        (coalesce(col("kw"), lit(0.0)) + col("selfw")).as("k"))).df
     val m2 = k.agg(sum(col("k"))).head().getDouble(0)
     if (m2 == 0.0) return nodes.select(col("vid"), col("vid").as("comm"))
 
-    var assign = k.select(col("vid"), col("vid").as("comm"), col("k"))
-      .localCheckpoint(true)
+    var assign = LineageCut.localCheckpoint(
+      k.select(col("vid"), col("vid").as("comm"), col("k"))).df
     val spark = edges.sparkSession
     val nNodes = k.count()
     val tier = Strategy.tier(nNodes)
@@ -183,7 +180,7 @@ object Louvain {
         max(when(col("c") === col("cur"), col("score"))).as("curScore"))
         .select(col("vid"), (-col("b.nc")).as("bestC"),
           col("b.score").as("bestScore"), col("curScore"))
-      val next = assign.join(best, "vid").select(
+      val next = LineageCut.localCheckpoint(assign.join(best, "vid").select(
         col("vid"),
         when(col("bestC") =!= col("comm") &&
           col("bestScore") > col("curScore"),
@@ -191,8 +188,7 @@ object Louvain {
         col("k"),
         when(col("bestC") =!= col("comm") &&
           col("bestScore") > col("curScore"), lit(1L))
-          .otherwise(lit(0L)).as("_moved"))
-        .localCheckpoint(true)
+          .otherwise(lit(0L)).as("_moved"))).df
       val moved = next.agg(sum(col("_moved"))).head().getLong(0)
       zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
       if (prevCk != null) prevCk.unpersist()

@@ -1,7 +1,7 @@
 package graft.apps
 
 import graft.graph.SimpleGraph
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** Per-vertex triangle counting on the undirected simple graph —
@@ -79,10 +79,10 @@ object Triangles {
       .select(col("x.vid").as("vid"), col("x.c").as("c"))
     val counts = corners.groupBy("vid").agg(sum(col("c")).as("triangles"))
 
-    val res = g.vertices.select("vid").join(counts, Seq("vid"), "left")
-      .select(col("vid"),
-        coalesce(col("triangles"), lit(0L)).as("triangles"))
-      .localCheckpoint(true)
+    val res = LineageCut.localCheckpoint(
+      g.vertices.select("vid").join(counts, Seq("vid"), "left")
+        .select(col("vid"),
+          coalesce(col("triangles"), lit(0L)).as("triangles"))).df
     // The checkpoint above materializes the result, so the cached edge
     // projection has served its purpose — unpersist it here or it stays
     // pinned for the life of the session (r3 judge finding).
@@ -114,13 +114,11 @@ object Triangles {
         greatest(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst")).distinct()
     val oldC = canon(oldEdges)
-    val fresh = canon(newEdges)
-      .join(oldC, Seq("src", "dst"), "left_anti")
-      .localCheckpoint(true)
+    val fresh = LineageCut.localCheckpoint(canon(newEdges)
+      .join(oldC, Seq("src", "dst"), "left_anti")).df
 
-    val ends = fresh
-      .select(explode(array(col("src"), col("dst"))).as("vid")).distinct()
-      .localCheckpoint(true)
+    val ends = LineageCut.localCheckpoint(fresh
+      .select(explode(array(col("src"), col("dst"))).as("vid")).distinct()).df
 
     // Join-based wedge closure — the hub-safe form: a delta endpoint's
     // adjacency stays DISTRIBUTED as (vid, nbr) rows instead of being
@@ -137,8 +135,8 @@ object Triangles {
     // One pass over the big relation (left_semi pushes the endpoint
     // filter into the scan); the result stays row-distributed and is
     // pinned once for the two closure joins below.
-    val symEnds = sym.join(ends, Seq("vid"), "left_semi")
-      .localCheckpoint(true)
+    val symEnds =
+      LineageCut.localCheckpoint(sym.join(ends, Seq("vid"), "left_semi")).df
     val wedges = fresh
       .join(symEnds.select(col("vid").as("src"), col("nbr").as("w")),
         "src")

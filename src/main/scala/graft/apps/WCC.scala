@@ -3,7 +3,7 @@ package graft.apps
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** Weakly connected components: propagate the minimum vertex id over the
@@ -102,16 +102,15 @@ object WCC {
       .select(coalesce(col("csrc"), col("src")).as("src"),
         coalesce(col("cdst"), col("dst")).as("dst"))
 
-    val newEndpoints = e
+    val newEndpoints = LineageCut.localCheckpoint(e
       .select(explode(array(col("src"), col("dst"))).as("vid")).distinct()
-      .join(labels.select("vid"), Seq("vid"), "left_anti")
-      .localCheckpoint(true)
+      .join(labels.select("vid"), Seq("vid"), "left_anti")).df
 
     val contractedVerts = labels.select(col("comp").as("vid")).distinct()
       .unionByName(newEndpoints)
     val contracted = graft.graph.SimpleGraph(
       contractedVerts, mapped, directed = false)
-    val relabel = run(contracted, maxRounds).localCheckpoint(true)
+    val relabel = LineageCut.localCheckpoint(run(contracted, maxRounds)).df
 
     // old vertices follow their component's new label; new vertices
     // take theirs directly

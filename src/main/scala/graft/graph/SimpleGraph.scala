@@ -160,7 +160,9 @@ final case class SimpleGraph(
       .select(col("vid"), coalesce(col("deg"), lit(0L)).as("deg"))
   }
 
-  def numVertices: Long = vertices.count()
+  /** |V|, counted once per graph instance (memoized like the placed edge
+    * views): every app run asks for it, and each uncached count is a job. */
+  @transient lazy val numVertices: Long = vertices.count()
   def numEdges: Long = edges.count()
 
   /** COPY_GRAPH reversed (dag_utils.py:461 / grape_instance.cc:604). */

@@ -1,7 +1,7 @@
 package graft.graphbuild
 
 import graft.graph.SimpleGraph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, LineageCut, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,12 +44,12 @@ object GraphBuilder {
     val distinctOids = owners.unionByName(targets).distinct()
     val spark = files.sparkSession
     import spark.implicits._
-    val sorted = distinctOids
+    // materialize once: the count job and the assignment job must see
+    // identical partitions
+    val sorted = LineageCut.localCheckpoint(distinctOids
       .repartitionByRange(col("oid"))
-      .sortWithinPartitions(col("oid"))
+      .sortWithinPartitions(col("oid"))).df
       .as[String]
-      .localCheckpoint(true) // materialize once: the count job and the
-                             // assignment job must see identical partitions
     val counts = sorted.mapPartitions(it => Iterator.single(it.size))
       .collect() // one Int per partition — driver-side prefix sum only
     val offsets = counts.scanLeft(0L)(_ + _)

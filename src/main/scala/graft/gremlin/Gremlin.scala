@@ -301,12 +301,21 @@ object Gremlin {
     }.reduce(_.unionByName(_))
   }
 
-  /** Frames that carry property `p`, projected to just that value. */
+  /** Frames that carry property `p`, projected to just that value. A
+    * null value is an absent property and is skipped, as in TinkerPop. */
   private def valueBag(st: VState, p: String): DataFrame = {
     val have = st.frames.values.filter(_.columns.contains(p)).toSeq
     if (have.isEmpty)
       throw ParseException(s"no live vertex label has property '$p'")
     have.map(_.select(col(p))).reduce(_.unionByName(_))
+      .where(col(p).isNotNull)
+  }
+
+  /** `values(ps)` rows; a single property skips null values. */
+  private def valueRows(frames: Seq[DataFrame], ps: Seq[String])
+      : DataFrame = {
+    val rows = frames.map(_.select(ps.map(col): _*)).reduce(_.unionByName(_))
+    if (ps.size == 1) rows.where(col(ps.head).isNotNull) else rows
   }
 
   private def orderKeys(bys: Seq[Step]): Seq[Column] =
@@ -536,8 +545,7 @@ object Gremlin {
             .filter(e => ps.forall(e.columns.contains))
           if (have.isEmpty) throw ParseException(
             s"no live edge relation has properties $ps")
-          out = have.map(_.select(ps.map(col): _*))
-            .reduce(_.unionByName(_))
+          out = valueRows(have, ps)
         case o => throw ParseException(
           s"step $o is not supported on edge traversers " +
             "(use inV()/outV() to return to vertices)")
@@ -674,8 +682,7 @@ object Gremlin {
           if (have.isEmpty) throw ParseException(
             s"no live vertex label has propert" +
               s"${if (ps.size == 1) s"y '${ps.head}'" else s"ies $ps"}")
-          out = have.map(_.select(ps.map(col): _*))
-            .reduce(_.unionByName(_))
+          out = valueRows(have, ps)
         case "count" =>
           requireOpen(s.name)
           out = bag(st).agg(count(lit(1)).as("cnt"))
@@ -712,6 +719,7 @@ object Gremlin {
             s"no live vertex label has properties $needed")
           out = have.map(_.select(needed.distinct.map(col): _*))
             .reduce(_.unionByName(_))
+            .where(col(k).isNotNull)
             .groupBy(col(k).as("k")).agg(aggCol.as("value"))
           i += 2 // consume both by()s
         case "sum" | "min" | "max" | "mean" =>

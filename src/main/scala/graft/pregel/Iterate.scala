@@ -1,12 +1,14 @@
 package graft.pregel
 
 import graft.sources.SnapshotTable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** Per-iteration lineage + convergence metrics, one row per superstep
   * (north rule: "checkpoints per-iteration vertex state ... with
-  * per-partition lineage and convergence metrics for resumable runs"). */
+  * per-partition lineage and convergence metrics for resumable runs").
+  * `rows` is the state's row count every round; `changed` is its
+  * `_changed` sum, -1 for states without that column (fixed-round apps). */
 final case class IterMetrics(
     runId: String,
     iteration: Int,
@@ -16,7 +18,7 @@ final case class IterMetrics(
     wallMs: Long)
 
 /** Where to durably checkpoint iteration state. `dir=None` keeps only
-  * in-memory `localCheckpoint`s (lineage cut, not resumable). With a dir,
+  * in-memory lineage cuts (`LineageCut`, not resumable). With a dir,
   * every superstep becomes an atomically-committed snapshot of one
   * [[graft.sources.SnapshotTable]] per runId (`dir/runId`), with the
   * convergence metrics in the manifest summary and per-FILE lineage in
@@ -45,11 +47,14 @@ final case class CheckpointConfig(
   * `init` plays PEval's output, `step` is one IncEval round, and
   * `ToTerminate` becomes "changed == 0" computed from the new state.
   *
-  * Every round the new state is checkpointed (in-memory `localCheckpoint`,
-  * plus one SnapshotTable commit when a dir is configured) — without the
-  * lineage cut the plan grows superlinearly with iterations (SURVEY.md
-  * §7.4). The snapshot table doubles as the resume point: `run` restarts
-  * from its current version, validated against the manifest lineage.
+  * Every round the new state is cut by [[org.apache.spark.sql.LineageCut]]
+  * (in-memory checkpoint, plus one SnapshotTable commit when a dir is
+  * configured) — without the lineage cut the plan grows superlinearly
+  * with iterations (SURVEY.md §7.4). The cut's one job also counts the
+  * state's rows and sums its `_changed` column, so a round is one job:
+  * convergence costs no separate count. The snapshot table doubles as
+  * the resume point: `run` restarts from its current version, validated
+  * against the manifest lineage.
   */
 object Iterate {
 
@@ -80,7 +85,7 @@ object Iterate {
     * first round after a resume). Frontier apps use it to broadcast-hint
     * a shrunken frontier (north rule: "broadcast of high-degree frontier
     * deltas", [[graft.graph.Strategy.frontier]]) without paying an extra
-    * count job — the convergence check already computed the number.
+    * count job — the round's lineage cut already computed the number.
     * @param initChanged the frontier size of `init` when the caller knows
     *   it (single-source apps seed exactly 1); -1 = unknown. */
   def runDelta(
@@ -109,7 +114,7 @@ object Iterate {
         state = SnapshotTable.readVersion(spark, t, v)
       }
     }
-    if (state == null) state = init.localCheckpoint(true)
+    if (state == null) state = LineageCut.localCheckpoint(init).df
     else {
       // Checkpoints persist the step OUTPUT, which may carry `_changed`
       // even when `init` does not (steps that derive their frontier from
@@ -146,19 +151,10 @@ object Iterate {
     while (round < maxRounds && !done) {
       round += 1
       val t0 = System.nanoTime()
-      val next0 = step(prev, round, lastChanged)
-      val hasChanged = next0.columns.contains("_changed")
-      // Materialize + cut lineage in one action.
-      val next = next0.localCheckpoint(true)
-      // Fixed-round algorithms (no _changed column) pay no extra action
-      // per round; convergence-gated ones pay one cheap agg over the
-      // checkpointed frame.
-      val (changed, rows) =
-        if (hasChanged) {
-          val r = next.agg(
-            sum(col("_changed").cast("long")), count(lit(1))).head()
-          (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
-        } else (-1L, -1L)
+      // Materialize, cut lineage and count rows + frontier in one job.
+      val LineageCut.Cut(next, rows, changed) =
+        LineageCut.localCheckpoint(step(prev, round, lastChanged))
+      val hasChanged = changed >= 0L // the state has a `_changed` column
       val wall = (System.nanoTime() - t0) / 1000000
       val m = IterMetrics(checkpoint.runId, round, changed, rows,
         spark.sessionState.conf.numShufflePartitions, wall)

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, LineageCut}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -116,11 +116,10 @@ object Ann {
     // a uniform, partitioning-stable sample. The nlist-row sort that
     // assigns cids is a single tiny exchange.
     val wInit = Window.orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    var centroids = corpus
+    var centroids = LineageCut.localCheckpoint(corpus
       .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nlist)
       .select((row_number().over(wInit) - 1).as("cid"),
-        col("embedding").as("centroid"))
-      .localCheckpoint(true)
+        col("embedding").as("centroid"))).df
 
     // (vec_id, cid): nearest (max-cosine) centroid per corpus vector.
     // Ids only — the embedding re-attaches by key where needed.
@@ -134,15 +133,14 @@ object Ann {
 
     for (_ <- 0 until iters) {
       // Lloyd round: element-wise mean of each list's members.
-      val next = assign()
+      val next = LineageCut.localCheckpoint(assign()
         .join(corpus, "vec_id")
         .select(col("cid"), posexplode(col("embedding")))
         .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
         .groupBy(col("cid")).agg(
           transform(
             array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => s("m").cast("float")).as("centroid"))
-        .localCheckpoint(true)
+            s => s("m").cast("float")).as("centroid"))).df
       // Empty lists drop out (classic k-means); probes and lists stay
       // consistent because both sides use the same centroid table.
       centroids = next

@@ -3,7 +3,8 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, LineageCut, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -250,14 +251,13 @@ object SnapshotTable {
     val spark = df.sparkSession
     val root = new Path(table)
     val f = fileSystem(spark, root)
-    val dfc = df.localCheckpoint(true)
+    val LineageCut.Cut(dfc, nDelta, _) = LineageCut.localCheckpoint(df)
     require(dfc.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
       .where(col("n") > 1).isEmpty,
       s"upsert rows must be unique on $keyCols")
     // Size-gate the key broadcast (same posture as graph/Strategy): a
     // bulk MERGE's key set can be arbitrarily large — above the gate the
     // anti-join shuffles instead of collecting every key to the driver.
-    val nDelta = dfc.count()
     val broadcastKeys = nDelta <= 4L * 1000 * 1000
     val curV0 = currentVersionOpt(spark, table).getOrElse(
       throw new IllegalStateException(s"no table at $table"))
@@ -422,8 +422,10 @@ object SnapshotTable {
     df.write.mode("errorifexists").parquet(dataDir.toString)
 
     try {
-      // 2. Lineage of what landed on disk (one agg row per file).
-      val onDisk = spark.read.parquet(dataDir.toString)
+      // 2. Lineage of what landed on disk (one agg row per file). The
+      //    read takes the written frame's schema: inferring it from the
+      //    parquet footers would cost a job and give the same schema.
+      val onDisk = spark.read.schema(df.schema).parquet(dataDir.toString)
       val newFiles = fileLineage(onDisk)
       val schemaJson = onDisk.schema.json
 

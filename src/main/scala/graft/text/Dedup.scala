@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, LineageCut}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for large-scale training-data pipelines: exact,
@@ -76,8 +76,8 @@ object Dedup {
       threshold: Double = 0.7,
       maxBucket: Int = 64): DataFrame = {
     val rows = numHashes / bands
-    val sigs = signatures(docs, idCol, textCol, k, numHashes)
-      .localCheckpoint(true)
+    val sigs = LineageCut.localCheckpoint(
+      signatures(docs, idCol, textCol, k, numHashes)).df
 
     val banded = bandedOf(sigs, bands, rows)
 
@@ -261,10 +261,9 @@ object Dedup {
       case _ => None // in lockstep (or a legacy pre-marker store)
     }
     val newSigs = signatures(newDocs, idCol, textCol, k, numHashes)
-    val deltaSigs = unsigned
+    val deltaSigs = LineageCut.localCheckpoint(unsigned
       .map(d => signatures(d, idCol, textCol, k, numHashes))
-      .foldLeft(newSigs)(_ unionByName _)
-      .localCheckpoint(true)
+      .foldLeft(newSigs)(_ unionByName _)).df
     // Pin the store BEFORE appending the delta (the manifest file list
     // is resolved here, so the lazy pair plan can't see its own delta).
     val store = sigV0 match {
@@ -336,7 +335,7 @@ object Dedup {
     * pigeonhole), then verify the full Hamming distance. */
   def simhashPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", maxHamming: Int = 3): DataFrame = {
-    val sh = simhash(docs, idCol, textCol).localCheckpoint(true)
+    val sh = LineageCut.localCheckpoint(simhash(docs, idCol, textCol)).df
     val banded = sh.select(col(idCol).as("id"), col("simhash"),
       explode(array((0 until 4).map(b => struct(lit(b).as("band"),
         shiftrightunsigned(col("simhash"), b * 16)
@@ -363,12 +362,11 @@ object Dedup {
       threshold: Double = 0.5,
       maxDocFreq: Int = 200): DataFrame = {
     val toks = split(col(textCol), " ")
-    val grams = docs.select(col(idCol).as("id"),
+    val grams = LineageCut.localCheckpoint(docs.select(col(idCol).as("id"),
         array_distinct(transform(
           sequence(lit(0), greatest(size(toks) - n, lit(0))),
           i => xxhash64(concat_ws("", slice(toks, i + 1, lit(n))))))
-          .as("grams"))
-      .localCheckpoint(true)
+          .as("grams"))).df
     val sizes = grams.select(col("id"), size(col("grams")).as("sz"))
 
     val inv = grams.select(col("id"), explode(col("grams")).as("g"))

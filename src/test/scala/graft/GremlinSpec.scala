@@ -155,6 +155,29 @@ class GremlinSpec extends SparkSpec {
         .toDF("name", "age"))
   }
 
+  test("null property values are skipped, as in TinkerPop") {
+    import spark.implicits._
+    // its own fixture: one person with no age, one knows edge with no
+    // weight (`modern` has no nulls)
+    val person = Seq((1L, "ann", Some(30L)), (2L, "bob", None),
+      (3L, "cy", Some(30L))).toDF("vid", "name", "age")
+    val knows = Seq((1L, 2L, Some(0.5)), (2L, 3L, None))
+      .toDF("src", "dst", "weight")
+    val g = PropertyGraph(Map("person" -> person),
+      Map(("person", "knows", "person") -> knows))
+    def same(q: String, want: DataFrame): Unit =
+      assert(rows(Gremlin.run(g, q)) == rows(want), s"traversal: $q")
+    same("g.V().values('age')", Seq(30L, 30L).toDF("age"))
+    same("g.V().outE('knows').values('weight')", Seq(0.5).toDF("weight"))
+    same("g.V().groupCount().by('age')", Seq((30L, 2L)).toDF("k", "cnt"))
+    same("g.V().group().by('age').by(count())",
+      Seq((30L, 2L)).toDF("k", "value"))
+    // several properties stay one row per traverser; aggregates ignore
+    // nulls as before
+    assert(Gremlin.run(g, "g.V().values('name', 'age')").count() == 3L)
+    same("g.V().mean('age')", Seq(30.0).toDF("value"))
+  }
+
   test("sum / mean / min / max over a property") {
     assert(Gremlin.run(modern, "g.V().sum('age')").head()
       .getLong(0) == 123L)

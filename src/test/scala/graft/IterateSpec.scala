@@ -31,6 +31,9 @@ class IterateSpec extends SparkSpec {
       stopWhenUnchanged = false)
     assert(res.completedRounds == 7)
     assert(res.state.head().getInt(1) == 7)
+    // the lineage cut counts the state every round, frontier or not
+    assert(res.metrics.map(_.rows) == Seq.fill(7)(1L))
+    assert(res.metrics.forall(_.changed == -1L))
   }
 
   test("checkpoint + resume from the newest complete iteration") {
@@ -54,6 +57,7 @@ class IterateSpec extends SparkSpec {
     val table = s"$dir/r1"
     val hist = SnapshotTable.snapshots(spark, table)
     assert(hist.map(_.summary("iteration")) == (1 to 10).map(_.toString))
+    assert(hist.forall(_.summary("stateRows") == "1"), "fixed-round rows")
     // Per-file lineage: every iteration's file rows sum to the state
     // size (1 here) and carry a content checksum.
     hist.foreach { m =>

@@ -1,0 +1,141 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import graft.pregel.Iterate
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, LineageCut}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+/** The engine's one lineage cut ([[LineageCut]]) against Spark's eager
+  * `Dataset.localCheckpoint`: same rows, schema and partitioning, a leaf
+  * plan, and the row count and `_changed` sum of the same job. */
+class LineageCutSpec extends SparkSpec {
+
+  import spark.implicits._
+
+  private def sumChanged(df: DataFrame): Long = {
+    val r = df.agg(sum(col("_changed").cast("long"))).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  /** Jobs the calling thread starts while `f` runs. A marker job started
+    * afterwards flushes the listener queue, which delivers in order. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("cut.tag")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("cut.tag", tag)
+      f
+      sc.setLocalProperty("cut.tag", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!seen.contains("marker") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.contains("marker"), "listener never saw the marker job")
+      seen.asScala.count(_ == tag)
+    } finally {
+      sc.setLocalProperty("cut.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("rows, schema and output partitioning equal Spark's local " +
+      "checkpoint") {
+    val df = (0L until 50L).map(v => (v, if (v % 3 == 0) None else Some(v)))
+      .toDF("vid", "x")
+      .select(col("vid"), col("x"), array(col("vid")).as("a"))
+      .repartition(4, col("vid"))
+    // iterative runs plan with AQE off, which keeps the partitioning
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val ref = df.localCheckpoint(true)
+      val cut = LineageCut.localCheckpoint(df)
+      assert(cut.rows == 50L && cut.changed == -1L)
+      assertSameRows(cut.df, ref)
+      assert(cut.df.schema == ref.schema)
+      assert(!cut.df.schema("vid").nullable && cut.df.schema("x").nullable)
+      val part = cut.df.queryExecution.executedPlan.outputPartitioning
+      assert(part == ref.queryExecution.executedPlan.outputPartitioning)
+      assert(part.numPartitions == 4, part)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("the cut frame's plan is a LogicalRDD leaf") {
+    val df = (0L until 10L).toDF("vid")
+      .join((0L until 10L).toDF("vid"), "vid").where(col("vid") > 2)
+    val plan = LineageCut.localCheckpoint(df).df.queryExecution.analyzed
+    assert(plan.isInstanceOf[LogicalRDD] && plan.children.isEmpty,
+      s"lineage not cut:\n$plan")
+  }
+
+  test("the _changed sum matches sum(cast long) for every accepted type") {
+    val frames = Seq(
+      "int" -> (0 until 20).map(i => (i.toLong, i % 4))
+        .toDF("vid", "_changed"),
+      "boolean" -> (0 until 20).map(i => (i.toLong, i % 3 == 0))
+        .toDF("vid", "_changed"),
+      "long with nulls" -> (0 until 20)
+        .map(i => (i.toLong, if (i % 2 == 0) None else Some(i.toLong)))
+        .toDF("vid", "_changed"),
+      "empty" -> Seq.empty[(Long, Int)].toDF("vid", "_changed"),
+      "all null" -> Seq((1L, None: Option[Int])).toDF("vid", "_changed"))
+    for ((name, df) <- frames) {
+      val cut = LineageCut.localCheckpoint(df.repartition(3))
+      assert(cut.changed == sumChanged(df), name)
+      assert(cut.rows == df.count(), name)
+      assert(sumChanged(cut.df) == cut.changed, name)
+    }
+  }
+
+  test("a _changed column that is not boolean or integral is refused") {
+    val df = Seq((1L, "1")).toDF("vid", "_changed")
+    val e = intercept[IllegalArgumentException](LineageCut.localCheckpoint(df))
+    assert(e.getMessage.contains("_changed") &&
+      e.getMessage.contains("string"), e.getMessage)
+  }
+
+  test("an Iterate superstep is one job: the cut counts the frontier") {
+    val init = (0L until 8L).toDF("vid").select(col("vid"),
+      lit(3).as("n"), lit(1).as("_changed"))
+    var res: Iterate.Result = null
+    val jobs = jobsDuring {
+      res = Iterate.run(init, 10, (s, _) => s.select(col("vid"),
+        greatest(col("n") - 1, lit(0)).as("n"),
+        when(col("n") > 0, 1).otherwise(0).as("_changed")))
+    }
+    // three counting-down rounds and the fixpoint round, plus init's cut
+    assert(res.completedRounds == 4)
+    assert(res.metrics.map(_.changed) == Seq(8L, 8L, 8L, 0L))
+    assert(res.metrics.forall(_.rows == 8L))
+    assert(jobs == res.completedRounds + 1, s"$jobs jobs")
+  }
+
+  test("src/main cuts lineage only through LineageCut") {
+    val call = """\.localCheckpoint\((true|false)?\)""".r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "LineageCut.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if call.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(hits.isEmpty,
+      s"Dataset.localCheckpoint outside LineageCut:\n${hits.mkString("\n")}")
+  }
+}

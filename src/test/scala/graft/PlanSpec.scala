@@ -143,6 +143,46 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("a round planned over a cut state shuffles only the messages into " +
+      "its vid join") {
+    import org.apache.spark.sql.LineageCut
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import spark.implicits._
+    val p = spark.sessionState.conf.numShufflePartitions
+    val edges = (0L until 40L).map(v => (v, (v * 7) % 40)).toDF("src", "dst")
+    val vertices = (0L until 40L).toDF("vid")
+      .select(col("vid"), lit(1.0).as("x")).repartition(p, col("vid"))
+    // (state side, messages side) exchange counts of the round's vid join
+    def exchanges(state: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val msgs = edges.join(state.select(col("vid").as("src"), col("x")),
+          "src")
+        .groupBy(col("dst").as("vid")).agg(sum(col("x")).as("m"))
+      val plan = state.join(msgs, Seq("vid"), "left")
+        .queryExecution.executedPlan
+      val j = plan.collectFirst { case j: SortMergeJoinExec => j }
+        .getOrElse(fail(s"no sort-merge join in\n$plan"))
+      def n(side: SparkPlan) =
+        side.collect { case x: ShuffleExchangeExec => x }.size
+      (n(j.left), n(j.right))
+    }
+    val keep = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val (cutSide, cutMsgs) =
+        exchanges(LineageCut.localCheckpoint(vertices).df)
+      assert(cutSide == 0 && cutMsgs >= 1,
+        s"cut state: $cutSide exchange(s) on the state side")
+      // control: the same rows without the cut's partitioning do shuffle
+      val bare = spark.createDataFrame(
+        LineageCut.localCheckpoint(vertices).df.rdd, vertices.schema)
+      assert(exchanges(bare)._1 == 1, "control state did not shuffle")
+    } finally keep.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("snapshot scan: manifest pruning composes with parquet pushdown") {
     import graft.sources.SnapshotTable
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}

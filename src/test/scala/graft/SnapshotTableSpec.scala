@@ -205,6 +205,25 @@ class SnapshotTableSpec extends SparkSpec {
     } finally rmrf(t)
   }
 
+  test("the committed schema equals the one parquet footers infer") {
+    val t = tmpTable("snap-schema")
+    try {
+      val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s").select(
+        col("id"), // non-nullable
+        col("s"),
+        array(col("id"), lit(null).cast("long")).as("arr"),
+        struct(col("id").as("k"), col("s").as("v")).as("st"),
+        timestamp_seconds(col("id")).as("ts"))
+      assert(!df.schema("id").nullable)
+      SnapshotTable.create(df, t)
+      val m = SnapshotTable.manifest(spark, t, 1)
+      val inferred = spark.read
+        .parquet(m.files.map(fl => s"$t/${fl.path}"): _*).schema
+      assert(m.schemaJson == inferred.json)
+      assertSameRows(SnapshotTable.read(spark, t), df)
+    } finally rmrf(t)
+  }
+
   test("table is relocatable: manifests store root-relative paths") {
     val t = tmpTable("snap-move")
     try {
