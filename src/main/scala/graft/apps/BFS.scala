@@ -38,24 +38,22 @@ object BFS {
       when(col("vid") === source, lit(1)).otherwise(lit(0)).as("_changed"))
       .repartition(p, col("vid"))
 
-    val res = Iterate.runDelta(
+    val res = Iterate.run(
       init, maxRounds,
-      step = (state, round, prevChanged) => {
+      step = (state, prev) => {
         val frontier = state.where(col("_changed") === 1)
           .select(col("vid"), lit(1L).as("value"))
-        val reached = gather(frontier, prevChanged).select(col("vid"))
+        val reached = gather(frontier, prev.changed).select(col("vid"))
         state.join(reached.withColumn("hit", lit(1)), Seq("vid"), "left")
           .select(
             col("vid"),
             when(col("depth") >= 0, col("depth"))
-              .when(col("hit") === 1, lit(round.toLong))
+              .when(col("hit") === 1, lit(prev.iteration + 1L))
               .otherwise(lit(-1L)).as("depth"),
             when(col("depth") < 0 && col("hit") === 1, lit(1))
               .otherwise(lit(0)).as("_changed"))
       },
-      stopWhenUnchanged = true,
-      checkpoint = checkpoint,
-      initChanged = 1L) // the single seeded source
+      checkpoint = checkpoint)
 
     res.state.select("vid", "depth")
   }

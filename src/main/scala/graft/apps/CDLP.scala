@@ -57,7 +57,7 @@ object CDLP {
         state.join(pick, Seq("vid"), "left").select(
           col("vid"), coalesce(col("picked"), col("label")).as("label"))
       },
-      stopWhenUnchanged = false,
+      stop = Iterate.fixedRounds,
       checkpoint = checkpoint)
 
     res.state.select("vid", "label")

@@ -2,7 +2,9 @@ package graft.apps
 
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
-import org.apache.spark.sql.{DataFrame, LineageCut}
+import graft.pregel.{IterMetrics, Iterate}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.LineageCut.Sum
 import org.apache.spark.sql.functions._
 
 /** Degree / eigenvector / Katz centrality, reference semantics. */
@@ -31,7 +33,13 @@ object Centrality {
     * (apps/centrality/eigenvector/eigenvector_centrality.h:51-141):
     * x_0 = 1/N; each round x'(v) = x(v) + Σ_{in-nbr w} x(w) (the self term
     * is the reference's `x[v] = x_last[v]` seed, :92-99), then L2-normalize;
-    * stop when Σ|x' - x| < N*tolerance or round >= max_round. */
+    * stop when Σ|x' - x| < N*tolerance or round >= max_round.
+    *
+    * Normalization is lazy: the state carries round r's unnormalized `x`
+    * with its Σx² (reduced by round r's cut) and round r-1's normalized
+    * vector `xl`; round r+1 divides `x` by round r's norm and emits round
+    * r's delta, which its cut sums. So when round r's delta meets the
+    * tolerance, round r+1's state holds round r's normalized vector. */
   def eigenvector(
       g: SimpleGraph,
       tolerance: Double = 1e-6,
@@ -42,39 +50,48 @@ object Centrality {
       else spark.sessionState.conf.numShufflePartitions
     val n = g.numVertices.toDouble
     val gather = g.gather("dir", Combine.Sum, n.toLong, p)
-
-    var state = LineageCut.localCheckpoint(g.vertices
-      .select(col("vid"), lit(1.0 / n).as("x"))
-      .repartition(p, col("vid"))).df
-    var round = 0
-    var done = false
-    var lastCk: DataFrame = null
-    while (!done && round < maxRound) {
-      round += 1
-      val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
-        .select(col("vid"), col("msg").as("mx"))
-      // one materialization per round; norm/delta are aggs over it
-      val raw = LineageCut.localCheckpoint(
-        state.join(msgs, Seq("vid"), "left").select(
-          col("vid"), col("x").as("x_last"),
-          (col("x") + coalesce(col("mx"), lit(0.0))).as("x"))).df
-      val norm = math.sqrt(
-        raw.agg(sum(col("x") * col("x"))).head().getDouble(0))
-      val delta = raw.agg(sum(abs(col("x") / norm - col("x_last"))))
-        .head().getDouble(0)
-      if (lastCk != null) lastCk.unpersist()
-      lastCk = raw
-      state = raw.select(col("vid"), (col("x") / norm).as("x"))
-      if (delta < n * tolerance) done = true
+    val (sq, delta) = (Sum("_x2"), Sum("_dx"))
+    def normalized(m: IterMetrics) =
+      col("x") / lit(math.sqrt(m.values(sq).doubleValue))
+    // An empty state has no norm; a delta is known from round 2 on.
+    val converged: Seq[IterMetrics] => Boolean = { ms =>
+      val m = ms.last
+      !m.values.contains(sq) ||
+        m.values.get(delta).exists(_.doubleValue < n * tolerance)
     }
-    LineageCut.localCheckpoint(
-      state.select(col("vid"), col("x").as("centrality"))).df
+
+    val none = lit(null).cast("double")
+    val res = Iterate.run(
+      g.vertices.select(col("vid"), lit(1.0 / n).as("x"), none.as("xl"),
+        none.as("_x2"), none.as("_dx")).repartition(p, col("vid")),
+      maxRound,
+      step = (state, prev) => {
+        // the initial vector is already normalized (and has no Σx²)
+        val cur = state.select(col("vid"), col("xl"),
+          (if (prev.values.contains(sq)) normalized(prev) else col("x"))
+            .as("x"))
+        val msgs = gather(cur.select(col("vid"), col("x").as("value")), -1L)
+          .select(col("vid"), col("msg").as("mx"))
+        val x = col("x") + coalesce(col("mx"), lit(0.0))
+        cur.join(msgs, Seq("vid"), "left").select(col("vid"), x.as("x"),
+          col("x").as("xl"), (x * x).as("_x2"),
+          abs(col("x") - col("xl")).as("_dx"))
+      },
+      stop = converged,
+      reduce = Seq(sq, delta))
+    val centrality = res.metrics.lastOption match {
+      case None => col("x")
+      case Some(_) if converged(res.metrics) => col("xl")
+      case Some(m) => normalized(m)
+    }
+    res.state.select(col("vid"), centrality.as("centrality"))
   }
 
   /** Katz centrality (apps/centrality/katz/katz_centrality.h:60-160):
     * x_0 = 0; each round x'(v) = alpha * Σ_{in-nbr w} x(w) + beta
     * (NOT normalized per round); stop when Σ|x' - x| < N*tolerance or
-    * round >= max_round; final L2 normalization when `normalized`. */
+    * round >= max_round; final L2 normalization when `normalized`. Each
+    * round's cut reduces both Σ|x' - x| and Σx'². */
   def katz(
       g: SimpleGraph,
       alpha: Double = 0.1,
@@ -88,36 +105,31 @@ object Centrality {
       else spark.sessionState.conf.numShufflePartitions
     val n = g.numVertices.toDouble
     val gather = g.gather("dir", Combine.Sum, n.toLong, p)
+    val (sq, delta) = (Sum("_x2"), Sum("_dx"))
 
-    var state = LineageCut.localCheckpoint(g.vertices
-      .select(col("vid"), lit(0.0).as("x"))
-      .repartition(p, col("vid"))).df
-    var round = 0
-    var done = false
-    var totalSum = 0.0
-    var lastCk: DataFrame = null
-    while (!done && round < maxRound) {
-      round += 1
-      val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
-        .select(col("vid"), col("msg").as("mx"))
-      val next = LineageCut.localCheckpoint(
-        state.join(msgs, Seq("vid"), "left").select(
-          col("vid"), col("x").as("x_last"),
-          (lit(alpha) * coalesce(col("mx"), lit(0.0)) + lit(beta)).as("x"))).df
-      val r = next.agg(sum(abs(col("x") - col("x_last"))),
-        sum(col("x") * col("x"))).head()
-      val delta = r.getDouble(0)
-      totalSum = r.getDouble(1)
-      if (lastCk != null) lastCk.unpersist()
-      lastCk = next
-      state = next.drop("x_last")
-      if (delta < n * tolerance) done = true
+    val none = lit(null).cast("double")
+    val res = Iterate.run(
+      g.vertices.select(col("vid"), lit(0.0).as("x"), none.as("_dx"),
+        none.as("_x2")).repartition(p, col("vid")),
+      maxRound,
+      step = (state, _) => {
+        val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
+          .select(col("vid"), col("msg").as("mx"))
+        val x = lit(alpha) * coalesce(col("mx"), lit(0.0)) + lit(beta)
+        state.join(msgs, Seq("vid"), "left").select(col("vid"), x.as("x"),
+          abs(x - col("x")).as("_dx"), (x * x).as("_x2"))
+      },
+      // an empty state has no delta
+      stop = _.last.values.get(delta).forall(_.doubleValue < n * tolerance),
+      reduce = Seq(delta, sq))
+    // No Σx² (no round ran, or an empty state) or a zero one would yield
+    // a 1/0 scale — return the raw scores instead (reference guards its
+    // normalizers).
+    res.metrics.lastOption.flatMap(_.values.get(sq)).map(_.doubleValue)
+      .filter(s => normalized && s > 0.0) match {
+      case Some(s) => res.state.select(col("vid"),
+        (col("x") * (1.0 / math.sqrt(s))).as("centrality"))
+      case None => res.state.select(col("vid"), col("x").as("centrality"))
     }
-    if (normalized && totalSum > 0.0) {
-      // totalSum = 0 (e.g. maxRound = 0) would yield a 1/0 scale — return
-      // the raw scores instead (reference guards its normalizers).
-      val s = 1.0 / math.sqrt(totalSum)
-      state.select(col("vid"), (col("x") * s).as("centrality"))
-    } else state.select(col("vid"), col("x").as("centrality"))
   }
 }

@@ -2,7 +2,9 @@ package graft.apps
 
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
-import org.apache.spark.sql.{DataFrame, LineageCut}
+import graft.pregel.{IterMetrics, Iterate}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.LineageCut.{Max, Reduction, Sum}
 import org.apache.spark.sql.functions._
 
 /** HITS — alternating authority/hub power iteration with per-round
@@ -16,8 +18,11 @@ import org.apache.spark.sql.functions._
   *     (hits.h:162-164);
   *   - when `normalized`, final division by the vector sums (hits.h:176).
   *
-  * Global max/sum scalars are driver-side `agg(...)` results re-broadcast as
-  * literals (SURVEY.md §4.1); per-round cost is two join+groupBy shuffles.
+  * The maxes and the delta are reductions of each round's cut (SURVEY.md
+  * §4.1), and normalization is lazy: the state carries round r's raw
+  * `hub`/`auth` (whose maxes round r's cut reduces) and round r-1's
+  * normalized `hl`/`al`; round r+1 divides by round r's maxes and emits
+  * round r's hub delta, which its cut sums.
   */
 object HITS {
 
@@ -37,57 +42,66 @@ object HITS {
     // hub(u) = sum of auth over out-neighbors: flow dst->src (reversed).
     val toAuth = g.gather("dir", Combine.Sum, n.toLong, p)
     val toHub = g.gather("rev", Combine.Sum, n.toLong, p)
-
-    var state = LineageCut.localCheckpoint(g.vertices.select(col("vid"),
-      lit(1.0 / n).as("hub"), lit(0.0).as("auth"))
-      .repartition(p, col("vid"))).df
-
-    var step = 0
-    var done = false
-    var lastCk: org.apache.spark.sql.DataFrame = null
-    while (!done && step < maxRound) {
-      val authMsgs =
-        toAuth(state.select(col("vid"), col("hub").as("value")), -1L)
-          .select(col("vid"), col("msg").as("na"))
-      val s1 = state.join(authMsgs, Seq("vid"), "left").select(
-        col("vid"), col("hub").as("hub_last"),
-        coalesce(col("na"), lit(0.0)).as("auth"))
-      val hubMsgs =
-        toHub(s1.select(col("vid"), col("auth").as("value")), -1L)
-          .select(col("vid"), col("msg").as("nh"))
-      // ONE materialization per round; the max/eps scalars and the
-      // normalized state are cheap projections over the checkpointed frame.
-      val s2 = LineageCut.localCheckpoint(
-        s1.join(hubMsgs, Seq("vid"), "left").select(
-          col("vid"), col("hub_last"), col("auth"),
-          coalesce(col("nh"), lit(0.0)).as("hub"))).df
-
-      val r = s2.agg(max(col("hub")), max(col("auth"))).head()
-      val maxH = r.getDouble(0)
-      val maxA = r.getDouble(1)
-      if (maxH <= 0.0 || maxA <= 0.0) {
-        // Edgeless (or fully drained) graph: normalizing would divide by
-        // zero and NaN every score — keep the pre-round state and stop
-        // (the reference CHECK-guards its normalization scalars).
-        done = true
-      } else {
-        val eps = s2.agg(sum(abs(col("hub") / maxH - col("hub_last"))))
-          .head().getDouble(0)
-        if (lastCk != null) lastCk.unpersist()
-        lastCk = s2
-        state = s2.select(col("vid"), (col("hub") / maxH).as("hub"),
-          (col("auth") / maxA).as("auth"))
-        step += 1
-        if (eps <= tolerance) done = true
-      }
+    val (maxH, maxA, delta) = (Max("_mh"), Max("_ma"), Sum("_dh"))
+    def scaled(m: IterMetrics) = (col("hub") / lit(m.values(maxH)),
+      col("auth") / lit(m.values(maxA)))
+    // Stop when the previous round's delta meets the tolerance, or when a
+    // vector has no positive max (an edgeless, drained or empty graph:
+    // normalizing would divide by zero, so the pre-round vectors are kept;
+    // the reference CHECK-guards its normalization scalars).
+    val stopped: Seq[IterMetrics] => Boolean = { ms =>
+      val v = ms.last.values.get(_: Reduction).map(_.doubleValue)
+      v(delta).exists(_ <= tolerance) ||
+        Seq(maxH, maxA).exists(v(_).forall(_ <= 0.0))
     }
 
-    val out = if (normalized) {
+    val none = lit(null).cast("double")
+    val res = Iterate.run(
+      g.vertices.select(col("vid"), lit(1.0 / n).as("hub"),
+        lit(0.0).as("auth"), none.as("hl"), none.as("al"), none.as("_dh"),
+        none.as("_mh"), none.as("_ma")).repartition(p, col("vid")),
+      maxRound,
+      step = (state, prev) => {
+        // the initial vectors are not scaled (and have no maxes)
+        val (h, a) = if (prev.values.contains(maxH)) scaled(prev)
+          else (col("hub"), col("auth"))
+        val cur = state.select(col("vid"), h.as("h"), a.as("a"), col("hl"))
+        val authMsgs =
+          toAuth(cur.select(col("vid"), col("h").as("value")), -1L)
+            .select(col("vid"), col("msg").as("na"))
+        val s1 = cur.join(authMsgs, Seq("vid"), "left").select(
+          col("vid"), col("h"), col("a"), col("hl"),
+          coalesce(col("na"), lit(0.0)).as("auth"))
+        val hubMsgs =
+          toHub(s1.select(col("vid"), col("auth").as("value")), -1L)
+            .select(col("vid"), col("msg").as("nh"))
+        val hub = coalesce(col("nh"), lit(0.0))
+        // `_mh`/`_ma` copy the raw vectors for the cut's maxes: reduced
+        // columns leave the result, which the raw vectors must not
+        s1.join(hubMsgs, Seq("vid"), "left").select(col("vid"),
+          hub.as("hub"), col("auth"), col("h").as("hl"), col("a").as("al"),
+          abs(col("h") - col("hl")).as("_dh"), hub.as("_mh"),
+          col("auth").as("_ma"))
+      },
+      stop = stopped,
+      reduce = Seq(maxH, maxA, delta))
+
+    val (hub, auth) = res.metrics.lastOption match {
+      case None => (col("hub"), col("auth"))
+      case Some(_) if stopped(res.metrics) => (col("hl"), col("al"))
+      case Some(m) => scaled(m)
+    }
+    val state = res.state.select(col("vid"), hub.as("hub"), auth.as("auth"))
+    if (!normalized) state
+    else {
+      // A zero sum (auth on an edgeless graph) leaves that vector
+      // unnormalized, as Katz guards its normalizer.
       val r = state.agg(sum(col("hub")), sum(col("auth"))).head()
-      val (sh, sa) = (r.getDouble(0), r.getDouble(1))
-      state.select(col("vid"), (col("hub") / sh).as("hub"),
-        (col("auth") / sa).as("auth"))
-    } else state
-    LineageCut.localCheckpoint(out).df
+      def norm(c: String, i: Int) =
+        if (r.isNullAt(i) || r.getDouble(i) == 0.0) col(c)
+        else col(c) / lit(r.getDouble(i))
+      state.select(col("vid"), norm("hub", 0).as("hub"),
+        norm("auth", 1).as("auth"))
+    }
   }
 }

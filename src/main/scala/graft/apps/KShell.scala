@@ -62,8 +62,7 @@ object KShell {
           when(col("ests").isNotNull &&
             least(col("core"), hIndex(col("ests"))) < col("core"), lit(1))
             .otherwise(lit(0)).as("_changed"))
-      },
-      stopWhenUnchanged = true)
+      })
 
     res.state.select("vid", "core")
   }

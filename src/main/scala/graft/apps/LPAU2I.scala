@@ -1,6 +1,7 @@
 package graft.apps
 
-import org.apache.spark.sql.{DataFrame, LineageCut}
+import graft.pregel.Iterate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** LPA-U2I — weighted feature propagation on a bipartite (user, item)
@@ -18,6 +19,9 @@ import org.apache.spark.sql.functions._
   *     degree-weighted mean of OTHER users' features via shared items;
   *   - `maxRound` steps total (the reference counts the initial label
   *     distribution as step 1, so steps 2..maxRound alternate u2i/i2u).
+  *     One superstep here is a u2i step followed by its i2u step, with no
+  *     cut of the intermediate item features; a trailing u2i step (even
+  *     `maxRound`) is skipped, since item features are never returned.
   *
   * Feature vectors are processed via posexplode -> per-(vertex, position)
   * sum -> re-assembly, so the per-round shuffle is a plain combinable
@@ -54,22 +58,20 @@ object LPAU2I {
     val outNbrInDegSum = e.join(inDegItems, "dst")
       .groupBy(col("src").as("vid")).agg(sum(col("indeg")).as("onids"))
 
-    var uState = LineageCut.localCheckpoint(users
+    val init = users
       .select(col("vid"), col("features"))
       .join(outDeg, Seq("vid"), "left")
       .join(outNbrInDegSum, Seq("vid"), "left")
-      .na.fill(0, Seq("outdeg", "onids"))).df
+      .na.fill(0, Seq("outdeg", "onids"))
 
-    var itemFeatures: DataFrame = null
-    for (step <- 2 to maxRound) {
-      if (step % 2 == 0) {
+    val res = Iterate.run(init, (maxRound - 1) / 2,
+      step = (uState, _) => {
         // u2i: item features = weighted sum of adjacent user features
-        itemFeatures = LineageCut.localCheckpoint(weightedSum(
+        val itemFeatures = weightedSum(
           e.join(uState.select(col("vid").as("src"), col("features")),
             "src"),
           "dst", "features")
-          .select(col("vid").as("dst"), col("wsum").as("ifeat"))).df
-      } else {
+          .select(col("vid").as("dst"), col("wsum").as("ifeat"))
         // i2u: pull item features back, then the other-users normalization
         val tmp = weightedSum(e.join(itemFeatures, "dst"), "src", "ifeat")
           .select(col("vid"), col("wsum").as("tmp"))
@@ -81,11 +83,11 @@ object LPAU2I {
           (f, t) => when(f === 0.0 || f === 1.0, f)
             .when(denom =!= 0.0, (t - col("outdeg") * f) / denom)
             .otherwise(f))
-        uState = LineageCut.localCheckpoint(joined.select(col("vid"),
-          newFeat.as("features"), col("outdeg"), col("onids"))).df
-      }
-    }
+        joined.select(col("vid"), newFeat.as("features"), col("outdeg"),
+          col("onids"))
+      },
+      stop = Iterate.fixedRounds)
     e.unpersist()
-    uState.select("vid", "features")
+    res.state.select("vid", "features")
   }
 }

@@ -1,7 +1,9 @@
 package graft.apps
 
 import graft.graph.{EdgeBlocks, SimpleGraph, Strategy}
+import graft.pregel.Iterate
 import org.apache.spark.sql.{DataFrame, LineageCut}
+import org.apache.spark.sql.LineageCut.Sum
 import org.apache.spark.sql.functions._
 
 /** Louvain community detection — modularity maximization by iterated
@@ -42,8 +44,9 @@ object Louvain {
     // Level-0 working graph: symmetric deduped unit-weight edges.
     var edges = LineageCut.localCheckpoint(g.undirectedDedup
       .select(col("src"), col("dst"), lit(1.0).as("w"))).df
+    // The cut's row count is the level's node count.
     var nodes = LineageCut.localCheckpoint(
-      g.vertices.select(col("vid"), lit(0.0).as("selfw"))).df
+      g.vertices.select(col("vid"), lit(0.0).as("selfw")))
     // overall: original vid -> current community (a node id of the level).
     var overall = LineageCut.localCheckpoint(
       g.vertices.select(col("vid"), col("vid").as("comm"))).df
@@ -54,12 +57,11 @@ object Louvain {
       level += 1
       val assign = onePhase(edges, nodes, maxRoundsPerLevel)
       val nComms = assign.select("comm").distinct().count()
-      val nNodes = nodes.count()
       overall = LineageCut.localCheckpoint(overall
         .join(assign.select(col("vid").as("comm"), col("comm").as("nc")),
           "comm")
         .select(col("vid"), col("nc").as("comm"))).df
-      if (nComms == nNodes) done = true
+      if (nComms == nodes.rows) done = true
       else {
         // Contract: communities become nodes; symmetric inter edges kept,
         // intra weight (counted twice by symmetry) + member selfw folds
@@ -74,14 +76,14 @@ object Louvain {
           .agg(sum(col("w")).as("w"))
         val intra = e2.where(col("cs") === col("cd"))
           .groupBy(col("cs").as("vid")).agg(sum(col("w")).as("iw"))
-        val selfSum = nodes
+        val selfSum = nodes.df
           .join(assign, "vid")
           .groupBy(col("comm").as("vid")).agg(sum(col("selfw")).as("sw"))
         edges = LineageCut.localCheckpoint(inter).df
         nodes = LineageCut.localCheckpoint(
           selfSum.join(intra, Seq("vid"), "left")
             .select(col("vid"),
-              (col("sw") + coalesce(col("iw"), lit(0.0))).as("selfw"))).df
+              (col("sw") + coalesce(col("iw"), lit(0.0))).as("selfw")))
       }
     }
     // Canonical labels: min original member vid per community.
@@ -91,22 +93,21 @@ object Louvain {
 
   /** Phase 1 on one working graph: synchronous local-move rounds until no
     * vertex moves. @return (vid, comm). */
-  private def onePhase(edges: DataFrame, nodes: DataFrame,
+  private def onePhase(edges: DataFrame, nodes: LineageCut.Cut,
       maxRounds: Int): DataFrame = {
-    // k(v) = weighted degree incl. selfw; 2m = sum k.
-    val k = LineageCut.localCheckpoint(nodes
+    // k(v) = weighted degree incl. selfw; 2m = sum k, reduced by k's cut.
+    val k = LineageCut.localCheckpoint(nodes.df
       .join(edges.groupBy(col("src").as("vid")).agg(sum(col("w")).as("kw")),
         Seq("vid"), "left")
       .select(col("vid"),
-        (coalesce(col("kw"), lit(0.0)) + col("selfw")).as("k"))).df
-    val m2 = k.agg(sum(col("k"))).head().getDouble(0)
-    if (m2 == 0.0) return nodes.select(col("vid"), col("vid").as("comm"))
+        (coalesce(col("kw"), lit(0.0)) + col("selfw")).as("k")),
+      Seq(Sum("k")))
+    // no nodes (no 2m at all) or no edges: nothing can move
+    val m2 = k.values.get(Sum("k")).map(_.doubleValue).getOrElse(0.0)
+    if (m2 == 0.0) return nodes.df.select(col("vid"), col("vid").as("comm"))
 
-    var assign = LineageCut.localCheckpoint(
-      k.select(col("vid"), col("vid").as("comm"), col("k"))).df
     val spark = edges.sparkSession
-    val nNodes = k.count()
-    val tier = Strategy.tier(nNodes)
+    val tier = Strategy.tier(k.rows)
     // commTot is one row per community (≤ one per vertex, shrinking every
     // round) — on the giant-community tail of phase 1 the scored join
     // keyed by community id concentrates on few keys, so broadcast the
@@ -133,70 +134,66 @@ object Louvain {
     val nbrGather = EdgeBlocks.superstep(tier, EdgeBlocks.Combine.LabelSum,
       p, _ => wEdges, {
         val b = EdgeBlocks.pack(wEdges, p); packed = Some(b); b })
-    var round = 0
     // Moves are parity-gated (odd rounds move only to smaller comm ids,
     // even only to larger), so one zero-move round only proves the ALLOWED
     // direction is exhausted; terminate after two consecutive zero-move
     // rounds (one of each parity).
-    var zeroStreak = 0
-    var prevCk: DataFrame = null
-    while (zeroStreak < 2 && round < maxRounds) {
-      round += 1
-      val commTot = assign.groupBy("comm").agg(sum(col("k")).as("tot"))
-      // w(v -> c) over real neighbor edges. The edges are symmetric, so
-      // gathering src labels to dst equals gathering dst labels to src.
-      val nbrW =
-        nbrGather(assign.select(col("vid"), col("comm").as("value")), -1L)
-          .select(col("vid"), col("label").as("c"), col("msg").as("wvc"))
-      // Ensure the current community is always a candidate (wvc = 0 when
-      // v has no neighbor inside it).
-      val cands = nbrW
-        .unionByName(assign.select(col("vid"), col("comm").as("c"),
-          lit(0.0).as("wvc")))
-        .groupBy("vid", "c").agg(max(col("wvc")).as("wvc"))
-      val parity = round % 2 // 0: move to larger ids; 1: to smaller
-      val scored = cands
-        .join(assign.select(col("vid"), col("comm").as("cur"), col("k")),
-          "vid")
-        // Candidate set = current community + the parity-ALLOWED direction
-        // only, so the argmax can never be masked by a blocked candidate
-        // (a round where every vertex's best global candidate points the
-        // blocked way must not read as converged).
-        .where(col("c") === col("cur") ||
-          (if (parity == 1) col("c") < col("cur")
-           else col("c") > col("cur")))
-        .join({
-          val ct = commTot.select(col("comm").as("c"), col("tot"))
-          if (hintCommTot) broadcast(ct) else ct
-        }, "c")
-        .select(col("vid"), col("c"), col("cur"), col("k"),
-          (col("wvc") - col("k") *
-            (col("tot") - when(col("c") === col("cur"), col("k"))
-              .otherwise(lit(0.0))) / lit(m2)).as("score"))
-      // Best = max score among allowed candidates, ties to smallest
-      // community id; compare against the current community's score.
-      val best = scored.groupBy("vid").agg(
-        max(struct(col("score"), (-col("c")).as("nc"))).as("b"),
-        max(when(col("c") === col("cur"), col("score"))).as("curScore"))
-        .select(col("vid"), (-col("b.nc")).as("bestC"),
-          col("b.score").as("bestScore"), col("curScore"))
-      val next = LineageCut.localCheckpoint(assign.join(best, "vid").select(
-        col("vid"),
-        when(col("bestC") =!= col("comm") &&
-          col("bestScore") > col("curScore"),
-          col("bestC")).otherwise(col("comm")).as("comm"),
-        col("k"),
-        when(col("bestC") =!= col("comm") &&
-          col("bestScore") > col("curScore"), lit(1L))
-          .otherwise(lit(0L)).as("_moved"))).df
-      val moved = next.agg(sum(col("_moved"))).head().getLong(0)
-      zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
-      if (prevCk != null) prevCk.unpersist()
-      prevCk = next
-      assign = next.drop("_moved")
-    }
+    val res = Iterate.run(
+      k.df.select(col("vid"), col("vid").as("comm"), col("k")),
+      maxRounds,
+      step = (assign, prev) => {
+        val commTot = assign.groupBy("comm").agg(sum(col("k")).as("tot"))
+        // w(v -> c) over real neighbor edges. The edges are symmetric, so
+        // gathering src labels to dst equals gathering dst labels to src.
+        val nbrW =
+          nbrGather(assign.select(col("vid"), col("comm").as("value")), -1L)
+            .select(col("vid"), col("label").as("c"), col("msg").as("wvc"))
+        // Ensure the current community is always a candidate (wvc = 0 when
+        // v has no neighbor inside it).
+        val cands = nbrW
+          .unionByName(assign.select(col("vid"), col("comm").as("c"),
+            lit(0.0).as("wvc")))
+          .groupBy("vid", "c").agg(max(col("wvc")).as("wvc"))
+        // 0: move to larger ids; 1: to smaller
+        val parity = (prev.iteration + 1) % 2
+        val scored = cands
+          .join(assign.select(col("vid"), col("comm").as("cur"), col("k")),
+            "vid")
+          // Candidate set = current community + the parity-ALLOWED
+          // direction only, so the argmax can never be masked by a blocked
+          // candidate (a round where every vertex's best global candidate
+          // points the blocked way must not read as converged).
+          .where(col("c") === col("cur") ||
+            (if (parity == 1) col("c") < col("cur")
+             else col("c") > col("cur")))
+          .join({
+            val ct = commTot.select(col("comm").as("c"), col("tot"))
+            if (hintCommTot) broadcast(ct) else ct
+          }, "c")
+          .select(col("vid"), col("c"), col("cur"), col("k"),
+            (col("wvc") - col("k") *
+              (col("tot") - when(col("c") === col("cur"), col("k"))
+                .otherwise(lit(0.0))) / lit(m2)).as("score"))
+        // Best = max score among allowed candidates, ties to smallest
+        // community id; compare against the current community's score.
+        val best = scored.groupBy("vid").agg(
+          max(struct(col("score"), (-col("c")).as("nc"))).as("b"),
+          max(when(col("c") === col("cur"), col("score"))).as("curScore"))
+          .select(col("vid"), (-col("b.nc")).as("bestC"),
+            col("b.score").as("bestScore"), col("curScore"))
+        assign.join(best, "vid").select(
+          col("vid"),
+          when(col("bestC") =!= col("comm") &&
+            col("bestScore") > col("curScore"),
+            col("bestC")).otherwise(col("comm")).as("comm"),
+          col("k"),
+          when(col("bestC") =!= col("comm") &&
+            col("bestScore") > col("curScore"), lit(1L))
+            .otherwise(lit(0L)).as("_changed"))
+      },
+      stop = ms => ms.size >= 2 && ms.takeRight(2).forall(_.changed == 0L))
     packed.foreach(_.unpersist())
-    assign.select("vid", "comm")
+    res.state.select("vid", "comm")
   }
 
   /** Modularity of an assignment on the ORIGINAL graph:

@@ -60,8 +60,8 @@ object PageRank {
 
     val res = Iterate.run(
       init, maxRound,
-      step = (state, round) => {
-        val base = bases(round)
+      step = (state, prev) => {
+        val base = bases(prev.iteration + 1)
         val contrib = state.where(col("deg") > 0)
           .select(col("vid"), (col("rank") / col("deg")).as("value"))
         val msgs = gather(contrib, -1L)
@@ -72,7 +72,7 @@ object PageRank {
             .otherwise(lit(delta) * coalesce(col("msum"), lit(0.0)) +
               lit(base)).as("rank"))
       },
-      stopWhenUnchanged = false,
+      stop = Iterate.fixedRounds,
       checkpoint = checkpoint)
 
     res.state.select("vid", "rank")

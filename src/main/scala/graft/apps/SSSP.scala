@@ -38,12 +38,12 @@ object SSSP {
       when(col("vid") === source, lit(1)).otherwise(lit(0)).as("_changed"))
       .repartition(p, col("vid"))
 
-    val res = Iterate.runDelta(
+    val res = Iterate.run(
       init, maxRounds,
-      step = (state, _, prevChanged) => {
+      step = (state, prev) => {
         val frontier = state.where(col("_changed") === 1)
           .select(col("vid"), col("dist").as("value"))
-        val relax = gather(frontier, prevChanged)
+        val relax = gather(frontier, prev.changed)
           .select(col("vid"), col("msg").as("nd"))
         state.join(relax, Seq("vid"), "left").select(
           col("vid"),
@@ -51,9 +51,7 @@ object SSSP {
           when(coalesce(col("nd"), col("dist")) < col("dist"), lit(1))
             .otherwise(lit(0)).as("_changed"))
       },
-      stopWhenUnchanged = true,
-      checkpoint = checkpoint,
-      initChanged = 1L) // the single seeded source
+      checkpoint = checkpoint)
 
     res.state.select(col("vid"),
       when(col("dist") === inf, lit(-1.0)).otherwise(col("dist"))
@@ -139,8 +137,7 @@ object SSSP {
           least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
           when(coalesce(col("nd"), col("dist")) < col("dist"), lit(1))
             .otherwise(lit(0)).as("_changed"))
-      },
-      stopWhenUnchanged = true)
+      })
 
     res.state.select(col("vid"), col("source"),
       when(col("dist") === inf, lit(-1.0)).otherwise(col("dist"))

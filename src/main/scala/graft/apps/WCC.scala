@@ -49,12 +49,12 @@ object WCC {
       .select(col("vid"), col("vid").as("comp"), lit(1).as("_changed"))
       .repartition(p, col("vid"))
 
-    val res = Iterate.runDelta(
+    val res = Iterate.run(
       init, maxRounds,
-      step = (state, _, prevChanged) => {
+      step = (state, prev) => {
         val frontier = state.where(col("_changed") === 1)
           .select(col("vid"), col("comp").as("value"))
-        val msgs = gather(frontier, prevChanged)
+        val msgs = gather(frontier, prev.changed)
           .select(col("vid"), col("msg").as("mc"))
         state.join(msgs, Seq("vid"), "left").select(
           col("vid"),
@@ -62,7 +62,6 @@ object WCC {
           when(coalesce(col("mc"), col("comp")) < col("comp"), lit(1))
             .otherwise(lit(0)).as("_changed"))
       },
-      stopWhenUnchanged = true,
       checkpoint = checkpoint)
 
     (res.state.select("vid", "comp"), res.completedRounds)

@@ -2,20 +2,22 @@ package graft.pregel
 
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.{DataFrame, LineageCut}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.LineageCut.Reduction
 
 /** Per-iteration lineage + convergence metrics, one row per superstep
   * (north rule: "checkpoints per-iteration vertex state ... with
   * per-partition lineage and convergence metrics for resumable runs").
   * `rows` is the state's row count every round; `changed` is its
-  * `_changed` sum, -1 for states without that column (fixed-round apps). */
+  * `_changed` sum, -1 for states without that column (fixed-round apps);
+  * `values` holds the declared reductions that have a value. */
 final case class IterMetrics(
     runId: String,
     iteration: Int,
     changed: Long,
     rows: Long,
     numPartitions: Int,
-    wallMs: Long)
+    wallMs: Long,
+    values: Map[Reduction, Number])
 
 /** Where to durably checkpoint iteration state. `dir=None` keeps only
   * in-memory lineage cuts (`LineageCut`, not resumable). With a dir,
@@ -43,144 +45,133 @@ final case class CheckpointConfig(
 
 /** The superstep driver loop — the Spark-side equivalent of the reference's
   * `DefaultWorker::Query` PEval/IncEval loop
-  * (analytical_engine/core/worker/default_worker.h:81-112):
-  * `init` plays PEval's output, `step` is one IncEval round, and
-  * `ToTerminate` becomes "changed == 0" computed from the new state.
+  * (analytical_engine/core/worker/default_worker.h:81-112), and the only
+  * superstep loop in the engine: `init` plays PEval's output, `step` is
+  * one IncEval round, and `ToTerminate` is a predicate over the rounds'
+  * metrics.
   *
-  * Every round the new state is cut by [[org.apache.spark.sql.LineageCut]]
-  * (in-memory checkpoint, plus one SnapshotTable commit when a dir is
-  * configured) — without the lineage cut the plan grows superlinearly
-  * with iterations (SURVEY.md §7.4). The cut's one job also counts the
-  * state's rows and sums its `_changed` column, so a round is one job:
-  * convergence costs no separate count. The snapshot table doubles as
-  * the resume point: `run` restarts from its current version, validated
-  * against the manifest lineage.
+  * Every state — the initial or resumed one, then each round's — is cut
+  * by [[org.apache.spark.sql.LineageCut]] (in-memory checkpoint, plus one
+  * SnapshotTable commit per round when a dir is configured); without the
+  * cut the plan grows superlinearly with iterations (SURVEY.md §7.4). The
+  * cut's one job also counts the state's rows, sums its `_changed` column
+  * and computes the declared reductions — the reference's per-superstep
+  * `Communicator` Sum/Max/Min — so a round is one job and its global
+  * scalars cost no second one. The snapshot table doubles as the resume
+  * point: `run` restarts from its current version, validated against the
+  * manifest lineage. Reductions are functions of the stored state, so a
+  * resumed run hands its steps the values an uninterrupted run did (a
+  * float sum up to the order in which the stored files are read back).
   */
 object Iterate {
 
   final case class Result(state: DataFrame, metrics: Seq[IterMetrics],
       completedRounds: Int)
 
-  /** @param init     iteration-0 state (must contain column `vid`)
+  /** Stop once a round changes nothing (its `_changed` sum is 0); a state
+    * without that column never stops early. */
+  val unchanged: Seq[IterMetrics] => Boolean = _.last.changed == 0L
+
+  /** Run every round (PageRank, CDLP). */
+  val fixedRounds: Seq[IterMetrics] => Boolean = _ => false
+
+  /** Runs up to `maxRounds` rounds of `step`; `Result.state` drops
+    * `_changed` and the reduced columns.
+    * @param init     iteration-0 state
     * @param maxRounds run at most this many IncEval rounds
-    * @param step     (state, round) => new state; round is 1-based. If the
-    *                 returned frame has a `_changed` int/bool column it is
-    *                 summed for the convergence count, kept on the state
-    *                 (and in durable checkpoints — exact frontier resume),
-    *                 and dropped only from the returned Result.
-    * @param stopWhenUnchanged terminate early when the `_changed` sum is 0
-    *                 (fixed-round algorithms like PageRank/CDLP pass false)
-    */
+    * @param step     (state, prev) => new state, where `prev` holds the
+    *                 previous cut's metrics: the round being computed is
+    *                 `prev.iteration + 1` (iteration 0, or the resumed
+    *                 round, is the cut of the initial state), and
+    *                 `prev.changed` is the frontier size frontier apps use
+    *                 to broadcast-hint a shrunken frontier
+    *                 ([[graft.graph.Strategy.frontier]]). A `_changed`
+    *                 int/bool column on the returned frame is summed into
+    *                 `changed` and kept on the state (and in durable
+    *                 checkpoints — exact frontier resume).
+    * @param stop     checked after each round over this run's metrics so
+    *                 far; true ends the run
+    * @param reduce   reductions over numeric columns of every cut state
+    *                 (the initial state included), reported in `values` */
   def run(
       init: DataFrame,
       maxRounds: Int,
-      step: (DataFrame, Int) => DataFrame,
-      stopWhenUnchanged: Boolean = true,
-      checkpoint: CheckpointConfig = CheckpointConfig()): Result =
-    runDelta(init, maxRounds, (s, r, _) => step(s, r), stopWhenUnchanged,
-      checkpoint)
-
-  /** Like [[run]], but the step also receives the PREVIOUS round's
-    * `_changed` sum (the frontier-delta size; -1 when unknown — e.g. the
-    * first round after a resume). Frontier apps use it to broadcast-hint
-    * a shrunken frontier (north rule: "broadcast of high-degree frontier
-    * deltas", [[graft.graph.Strategy.frontier]]) without paying an extra
-    * count job — the round's lineage cut already computed the number.
-    * @param initChanged the frontier size of `init` when the caller knows
-    *   it (single-source apps seed exactly 1); -1 = unknown. */
-  def runDelta(
-      init: DataFrame,
-      maxRounds: Int,
-      step: (DataFrame, Int, Long) => DataFrame,
-      stopWhenUnchanged: Boolean = true,
+      step: (DataFrame, IterMetrics) => DataFrame,
+      stop: Seq[IterMetrics] => Boolean = unchanged,
       checkpoint: CheckpointConfig = CheckpointConfig(),
-      initChanged: Long = -1L): Result = {
+      reduce: Seq[Reduction] = Nil): Result = {
 
     val spark = init.sparkSession
-    var metrics = Vector.empty[IterMetrics]
 
     // Resume: the current snapshot of this runId's table, validated
     // against its manifest lineage (per-file rows + content checksum)
     // before any new round runs — a truncated or foreign checkpoint fails
     // loudly instead of resuming from corrupt state.
     var startRound = 0
-    var state: DataFrame = null
+    var start = init
     val table = checkpoint.dir.map(d => s"$d/${checkpoint.runId}")
     table.foreach { t =>
       SnapshotTable.currentVersionOpt(spark, t).foreach { v =>
         startRound = SnapshotTable.manifest(spark, t, v)
           .summary("iteration").toInt
         SnapshotTable.validate(spark, t, v)
-        state = SnapshotTable.readVersion(spark, t, v)
+        val saved = SnapshotTable.readVersion(spark, t, v)
+        // Checkpoints persist the step OUTPUT, which may carry `_changed`
+        // even when `init` does not (steps that derive their frontier from
+        // the state each round, e.g. the Pregel runner): tolerate exactly
+        // that extra column and drop it so the step sees the same shape as
+        // in an unresumed run. Anything else is a wrong runId or a
+        // pre-frontier-era checkpoint — refuse; a frontier cannot be
+        // reinvented on resume (an unreached vertex must not broadcast).
+        val want = init.columns.toSet
+        val got = saved.columns.toSet
+        require(got == want || got == want + "_changed",
+          s"checkpoint for runId '${checkpoint.runId}' has columns " +
+            s"${saved.columns.toSeq} but this run's state is " +
+            s"${init.columns.toSeq} — wrong runId, or a pre-frontier-era " +
+            "checkpoint (re-run from scratch)")
+        start = if (got == want) saved else saved.drop("_changed")
       }
     }
-    if (state == null) state = LineageCut.localCheckpoint(init).df
-    else {
-      // Checkpoints persist the step OUTPUT, which may carry `_changed`
-      // even when `init` does not (steps that derive their frontier from
-      // the state each round, e.g. the Pregel runner): tolerate exactly
-      // that extra column and drop it so the step sees the same shape as
-      // in an unresumed run. Anything else is a wrong runId or a
-      // pre-frontier-era checkpoint — refuse; a frontier cannot be
-      // reinvented on resume (an unreached vertex must not broadcast).
-      val want = init.columns.toSet
-      val got = state.columns.toSet
-      require(got == want || got == want + "_changed",
-        s"checkpoint for runId '${checkpoint.runId}' has columns " +
-          s"${state.columns.toSeq} but this run's state is " +
-          s"${init.columns.toSeq} — wrong runId, or a pre-frontier-era " +
-          "checkpoint (re-run from scratch)")
-      if (!want.contains("_changed") && got.contains("_changed"))
-        state = state.drop("_changed")
+
+    // Materialize, cut lineage, count rows + frontier and reduce, in one
+    // job.
+    def cut(df: DataFrame, round: Int): (DataFrame, IterMetrics) = {
+      val t0 = System.nanoTime()
+      val c = LineageCut.localCheckpoint(df, reduce)
+      (c.df, IterMetrics(checkpoint.runId, round, c.changed, c.rows,
+        spark.sessionState.conf.numShufflePartitions,
+        (System.nanoTime() - t0) / 1000000, c.values))
     }
 
-    var round = startRound
-    var done = false
-    var prev = state
-    // Frontier-delta size from the previous round. Fresh runs take the
-    // caller's hint; resumes recompute it exactly from the restored
-    // frontier column (checkpoints persist it), one agg once per resume.
-    var lastChanged =
-      if (startRound == 0) initChanged
-      else if (state.columns.contains("_changed"))
-        state.agg(sum(col("_changed").cast("long"))).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0)
-        }
-      else -1L
-    while (round < maxRounds && !done) {
-      round += 1
-      val t0 = System.nanoTime()
-      // Materialize, cut lineage and count rows + frontier in one job.
-      val LineageCut.Cut(next, rows, changed) =
-        LineageCut.localCheckpoint(step(prev, round, lastChanged))
-      val hasChanged = changed >= 0L // the state has a `_changed` column
-      val wall = (System.nanoTime() - t0) / 1000000
-      val m = IterMetrics(checkpoint.runId, round, changed, rows,
-        spark.sessionState.conf.numShufflePartitions, wall)
+    var (state, prev) = cut(start, startRound)
+    var metrics = Vector.empty[IterMetrics]
+    while (prev.iteration < maxRounds && !(metrics.nonEmpty && stop(metrics))) {
+      val (next, m) = cut(step(state, prev), prev.iteration + 1)
       metrics :+= m
       table.foreach { t =>
         SnapshotTable.overwrite(next, t,
           summary = Map(
             "runId" -> checkpoint.runId,
-            "iteration" -> round.toString,
-            "changed" -> changed.toString,
-            "stateRows" -> rows.toString,
+            "iteration" -> m.iteration.toString,
+            "changed" -> m.changed.toString,
+            "stateRows" -> m.rows.toString,
             "numPartitions" -> m.numPartitions.toString,
-            "wallMs" -> wall.toString))
+            "wallMs" -> m.wallMs.toString) ++
+            m.values.map { case (r, v) => r.toString -> v.toString })
       }
-      if (prev ne init) prev.unpersist()
-      prev = next
-      if (hasChanged) lastChanged = changed
-      if (hasChanged && stopWhenUnchanged && changed == 0L) done = true
+      state.unpersist()
+      state = next
+      prev = m
     }
     // The frontier column is engine state: it stays on the in-session
     // frame AND inside durable checkpoints (a resume needs the exact
     // frontier — re-marking all vertices changed would make reachability
     // apps broadcast from unreached vertices), but is dropped from the
-    // returned result.
-    val out = if (prev.columns.contains("_changed"))
-      prev.drop("_changed") else prev
-    Result(out, metrics, round)
+    // returned result, as are the reduced columns.
+    val engine = ("_changed" +: reduce.map(_.column)).distinct
+      .filter(state.columns.contains)
+    Result(if (engine.isEmpty) state else state.drop(engine: _*), metrics,
+      prev.iteration)
   }
 }

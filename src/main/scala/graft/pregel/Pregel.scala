@@ -2,6 +2,7 @@ package graft.pregel
 
 import graft.graph.{SimpleGraph, Strategy}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.LineageCut.{Reduction, Sum}
 import org.apache.spark.sql.functions._
 
 /** Generic Pregel-style runner — the engine's user-extension surface,
@@ -28,15 +29,17 @@ object Pregel {
   /** Named global aggregator (reference: `core/app/pregel/aggregators/`,
     * registered via `register_aggregator` and read back one superstep
     * later, pregel_compute_context.h:242-250 + aggregators_test.h):
-    * `contribute` is an expression over the vertex columns
-    * (`vid`, `state`), `combine` the global reduction (sum/min/max/...).
-    * Each superstep the combined value of the CURRENT state is exposed to
-    * `updateWithAggregators` as a literal — the Spark form of the
-    * reference's globally-synced aggregate (one tiny scalar agg action
-    * per round, the same global barrier the reference pays). */
+    * `contribute` is a numeric expression over the vertex columns
+    * (`vid`, `state`), `combine` the global reduction — `Sum`, `Max` or
+    * `Min` from [[org.apache.spark.sql.LineageCut]], the reference's
+    * numeric aggregators. The contribution is a column of the state, so
+    * each superstep's lineage cut combines it in the cut's own job, and
+    * the next superstep's `updateWithAggregators` sees the value as a
+    * literal (bigint for integral contributions, double otherwise) — the
+    * reference's globally-synced aggregate at no extra job. */
   final case class PregelAggregator(
       contribute: Column,
-      combine: Column => Column)
+      combine: String => Reduction)
 
   def run(
       g: SimpleGraph,
@@ -66,34 +69,33 @@ object Pregel {
       (if (bcast) own else own.repartition(p, col("src"))).persist()
     }
 
-    val initState = g.vertices
+    // Each aggregator's contribution is a state column, reduced by the
+    // cut of every state (the initial one included).
+    val reduced = aggregators.toSeq.map { case (n, a) =>
+      (n, a.combine(s"_agg_$n"), a.contribute) }
+    def contribute(df: DataFrame): DataFrame = df.select(
+      col("*") +: reduced.map { case (_, r, c) => c.as(r.column) }: _*)
+
+    val initState = contribute(g.vertices
       .select(col("vid"), init.as("state"))
-      .repartition(p, col("vid"))
+      .repartition(p, col("vid")))
 
     val res = Iterate.run(
       initState, maxRounds,
-      step = (state, _) => {
+      step = (state, prev) => {
         // Global aggregates of the state entering this superstep — the
         // reference's aggregated_value visibility (contributed at t,
         // readable at t+1; our state at round r IS the t=r-1 output).
-        val aggVals: Map[String, Column] =
-          if (aggregators.isEmpty) Map.empty
-          else {
-            val exprs = aggregators.toSeq.map { case (n, a) =>
-              a.combine(a.contribute).as(n) }
-            val row = state.agg(exprs.head, exprs.tail: _*).head()
-            aggregators.keys.map { n =>
-              val v = row.get(row.fieldIndex(n))
-              // lit(null) is an UNTYPED null that would silently
-              // propagate through updateWithAggregators (all states
-              // become null); fail loudly instead — the program should
-              // coalesce its contribution to a typed identity.
-              require(v != null, s"pregel aggregator '$n' combined to " +
-                "NULL (empty state or all-null contributions); coalesce " +
-                "the contribution expression to a typed identity value")
-              n -> lit(v)
-            }.toMap
-          }
+        val aggVals: Map[String, Column] = reduced.map { case (n, r, _) =>
+          // A missing value would be an UNTYPED lit(null) that silently
+          // nulls every state through updateWithAggregators; fail loudly
+          // instead — the program should coalesce its contribution to a
+          // typed identity.
+          require(prev.values.contains(r), s"pregel aggregator '$n' " +
+            "combined to NULL (empty state or all-null contributions); " +
+            "coalesce the contribution expression to a typed identity value")
+          n -> lit(prev.values(r))
+        }.toMap
         val toDst = sendToDst.map { m =>
           edges
             .join(Strategy.frontier(state.select(col("vid").as("src"),
@@ -117,12 +119,13 @@ object Pregel {
         val newState = updateWithAggregators
           .map(f => f(col("state"), col("agg_msg"), aggVals))
           .getOrElse(update(col("state"), col("agg_msg")))
-        joined.select(col("vid"), newState.as("state"),
+        contribute(joined.select(col("vid"), newState.as("state"),
           when(!(newState <=> col("state")), lit(1)).otherwise(lit(0))
-            .as("_changed"))
+            .as("_changed")))
       },
-      stopWhenUnchanged = stopWhenNoChange,
-      checkpoint = checkpoint)
+      stop = if (stopWhenNoChange) Iterate.unchanged else Iterate.fixedRounds,
+      checkpoint = checkpoint,
+      reduce = reduced.map(_._2))
 
     edges.unpersist()
     res.state.select("vid", "state")
@@ -155,7 +158,7 @@ object Pregel {
       aggregators = Map("dangling" -> PregelAggregator(
         when(col("state.deg") === 0L, col("state.rank"))
           .otherwise(lit(0.0)),
-        sum)),
+        Sum)),
       updateWithAggregators = Some((state, msg, aggs) => {
         val base = lit((1.0 - delta) / n) +
           lit(delta) * aggs("dangling") / lit(n)

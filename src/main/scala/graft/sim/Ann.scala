@@ -1,6 +1,7 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, LineageCut}
+import graft.pregel.Iterate
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -116,14 +117,14 @@ object Ann {
     // a uniform, partitioning-stable sample. The nlist-row sort that
     // assigns cids is a single tiny exchange.
     val wInit = Window.orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    var centroids = LineageCut.localCheckpoint(corpus
+    val init = corpus
       .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nlist)
       .select((row_number().over(wInit) - 1).as("cid"),
-        col("embedding").as("centroid"))).df
+        col("embedding").as("centroid"))
 
     // (vec_id, cid): nearest (max-cosine) centroid per corpus vector.
     // Ids only — the embedding re-attaches by key where needed.
-    def assign(): DataFrame = corpus
+    def assign(centroids: DataFrame): DataFrame = corpus
       .crossJoin(broadcast(centroids))
       .select(col("vec_id"),
         struct(cosine(col("embedding"), col("centroid")).as("c"),
@@ -131,22 +132,22 @@ object Ann {
       .groupBy("vec_id").agg(max(col("s")).as("s"))
       .select(col("vec_id"), (-col("s.nc")).cast("int").as("cid"))
 
-    for (_ <- 0 until iters) {
-      // Lloyd round: element-wise mean of each list's members.
-      val next = LineageCut.localCheckpoint(assign()
+    // Lloyd rounds over the centroid table: each centroid becomes the
+    // element-wise mean of its list's members. Empty lists drop out
+    // (classic k-means); probes and lists stay consistent because both
+    // sides use the same centroid table.
+    val centroids = Iterate.run(init, iters,
+      step = (c, _) => assign(c)
         .join(corpus, "vec_id")
         .select(col("cid"), posexplode(col("embedding")))
         .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
         .groupBy(col("cid")).agg(
           transform(
             array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => s("m").cast("float")).as("centroid"))).df
-      // Empty lists drop out (classic k-means); probes and lists stay
-      // consistent because both sides use the same centroid table.
-      centroids = next
-    }
+            s => s("m").cast("float")).as("centroid")),
+      stop = Iterate.fixedRounds).state
 
-    val lists = assign() // the inverted file: (vec_id, cid)
+    val lists = assign(centroids) // the inverted file: (vec_id, cid)
 
     // Each query probes its nprobe max-cosine lists.
     val wProbe = Window.partitionBy(col("q_id"))

@@ -251,7 +251,7 @@ object SnapshotTable {
     val spark = df.sparkSession
     val root = new Path(table)
     val f = fileSystem(spark, root)
-    val LineageCut.Cut(dfc, nDelta, _) = LineageCut.localCheckpoint(df)
+    val LineageCut.Cut(dfc, nDelta, _, _) = LineageCut.localCheckpoint(df)
     require(dfc.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
       .where(col("n") > 1).isEmpty,
       s"upsert rows must be unique on $keyCols")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** graft's one lineage cut: the in-memory checkpoint of Spark's eager
   * `Dataset.localCheckpoint(eager = true)` that also counts the frame it
-  * cuts, in the same job.
+  * cuts and computes its declared reductions, in the same job.
   *
   * The result equals Spark's eager local checkpoint: same rows, same schema
   * (nullability included), same storage level, and the same output
@@ -21,6 +21,13 @@ import org.apache.spark.sql.types._
   * is declared in this small object, so Spark's closure cleaner parses
   * this class file instead of `Dataset`'s, `RDD`'s or `SparkContext`'s.
   *
+  * The job also folds a declared list of [[Sum]], [[Max]] and [[Min]]
+  * reductions over numeric columns (the reference's per-superstep
+  * `Communicator` Sum/Max/Min; the `_changed` frontier sum is one case),
+  * so a round's global scalars cost no second job. The driver folds the
+  * partitions' partials in partition-index order, as `agg(...).head()`
+  * merges them, so a run is bit-reproducible.
+  *
   * The method is named `localCheckpoint` so Spark still reports each cut
   * job as `localCheckpoint at <caller>.scala:<line>`.
   *
@@ -31,59 +38,130 @@ object LineageCut {
   /** The frontier column the iteration engine sums for convergence. */
   private val Changed = "_changed"
 
-  /** A cut frame with its row count and the sum of its `_changed`
-    * column (-1 when the frame has none; nulls count as 0). */
-  final case class Cut(df: DataFrame, rows: Long, changed: Long)
+  /** A global reduction of one numeric column with Spark's aggregate
+    * semantics: nulls are skipped, and a column without a non-null value
+    * has no value (not 0). Integral columns reduce to a `Long` (a sum
+    * that overflows fails, as under ANSI mode), others to a `Double`. */
+  sealed trait Reduction { def column: String }
+  final case class Sum(column: String) extends Reduction
+  final case class Max(column: String) extends Reduction
+  final case class Min(column: String) extends Reduction
 
-  /** Materializes `df` into local checkpoint storage, cuts its lineage
-    * and counts it, in one Spark job. */
-  def localCheckpoint(df: DataFrame): Cut = {
+  /** A cut frame with its row count, the sum of its `_changed` column (-1
+    * when the frame has none; nulls count as 0) and the value of each
+    * declared reduction that has one. */
+  final case class Cut(df: DataFrame, rows: Long, changed: Long,
+      values: Map[Reduction, Number])
+
+  /** Materializes `df` into local checkpoint storage, cuts its lineage,
+    * counts it and computes `reduce`, in one Spark job. */
+  def localCheckpoint(df: DataFrame, reduce: Seq[Reduction] = Nil): Cut = {
     val ds = castToImpl(df)
     val session = ds.sparkSession
-    val ordinal = ds.schema.fieldNames.indexOf(Changed)
-    val read =
-      if (ordinal < 0) null else frontier(ordinal, ds.schema(ordinal).dataType)
+    val names = ds.schema.fieldNames
+    val frontier = names.contains(Changed)
+    val columns = ((if (frontier) Seq(Sum(Changed)) else Nil) ++ reduce)
+      .distinct.map { r =>
+        val i = names.indexOf(r.column)
+        require(i >= 0, s"$r: no column '${r.column}' in ${names.toSeq}")
+        val t = ds.schema(i).dataType
+        val (ok, want) =
+          if (r.column == Changed) (t == BooleanType, "boolean or integral")
+          else (t == FloatType || t == DoubleType, "integral or floating")
+        require(ok || t.isInstanceOf[IntegralType],
+          s"'${r.column}' must be $want, got ${t.simpleString}")
+        (r, i, t)
+      }
     SQLExecution.withSQLConfPropagated(session) {
       val rdd = ds.queryExecution.executedPlan.execute()
         .mapPartitionsInternal(_.map(_.copy()))
       rdd.localCheckpoint()
-      var rows = 0L
-      var changed = 0L
-      session.sparkContext.runJob(rdd, counter(read),
+      val parts = new Array[(Long, Array[Number])](rdd.partitions.length)
+      session.sparkContext.runJob(rdd, counter(columns),
         rdd.partitions.indices,
-        (_: Int, c: (Long, Long)) => { rows += c._1; changed += c._2 })
+        (i: Int, p: (Long, Array[Number])) => parts(i) = p)
+      val values = columns.indices.flatMap { j =>
+        val acc = new Acc(columns(j)._1, columns(j)._3)
+        parts.foreach(p => acc.add(p._2(j)))
+        Option(acc.result).map(columns(j)._1 -> _)
+      }.toMap
       Cut(classic.Dataset.ofRows(session,
           LogicalRDD.fromDataset(rdd, ds, isStreaming = false)),
-        rows, if (read == null) -1L else changed)
+        parts.map(_._1).sum,
+        if (frontier) values.get(Sum(Changed)).fold(0L)(_.longValue) else -1L,
+        values.filter(v => reduce.contains(v._1)))
     }
   }
 
-  /** Reads the frontier column as 0/1 (boolean) or its integral value;
-    * null reads as 0. */
-  private def frontier(i: Int, t: DataType): InternalRow => Long = {
-    require(t == BooleanType || t.isInstanceOf[IntegralType],
-      s"$Changed must be boolean or integral, got ${t.simpleString}")
+  /** Feeds column `i`'s non-null values to `acc`, with the getter of its
+    * type chosen once, not per row; a boolean reads as 0/1. */
+  private def feed(acc: Acc, i: Int, t: DataType): InternalRow => Unit =
     t match {
       case BooleanType =>
-        r => if (!r.isNullAt(i) && r.getBoolean(i)) 1L else 0L
-      case ByteType => r => if (r.isNullAt(i)) 0L else r.getByte(i).toLong
-      case ShortType => r => if (r.isNullAt(i)) 0L else r.getShort(i).toLong
-      case IntegerType => r => if (r.isNullAt(i)) 0L else r.getInt(i).toLong
-      case _ => r => if (r.isNullAt(i)) 0L else r.getLong(i)
+        r => if (!r.isNullAt(i)) acc.add(if (r.getBoolean(i)) 1L else 0L)
+      case ByteType => r => if (!r.isNullAt(i)) acc.add(r.getByte(i).toLong)
+      case ShortType =>
+        r => if (!r.isNullAt(i)) acc.add(r.getShort(i).toLong)
+      case IntegerType => r => if (!r.isNullAt(i)) acc.add(r.getInt(i).toLong)
+      case LongType => r => if (!r.isNullAt(i)) acc.add(r.getLong(i))
+      case FloatType =>
+        r => if (!r.isNullAt(i)) acc.add(r.getFloat(i).toDouble)
+      case _ => r => if (!r.isNullAt(i)) acc.add(r.getDouble(i))
     }
-  }
 
-  /** The per-partition job: (rows, frontier sum). */
-  private def counter(read: InternalRow => Long)
-      : (TaskContext, Iterator[InternalRow]) => (Long, Long) =
+  /** The per-partition job: the row count and each reduction's partial
+    * value (null when the partition has none). */
+  private def counter(columns: Seq[(Reduction, Int, DataType)])
+      : (TaskContext, Iterator[InternalRow]) => (Long, Array[Number]) =
     (_, it) => {
+      val accs = columns.map { case (r, _, t) => new Acc(r, t) }.toArray
+      val feeds = columns.indices
+        .map(j => feed(accs(j), columns(j)._2, columns(j)._3)).toArray
       var rows = 0L
-      var changed = 0L
       while (it.hasNext) {
         val r = it.next()
         rows += 1
-        if (read != null) changed += read(r)
+        var j = 0
+        while (j < feeds.length) { feeds(j)(r); j += 1 }
       }
-      (rows, changed)
+      (rows, accs.map(_.result))
     }
+
+  /** A running [[Reduction]] with Spark's aggregate buffer semantics: a
+    * sum starts from 0, Max/Min keep the first of equal values, and
+    * doubles order as Spark orders them (NaN above all, -0.0 = 0.0). */
+  private final class Acc(r: Reduction, t: DataType) {
+    private val integral = t != FloatType && t != DoubleType
+    private var seen = false
+    private var l = 0L
+    private var d = 0.0
+
+    /** Whether a value comparing `c` to the running Max/Min replaces it. */
+    private def wins(c: Int): Boolean =
+      !seen || (if (r.isInstanceOf[Max]) c > 0 else c < 0)
+
+    def add(x: Long): Unit = {
+      l = r match {
+        case _: Sum => Math.addExact(l, x)
+        case _ => if (wins(x.compare(l))) x else l
+      }
+      seen = true
+    }
+
+    def add(x: Double): Unit = {
+      d = r match {
+        case _: Sum => d + x
+        case _ => if (wins(if (x == d) 0 else x.compare(d))) x else d
+      }
+      seen = true
+    }
+
+    /** Folds a partial; null (no value) is skipped. */
+    def add(x: Number): Unit =
+      if (x == null) ()
+      else if (integral) add(x.longValue) else add(x.doubleValue)
+
+    def result: Number =
+      if (!seen) null else if (integral) Long.box(l) else Double.box(d)
+  }
 }

@@ -101,12 +101,12 @@ class FrontierResumeSpec extends SparkSpec {
       val init = Seq((1L, 0)).toDF("vid", "n")
       pregel.Iterate.run(init, 2,
         (s, _) => s.select(col("vid"), (col("n") + 1).as("n")),
-        stopWhenUnchanged = false, checkpoint = cp)
+        stop = pregel.Iterate.fixedRounds, checkpoint = cp)
       val other = Seq((1L, 0.0)).toDF("vid", "rank")
       val e = intercept[IllegalArgumentException] {
         pregel.Iterate.run(other, 4,
           (s, _) => s.select(col("vid"), (col("rank") + 1).as("rank")),
-          stopWhenUnchanged = false, checkpoint = cp)
+          stop = pregel.Iterate.fixedRounds, checkpoint = cp)
       }
       assert(e.getMessage.contains("columns"))
     } finally rmrf(dir)

@@ -1,9 +1,12 @@
 package graft
 
-import graft.pregel.{CheckpointConfig, Iterate}
+import graft.pregel.{CheckpointConfig, IterMetrics, Iterate}
 import graft.sources.SnapshotTable
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.LineageCut.{Max, Min, Reduction, Sum}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Superstep runner: convergence, metrics, checkpoint + resume. */
@@ -28,7 +31,7 @@ class IterateSpec extends SparkSpec {
     val init = Seq((1L, 0)).toDF("vid", "n")
     val res = Iterate.run(init, 7, (s, _) =>
       s.select(col("vid"), (col("n") + 1).as("n")),
-      stopWhenUnchanged = false)
+      stop = Iterate.fixedRounds)
     assert(res.completedRounds == 7)
     assert(res.state.head().getInt(1) == 7)
     // the lineage cut counts the state every round, frontier or not
@@ -44,12 +47,12 @@ class IterateSpec extends SparkSpec {
     // First run: 4 rounds.
     val first = Iterate.run(init, 4, (s, _) =>
       s.select(col("vid"), (col("n") + 1).as("n")),
-      stopWhenUnchanged = false, checkpoint = cp)
+      stop = Iterate.fixedRounds, checkpoint = cp)
     assert(first.state.head().getInt(1) == 4)
     // Resumed run to 10 rounds must pick up at round 4, not recompute.
     val resumed = Iterate.run(init, 10, (s, _) =>
       s.select(col("vid"), (col("n") + 1).as("n")),
-      stopWhenUnchanged = false, checkpoint = cp)
+      stop = Iterate.fixedRounds, checkpoint = cp)
     assert(resumed.state.head().getInt(1) == 10)
     assert(resumed.metrics.size == 6, "only rounds 5..10 re-ran")
     // One snapshot per iteration, each carrying its superstep's
@@ -66,6 +69,41 @@ class IterateSpec extends SparkSpec {
     }
   }
 
+  test("a resumed run's step sees the reduction values the " +
+      "uninterrupted run saw") {
+    import spark.implicits._
+    // quarters: every sum is exact, whatever order the stored files fold in
+    val init = (1L to 6L).map(v => (v, v * 0.25)).toDF("vid", "_x")
+      .repartition(3)
+    val reduce = Seq(Sum("_x"), Max("_x"), Min("_x"))
+    def run(rounds: Int, cp: CheckpointConfig,
+        seen: mutable.Map[Int, Map[Reduction, Number]]) =
+      Iterate.run(init, rounds, (s: DataFrame, prev: IterMetrics) => {
+        seen(prev.iteration + 1) = prev.values
+        s.select(col("vid"), (col("_x") * 2 - 0.25).as("_x"))
+      }, stop = Iterate.fixedRounds, checkpoint = cp, reduce = reduce)
+    val full = mutable.Map.empty[Int, Map[Reduction, Number]]
+    val whole = run(6, CheckpointConfig(), full)
+    // round 1 sees the initial state's cut
+    assert(full(1) == Map(Sum("_x") -> 5.25, Max("_x") -> 1.5,
+      Min("_x") -> 0.25))
+    assert(whole.metrics.init.map(_.values) == (2 to 6).map(full))
+    assert(whole.state.columns.toSeq == Seq("vid"), "reduced column kept")
+
+    val dir = Files.createTempDirectory("graft-ckpt-reduce").toString
+    val cp = CheckpointConfig(Some(dir), runId = "r")
+    run(3, cp, mutable.Map.empty)
+    val resumed = mutable.Map.empty[Int, Map[Reduction, Number]]
+    val res = run(6, cp, resumed)
+    assert(resumed.keySet == Set(4, 5, 6))
+    (4 to 6).foreach(r => assert(resumed(r) == full(r), s"round $r"))
+    assert(res.metrics.map(_.values) == whole.metrics.drop(3).map(_.values))
+    // each snapshot's summary records its round's values
+    val summary = SnapshotTable.snapshots(spark, s"$dir/r").last.summary
+    assert(summary("Sum(_x)") == whole.metrics.last.values(Sum("_x"))
+      .toString)
+  }
+
   test("resume refuses a checkpoint that contradicts its lineage") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-ckpt-bad").toString
@@ -74,7 +112,7 @@ class IterateSpec extends SparkSpec {
     val cp = CheckpointConfig(Some(dir), runId = "r1")
     Iterate.run(init, 3, (s, _) =>
       s.select(col("vid"), (col("n") + 1).as("n")),
-      stopWhenUnchanged = false, checkpoint = cp)
+      stop = Iterate.fixedRounds, checkpoint = cp)
     // Truncate the newest checkpoint without touching its manifest:
     // overwrite v3's data file with one that holds fewer rows.
     val table = s"$dir/r1"
@@ -93,7 +131,7 @@ class IterateSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Iterate.run(init, 5, (s, _) =>
         s.select(col("vid"), (col("n") + 1).as("n")),
-        stopWhenUnchanged = false, checkpoint = cp)
+        stop = Iterate.fixedRounds, checkpoint = cp)
     }
     assert(e.getMessage.contains("contradicts its lineage"))
   }

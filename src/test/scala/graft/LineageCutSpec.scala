@@ -1,18 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.pregel.Iterate
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, LineageCut}
+import org.apache.spark.sql.LineageCut.{Max, Min, Sum}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** The engine's one lineage cut ([[LineageCut]]) against Spark's eager
   * `Dataset.localCheckpoint`: same rows, schema and partitioning, a leaf
-  * plan, and the row count and `_changed` sum of the same job. */
+  * plan, and the row count, `_changed` sum and declared reductions of the
+  * same job. */
 class LineageCutSpec extends SparkSpec {
 
   import spark.implicits._
@@ -20,34 +20,6 @@ class LineageCutSpec extends SparkSpec {
   private def sumChanged(df: DataFrame): Long = {
     val r = df.agg(sum(col("_changed").cast("long"))).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  /** Jobs the calling thread starts while `f` runs. A marker job started
-    * afterwards flushes the listener queue, which delivers in order. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("cut.tag")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("cut.tag", tag)
-      f
-      sc.setLocalProperty("cut.tag", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 60000
-      while (!seen.contains("marker") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.contains("marker"), "listener never saw the marker job")
-      seen.asScala.count(_ == tag)
-    } finally {
-      sc.setLocalProperty("cut.tag", null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("rows, schema and output partitioning equal Spark's local " +
@@ -106,6 +78,44 @@ class LineageCutSpec extends SparkSpec {
       e.getMessage.contains("string"), e.getMessage)
   }
 
+  test("declared Sum/Max/Min equal agg(...).head() over the cut frame; " +
+      "an empty or all-null column has no value") {
+    // doubles of mixed magnitude over 7 partitions: a sum that depends on
+    // its addition order, which must be the one Spark's merge uses
+    val df = (0 until 400).map { i =>
+      (i.toLong, if (i % 5 == 0) None else Some(i % 17 - 8),
+        if (i % 7 == 0) None else Some(math.pow(10, i % 9 - 4) / (i + 3)),
+        (i % 11).toFloat / 3, None: Option[Double])
+    }.toDF("vid", "i", "d", "f", "nul").repartition(7)
+    val cols = Seq("i", "d", "f", "nul")
+    val reduce = cols.flatMap(c => Seq(Sum(c), Max(c), Min(c)))
+    val cut = LineageCut.localCheckpoint(df, reduce)
+    assert(cut.rows == 400L && cut.changed == -1L)
+    val row = cut.df.agg(sum("i"), max("i"), min("i"), sum("d"), max("d"),
+      min("d"), sum("f"), max("f"), min("f")).head()
+    // integral columns reduce to Long, float/double ones to Double
+    val want = Seq[Number](row.getLong(0), row.getInt(1).toLong,
+      row.getInt(2).toLong, row.getDouble(3), row.getDouble(4),
+      row.getDouble(5), row.getDouble(6), row.getFloat(7).toDouble,
+      row.getFloat(8).toDouble)
+    assert(reduce.take(9).map(cut.values) == want)
+    assert(!cut.values.keySet.exists(_.column == "nul"), cut.values)
+    // the same frame cut again folds to the same bits
+    val again = LineageCut.localCheckpoint(cut.df, reduce)
+    assert(again.values == cut.values)
+    val empty = LineageCut.localCheckpoint(df.where(lit(false)), reduce)
+    assert(empty.rows == 0L && empty.values.isEmpty)
+  }
+
+  test("a reduction over a missing or non-numeric column is refused") {
+    val df = Seq((1L, "1", BigDecimal(1))).toDF("vid", "s", "dec")
+    for (c <- Seq("s", "dec", "nope")) {
+      val e = intercept[IllegalArgumentException](
+        LineageCut.localCheckpoint(df, Seq(Sum(c))))
+      assert(e.getMessage.contains(s"'$c'"), e.getMessage)
+    }
+  }
+
   test("an Iterate superstep is one job: the cut counts the frontier") {
     val init = (0L until 8L).toDF("vid").select(col("vid"),
       lit(3).as("n"), lit(1).as("_changed"))
@@ -114,7 +124,7 @@ class LineageCutSpec extends SparkSpec {
       res = Iterate.run(init, 10, (s, _) => s.select(col("vid"),
         greatest(col("n") - 1, lit(0)).as("n"),
         when(col("n") > 0, 1).otherwise(0).as("_changed")))
-    }
+    }.size
     // three counting-down rounds and the fixpoint round, plus init's cut
     assert(res.completedRounds == 4)
     assert(res.metrics.map(_.changed) == Seq(8L, 8L, 8L, 0L))

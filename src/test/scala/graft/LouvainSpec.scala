@@ -39,6 +39,15 @@ class LouvainSpec extends SparkSpec {
     assert(got(1L) == 1L && got(11L) == 11L, s"labels not min-member: $got")
   }
 
+  test("empty graph: an empty frame") {
+    import spark.implicits._
+    val g = SimpleGraph(Seq.empty[Long].toDF("vid"),
+      Seq.empty[(Long, Long)].toDF("src", "dst"), directed = false)
+    val got = Louvain.run(g)
+    assert(got.columns.toSeq == Seq("vid", "community"))
+    assert(got.count() == 0L)
+  }
+
   test("three planted 8-cliques in a ring: recovered with high " +
       "modularity") {
     val cs = Seq(0L until 8L, 10L until 18L, 20L until 28L)

@@ -62,6 +62,27 @@ class PregelSpec extends SparkSpec {
     assertAllClose(got, want, 1e-9, "aggregator pagerank")
   }
 
+  test("aggregators: integral Max/Min reach the update as bigint; an " +
+      "all-null contribution fails loudly") {
+    import graft.pregel.Pregel.PregelAggregator
+    import org.apache.spark.sql.LineageCut.{Max, Min, Sum}
+    // every round, each state becomes the previous round's max + min
+    val got = Pregel.run(g, 2, init = col("vid"), sendToDst = None,
+      sendToSrc = None, agg = min, update = (s, _) => s,
+      aggregators = Map("hi" -> PregelAggregator(col("state"), Max),
+        "lo" -> PregelAggregator(col("state"), Min)),
+      updateWithAggregators = Some((_, _, a) => a("hi") + a("lo")))
+    assert(got.schema("state").dataType.simpleString == "bigint")
+    assert(got.collect().map(_.getLong(1)).toSet == Set(22L))
+    val e = intercept[IllegalArgumentException](Pregel.run(g, 1,
+      init = col("vid"), sendToDst = None, sendToSrc = None, agg = min,
+      update = (s, _) => s,
+      aggregators = Map("none" ->
+        PregelAggregator(lit(null).cast("long"), Sum)),
+      updateWithAggregators = Some((s, _, a) => s + a("none"))))
+    assert(e.getMessage.contains("combined to NULL"), e.getMessage)
+  }
+
   test("pregel min-propagation == WCC labels") {
     val und = g.toUndirected
     val got = Pregel.run(und, 100,

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
 
-import graft.pregel.{CheckpointConfig, Iterate}
+import graft.pregel.{CheckpointConfig, IterMetrics, Iterate}
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.functions._
 
@@ -268,12 +268,12 @@ class SnapshotTableSpec extends SparkSpec {
   test("Iterate snapshot mode: per-iteration commits, resume, metrics") {
     val dir = Files.createTempDirectory("snap-iter").toString
     val init = Seq((1L, 0), (2L, 0)).toDF("vid", "n")
-    val step = (s: org.apache.spark.sql.DataFrame, _: Int) =>
+    val step = (s: org.apache.spark.sql.DataFrame, _: IterMetrics) =>
       s.select(col("vid"), (col("n") + 1).as("n"))
     val cp = CheckpointConfig(Some(dir), runId = "r1", snapshot = true)
     // First run: 4 rounds -> snapshots v1..v4.
     val first = Iterate.run(init, 4, step,
-      stopWhenUnchanged = false, checkpoint = cp)
+      stop = Iterate.fixedRounds, checkpoint = cp)
     assert(first.state.head().getInt(1) == 4)
     val table = s"$dir/r1"
     val hist = SnapshotTable.snapshots(spark, table)
@@ -287,7 +287,7 @@ class SnapshotTableSpec extends SparkSpec {
 
     // Resume: rounds 5..6 only, chained onto the validated v4 state.
     val resumed = Iterate.run(init, 6, step,
-      stopWhenUnchanged = false, checkpoint = cp)
+      stop = Iterate.fixedRounds, checkpoint = cp)
     assert(resumed.state.orderBy("vid").collect().map(_.getInt(1)).toSeq
       == Seq(6, 6))
     assert(resumed.metrics.size == 2, "only rounds 5..6 re-ran")
@@ -297,10 +297,10 @@ class SnapshotTableSpec extends SparkSpec {
   test("Iterate snapshot mode refuses to resume from tampered state") {
     val dir = Files.createTempDirectory("snap-iter-bad").toString
     val init = Seq((1L, 0)).toDF("vid", "n")
-    val step = (s: org.apache.spark.sql.DataFrame, _: Int) =>
+    val step = (s: org.apache.spark.sql.DataFrame, _: IterMetrics) =>
       s.select(col("vid"), (col("n") + 1).as("n"))
     val cp = CheckpointConfig(Some(dir), runId = "r1", snapshot = true)
-    Iterate.run(init, 3, step, stopWhenUnchanged = false, checkpoint = cp)
+    Iterate.run(init, 3, step, stop = Iterate.fixedRounds, checkpoint = cp)
     val table = s"$dir/r1"
     // Swap v3's data file for v1's (same schema, different content).
     val m3 = SnapshotTable.manifest(spark, table, 3)
@@ -308,7 +308,7 @@ class SnapshotTableSpec extends SparkSpec {
     tamper(Paths.get(table, m3.files.head.path),
       Paths.get(table, m1.files.head.path))
     val e = intercept[IllegalArgumentException] {
-      Iterate.run(init, 5, step, stopWhenUnchanged = false, checkpoint = cp)
+      Iterate.run(init, 5, step, stop = Iterate.fixedRounds, checkpoint = cp)
     }
     assert(e.getMessage.contains("contradicts its lineage"))
   }

@@ -1,8 +1,15 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession + result-comparison helpers. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -43,6 +50,53 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       fail(s"$label mismatch: ${a.size} vs ${e.size} rows\n" +
         s"  only in actual:   ${onlyA.mkString("; ")}\n" +
         s"  only in expected: ${onlyE.mkString("; ")}")
+    }
+  }
+
+  /** Call sites of the jobs the calling thread starts while `f` runs, in
+    * start order. A job that a Dataset action runs (in its SQL execution)
+    * reports the action's call site ("head at Centrality.scala:71"); any
+    * other job its own ("localCheckpoint at Iterate.scala:120", or a pool
+    * thread's for the query stages and broadcasts a lineage cut runs —
+    * pool threads inherit the caller's local properties). A marker job
+    * started afterwards flushes the listener queue, which delivers in
+    * order. */
+  def jobsDuring(f: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val actions = new ConcurrentHashMap[String, String]()
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          actions.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("jobs.tag") != null)
+          .foreach { p =>
+            val own = if (e.stageInfos.isEmpty) ""
+              else e.stageInfos.maxBy(_.stageId).name
+            seen.add(p.getProperty("jobs.tag") ->
+              Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))
+                .flatMap(id => Option(actions.get(id))).getOrElse(own))
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("jobs.tag", tag)
+      f
+      sc.setLocalProperty("jobs.tag", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!seen.asScala.exists(_._1 == "marker") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(_._1 == "marker"),
+        "listener never saw the marker job")
+      seen.asScala.toSeq.collect { case (`tag`, site) => site }
+    } finally {
+      sc.setLocalProperty("jobs.tag", null)
+      sc.removeSparkListener(listener)
     }
   }
 

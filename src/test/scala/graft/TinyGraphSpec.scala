@@ -149,6 +149,86 @@ class TinyGraphSpec extends SparkSpec {
     assertAllClose(got, want, 1e-9, "katz")
   }
 
+  def emptyGraph: SimpleGraph = {
+    import spark.implicits._
+    SimpleGraph(Seq.empty[Long].toDF("vid"),
+      Seq.empty[(Long, Long)].toDF("src", "dst"), directed = true)
+  }
+
+  test("eigenvector centrality on an empty graph is an empty frame") {
+    val got = Centrality.eigenvector(emptyGraph)
+    assert(got.columns.toSeq == Seq("vid", "centrality"))
+    assert(got.count() == 0L)
+  }
+
+  test("katz centrality on an empty graph is an empty frame") {
+    val got = Centrality.katz(emptyGraph)
+    assert(got.columns.toSeq == Seq("vid", "centrality"))
+    assert(got.count() == 0L)
+  }
+
+  test("hits on an empty graph is an empty frame") {
+    val got = HITS.run(emptyGraph)
+    assert(got.columns.toSeq == Seq("vid", "hub", "auth"))
+    assert(got.count() == 0L)
+  }
+
+  test("hits on an edgeless graph leaves the all-zero authority " +
+      "unnormalized") {
+    import spark.implicits._
+    val g = SimpleGraph(Seq(1L, 2L, 3L).toDF("vid"),
+      Seq.empty[(Long, Long)].toDF("src", "dst"), directed = true)
+    val got = HITS.run(g).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(got.keySet == Set(1L, 2L, 3L))
+    got.values.foreach { case (hub, auth) =>
+      assert(math.abs(hub - 1.0 / 3) < 1e-12 && auth == 0.0, got)
+    }
+  }
+
+  test("iterative apps: a round runs only its cut and the state " +
+      "broadcast, no scalar job") {
+    import spark.implicits._
+    val users = verts.map(v => (v, Seq(0.5, v / 20.0))).toDF("vid", "features")
+    val wEdges = dirEdges.map { case (a, b) => (a, b, 1.0 + a % 3) }
+      .toDF("src", "dst", "weight")
+    val rounds = 3
+    // (app, run it with `rounds` rounds; negative tolerances never stop
+    // early)
+    val cases: Seq[(String, () => Unit)] = Seq(
+      ("katz", () =>
+        Centrality.katz(gUnd, tolerance = -1, maxRound = rounds).collect()),
+      ("eigenvector", () =>
+        Centrality.eigenvector(gUnd, tolerance = -1, maxRound = rounds)
+          .collect()),
+      ("hits", () =>
+        HITS.run(gDir, tolerance = -1, maxRound = rounds).collect()),
+      ("louvain", () =>
+        Louvain.run(gUnd, maxLevels = 1, maxRoundsPerLevel = rounds)
+          .collect()),
+      ("lpa_u2i", () =>
+        LPAU2I.run(users, wEdges, maxRound = 2 * rounds + 1).collect()),
+      ("pregel pagerank aggregated", () =>
+        graft.pregel.Pregel.pagerankPregelAggregated(gDir,
+          maxRounds = rounds).collect()))
+    val cut = "localCheckpoint at Iterate.scala"
+    for ((app, run) <- cases) {
+      val sites = jobsDuring(run())
+      val cuts = sites.indices.filter(sites(_).startsWith(cut))
+      // the initial state's cut plus one per round (Louvain's two
+      // zero-move rounds may end its phase early)
+      assert(cuts.size >= (if (app == "louvain") 2 else rounds + 1),
+        s"$app: $sites")
+      // between the first and the last cut: cuts and the jobs a cut runs
+      // on a pool thread (state broadcasts, query stages) — no Dataset
+      // action such as the head, count or collect of a round scalar
+      val other = sites.slice(cuts.head, cuts.last).filterNot(s =>
+        s.startsWith(cut) || s.contains("withThreadLocalCaptured"))
+      assert(other.isEmpty, s"$app runs other jobs inside its rounds: " +
+        s"$other (all jobs: $sites)")
+    }
+  }
+
   test("degree centrality = deg/(n-1)") {
     val got = asMapD(Centrality.degree(gUnd))
     val nbrs = undEdges.groupBy(_._1).view.mapValues(_.size).toMap
