@@ -1,10 +1,15 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Base64
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, LineageCut, Row,
-  SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, LineageCut, LineageWriter,
+  Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  Expression, Literal, Pmod, UnixMicros, UnsafeProjection, XxHash64}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -37,9 +42,11 @@ import org.json4s.jackson.Serialization
   *    retries against the new current snapshot — optimistic concurrency
   *    exactly like Iceberg's;
   *  - the manifest carries per-FILE lineage (row count + an
-  *    order-independent xxhash64 content checksum), computed
-  *    distributed (one agg row per file), so a resume/validate never
-  *    scans more than it would to read, and driver memory is O(files).
+  *    order-independent xxhash64 content checksum + column stats),
+  *    computed by the writer tasks as they write each file, so a commit
+  *    is one job that never re-reads what it wrote, a resume/validate
+  *    never scans more than it would to read, and driver memory is
+  *    O(files).
   */
 object SnapshotTable {
 
@@ -65,8 +72,8 @@ object SnapshotTable {
     * values sits near 0.6 fill (useful fp rate); far past that the
     * filter saturates toward all-ones, which only costs pruning power —
     * never correctness. Values are hashed through the SAME
-    * `xxhash64(render(v), seed)` expression on the write side
-    * (distributed) and a driver-side catalyst eval on the read side, so
+    * `xxhash64(render(v), seed)` expression on the write side (in the
+    * writer tasks) and a driver-side catalyst eval on the read side, so
     * the two can never drift. */
   private val BloomBits = 8192
   private val BloomK = 4
@@ -154,21 +161,14 @@ object SnapshotTable {
     val root = new Path(table)
     val f = fileSystem(spark, root)
     val old = manifest(spark, table, asOfVersion)
-    var attempt = 0
-    while (true) {
-      val curV = currentVersionOpt(spark, table).getOrElse(
-        throw new IllegalStateException(s"no table at $table"))
-      val m = Manifest(curV + 1, curV, "rollback", old.schemaJson,
+    retry(table, "commits") {
+      val curV = current(spark, table)
+      publish(f, root, Manifest(curV + 1, curV, "rollback", old.schemaJson,
         old.files, old.rows,
         carryStreamMark(Some(manifest(spark, table, curV)),
           Map("rolledBackTo" -> asOfVersion.toString)),
-        System.currentTimeMillis())
-      if (tryPublish(f, root, m)) return m.version
-      attempt += 1
-      require(attempt < MaxCommitAttempts,
-        s"gave up after $attempt conflicting commits on $table")
+        System.currentTimeMillis()))
     }
-    -1 // unreachable
   }
 
   /** Rewrite the current file set into ~`targetFileBytes` data files and
@@ -184,56 +184,38 @@ object SnapshotTable {
       targetFileBytes: Long = 128L << 20): Int = {
     val root = new Path(table)
     val f = fileSystem(spark, root)
-    var attempt = 0
-    while (true) {
-      val curV = currentVersionOpt(spark, table).getOrElse(
-        throw new IllegalStateException(s"no table at $table"))
+    retry(table, "compactions") {
+      val curV = current(spark, table)
       val parent = manifest(spark, table, curV)
-      if (parent.files.size <= 1) return curV
       val totalBytes = parent.files.map(fl =>
         f.getFileStatus(new Path(root, fl.path)).getLen).sum
       val nFiles = math.max(1,
         math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      if (nFiles >= parent.files.size) return curV // already compact
+      // nothing to merge (at most one file), or already compact
+      if (nFiles >= parent.files.size) Some(curV) else {
+        val dataDir = newDataDir(root)
+        val (_, newFiles) =
+          write(readVersion(spark, table, curV).repartition(nFiles), dataDir)
+        // Content equality in the table-schema view: the rewrite's files
+        // are sealed over the table schema, so their lineage sums to its
+        // (rows, checksum), while the parent's per-file checksums can't be
+        // summed across schema evolution (older files were sealed over
+        // narrower column sets) — re-derive the parent's in that view.
+        def total(fs: Seq[FileLineage]): (Long, BigInt) =
+          (fs.map(_.rows).sum, fs.map(fl => BigInt(fl.checksum)).sum)
+        require(total(newFiles) ==
+            total(lineageOnDisk(readVersion(spark, table, curV))),
+          s"compaction of $table v$curV changed the content — refusing " +
+            "to publish (rewrite kept at " + dataDir + " for inspection)")
 
-      val uuid = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(root, s"data/$uuid")
-      readVersion(spark, table, curV).repartition(nFiles)
-        .write.mode("errorifexists").parquet(dataDir.toString)
-      val schema = DataType.fromJson(parent.schemaJson)
-        .asInstanceOf[StructType]
-      val onDisk = spark.read.schema(schema).parquet(dataDir.toString)
-      val newFiles = fileLineage(onDisk)
-      // Content equality in the table-schema view (per-file manifest
-      // checksums can't be summed across schema evolution — older files
-      // were sealed over narrower column sets).
-      def total(df: DataFrame): (Long, BigInt) = {
-        val r = df.agg(count(lit(1)),
-          sum(xxhash64(schema.fieldNames.map(col): _*)
-            .cast("decimal(38,0)"))).head()
-        (r.getLong(0),
-          Option(r.getDecimal(1)).map(d => BigInt(d.toBigInteger))
-            .getOrElse(BigInt(0)))
+        publish(f, root, Manifest(curV + 1, curV, "compact", parent.schemaJson,
+          newFiles, parent.rows,
+          carryStreamMark(Some(parent),
+            Map("compactedFiles" -> parent.files.size.toString,
+              "intoFiles" -> newFiles.size.toString)),
+          System.currentTimeMillis()), Some(dataDir))
       }
-      require(total(onDisk) == total(readVersion(spark, table, curV)),
-        s"compaction of $table v$curV changed the content — refusing " +
-          "to publish (rewrite kept at " + dataDir + " for inspection)")
-
-      val m = Manifest(curV + 1, curV, "compact", parent.schemaJson,
-        newFiles, parent.rows,
-        carryStreamMark(Some(parent),
-          Map("compactedFiles" -> parent.files.size.toString,
-            "intoFiles" -> newFiles.size.toString)),
-        System.currentTimeMillis())
-      if (tryPublish(f, root, m)) return m.version
-      // A writer advanced the table mid-rewrite: our rewrite is stale.
-      // Drop it and redo against the new current snapshot.
-      f.delete(dataDir, true)
-      attempt += 1
-      require(attempt < MaxCommitAttempts,
-        s"gave up after $attempt conflicting compactions on $table")
     }
-    -1 // unreachable
   }
 
   /** Copy-on-write upsert (Iceberg MERGE-shaped): `df` rows REPLACE
@@ -259,19 +241,16 @@ object SnapshotTable {
     // bulk MERGE's key set can be arbitrarily large — above the gate the
     // anti-join shuffles instead of collecting every key to the driver.
     val broadcastKeys = nDelta <= 4L * 1000 * 1000
-    val curV0 = currentVersionOpt(spark, table).getOrElse(
-      throw new IllegalStateException(s"no table at $table"))
+    val curV0 = current(spark, table)
     if (nDelta == 0L) return curV0
 
-    var attempt = 0
-    while (true) {
-      val curV = currentVersionOpt(spark, table).get
+    retry(table, "upserts") {
+      val curV = current(spark, table)
       val parent = manifest(spark, table, curV)
       // strict schema check (reuses the no-evolution path)
       evolveSchema(parent.schemaJson, dfc.schema.json,
         mergeSchema = false, table)
-      val schema = DataType.fromJson(parent.schemaJson)
-        .asInstanceOf[StructType]
+      val schema = schemaOf(parent)
       val types = schema.fields.map(fd => fd.name -> fd.dataType).toMap
       // Incoming key bounds, one agg — the driver-side pruning predicate.
       val boundExprs = keyCols.zipWithIndex.flatMap { case (c, i) =>
@@ -287,40 +266,22 @@ object SnapshotTable {
       val (touched, untouched) = parent.files.partition(fl =>
         keyFilters.nonEmpty && keyFilters.forall(mightMatch(_, fl, types)))
 
-      val uuid = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(root, s"data/$uuid")
-      val survivors =
-        if (touched.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        else {
-          val keys = dfc.select(keyCols.map(col): _*)
-          spark.read.schema(schema)
-            .parquet(touched.map(fl =>
-              new Path(root, fl.path).toString): _*)
-            .join(if (broadcastKeys) broadcast(keys) else keys,
-              keyCols, "left_anti")
-        }
-      survivors.select(schema.fieldNames.map(col): _*)
-        .unionByName(dfc.select(schema.fieldNames.map(col): _*))
-        .write.mode("errorifexists").parquet(dataDir.toString)
-      val newFiles =
-        fileLineage(spark.read.schema(schema).parquet(dataDir.toString))
+      val dataDir = newDataDir(root)
+      val keys = dfc.select(keyCols.map(col): _*)
+      val survivors = if (touched.isEmpty) readFiles(spark, table, schema, Nil)
+        else readFiles(spark, table, schema, touched)
+          .join(if (broadcastKeys) broadcast(keys) else keys, keyCols,
+            "left_anti")
+      val (_, newFiles) = write(survivors.select(schema.fieldNames.map(col): _*)
+        .unionByName(dfc.select(schema.fieldNames.map(col): _*)), dataDir)
       val files = untouched ++ newFiles
-      val m = Manifest(curV + 1, curV, "upsert", parent.schemaJson,
+      publish(f, root, Manifest(curV + 1, curV, "upsert", parent.schemaJson,
         files, files.map(_.rows).sum,
         carryStreamMark(Some(parent),
           summary ++ Map("rewrittenFiles" -> touched.size.toString,
             "carriedFiles" -> untouched.size.toString)),
-        System.currentTimeMillis())
-      if (tryPublish(f, root, m)) return m.version
-      // A writer advanced the table mid-rewrite: redo against the new
-      // current snapshot.
-      f.delete(dataDir, true)
-      attempt += 1
-      require(attempt < MaxCommitAttempts,
-        s"gave up after $attempt conflicting upserts on $table")
+        System.currentTimeMillis()), Some(dataDir))
     }
-    -1 // unreachable
   }
 
   /** Copy-on-write DELETE of the rows matching `filters` (conjunction,
@@ -335,47 +296,33 @@ object SnapshotTable {
       "refusing an unfiltered delete; use overwrite to empty a table")
     val root = new Path(table)
     val f = fileSystem(spark, root)
-    var attempt = 0
-    while (true) {
-      val curV = currentVersionOpt(spark, table).getOrElse(
-        throw new IllegalStateException(s"no table at $table"))
+    retry(table, "deletes") {
+      val curV = current(spark, table)
       val parent = manifest(spark, table, curV)
-      val schema = DataType.fromJson(parent.schemaJson)
-        .asInstanceOf[StructType]
+      val schema = schemaOf(parent)
       val types = schema.fields.map(fd => fd.name -> fd.dataType).toMap
       val (touched, untouched) = parent.files.partition(fl =>
         filters.forall(mightMatch(_, fl, types)))
-      if (touched.isEmpty) return curV // stats prove nothing matches
-
-      val uuid = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(root, s"data/$uuid")
-      // survivors = rows where the predicate is FALSE **or NULL** — SQL
-      // DELETE only removes rows the predicate affirms, and a bare
-      // where(!pred) would silently drop NULL-predicate rows (and do so
-      // only in files the stats happened to touch)
-      spark.read.schema(schema)
-        .parquet(touched.map(fl => new Path(root, fl.path).toString): _*)
-        .where(!coalesce(filters.map(toColumn).reduce(_ && _),
-          lit(false)))
-        .write.mode("errorifexists").parquet(dataDir.toString)
-      val newFiles =
-        fileLineage(spark.read.schema(schema).parquet(dataDir.toString))
-      val files = untouched ++ newFiles
-      val total = files.map(_.rows).sum
-      val m = Manifest(curV + 1, curV, "delete", parent.schemaJson,
-        files, total,
-        carryStreamMark(Some(parent),
-          summary ++ Map("rewrittenFiles" -> touched.size.toString,
-            "carriedFiles" -> untouched.size.toString,
-            "deletedRows" -> (parent.rows - total).toString)),
-        System.currentTimeMillis())
-      if (tryPublish(f, root, m)) return m.version
-      f.delete(dataDir, true)
-      attempt += 1
-      require(attempt < MaxCommitAttempts,
-        s"gave up after $attempt conflicting deletes on $table")
+      if (touched.isEmpty) Some(curV) else { // stats prove nothing matches
+        val dataDir = newDataDir(root)
+        // survivors = rows where the predicate is FALSE **or NULL** — SQL
+        // DELETE only removes rows the predicate affirms, and a bare
+        // where(!pred) would silently drop NULL-predicate rows (and do so
+        // only in files the stats happened to touch)
+        val (_, newFiles) = write(readFiles(spark, table, schema, touched)
+          .where(!coalesce(filters.map(toColumn).reduce(_ && _), lit(false))),
+          dataDir)
+        val files = untouched ++ newFiles
+        val total = files.map(_.rows).sum
+        publish(f, root, Manifest(curV + 1, curV, "delete", parent.schemaJson,
+          files, total,
+          carryStreamMark(Some(parent),
+            summary ++ Map("rewrittenFiles" -> touched.size.toString,
+              "carriedFiles" -> untouched.size.toString,
+              "deletedRows" -> (parent.rows - total).toString)),
+          System.currentTimeMillis()), Some(dataDir))
+      }
     }
-    -1 // unreachable
   }
 
   /** Signals that a [[appendBatch]] lost its race: a concurrent writer
@@ -416,58 +363,42 @@ object SnapshotTable {
     val f = fileSystem(spark, root)
 
     // 1. Write the data files under a fresh uuid dir (invisible to every
-    //    reader until a manifest references them).
-    val uuid = java.util.UUID.randomUUID().toString
-    val dataDir = new Path(root, s"data/$uuid")
-    df.write.mode("errorifexists").parquet(dataDir.toString)
+    //    reader until a manifest references them), with their lineage.
+    val dataDir = newDataDir(root)
+    val (schema, newFiles) = write(df, dataDir)
 
-    try {
-      // 2. Lineage of what landed on disk (one agg row per file). The
-      //    read takes the written frame's schema: inferring it from the
-      //    parquet footers would cost a job and give the same schema.
-      val onDisk = spark.read.schema(df.schema).parquet(dataDir.toString)
-      val newFiles = fileLineage(onDisk)
-      val schemaJson = onDisk.schema.json
-
-      // 3. Optimistic-concurrency manifest publication.
-      var attempt = 0
-      while (true) {
-        val curV = currentVersionOpt(spark, table)
-        val parent = curV.map(v => manifest(spark, table, v))
-        // Atomic exactly-once gate ([[appendBatch]]): re-checked against
-        // the freshly-read parent on EVERY publish attempt, so a racing
-        // same-batch committer cannot slip through between a caller-side
-        // ledger read and the commit.
-        streamBatchGate.foreach { b =>
-          if (parent.flatMap(_.summary.get("streamBatch"))
-              .exists(_.toLong >= b))
-            throw new BatchAlreadyCommitted(b)
-        }
-        val manifestSchema = op match {
-          case "create" =>
-            require(parent.isEmpty, s"table $table already exists " +
-              s"(version ${curV.get}); use append/overwrite")
-            schemaJson
-          case "append" =>
-            val p = parent.getOrElse(throw new IllegalStateException(
-              s"cannot append: no table at $table"))
-            evolveSchema(p.schemaJson, schemaJson, mergeSchema, table)
-          case _ => schemaJson // overwrite creates or replaces
-        }
-        val files = parent match {
-          case Some(p) if op == "append" => p.files ++ newFiles
-          case _ => newFiles
-        }
-        val m = Manifest(curV.getOrElse(0) + 1, curV.getOrElse(-1), op,
-          manifestSchema, files, files.map(_.rows).sum,
-          carryStreamMark(parent, summary),
-          System.currentTimeMillis())
-        if (tryPublish(f, root, m)) return m.version
-        attempt += 1
-        require(attempt < MaxCommitAttempts,
-          s"gave up after $attempt conflicting commits on $table")
+    // 2. Optimistic-concurrency manifest publication.
+    try retry(table, "commits") {
+      val schemaJson = schema.json
+      val curV = currentVersionOpt(spark, table)
+      val parent = curV.map(v => manifest(spark, table, v))
+      // Atomic exactly-once gate ([[appendBatch]]): re-checked against
+      // the freshly-read parent on EVERY publish attempt, so a racing
+      // same-batch committer cannot slip through between a caller-side
+      // ledger read and the commit.
+      streamBatchGate.foreach { b =>
+        if (parent.flatMap(_.summary.get("streamBatch"))
+            .exists(_.toLong >= b))
+          throw new BatchAlreadyCommitted(b)
       }
-      -1 // unreachable
+      val manifestSchema = op match {
+        case "create" =>
+          require(parent.isEmpty, s"table $table already exists " +
+            s"(version ${curV.get}); use append/overwrite")
+          schemaJson
+        case "append" =>
+          val p = parent.getOrElse(throw new IllegalStateException(
+            s"cannot append: no table at $table"))
+          evolveSchema(p.schemaJson, schemaJson, mergeSchema, table)
+        case _ => schemaJson // overwrite creates or replaces
+      }
+      val files = parent match {
+        case Some(p) if op == "append" => p.files ++ newFiles
+        case _ => newFiles
+      }
+      publish(f, root, Manifest(curV.getOrElse(0) + 1, curV.getOrElse(-1),
+        op, manifestSchema, files, files.map(_.rows).sum,
+        carryStreamMark(parent, summary), System.currentTimeMillis()))
     } catch {
       // The uuid dir is referenced by no manifest — on ANY failed commit
       // (a lost BatchAlreadyCommitted gate, a create/schema conflict,
@@ -496,80 +427,151 @@ object SnapshotTable {
       case _ => false
     })
 
-  /** Per-file (rows, content checksum, per-column min/max/null stats) of
-    * a just-written commit dir — ONE distributed agg, returns one row per
-    * file, never data rows. The checksum is the sum of per-row xxhash64
-    * in DECIMAL(38,0) (order-independent, ANSI-overflow-safe — the
-    * contract [[validate]] re-derives on every superstep resume in
-    * graft.pregel.Iterate). */
-  private def fileLineage(onDisk: DataFrame): Seq[FileLineage] = {
-    val cols = onDisk.columns.map(col)
-    val statCols = statableCols(onDisk.schema)
-    val statExprs = statCols.zipWithIndex.flatMap { case (f, i) =>
-      val base = col(f.name)
-      // Timestamps are recorded as epoch MICROS, not cast(string):
-      // the string rendering depends on spark.sql.session.timeZone and
-      // would mis-order against instant literals under a session/JVM
-      // zone mismatch (silent wrong pruning). Micros are zone-free.
-      val c = f.dataType match {
-        case TimestampType => unix_micros(base)
-        case _ => base
-      }
-      Seq(min(c).cast("string").as(s"_mn$i"),
-        max(c).cast("string").as(s"_mx$i"),
-        sum(when(base.isNull, 1L).otherwise(0L)).as(s"_nn$i"))
+  /** Runs `attempt` until it settles on a version (Some), retrying while
+    * a concurrent writer takes the version first (None), at most
+    * [[MaxCommitAttempts]] times. */
+  private def retry(table: String, what: String)(attempt: => Option[Int])
+      : Int = {
+    var (n, v) = (0, attempt)
+    while (v.isEmpty) {
+      n += 1
+      require(n < MaxCommitAttempts,
+        s"gave up after $n conflicting $what on $table")
+      v = attempt
     }
-    // Bloom bit positions per bloomable column: BloomK collect_set aggs
-    // of pmod(xxhash64(render(value), seed), BloomBits) — each set is
-    // bounded by BloomBits ints regardless of row count (collect_set
-    // dedups during partial aggregation), so driver memory stays
-    // O(files * BloomBits).
-    val bloomCols = statCols.filter(f => bloomable(f.dataType))
-    val bloomExprs = bloomCols.zipWithIndex.flatMap { case (f, i) =>
-      val rendered = f.dataType match {
-        case StringType => col(f.name)
-        case _ => col(f.name).cast("string")
-      }
-      (0 until BloomK).map { seed =>
-        collect_set(when(col(f.name).isNotNull,
-          pmod(xxhash64(rendered, lit(seed)), lit(BloomBits))
-            .cast("int"))).as(s"_bl${i}_$seed")
-      }
+    v.get
+  }
+
+  /** Publishes `m`: its version, or None when a writer advanced the table
+    * first — then `stale`, the rewrite made for `m`, is dropped and the
+    * caller redoes it against the new current snapshot. */
+  private def publish(f: FileSystem, root: Path, m: Manifest,
+      stale: Option[Path] = None): Option[Int] =
+    if (tryPublish(f, root, m)) Some(m.version)
+    else { stale.foreach(f.delete(_, true)); None }
+
+  private def newDataDir(root: Path): Path =
+    new Path(root, s"data/${java.util.UUID.randomUUID()}")
+
+  /** Writes `df` as the data files of the new `dataDir`, in one job, and
+    * returns the schema a read of them gives and the lineage of each file
+    * that holds rows (sorted by path), which the writer tasks fold as
+    * they write — nothing is read back. */
+  private def write(df: DataFrame, dataDir: Path)
+      : (StructType, Seq[FileLineage]) = {
+    val fold = new LineageFold(df.schema)
+    val (schema, files) = LineageWriter.parquet(df, dataDir.toString, fold)
+    (schema, files.toSeq.map { case (name, a) =>
+      fold.lineage(s"data/${dataDir.getName}/$name", a)
+    }.sortBy(_.path))
+  }
+
+  /** The lineage of each data file `df` reads, re-derived from its rows
+    * with the writer's fold, in one job. */
+  private def lineageOnDisk(df: DataFrame): Seq[FileLineage] = {
+    val fold = new LineageFold(df.schema)
+    LineageWriter.fold(df, fold).toSeq
+      .map { case (f, a) => fold.lineage(relativize(f), a) }
+  }
+
+  /** One file's running lineage: rows, the checksum (`sum + part`: a long
+    * partial sum spills into `sum` before it overflows) and, per stat
+    * column, min and max (Catalyst values), null count and bloom bits. */
+  private final class FileAcc(n: Int, nBlooms: Int) extends Serializable {
+    var rows = 0L
+    var sum = BigInt(0)
+    var part = 0L
+    val min, max = new Array[Any](n)
+    val nulls = new Array[Long](n)
+    val bits = Array.fill(nBlooms)(new java.util.BitSet(BloomBits))
+
+    def addHash(h: Long): Unit = {
+      val s = part + h
+      if (((part ^ s) & (h ^ s)) < 0) { sum += part; part = h } else part = s
     }
-    val aggExprs =
-      sum(xxhash64(cols: _*).cast("decimal(38,0)")).as("checksum") +:
-        (statExprs ++ bloomExprs)
-    val bloomBase = 3 + statCols.size * 3
-    val bloomIdx = bloomCols.map(_.name).zipWithIndex.toMap
-    onDisk
-      .groupBy(input_file_name().as("f"))
-      .agg(count(lit(1)).as("rows"), aggExprs: _*)
-      .collect()
-      .toSeq
-      .map { r =>
-        val stats = statCols.zipWithIndex.map { case (f, i) =>
-          val base = 3 + i * 3
-          def v(j: Int): Option[String] =
-            if (r.isNullAt(j)) None else Some(r.getString(j))
-          val (mn, mx) = (v(base), v(base + 1))
-          val keep = mn.forall(_.length <= MaxStatLen) &&
-            mx.forall(_.length <= MaxStatLen)
-          val bloom = bloomIdx.get(f.name).map { bi =>
-            val bits = new java.util.BitSet(BloomBits)
-            (0 until BloomK).foreach { seed =>
-              r.getSeq[Int](bloomBase + bi * BloomK + seed)
-                .foreach(bits.set)
-            }
-            java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
-          }
-          ColStat(f.name, if (keep) mn else None, if (keep) mx else None,
-            r.getLong(base + 2), bloom)
-        }
-        FileLineage(relativize(r.getString(0)), r.getLong(1),
-          r.getDecimal(2).toBigInteger.toString, Some(stats),
-          Some(onDisk.columns.toSeq))
+  }
+
+  /** The per-file lineage fold over rows of `schema`, shared by the writer
+    * and [[validate]]. Bound to the row, it evaluates the expressions of
+    * Spark's aggregate: `xxhash64` of all columns (summed exactly, as
+    * `sum(... as decimal(38,0))`), each stat column's value (a timestamp
+    * as `unix_micros`) for `min`/`max`/null count, and each bloom
+    * column's `pmod(xxhash64(render(v), k), BloomBits)`, k < BloomK.
+    * (Epoch micros, not `cast(string)`: a timestamp's string depends on
+    * the session time zone and would mis-order against instant literals
+    * under a zone mismatch; micros are zone-free.)
+    * Min/max compare in Catalyst's ordering of the type (UTF-8 bytes,
+    * NaN above all, -0.0 = 0.0) and keep the first of equal values, as
+    * Spark's `min`/`max` do; bounds render through `cast(string)`. */
+  private final class LineageFold(schema: StructType)
+      extends LineageWriter.Fold[FileAcc] {
+    private val stats = statableCols(schema)
+    private val blooms =
+      stats.indices.filter(j => bloomable(stats(j).dataType))
+    private def ref(f: StructField) =
+      BoundReference(schema.fieldIndex(f.name), f.dataType, f.nullable)
+    private val hash = new XxHash64(schema.fields.toSeq.map(ref))
+    require(hash.checkInputDataTypes().isSuccess,
+      s"cannot checksum rows of ${schema.simpleString}")
+    private val values = stats.map(f =>
+      if (f.dataType == TimestampType) UnixMicros(ref(f)) else ref(f))
+    private val types = values.map(_.dataType)
+    private val exprs = hash +: (values ++ blooms.flatMap { j =>
+      val v = ref(stats(j))
+      val rendered = if (v.dataType == StringType) v else Cast(v, StringType)
+      (0 until BloomK).map(bloomBit(rendered, _))
+    })
+    @transient private lazy val proj = UnsafeProjection.create(exprs)
+    @transient private lazy val ords =
+      types.map(TypeUtils.getInterpretedOrdering)
+
+    def zero(): FileAcc = new FileAcc(stats.size, blooms.size)
+
+    private def bound(a: FileAcc, j: Int, v: Any): Unit = if (v != null) {
+      if (a.min(j) == null || ords(j).lt(v, a.min(j)))
+        a.min(j) = InternalRow.copyValue(v)
+      if (a.max(j) == null || ords(j).gt(v, a.max(j)))
+        a.max(j) = InternalRow.copyValue(v)
+    }
+
+    def add(a: FileAcc, row: InternalRow): Unit = {
+      val p = proj(row)
+      a.rows += 1
+      a.addHash(p.getLong(0))
+      for (j <- types.indices)
+        if (p.isNullAt(j + 1)) a.nulls(j) += 1
+        else bound(a, j, p.get(j + 1, types(j)))
+      for (b <- blooms.indices if !p.isNullAt(blooms(b) + 1);
+          k <- 0 until BloomK)
+        a.bits(b).set(p.getLong(1 + types.size + b * BloomK + k).toInt)
+    }
+
+    def merge(a: FileAcc, b: FileAcc): FileAcc = {
+      a.rows += b.rows
+      a.sum += b.sum
+      a.addHash(b.part)
+      for (j <- types.indices) {
+        bound(a, j, b.min(j))
+        bound(a, j, b.max(j))
+        a.nulls(j) += b.nulls(j)
       }
-      .sortBy(_.path)
+      a.bits.zip(b.bits).foreach { case (x, y) => x.or(y) }
+      a
+    }
+
+    /** The manifest entry of the file at `path` with lineage `a`. */
+    def lineage(path: String, a: FileAcc): FileLineage = {
+      def render(j: Int, v: Any) = Option(v).map(x =>
+        Cast(Literal(x, types(j)), StringType).eval().toString)
+      FileLineage(path, a.rows, (a.sum + a.part).toString, Some(
+        stats.indices.map { j =>
+          val (mn, mx) = (render(j, a.min(j)), render(j, a.max(j)))
+          val keep = (mn ++ mx).forall(_.length <= MaxStatLen)
+          ColStat(stats(j).name, mn.filter(_ => keep), mx.filter(_ => keep),
+            a.nulls(j), Some(blooms.indexOf(j)).filter(_ >= 0).map(b =>
+              Base64.getEncoder.encodeToString(a.bits(b).toByteArray)))
+        }), Some(schema.fieldNames.toSeq))
+    }
   }
 
   /** table-root-relative path of a data-file URI. Every data file lives
@@ -664,23 +666,29 @@ object SnapshotTable {
   /** Current snapshot. Plans exactly the manifest's file list — no
     * directory listing, uncommitted data invisible. */
   def read(spark: SparkSession, table: String): DataFrame =
-    readVersion(spark, table, currentVersionOpt(spark, table).getOrElse(
-      throw new IllegalStateException(s"no table at $table")))
+    readVersion(spark, table, current(spark, table))
 
   /** Time travel to any retained snapshot. */
   def readVersion(spark: SparkSession, table: String, version: Int)
       : DataFrame = {
     val m = manifest(spark, table, version)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    if (m.files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-    else {
-      val root = new Path(table)
-      val paths = m.files.map(fl => new Path(root, fl.path).toString)
-      spark.read.schema(schema).parquet(paths: _*)
-    }
+    readFiles(spark, table, schemaOf(m), m.files)
   }
+
+  /** A read of exactly `files` in `schema` — no directory listing. */
+  private def readFiles(spark: SparkSession, table: String,
+      schema: StructType, files: Seq[FileLineage]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(
+      files.map(fl => new Path(new Path(table), fl.path).toString): _*)
+
+  private def schemaOf(m: Manifest): StructType =
+    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+
+  private def current(spark: SparkSession, table: String): Int =
+    currentVersionOpt(spark, table).getOrElse(
+      throw new IllegalStateException(s"no table at $table"))
 
   /** Manifest-level scan planning (Iceberg's headline read-side win at
     * 100 TB): keep only the data files whose per-column min/max/null
@@ -696,20 +704,13 @@ object SnapshotTable {
     * sound, results are always exact. */
   def scan(spark: SparkSession, table: String, filters: Seq[Filter],
       version: Int = -1): DataFrame = {
-    val v = if (version > 0) version
-      else currentVersionOpt(spark, table).getOrElse(
-        throw new IllegalStateException(s"no table at $table"))
-    val m = manifest(spark, table, v)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val m = manifest(spark, table,
+      if (version > 0) version else current(spark, table))
+    val schema = schemaOf(m)
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val kept = m.files.filter(fl => filters.forall(mightMatch(_, fl, types)))
-    val root = new Path(table)
-    val df =
-      if (kept.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(schema)
-        .parquet(kept.map(fl => new Path(root, fl.path).toString): _*)
-    filters.foldLeft(df)((d, f) => d.filter(toColumn(f)))
+    filters.foldLeft(readFiles(spark, table, schema, kept))((d, f) =>
+      d.filter(toColumn(f)))
   }
 
   /** Rows added between `fromVersion` (exclusive) and `toVersion`
@@ -720,13 +721,10 @@ object SnapshotTable {
     * would drop the retraction. */
   def readIncremental(spark: SparkSession, table: String, fromVersion: Int,
       toVersion: Int = -1): DataFrame = {
-    val to = if (toVersion > 0) toVersion
-      else currentVersionOpt(spark, table).getOrElse(
-        throw new IllegalStateException(s"no table at $table"))
+    val to = if (toVersion > 0) toVersion else current(spark, table)
     require(fromVersion >= 1 && to >= fromVersion,
       s"need 1 <= fromVersion <= toVersion, got $fromVersion..$to")
     val mTo = manifest(spark, table, to)
-    val schema = DataType.fromJson(mTo.schemaJson).asInstanceOf[StructType]
     ((fromVersion + 1) to to).foreach { v =>
       val op = manifest(spark, table, v).operation
       require(op == "append",
@@ -734,14 +732,8 @@ object SnapshotTable {
           "only append commits are add-only")
     }
     val base = manifest(spark, table, fromVersion).files.map(_.path).toSet
-    val added = mTo.files.filterNot(fl => base(fl.path))
-    if (added.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else {
-      val root = new Path(table)
-      spark.read.schema(schema)
-        .parquet(added.map(fl => new Path(root, fl.path).toString): _*)
-    }
+    readFiles(spark, table, schemaOf(mTo),
+      mTo.files.filterNot(fl => base(fl.path)))
   }
 
   /** Change-data-capture between two snapshots, from the manifest file
@@ -756,9 +748,7 @@ object SnapshotTable {
     *         `_change_type` ('insert'/'delete') and `_count` columns */
   def readChanges(spark: SparkSession, table: String, fromVersion: Int,
       toVersion: Int = -1): DataFrame = {
-    val to = if (toVersion > 0) toVersion
-      else currentVersionOpt(spark, table).getOrElse(
-        throw new IllegalStateException(s"no table at $table"))
+    val to = if (toVersion > 0) toVersion else current(spark, table)
     require(fromVersion >= 1 && to >= fromVersion,
       s"need 1 <= fromVersion <= toVersion, got $fromVersion..$to")
     val mFrom = manifest(spark, table, fromVersion)
@@ -773,17 +763,13 @@ object SnapshotTable {
       s"cannot diff $table v$fromVersion..v$to: v$fromVersion's schema " +
         "is not a subset of the newer one (incompatible overwrite in " +
         "the range)")
-    val schema = DataType.fromJson(mTo.schemaJson).asInstanceOf[StructType]
-    val root = new Path(table)
-    def rd(fs: Seq[FileLineage]): DataFrame =
-      if (fs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(schema)
-        .parquet(fs.map(fl => new Path(root, fl.path).toString): _*)
+    val schema = schemaOf(mTo)
     val fromPaths = mFrom.files.map(_.path).toSet
     val toPaths = mTo.files.map(_.path).toSet
-    val ins = rd(mTo.files.filterNot(fl => fromPaths(fl.path)))
-    val del = rd(mFrom.files.filterNot(fl => toPaths(fl.path)))
+    val ins = readFiles(spark, table, schema,
+      mTo.files.filterNot(fl => fromPaths(fl.path)))
+    val del = readFiles(spark, table, schema,
+      mFrom.files.filterNot(fl => toPaths(fl.path)))
 
     val cols = schema.fieldNames.toSeq
     val i = ins.groupBy(cols.map(col): _*)
@@ -828,15 +814,14 @@ object SnapshotTable {
     Serialization.read[Manifest](new String(bytes, UTF_8))
   }
 
-  /** Re-derive every file's (rows, checksum) of a snapshot and compare
-    * with its manifest lineage — refuses silently-corrupted or truncated
-    * data; graft.pregel.Iterate runs it before resuming from a superstep
+  /** Re-derive every file's (rows, checksum) of a snapshot with the
+    * writer's lineage fold (one job) and compare with its manifest
+    * lineage — refuses silently-corrupted or truncated data;
+    * graft.pregel.Iterate runs it before resuming from a superstep
     * checkpoint. */
   def validate(spark: SparkSession, table: String, version: Int): Unit = {
     val m = manifest(spark, table, version)
-    if (m.files.isEmpty) return
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    val root = new Path(table)
+    val schema = schemaOf(m)
     // Each file's checksum covers ITS OWN sealed column set (schema
     // evolution can widen the table schema later), so re-derive per
     // column-set group, projecting the snapshot read down to the
@@ -847,10 +832,8 @@ object SnapshotTable {
       fs.map(f => (f.path, f.rows, f.checksum)).toSet
     m.files.groupBy(_.cols.getOrElse(schema.fieldNames.toSeq)).foreach {
       case (cols, group) =>
-        val df = spark.read.schema(schema)
-          .parquet(group.map(fl => new Path(root, fl.path).toString): _*)
-          .select(cols.map(col): _*)
-        val got = key(fileLineage(df))
+        val got = key(lineageOnDisk(readFiles(spark, table, schema, group)
+          .select(cols.map(col): _*)))
         val want = key(group)
         require(got == want,
           s"snapshot v$version of $table contradicts its lineage:\n" +
@@ -966,21 +949,16 @@ object SnapshotTable {
   private def utf8Cmp(a: String, b: String): Int =
     byteCmp(utf8Bytes(a), utf8Bytes(b))
 
-  /** The literal's [[BloomK]] bit positions — the driver-side eval of
-    * the EXACT expression the write side aggregated distributed
-    * (`pmod(xxhash64(rendered, seed), BloomBits)`), so write and read
-    * hashes can never drift. */
-  private def bloomPositions(rendered: String): Seq[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    (0 until BloomK).map { seed =>
-      val h = new XxHash64(Seq(
-        Literal(org.apache.spark.unsafe.types.UTF8String
-          .fromString(rendered), StringType),
-        Literal(seed))).eval(null).asInstanceOf[Long]
-      val m = (h % BloomBits).toInt
-      if (m < 0) m + BloomBits else m
-    }
-  }
+  /** Bloom bit `k` of a rendered value: `pmod(xxhash64(rendered, k),
+    * BloomBits)`, the one expression the writer's fold and the read side
+    * evaluate, so write and read hashes can never drift. */
+  private def bloomBit(rendered: Expression, k: Int): Expression =
+    Pmod(new XxHash64(Seq(rendered, Literal(k))), Literal(BloomBits.toLong))
+
+  /** The literal's [[BloomK]] bit positions, evaluated on the driver. */
+  private def bloomPositions(rendered: String): Seq[Int] =
+    (0 until BloomK).map(k =>
+      bloomBit(Literal(rendered), k).eval().asInstanceOf[Long].toInt)
 
   /** Could the file contain a row equal to `v` according to its bloom?
     * True (keep) when no bloom exists, the type is not bloomable, or
@@ -1007,7 +985,7 @@ object SnapshotTable {
       case BooleanType =>
         java.lang.Boolean.compare(statVal.toBoolean,
           litVal.toString.toBoolean)
-      // Timestamp stats are epoch micros (see fileLineage) — zone-free
+      // Timestamp stats are epoch micros (see LineageFold) — zone-free
       // instant compare. Legacy manifests rendered wall-clock strings
       // instead; those fail the numeric parse and the file is kept
       // (sound). String/LocalDateTime literals are wall-clock and

@@ -28,20 +28,15 @@ class LineageCutSpec extends SparkSpec {
       .toDF("vid", "x")
       .select(col("vid"), col("x"), array(col("vid")).as("a"))
       .repartition(4, col("vid"))
-    // iterative runs plan with AQE off, which keeps the partitioning
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val ref = df.localCheckpoint(true)
-      val cut = LineageCut.localCheckpoint(df)
-      assert(cut.rows == 50L && cut.changed == -1L)
-      assertSameRows(cut.df, ref)
-      assert(cut.df.schema == ref.schema)
-      assert(!cut.df.schema("vid").nullable && cut.df.schema("x").nullable)
-      val part = cut.df.queryExecution.executedPlan.outputPartitioning
-      assert(part == ref.queryExecution.executedPlan.outputPartitioning)
-      assert(part.numPartitions == 4, part)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val ref = df.localCheckpoint(true)
+    val cut = LineageCut.localCheckpoint(df)
+    assert(cut.rows == 50L && cut.changed == -1L)
+    assertSameRows(cut.df, ref)
+    assert(cut.df.schema == ref.schema)
+    assert(!cut.df.schema("vid").nullable && cut.df.schema("x").nullable)
+    val part = cut.df.queryExecution.executedPlan.outputPartitioning
+    assert(part == ref.queryExecution.executedPlan.outputPartitioning)
+    assert(part.numPartitions == 4, part)
   }
 
   test("the cut frame's plan is a LogicalRDD leaf") {

@@ -119,8 +119,6 @@ class PlanSpec extends SparkSpec {
     val views = Map(Combine.Sum -> "dir", Combine.Min -> "und",
       Combine.MinPlus -> "dirw", Combine.Collect -> "und",
       Combine.LabelCount -> "both", Combine.LabelSum -> "dirw")
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val n = g.numVertices
       val p = spark.sessionState.conf.numShufflePartitions
@@ -137,10 +135,7 @@ class PlanSpec extends SparkSpec {
         assert(bx.size == 1 && sx.isEmpty, s"$c over $view: " +
           s"${bx.size} broadcast(s), ${sx.size} shuffle(s) in\n$plan")
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      g.unload()
-    }
+    } finally g.unload()
   }
 
   test("a round planned over a cut state shuffles only the messages into " +
@@ -167,9 +162,7 @@ class PlanSpec extends SparkSpec {
         side.collect { case x: ShuffleExchangeExec => x }.size
       (n(j.left), n(j.right))
     }
-    val keep = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val keep = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val (cutSide, cutMsgs) =
@@ -180,7 +173,7 @@ class PlanSpec extends SparkSpec {
       val bare = spark.createDataFrame(
         LineageCut.localCheckpoint(vertices).df.rdd, vertices.schema)
       assert(exchanges(bare)._1 == 1, "control state did not shuffle")
-    } finally keep.foreach { case (k, v) => spark.conf.set(k, v) }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", keep)
   }
 
   test("snapshot scan: manifest pruning composes with parquet pushdown") {

@@ -946,4 +946,202 @@ class SnapshotTableSpec extends SparkSpec {
       assert(SnapshotTable.read(spark, t).count() == 4)
     } finally rmrf(t)
   }
+
+  /** The per-file lineage aggregate the writer's fold replaced, kept as
+    * an oracle: one `groupBy(input_file_name())` over a read of the
+    * files, collecting rows, the decimal(38,0) xxhash64 sum, rendered
+    * min/max (timestamps as epoch micros), null counts and the bloom bit
+    * positions `pmod(xxhash64(render(v), k), 8192)`, k < 4; a bound
+    * longer than 64 characters drops both of the column's bounds. */
+  private def lineageOracle(onDisk: org.apache.spark.sql.DataFrame)
+      : Seq[SnapshotTable.FileLineage] = {
+    import org.apache.spark.sql.types._
+    val (bloomBits, bloomK, maxStatLen) = (8192, 4, 64)
+    val statCols = onDisk.schema.fields.toSeq.filter(_.dataType match {
+      case _: NumericType | StringType | BooleanType | DateType |
+          TimestampType => true
+      case _ => false
+    })
+    val bloomCols = statCols.filter(f => f.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    })
+    val statExprs = statCols.zipWithIndex.flatMap { case (f, i) =>
+      val c = if (f.dataType == TimestampType) unix_micros(col(f.name))
+        else col(f.name)
+      Seq(min(c).cast("string").as(s"_mn$i"),
+        max(c).cast("string").as(s"_mx$i"),
+        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"_nn$i"))
+    }
+    val bloomExprs = bloomCols.zipWithIndex.flatMap { case (f, i) =>
+      val rendered = if (f.dataType == StringType) col(f.name)
+        else col(f.name).cast("string")
+      (0 until bloomK).map(k => collect_set(when(col(f.name).isNotNull,
+        pmod(xxhash64(rendered, lit(k)), lit(bloomBits)).cast("int")))
+        .as(s"_bl${i}_$k"))
+    }
+    val bloomBase = 3 + statCols.size * 3
+    val bloomIdx = bloomCols.map(_.name).zipWithIndex.toMap
+    onDisk.groupBy(input_file_name().as("f"))
+      .agg(count(lit(1)).as("rows"),
+        (sum(xxhash64(onDisk.columns.toSeq.map(col): _*)
+          .cast("decimal(38,0)")).as("checksum") +:
+          (statExprs ++ bloomExprs)): _*)
+      .collect().toSeq
+      .map { r =>
+        val stats = statCols.zipWithIndex.map { case (f, i) =>
+          def v(j: Int) = if (r.isNullAt(j)) None else Some(r.getString(j))
+          val (mn, mx) = (v(3 + i * 3), v(4 + i * 3))
+          val keep = (mn ++ mx).forall(_.length <= maxStatLen)
+          val bloom = bloomIdx.get(f.name).map { bi =>
+            val bits = new java.util.BitSet(bloomBits)
+            (0 until bloomK).foreach(k =>
+              r.getSeq[Int](bloomBase + bi * bloomK + k).foreach(bits.set))
+            java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
+          }
+          SnapshotTable.ColStat(f.name, mn.filter(_ => keep),
+            mx.filter(_ => keep), r.getLong(5 + i * 3), bloom)
+        }
+        val uri = r.getString(0)
+        SnapshotTable.FileLineage(uri.substring(uri.lastIndexOf("/data/") + 1),
+          r.getLong(1), r.getDecimal(2).toBigInteger.toString, Some(stats),
+          Some(onDisk.columns.toSeq))
+      }
+      .sortBy(_.path)
+  }
+
+  test("the writer's lineage equals the groupBy(input_file_name()) " +
+      "aggregate; an empty frame has no entry") {
+    val range = spark.range(0, 30, 1, 3)
+    val frames = Seq(
+      "nulls" -> Seq((1L, Some("a"), None: Option[Int]), (2L, None, None),
+        (3L, Some("c"), None)).toDF("id", "s", "allNull"),
+      "integral" -> (0 until 40).map(i => (i.toByte,
+        (i * 300 - 5000).toShort, i * 70001 - 1,
+        (i - 20) * 230584300921369395L)).toDF("b", "sh", "i", "l"),
+      "floating" -> Seq(0.0, -0.0, Double.NaN, 1.5, -2.25, 0.0,
+        Double.NegativeInfinity, -0.0).map(d => (d, d.toFloat))
+        .toDF("d", "f").coalesce(1),
+      // equal bounds that render differently: Spark keeps the first
+      "zeros, negative first" -> Seq(-0.0, 0.0).map(d => (d, d.toFloat))
+        .toDF("d", "f").coalesce(1),
+      "zeros, positive first" -> Seq(0.0, -0.0).map(d => (d, d.toFloat))
+        .toDF("d", "f").coalesce(1),
+      "NaN and zeros across files" -> Seq(Double.NaN, -0.0, 0.0, 3.0, -0.0,
+        Double.NaN).map(d => (d, d.toFloat)).toDF("d", "f").repartition(2),
+      "decimal, boolean, date, timestamp" -> range.select(
+        when(col("id") % 5 =!= 0, (col("id") - 9).cast("decimal(10,3)") / 7)
+          .cast("decimal(10,3)").as("dec"),
+        when(col("id") % 4 =!= 0, col("id") % 3 === 0).as("bool"),
+        date_add(lit("1969-12-01").cast("date"), (col("id") * 37).cast("int"))
+          .as("date"),
+        when(col("id") % 6 =!= 0,
+          timestamp_seconds(col("id") * 86399L - 1000000L)).as("ts")),
+      "long and non-BMP strings" -> Seq(("a", "y" * 70), ("x" * 70, "b"),
+        ("😀!", null), ("", "c"), (null, ""))
+        .toDF("s", "long").coalesce(1),
+      "arrays and structs" -> range.select(col("id"),
+        array(col("id"), lit(null).cast("long")).as("arr"),
+        when(col("id") % 3 =!= 0, struct(col("id").as("k"),
+          col("id").cast("string").as("v"))).as("st")),
+      "several files, some partitions empty" -> spark.range(0, 40, 1, 4)
+        .select((col("id") % 3).as("k"), col("id"),
+          col("id").cast("string").as("s"))
+        .repartition(8, col("k")))
+    for ((name, df) <- frames) {
+      val t = tmpTable("snap-oracle")
+      try {
+        SnapshotTable.create(df, t)
+        val files = SnapshotTable.manifest(spark, t, 1).files
+        val dataDir = Files.list(Paths.get(t, "data")).findFirst().get()
+        val want =
+          lineageOracle(spark.read.schema(df.schema).parquet(dataDir.toString))
+        assert(files.nonEmpty && files == want,
+          s"$name:\n  writer: $files\n  oracle: $want")
+        if (name.startsWith("several")) assert(files.size > 1, name)
+      } finally rmrf(t)
+    }
+    val t = tmpTable("snap-oracle-empty")
+    try {
+      SnapshotTable.create(docs(0 until 0).repartition(3), t)
+      assert(SnapshotTable.manifest(spark, t, 1).files.isEmpty)
+      val dataDir = Files.list(Paths.get(t, "data")).findFirst().get()
+      assert(lineageOracle(spark.read.schema(docs(0 until 0).schema)
+        .parquet(dataDir.toString)).isEmpty)
+    } finally rmrf(t)
+  }
+
+  test("validate merges a file split across read partitions and refuses " +
+      "one rewritten value") {
+    val t = tmpTable("snap-split")
+    val confs = Seq("parquet.block.size", "spark.sql.files.maxPartitionBytes")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("parquet.block.size", "16384") // many row groups
+      val df = spark.range(0, 20000, 1, 1).select(col("id"),
+        sha2(col("id").cast("string"), 256).as("h"))
+      SnapshotTable.create(df, t)
+      val m = SnapshotTable.manifest(spark, t, 1)
+      assert(m.files.size == 1)
+      val file = Paths.get(t, m.files.head.path)
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+      assert(spark.read.parquet(file.toString).select(spark_partition_id())
+        .distinct().count() > 1, "the file is not split")
+      SnapshotTable.validate(spark, t, 1)
+      // the same rows but one value, written the same way
+      val fresh = Files.createTempDirectory("snap-split-fresh")
+      df.withColumn("h", when(col("id") === 12345L, lit("x"))
+          .otherwise(col("h")))
+        .write.mode("overwrite").parquet(fresh.toString)
+      tamper(file, Files.list(fresh)
+        .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get())
+      val e = intercept[IllegalArgumentException] {
+        SnapshotTable.validate(spark, t, 1)
+      }
+      assert(e.getMessage.contains("contradicts its lineage"))
+    } finally {
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      rmrf(t)
+    }
+  }
+
+  test("a commit is one job, an Iterate round with a checkpoint two, and " +
+      "no job collects lineage") {
+    import org.apache.spark.sql.sources.EqualTo
+    val t = tmpTable("snap-jobs")
+    val dir = Files.createTempDirectory("snap-jobs-iter").toString
+    try {
+      var sites = Seq.empty[String]
+      def oneJob(op: String)(f: => Unit): Unit = {
+        val js = jobsDuring(f)
+        sites ++= js
+        assert(js.size == 1, s"$op ran ${js.size} jobs: $js")
+      }
+      oneJob("create")(SnapshotTable.create(docs(0 until 10), t))
+      oneJob("append")(SnapshotTable.append(docs(10 until 20), t))
+      oneJob("overwrite")(SnapshotTable.overwrite(docs(0 until 30), t))
+      oneJob("appendBatch")(SnapshotTable.appendBatch(docs(30 until 35), t, 1L))
+      oneJob("delete")(SnapshotTable.delete(spark, t, Seq(EqualTo("id", 3L))))
+      sites ++= jobsDuring {
+        SnapshotTable.upsert(docs(0 until 5), t, Seq("id"))
+        SnapshotTable.compact(spark, t)
+        SnapshotTable.validate(spark, t,
+          SnapshotTable.currentVersionOpt(spark, t).get)
+      }
+      assert(SnapshotTable.read(spark, t).count() == 35)
+      val rounds = 5
+      val iter = jobsDuring(Iterate.run(
+        (0L until 8L).toDF("vid").select(col("vid"), lit(0).as("n")), rounds,
+        (s, _) => s.select(col("vid"), (col("n") + 1).as("n")),
+        stop = Iterate.fixedRounds,
+        checkpoint = CheckpointConfig(Some(dir), runId = "r")))
+      sites ++= iter
+      assert(iter.size == 2 * rounds + 1, iter)
+      assert(!sites.exists(_.startsWith("collect at SnapshotTable.scala")),
+        sites)
+    } finally { rmrf(t); rmrf(s"$dir/r") }
+  }
 }

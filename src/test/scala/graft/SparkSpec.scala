@@ -55,12 +55,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Call sites of the jobs the calling thread starts while `f` runs, in
     * start order. A job that a Dataset action runs (in its SQL execution)
-    * reports the action's call site ("head at Centrality.scala:71"); any
-    * other job its own ("localCheckpoint at Iterate.scala:120", or a pool
-    * thread's for the query stages and broadcasts a lineage cut runs —
-    * pool threads inherit the caller's local properties). A marker job
-    * started afterwards flushes the listener queue, which delivers in
-    * order. */
+    * reports the action's call site ("head at Centrality.scala:71"),
+    * including a broadcast the action's plan runs from a pool thread;
+    * any other job reports its own ("localCheckpoint at
+    * Iterate.scala:120", "parquet at SnapshotTable.scala:<line>", or a pool
+    * thread's for the broadcasts a lineage cut runs — pool threads
+    * inherit the caller's local properties). A marker job started
+    * afterwards flushes the listener queue, which delivers in order. */
   def jobsDuring(f: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
@@ -119,6 +120,9 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // as graft.Verify, graft.Bench, graft.Submit and perfbench run:
+      // AQE re-plans cached relations and drops their partitioning
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
