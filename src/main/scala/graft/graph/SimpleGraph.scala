@@ -1,6 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, LineageCut, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** A "simple graph" in the reference's sense: one vertex set, one edge set,
@@ -35,6 +39,13 @@ final case class SimpleGraph(
     * every app run reuses the placement). Keyed by (tag, key, p);
     * cached columnar (compressed), materialized eagerly.
     *
+    * A view already in place is used as it is: when `df` only selects or
+    * renames columns of a cached frame whose partitioning is a hash of
+    * `key` into `p` partitions (a [[graft.graphbuild.GraphBuilder]]
+    * graph's edges, placed by `dst`, for the broadcast tier's `dir`
+    * view), it is memoized without a second cached copy or a placement
+    * job, and released with the edges.
+    *
     * NOTE: run iterative apps with AQE off
     * (spark.sql.adaptive.enabled=false) — AQE re-plans cached relations
     * and loses their output partitioning, re-inserting a per-superstep
@@ -44,9 +55,13 @@ final case class SimpleGraph(
   def preparedEdges(tag: String, df: => DataFrame, key: String, p: Int)
       : DataFrame = prepCache.synchronized {
     prepCache.getOrElseUpdate((tag, key, p), {
-      val d = df.repartition(p, col(key)).persist()
-      d.count()
-      d
+      val view = df
+      if (SimpleGraph.placed(view, key, p)) view
+      else {
+        val d = view.repartition(p, col(key)).persist()
+        d.count()
+        d
+      }
     })
   }
 
@@ -196,8 +211,18 @@ final case class SimpleGraph(
     copy(vertices = vertices.limit(0), edges = edges.limit(0),
       simpleEdges = true)
 
+  /** The lineage cut this graph instance owns (the built dictionary of a
+    * [[graft.graphbuild.GraphBuilder]] graph); [[unload]] releases it. A
+    * derived graph (`copy`) owns none. */
+  @transient @volatile private var ownedCut: Option[DataFrame] = None
+  private[graft] def owning(cut: DataFrame): SimpleGraph = {
+    ownedCut = Some(cut)
+    this
+  }
+
   /** UNLOAD_GRAPH (dag_utils.py:651 / grape_instance.cc:119): release
-    * every cached/materialized view this graph instance holds. */
+    * every cached/materialized view this graph instance holds, and the
+    * lineage cut it owns. */
   def unload(): Unit = {
     prepCache.synchronized {
       prepCache.values.foreach(_.unpersist())
@@ -209,6 +234,8 @@ final case class SimpleGraph(
     }
     vertices.unpersist()
     edges.unpersist()
+    ownedCut.foreach(LineageCut.release)
+    ownedCut = None
   }
 
   /** INDUCE_SUBGRAPH by vertex list (dag_utils.py:606 /
@@ -239,6 +266,28 @@ final case class SimpleGraph(
 }
 
 object SimpleGraph {
+  /** Whether `df` reads a cached frame through column selections and
+    * renames only, and its rows are hash-partitioned by `key` into `p`
+    * partitions. */
+  private def placed(df: DataFrame, key: String, p: Int): Boolean = {
+    val qe = df.queryExecution
+    def cached(plan: LogicalPlan): Boolean = plan match {
+      case _: InMemoryRelation => true
+      case Project(list, child) => list.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && cached(child)
+      case _ => false
+    }
+    cached(qe.optimizedPlan) && (qe.executedPlan.outputPartitioning match {
+      case h: HashPartitioning => h.numPartitions == p &&
+        h.expressions.size == 1 &&
+        qe.executedPlan.output.exists(a =>
+          a.name == key && a.semanticEquals(h.expressions.head))
+      case _ => false
+    })
+  }
+
   private[graph] def reverseEdges(edges: DataFrame): DataFrame = {
     val w = if (edges.columns.contains("weight")) Seq(col("weight")) else Nil
     edges.select(col("dst").as("src") +: col("src").as("dst") +: w: _*)

@@ -1,7 +1,7 @@
 package graft.graphbuild
 
 import graft.graph.SimpleGraph
-import org.apache.spark.sql.{DataFrame, LineageCut, SparkSession}
+import org.apache.spark.sql.{DataFrame, LineageCut, RangeBounds}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,52 +12,54 @@ import org.apache.spark.sql.functions._
   *
   * Equivalent of the reference's CREATE_GRAPH + loader path
   * (core/loader/arrow_fragment_loader.h): an oid->vid dictionary plus a
-  * hash-partitioned edge table. The dictionary uses a window row_number over
-  * sorted oids — deterministic and partition-invariant; at 10^12-file scale
-  * the same dictionary would be built once per catalog snapshot with a
-  * sort-based job (it is one global sort over the *distinct repo set*,
-  * orders of magnitude smaller than the file table) and reused by every
-  * algorithm run.
+  * hash-partitioned edge table, built once and reused by every algorithm
+  * run. The dictionary is a lineage cut whose layout is a function of the
+  * distinct repo set alone; the edges come out hash-placed by `dst` and
+  * cached, which is the placement the broadcast-tier gather reads
+  * ([[graft.graph.SimpleGraph.preparedEdges]] uses them in place).
   */
 object GraphBuilder {
 
   final case class RepoGraph(
       vertices: DataFrame, // (vid: long, oid: string)
       edges: DataFrame) {  // (src: long, dst: long)
+    /** The graph over these edges. It owns the built dictionary:
+      * [[graft.graph.SimpleGraph.unload]] releases it with the edges. */
     def simple(directed: Boolean = true): SimpleGraph =
-      SimpleGraph(vertices.select("vid"), edges, directed)
+      SimpleGraph(vertices.select("vid"), edges, directed).owning(vertices)
   }
 
   /** oid -> dense vid dictionary over the distinct repo names appearing as
-    * either a file owner or an import target. vid = global sort rank of
-    * the oid — computed DISTRIBUTED: range-partition + sort by oid, count
-    * rows per partition, prefix-sum the (tiny, one-per-partition) counts
-    * on the driver, then add each row's local ordinal to its partition
-    * offset. Deterministic and partition-invariant (the rank is a property
-    * of the global sort order, not of where the range boundaries fall) —
-    * unlike a `row_number() OVER (ORDER BY ...)` with no partitionBy, which
-    * funnels the whole distinct set through ONE task and cannot survive the
-    * 10^8-repo scale of the north star. */
+    * either a file owner or an import target, as an untyped lineage cut.
+    * vid = global sort rank of the oid — computed DISTRIBUTED: cut the
+    * distinct oids into ranges whose bounds depend on the oid set alone
+    * ([[org.apache.spark.sql.RangeBounds]]), count each range (a tiny
+    * driver-side prefix sum gives each range's offset), and add each
+    * oid's `row_number` within its range. Deterministic and
+    * partition-invariant (the rank is a property of the global sort order,
+    * not of where the range boundaries fall) — unlike a `row_number()`
+    * window with no partitionBy, which funnels the whole distinct set
+    * through ONE task and cannot survive the 10^8-repo scale of the north
+    * star. */
   def vertexDictionary(files: DataFrame): DataFrame = {
     val owners = files.select(col("repo").as("oid"))
     val targets = importTargets(files).select(col("to_repo").as("oid"))
-    val distinctOids = owners.unionByName(targets).distinct()
-    val spark = files.sparkSession
-    import spark.implicits._
-    // materialize once: the count job and the assignment job must see
-    // identical partitions
-    val sorted = LineageCut.localCheckpoint(distinctOids
-      .repartitionByRange(col("oid"))
-      .sortWithinPartitions(col("oid"))).df
-      .as[String]
-    val counts = sorted.mapPartitions(it => Iterator.single(it.size))
-      .collect() // one Int per partition — driver-side prefix sum only
-    val offsets = counts.scanLeft(0L)(_ + _)
-    sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var i = offsets(pid)
-      it.map { oid => val r = (i, oid); i += 1; r }
-    }.toDF("vid", "oid")
+    val p = files.sparkSession.sessionState.conf.numShufflePartitions
+    // read by the bounds' sample, the range counts and the assignment
+    val oids = LineageCut.localCheckpoint(
+      owners.unionByName(targets).distinct()).df
+    val ranged = oids.select(col("oid"),
+      RangeBounds.rangeIndex(oids, Seq("oid"), p).as("range"))
+    val counts = ranged.groupBy("range").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val offsets = (0 until p).scanLeft(0L)(_ + counts.getOrElse(_, 0L))
+    val dict = LineageCut.localCheckpoint(ranged
+      .repartitionById(p, col("range"))
+      .select((element_at(typedLit(offsets), col("range") + 1) - 1L +
+        row_number().over(Window.partitionBy("range").orderBy("oid")))
+        .as("vid"), col("oid"))).df
+    LineageCut.release(oids)
+    dict
   }
 
   /** Parse `import org.repoK....` links out of file contents. One row per
@@ -96,9 +98,11 @@ object GraphBuilder {
   }
 
   /** Full derivation: import links (directed) + co-occurrence (undirected,
-    * materialized both ways), mapped through the vid dictionary. */
+    * materialized both ways), mapped through the vid dictionary. The edges
+    * are hash-placed by `dst` into the session's shuffle partitions and
+    * cached (materialized by their first use). */
   def build(files: DataFrame, maxFanout: Int = 32): RepoGraph = {
-    val dict = vertexDictionary(files).cache()
+    val dict = vertexDictionary(files)
 
     val imp = importTargets(files)
     val impE = imp
@@ -117,7 +121,10 @@ object GraphBuilder {
       coE.select(col("dst").as("src"), col("src").as("dst")))
 
     val edges = impE.unionByName(coBoth)
-      .where(col("src") =!= col("dst")).distinct()
+      .where(col("src") =!= col("dst"))
+      .repartition(files.sparkSession.sessionState.conf.numShufflePartitions,
+        col("dst"))
+      .distinct().persist()
     RepoGraph(dict, edges)
   }
 }

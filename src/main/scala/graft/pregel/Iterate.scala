@@ -53,11 +53,12 @@ final case class CheckpointConfig(
   * Every state — the initial or resumed one, then each round's — is cut
   * by [[org.apache.spark.sql.LineageCut]] (in-memory checkpoint, plus one
   * SnapshotTable commit per round when a dir is configured); without the
-  * cut the plan grows superlinearly with iterations (SURVEY.md §7.4). The
-  * cut's one job also counts the state's rows, sums its `_changed` column
-  * and computes the declared reductions — the reference's per-superstep
-  * `Communicator` Sum/Max/Min — so a round is one job and its global
-  * scalars cost no second one. The snapshot table doubles as the resume
+  * cut the plan grows superlinearly with iterations (SURVEY.md §7.4); a
+  * round's cut is released once the next one has materialized, so a run
+  * holds only its last state's. The cut's one job also counts the state's
+  * rows, sums its `_changed` column and computes the declared reductions
+  * — the reference's per-superstep `Communicator` Sum/Max/Min — so a
+  * round is one job and its global scalars cost no second one. The snapshot table doubles as the resume
   * point: `run` restarts from its current version, validated against the
   * manifest lineage. Reductions are functions of the stored state, so a
   * resumed run hands its steps the values an uninterrupted run did (a
@@ -160,7 +161,9 @@ object Iterate {
             "wallMs" -> m.wallMs.toString) ++
             m.values.map { case (r, v) => r.toString -> v.toString })
       }
-      state.unpersist()
+      // the run owns every state it cut, and the next cut no longer reads
+      // this one
+      LineageCut.release(state)
       state = next
       prev = m
     }

@@ -5,7 +5,7 @@ import java.util.Base64
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, LineageCut, LineageWriter,
-  Row, SparkSession}
+  RangeBounds, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
   Expression, Literal, Pmod, UnixMicros, UnsafeProjection, XxHash64}
@@ -121,15 +121,17 @@ object SnapshotTable {
     * give [[scan]] real pruning power (Iceberg's write-ordering: stats
     * exist either way, but on an unclustered write every file spans the
     * whole key range and nothing can be skipped). `nFiles <= 0` keeps
-    * the session shuffle parallelism. Pair with create/append/overwrite:
+    * the session shuffle parallelism. The file boundaries are a function
+    * of the rows alone ([[org.apache.spark.sql.RangeBounds]]), whatever
+    * ran before; the bounds' sample runs here, one job. Pair with
+    * create/append/overwrite:
     * `SnapshotTable.create(SnapshotTable.clustered(df, Seq("id")), t)`. */
   def clustered(df: DataFrame, cols: Seq[String], nFiles: Int = 0)
       : DataFrame = {
-    val keys = cols.map(col)
     val parts = if (nFiles > 0) nFiles
       else df.sparkSession.sessionState.conf.numShufflePartitions
-    df.repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
+    df.repartitionById(parts, RangeBounds.rangeIndex(df, cols, parts))
+      .sortWithinPartitions(cols.map(col): _*)
   }
 
   /** Create a brand-new table; refuses to touch an existing one. */
@@ -234,9 +236,19 @@ object SnapshotTable {
     val root = new Path(table)
     val f = fileSystem(spark, root)
     val LineageCut.Cut(dfc, nDelta, _, _) = LineageCut.localCheckpoint(df)
-    require(dfc.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).isEmpty,
+    // Uniqueness and the incoming key bounds (the driver-side pruning
+    // predicate) in one aggregate: the per-key counts carry the keys.
+    val perKey = dfc.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("_n"))
+    val b = perKey.agg(max(col("_n")), keyCols.flatMap(c =>
+      Seq(min(col(c)), max(col(c)))): _*).head()
+    require(b.isNullAt(0) || b.getLong(0) <= 1L,
       s"upsert rows must be unique on $keyCols")
+    val keyFilters: Seq[Filter] = keyCols.zipWithIndex.flatMap {
+      case (c, i) =>
+        val (mn, mx) = (b.get(2 * i + 1), b.get(2 * i + 2))
+        if (mn == null || mx == null) Nil // all-null keys: pure inserts
+        else Seq(And(GreaterThanOrEqual(c, mn), LessThanOrEqual(c, mx)))
+    }
     // Size-gate the key broadcast (same posture as graph/Strategy): a
     // bulk MERGE's key set can be arbitrarily large — above the gate the
     // anti-join shuffles instead of collecting every key to the driver.
@@ -252,17 +264,6 @@ object SnapshotTable {
         mergeSchema = false, table)
       val schema = schemaOf(parent)
       val types = schema.fields.map(fd => fd.name -> fd.dataType).toMap
-      // Incoming key bounds, one agg — the driver-side pruning predicate.
-      val boundExprs = keyCols.zipWithIndex.flatMap { case (c, i) =>
-        Seq(min(col(c)).as(s"mn$i"), max(col(c)).as(s"mx$i"))
-      }
-      val b = dfc.agg(boundExprs.head, boundExprs.tail: _*).head()
-      val keyFilters: Seq[Filter] = keyCols.zipWithIndex.flatMap {
-        case (c, i) =>
-          val (mn, mx) = (b.get(2 * i), b.get(2 * i + 1))
-          if (mn == null || mx == null) Nil // all-null keys: pure inserts
-          else Seq(And(GreaterThanOrEqual(c, mn), LessThanOrEqual(c, mx)))
-      }
       val (touched, untouched) = parent.files.partition(fl =>
         keyFilters.nonEmpty && keyFilters.forall(mightMatch(_, fl, types)))
 

@@ -93,6 +93,15 @@ object LineageCut {
     }
   }
 
+  /** Releases the storage behind a cut frame, one [[localCheckpoint]]
+    * returned; a frame that is not a scan of one RDD is left alone. Only
+    * the owner of a cut releases it: a frame still planned over the cut
+    * can no longer be read. */
+  def release(cut: DataFrame): Unit = castToImpl(cut).logicalPlan match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+
   /** Feeds column `i`'s non-null values to `acc`, with the getter of its
     * type chosen once, not per row; a boolean reads as 0/1. */
   private def feed(acc: Acc, i: Int, t: DataType): InternalRow => Unit =

@@ -143,4 +143,21 @@ class IterateSpec extends SparkSpec {
     assert(e.getMessage.contains("bare-parquet"))
     assert(e.getMessage.contains("removed"))
   }
+
+  test("a run releases each round's cut: only the final state's remains") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import spark.implicits._
+    var res: Iterate.Result = null
+    val held = heldBy {
+      res = Iterate.run(
+        (0L until 8L).toDF("vid").select(col("vid"), lit(0).as("n")), 5,
+        (s, _) => s.select(col("vid"), (col("n") + 1).as("n")),
+        stop = Iterate.fixedRounds)
+    }
+    val last = res.state.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd.id }
+    assert(held.keySet == last.toSet && held.size == 1,
+      s"held $held, final state's cut $last")
+    assert(res.state.agg(sum("n")).head().getLong(0) == 8L * 5)
+  }
 }

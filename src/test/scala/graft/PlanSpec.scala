@@ -205,4 +205,84 @@ class PlanSpec extends SparkSpec {
         .forEach(p => java.nio.file.Files.delete(p))
     }
   }
+
+  /** A repo graph built as perfbench builds it: the catalog sealed as a
+    * snapshot table and read back, then the built frames materialized. */
+  private lazy val built = {
+    import graft.sources.SnapshotTable
+    val t = java.nio.file.Files.createTempDirectory("plan-catalog")
+      .resolve("t").toString
+    SnapshotTable.create(
+      graft.model.SourceFiles.generate(spark, nFiles = 3000L, nRepos = 80), t)
+    val rg = graphbuild.GraphBuilder.build(SnapshotTable.read(spark, t))
+    rg.vertices.count()
+    rg.edges.count()
+    rg
+  }
+
+  test("views of a built graph read its cached frames: no Generate, " +
+      "Window or catalog scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val g = built.simple()
+    for ((name, view) <- Seq("outDegrees" -> g.outDegrees,
+        "undirectedDedup" -> g.undirectedDedup,
+        "undirectedDegrees" -> g.undirectedDegrees,
+        "canonicalPairs" -> g.canonicalPairs)) {
+      val plan = view.queryExecution.executedPlan
+      val bad = plan.collect {
+        case n @ (_: GenerateExec | _: WindowExec | _: FileSourceScanExec) =>
+          n.nodeName
+      }
+      assert(bad.isEmpty, s"$name plans $bad:\n$plan")
+      assert(plan.collect { case m: InMemoryTableScanExec => m }.nonEmpty,
+        s"$name does not read the cached edges:\n$plan")
+    }
+  }
+
+  test("warm Triangles on a built graph: a few jobs, none scanning the " +
+      "catalog") {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageSubmitted}
+    val g = built.simple()
+    apps.Triangles.run(g).count()
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.map(_.name).filter(_.contains("FileScanRDD"))
+          .foreach(scans.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val jobs = try jobsDuring(apps.Triangles.run(g))
+      finally spark.sparkContext.removeSparkListener(listener)
+    // the result cut and the broadcasts its plan runs (4 measured)
+    assert(jobs.size <= 5, s"${jobs.size} jobs: $jobs")
+    assert(scans.isEmpty, s"stages scanned files: $scans")
+  }
+
+  test("the dir view of a built graph is the edges' own cache") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val g = built.simple()
+    val p = spark.sessionState.conf.numShufflePartitions
+    def relations(df: DataFrame) = df.queryExecution.optimizedPlan
+      .collect { case r: InMemoryRelation => r.cacheBuilder }
+    // placing the broadcast tier's view runs no job and holds no copy
+    var dir: DataFrame = null
+    val held = heldBy {
+      val jobs = jobsDuring {
+        dir = g.preparedEdges("dir", g.edges.select("src", "dst"), "dst", p)
+      }
+      assert(jobs.isEmpty, jobs)
+    }
+    assert(held.isEmpty, s"held $held")
+    assert(relations(dir).size == 1 && relations(dir) == relations(g.edges),
+      s"dir view:\n${dir.queryExecution.optimizedPlan}")
+    // a PageRank run keeps the out-degree placement and its final state's
+    // cut, and no other copy
+    g.numVertices
+    val ranks = heldBy(apps.PageRank.run(g, maxRound = 3))
+    assert(ranks.size == 2, s"held $ranks")
+  }
 }

@@ -533,6 +533,28 @@ class SnapshotTableSpec extends SparkSpec {
     } finally rmrf(t)
   }
 
+  test("clustered file layout is a function of the rows alone") {
+    val df = spark.range(0L, 20000L, 1L, 4)
+      .select(col("id"), (col("id") % 7).as("g"))
+    def layout(keys: Seq[String], n: Int): Seq[SnapshotTable.FileLineage] = {
+      val t = tmpTable("snap-layout")
+      try {
+        SnapshotTable.create(SnapshotTable.clustered(df, keys, n), t)
+        SnapshotTable.manifest(spark, t, 1).files
+      } finally rmrf(t)
+    }
+    def shape(fs: Seq[SnapshotTable.FileLineage]) =
+      fs.map(f => (f.rows, f.stats)).sortBy(_.toString)
+    val before = layout(Seq("id"), 4)
+    (0 until 50).foreach(_ => spark.sparkContext.emptyRDD[Int])
+    assert(shape(layout(Seq("id"), 4)) == shape(before))
+    assert(before.size == 4, shape(before))
+    // few distinct keys: one file per key value
+    val byG = layout(Seq("g"), 7)
+    assert(byG.size == 7 && byG.forall(_.stats.get.exists(c =>
+      c.name == "g" && c.min == c.max)), shape(byG))
+  }
+
   test("compact merges small files into one content-identical snapshot") {
     val t = tmpTable("snap-compact")
     try {
@@ -566,6 +588,18 @@ class SnapshotTableSpec extends SparkSpec {
       SnapshotTable.expire(spark, t, keepLast = 1)
       SnapshotTable.validate(spark, t, 4)
       assert(SnapshotTable.read(spark, t).count() == 150)
+    } finally rmrf(t)
+  }
+
+  test("upsert checks uniqueness and key bounds in one job: a 30+30-row " +
+      "upsert runs 4 jobs") {
+    val t = tmpTable("snap-upsert-jobs")
+    try {
+      SnapshotTable.create(docs(0 until 30), t)
+      val jobs = jobsDuring(
+        SnapshotTable.upsert(docs(15 until 45), t, Seq("id")))
+      assert(jobs.size == 4, jobs)
+      assert(SnapshotTable.read(spark, t).count() == 45)
     } finally rmrf(t)
   }
 

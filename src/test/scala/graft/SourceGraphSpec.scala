@@ -105,4 +105,24 @@ class SourceGraphSpec extends SparkSpec {
     assert(df.columns.toSeq == Seq("vid", "oid", "rank"))
     assert(df.count() > 0)
   }
+
+  test("unload releases the built dictionary's cut and the edges, not a " +
+      "caller-held cut the graph was built over") {
+    import org.apache.spark.sql.LineageCut
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val held = LineageCut.localCheckpoint(files).df
+    val rg = GraphBuilder.build(held)
+    val g = rg.simple()
+    assert(PageRank.run(g, maxRound = 2).count() == g.numVertices)
+    val Seq(dict) = rg.vertices.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd.id }
+    assert(sc.getPersistentRDDs.contains(dict) && rg.edges.storageLevel.isValid)
+    g.unload()
+    assert(!sc.getPersistentRDDs.contains(dict),
+      "the graph's dictionary cut outlived unload")
+    assert(!rg.edges.storageLevel.isValid, "the edges stayed cached")
+    assert(held.count() == files.count())
+    LineageCut.release(held)
+  }
 }

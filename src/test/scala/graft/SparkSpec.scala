@@ -101,6 +101,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Block-manager storage that `f` created and still holds when it
+    * returns: RDD id -> bytes in memory and on disk, for each RDD made
+    * while `f` ran that still has a block (a cached frame, a lineage
+    * cut). An unpersist reaches this bookkeeping before it returns. */
+  def heldBy(f: => Unit): Map[Int, Long] = {
+    val sc = spark.sparkContext
+    val mark = sc.emptyRDD[Int].id
+    f
+    sc.getRDDStorageInfo.filter(_.id > mark)
+      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+  }
+
   def assertAllClose(actual: Map[Long, Double], expected: Map[Long, Double],
       tol: Double = 1e-6, label: String = ""): Unit = {
     assert(actual.keySet == expected.keySet,
