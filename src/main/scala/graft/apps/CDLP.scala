@@ -45,7 +45,7 @@ object CDLP {
 
     val res = Iterate.run(
       init, maxRound,
-      step = (state, _) => {
+      step = Iterate.invariant { state =>
         val counts =
           gather(state.select(col("vid"), col("label").as("value")), -1L)
             .select(col("vid"), col("label"), col("msg").as("cnt"))

@@ -112,7 +112,7 @@ object Centrality {
       g.vertices.select(col("vid"), lit(0.0).as("x"), none.as("_dx"),
         none.as("_x2")).repartition(p, col("vid")),
       maxRound,
-      step = (state, _) => {
+      step = Iterate.invariant { state =>
         val msgs = gather(state.select(col("vid"), col("x").as("value")), -1L)
           .select(col("vid"), col("msg").as("mx"))
         val x = lit(alpha) * coalesce(col("mx"), lit(0.0)) + lit(beta)

@@ -50,7 +50,7 @@ object KShell {
 
     val res = Iterate.run(
       init, maxRounds,
-      step = (state, _) => {
+      step = Iterate.invariant { state =>
         val nbrEst =
           gather(state.select(col("vid"), col("core").as("value")), -1L)
             .select(col("vid"), col("msg").as("ests"))

@@ -65,7 +65,7 @@ object LPAU2I {
       .na.fill(0, Seq("outdeg", "onids"))
 
     val res = Iterate.run(init, (maxRound - 1) / 2,
-      step = (uState, _) => {
+      step = Iterate.invariant { uState =>
         // u2i: item features = weighted sum of adjacent user features
         val itemFeatures = weightedSum(
           e.join(uState.select(col("vid").as("src"), col("features")),

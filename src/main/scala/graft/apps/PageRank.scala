@@ -3,7 +3,7 @@ package graft.apps
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank with the reference's exact semantics
@@ -16,8 +16,11 @@ import org.apache.spark.sql.functions._
   *     rank'(v) = d * Σ_{u→v} rank(u)/deg(u) + base for deg(v)>0
   *     (pagerank.h:160-170 stores the deg-normalized value and the Output
   *     de-normalizes), rank'(v) = base for dangling v (pagerank.h:158);
-  *   - danglingSum' = base * danglingVnum (pagerank.h:190-192) — a pure
-  *     driver-side scalar recurrence, no extra Spark action per round;
+  *   - danglingSum' = base * danglingVnum (pagerank.h:190-192) — a scalar
+  *     recurrence carried in the state as column `b` (this round's base,
+  *     updated with the same float operations in the same order as the
+  *     reference's driver loop), so the round plan has no per-round
+  *     literal and is built once per run ([[Iterate.invariant]]);
   *   - EXACTLY `maxRound` IncEval rounds, no tolerance test
   *     (pagerank.h:139-141).
   *
@@ -44,33 +47,29 @@ object PageRank {
     val n = g.numVertices.toDouble
     val gather = g.gather("dir", Combine.Sum, n.toLong, p)
     val degrees = g.preparedOutDegrees(p) // cached (vid, deg)
-    val danglingVnum =
-      degrees.where(col("deg") === 0L).count().toDouble
+    val danglingVnum = g.danglingVertices(p).toDouble
 
-    val init = degrees
-      .select(col("vid"), col("deg"), lit(1.0 / n).as("rank"))
-
-    // Driver-side scalar recurrence for the dangling mass.
-    var danglingSum = (1.0 / n) * danglingVnum
-    val bases = new Array[Double](maxRound + 1)
-    for (i <- 1 to maxRound) {
-      bases(i) = (1.0 - delta) / n + delta * danglingSum / n
-      danglingSum = bases(i) * danglingVnum
-    }
+    // base = (1-d)/N + d*danglingSum/N, then danglingSum' = base *
+    // danglingVnum; round 1's danglingSum is (1/N) * danglingVnum
+    def base(danglingSum: Column): Column =
+      lit((1.0 - delta) / n) + lit(delta) * danglingSum / lit(n)
+    val init = degrees.select(col("vid"), col("deg"),
+      lit(1.0 / n).as("rank"),
+      base(lit(1.0 / n) * lit(danglingVnum)).as("b"))
 
     val res = Iterate.run(
       init, maxRound,
-      step = (state, prev) => {
-        val base = bases(prev.iteration + 1)
+      step = Iterate.invariant { state =>
         val contrib = state.where(col("deg") > 0)
           .select(col("vid"), (col("rank") / col("deg")).as("value"))
         val msgs = gather(contrib, -1L)
           .select(col("vid"), col("msg").as("msum"))
         state.join(msgs, Seq("vid"), "left").select(
           col("vid"), col("deg"),
-          when(col("deg") === 0L, lit(base))
+          when(col("deg") === 0L, col("b"))
             .otherwise(lit(delta) * coalesce(col("msum"), lit(0.0)) +
-              lit(base)).as("rank"))
+              col("b")).as("rank"),
+          base(col("b") * lit(danglingVnum)).as("b"))
       },
       stop = Iterate.fixedRounds,
       checkpoint = checkpoint)

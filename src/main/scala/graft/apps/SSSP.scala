@@ -125,7 +125,7 @@ object SSSP {
 
     val res = Iterate.run(
       init, maxRounds,
-      step = (state, _) => {
+      step = Iterate.invariant { state =>
         val frontier = state.where(col("_changed") === 1)
           .select(col("vid").as("src"), col("source"), col("dist"))
         val relax = edges

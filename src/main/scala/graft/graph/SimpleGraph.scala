@@ -71,6 +71,16 @@ final case class SimpleGraph(
   def preparedOutDegrees(p: Int): DataFrame =
     preparedEdges("outdeg", outDegrees, "vid", p)
 
+  /** Memoized count of the vertices without out-edges (PageRank's
+    * dangling count), per out-degree placement: every warm run asks for
+    * it, and each count is a job. */
+  @transient private lazy val danglingCache =
+    scala.collection.mutable.Map[Int, Long]()
+  def danglingVertices(p: Int): Long = danglingCache.synchronized {
+    danglingCache.getOrElseUpdate(p,
+      preparedOutDegrees(p).where(col("deg") === 0L).count())
+  }
+
   /** The named edge views the superstep apps gather over, as
     * (memo tag, frame):
     *   dir  (src, dst) as stored;   dirw (src, dst, weight);

@@ -55,14 +55,25 @@ final case class CheckpointConfig(
   * SnapshotTable commit per round when a dir is configured); without the
   * cut the plan grows superlinearly with iterations (SURVEY.md §7.4); a
   * round's cut is released once the next one has materialized, so a run
-  * holds only its last state's. The cut's one job also counts the state's
+  * holds only its last state's. The cut's job also counts the state's
   * rows, sums its `_changed` column and computes the declared reductions
   * — the reference's per-superstep `Communicator` Sum/Max/Min — so a
-  * round is one job and its global scalars cost no second one. The snapshot table doubles as the resume
-  * point: `run` restarts from its current version, validated against the
-  * manifest lineage. Reductions are functions of the stored state, so a
-  * resumed run hands its steps the values an uninterrupted run did (a
-  * float sum up to the order in which the stored files are read back).
+  * round's global scalars cost no job of their own (a broadcast-tier
+  * round runs two jobs: the cut, and the broadcast of the state its plan
+  * reads). The snapshot table doubles as the resume point: `run` restarts
+  * from its current version, validated against the manifest lineage.
+  * Reductions are functions of the stored state, so a resumed run hands
+  * its steps the values an uninterrupted run did (a float sum up to the
+  * order in which the stored files are read back).
+  *
+  * A step declared with [[Iterate.invariant]] is built once per run, as
+  * the reference runs one fixed IncEval program every round: the run's
+  * first round calls it over the initial (or resumed) cut, and every later
+  * round runs that plan over the new cut
+  * ([[org.apache.spark.sql.LineageCut.Superstep]]) — no analysis, and,
+  * when the new cut is placed as the first was, no optimizing or planning
+  * either. A step that reads `prev` (a round number, a reduction, a
+  * frontier hint) is built every round.
   */
 object Iterate {
 
@@ -75,6 +86,19 @@ object Iterate {
 
   /** Run every round (PageRank, CDLP). */
   val fixedRounds: Seq[IterMetrics] => Boolean = _ => false
+
+  /** A step that reads only the state and the run's constants, never
+    * `prev`; made by [[invariant]]. */
+  final class Invariant private[Iterate] (f: DataFrame => DataFrame)
+      extends ((DataFrame, IterMetrics) => DataFrame) {
+    def apply(state: DataFrame, prev: IterMetrics): DataFrame = f(state)
+  }
+
+  /** Declares a round-invariant step: `f` sees the state only, so [[run]]
+    * calls it once and runs its plan over every later round's state. A
+    * step with a nondeterministic expression is still called every
+    * round. */
+  def invariant(f: DataFrame => DataFrame): Invariant = new Invariant(f)
 
   /** Runs up to `maxRounds` rounds of `step`; `Result.state` drops
     * `_changed` and the reduced columns.
@@ -89,7 +113,8 @@ object Iterate {
     *                 ([[graft.graph.Strategy.frontier]]). A `_changed`
     *                 int/bool column on the returned frame is summed into
     *                 `changed` and kept on the state (and in durable
-    *                 checkpoints — exact frontier resume).
+    *                 checkpoints — exact frontier resume). An
+    *                 [[invariant]] step is called once per run.
     * @param stop     checked after each round over this run's metrics so
     *                 far; true ends the run
     * @param reduce   reductions over numeric columns of every cut state
@@ -136,19 +161,34 @@ object Iterate {
     }
 
     // Materialize, cut lineage, count rows + frontier and reduce, in one
-    // job.
-    def cut(df: DataFrame, round: Int): (DataFrame, IterMetrics) = {
-      val t0 = System.nanoTime()
-      val c = LineageCut.localCheckpoint(df, reduce)
-      (c.df, IterMetrics(checkpoint.runId, round, c.changed, c.rows,
-        spark.sessionState.conf.numShufflePartitions,
-        (System.nanoTime() - t0) / 1000000, c.values))
-    }
+    // job; the round's wall time counts from `t0`, its step build included.
+    def measured(c: LineageCut.Cut, round: Int, t0: Long): IterMetrics =
+      IterMetrics(checkpoint.runId, round, c.changed, c.rows, c.partitions,
+        (System.nanoTime() - t0) / 1000000, c.values)
 
-    var (state, prev) = cut(start, startRound)
+    val t0 = System.nanoTime()
+    val c0 = LineageCut.localCheckpoint(start, reduce)
+    var (state, prev) = (c0.df, measured(c0, startRound, t0))
     var metrics = Vector.empty[IterMetrics]
+    // an invariant step's plans, built in this run's first round
+    var superstep = Option.empty[LineageCut.Superstep]
     while (prev.iteration < maxRounds && !(metrics.nonEmpty && stop(metrics))) {
-      val (next, m) = cut(step(state, prev), prev.iteration + 1)
+      val began = System.nanoTime()
+      val c = superstep match {
+        case Some(s) => s.localCheckpoint(state, reduce)
+        case None =>
+          val df = step(state, prev)
+          superstep = step match {
+            case _: Invariant => LineageCut.superstep(df, state)
+            case _ => None
+          }
+          superstep match {
+            case Some(s) => s.localCheckpoint(state, reduce)
+            case None => LineageCut.localCheckpoint(df, reduce)
+          }
+      }
+      val next = c.df
+      val m = measured(c, prev.iteration + 1, began)
       metrics :+= m
       table.foreach { t =>
         SnapshotTable.overwrite(next, t,

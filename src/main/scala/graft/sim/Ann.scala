@@ -137,14 +137,14 @@ object Ann {
     // (classic k-means); probes and lists stay consistent because both
     // sides use the same centroid table.
     val centroids = Iterate.run(init, iters,
-      step = (c, _) => assign(c)
+      step = Iterate.invariant(c => assign(c)
         .join(corpus, "vec_id")
         .select(col("cid"), posexplode(col("embedding")))
         .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
         .groupBy(col("cid")).agg(
           transform(
             array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => s("m").cast("float")).as("centroid")),
+            s => s("m").cast("float")).as("centroid"))),
       stop = Iterate.fixedRounds).state
 
     val lists = assign(centroids) // the inverted file: (vec_id, cid)

@@ -235,7 +235,7 @@ object SnapshotTable {
     val spark = df.sparkSession
     val root = new Path(table)
     val f = fileSystem(spark, root)
-    val LineageCut.Cut(dfc, nDelta, _, _) = LineageCut.localCheckpoint(df)
+    val LineageCut.Cut(dfc, nDelta, _, _, _) = LineageCut.localCheckpoint(df)
     // Uniqueness and the incoming key bounds (the driver-side pruning
     // predicate) in one aggregate: the per-key counts carry the keys.
     val perKey = dfc.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("_n"))

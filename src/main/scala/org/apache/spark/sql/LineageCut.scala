@@ -1,9 +1,17 @@
 package org.apache.spark.sql
 
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
+  Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning,
+  UnknownPartitioning}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec,
+  SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.types._
 
 /** graft's one lineage cut: the in-memory checkpoint of Spark's eager
@@ -48,15 +56,23 @@ object LineageCut {
   final case class Min(column: String) extends Reduction
 
   /** A cut frame with its row count, the sum of its `_changed` column (-1
-    * when the frame has none; nulls count as 0) and the value of each
-    * declared reduction that has one. */
+    * when the frame has none; nulls count as 0), the value of each
+    * declared reduction that has one, and its partition count. */
   final case class Cut(df: DataFrame, rows: Long, changed: Long,
-      values: Map[Reduction, Number])
+      values: Map[Reduction, Number], partitions: Int)
 
   /** Materializes `df` into local checkpoint storage, cuts its lineage,
     * counts it and computes `reduce`, in one Spark job. */
   def localCheckpoint(df: DataFrame, reduce: Seq[Reduction] = Nil): Cut = {
     val ds = castToImpl(df)
+    cut(ds, ds.queryExecution.executedPlan, reduce)
+  }
+
+  /** The cut of `plan`, an executed plan of `ds` (its own, or one with the
+    * same output and output partitioning). The cut frame's leaf is marked
+    * analyzed, so a frame built on it analyzes only what it adds. */
+  private def cut(ds: classic.Dataset[_], plan: SparkPlan,
+      reduce: Seq[Reduction]): Cut = {
     val session = ds.sparkSession
     val names = ds.schema.fieldNames
     val frontier = names.contains(Changed)
@@ -73,8 +89,7 @@ object LineageCut {
         (r, i, t)
       }
     SQLExecution.withSQLConfPropagated(session) {
-      val rdd = ds.queryExecution.executedPlan.execute()
-        .mapPartitionsInternal(_.map(_.copy()))
+      val rdd = plan.execute().mapPartitionsInternal(_.map(_.copy()))
       rdd.localCheckpoint()
       val parts = new Array[(Long, Array[Number])](rdd.partitions.length)
       session.sparkContext.runJob(rdd, counter(columns),
@@ -85,20 +100,148 @@ object LineageCut {
         parts.foreach(p => acc.add(p._2(j)))
         Option(acc.result).map(columns(j)._1 -> _)
       }.toMap
-      Cut(classic.Dataset.ofRows(session,
-          LogicalRDD.fromDataset(rdd, ds, isStreaming = false)),
+      val leaf = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
+      leaf.setAnalyzed()
+      Cut(classic.Dataset.ofRows(session, leaf),
         parts.map(_._1).sum,
         if (frontier) values.get(Sum(Changed)).fold(0L)(_.longValue) else -1L,
-        values.filter(v => reduce.contains(v._1)))
+        values.filter(v => reduce.contains(v._1)), parts.length)
     }
+  }
+
+  /** A superstep frame built over a cut state, kept so that every round
+    * runs it over its own state's cut without analyzing it again: each
+    * occurrence of the state's leaf (a self-join's deduplicated copy
+    * included) is swapped for the new cut's RDD, keeping the occurrence's
+    * own output attributes and taking the new cut's partitioning, ordering
+    * and stats.
+    *
+    * Where it is safe, the executed plan is reused too. A round runs a
+    * copy of the kept plan in which the state's `RDDScanExec`s read the
+    * new RDD, so it still gets a fresh broadcast, shuffle and metrics, and
+    * the kept plan itself never runs (it holds no round's broadcast or
+    * shuffle). That needs the new cut to keep what the old one promised
+    * the plan (the same partition count, the same partitioning unless
+    * the plan assumed none, an ordering that satisfies the old one),
+    * every analyzed occurrence to reach the executed plan as a visible
+    * scan (not hidden in a cached relation or an adaptive plan), and no
+    * reused exchange or subquery. Otherwise the round plans the swapped
+    * analyzed plan, and that plan becomes the one later rounds reuse.
+    *
+    * The kept plans hold the RDD object of the cut they were built over,
+    * never its blocks. A frame with a nondeterministic expression has no
+    * superstep: building it again may draw new values. */
+  final class Superstep private[LineageCut] (df: classic.Dataset[_],
+      state: RDD[InternalRow]) {
+    private var ds: classic.Dataset[_] = _
+    private var from: RDD[InternalRow] = _
+    private var executed: SparkPlan = _
+    private var reusable = false
+    anchor(df, state)
+
+    private def anchor(d: classic.Dataset[_], leaf: RDD[InternalRow]): Unit = {
+      ds = d
+      from = leaf
+      executed = d.queryExecution.executedPlan
+      val scans = executed.collect {
+        case s: RDDScanExec if s.rdd eq leaf => s
+      }.size
+      reusable = scans > 0 && scans == d.queryExecution.analyzed
+        .collectWithSubqueries { case r: LogicalRDD if r.rdd eq leaf => r }
+        .size && !executed.exists(p =>
+          p.isInstanceOf[ReusedExchangeExec] || p.subqueries.nonEmpty)
+    }
+
+    /** This step over `state` (the cut it was built over, or a later cut
+      * of the same columns), cut as [[LineageCut.localCheckpoint]] cuts a
+      * frame. */
+    def localCheckpoint(state: DataFrame, reduce: Seq[Reduction]): Cut = {
+      val to = leafOf(state)
+      val plan = swapped(to).getOrElse {
+        if (!(to.rdd eq from))
+          anchor(classic.Dataset.ofRows(ds.sparkSession, over(to)), to.rdd)
+        swapped(to).getOrElse(ds.queryExecution.executedPlan)
+      }
+      cut(ds, plan, reduce)
+    }
+
+    /** A copy of the executed plan that reads `to`, when it can be reused
+      * for `to`. */
+    private[sql] def swapped(to: LogicalRDD): Option[SparkPlan] =
+      if (!reusable || to.rdd.partitions.length != from.partitions.length)
+        None
+      else {
+        var placed = true
+        val plan = executed.clone().transformUp {
+          case s: RDDScanExec if placed && (s.rdd eq from) =>
+            val m = AttributeMap(to.output.zip(s.output))
+            placed = to.output.size == s.output.size &&
+              (s.outputPartitioning.isInstanceOf[UnknownPartitioning] ||
+                equal(rewrite(to.outputPartitioning, m),
+                  s.outputPartitioning)) &&
+              SortOrder.orderingSatisfies(
+                to.outputOrdering.map(rewrite(_, m)), s.outputOrdering)
+            s.copy(rdd = to.rdd)
+        }
+        Option.when(placed)(plan)
+      }
+
+    /** The analyzed plan with `to` in place of the state's leaf, marked
+      * analyzed. */
+    private def over(to: LogicalRDD): LogicalPlan = {
+      val plan = ds.queryExecution.analyzed.transformUpWithSubqueries {
+        case o: LogicalRDD if o.rdd eq from =>
+          val m = AttributeMap(to.output.zip(o.output))
+          LogicalRDD(o.output, to.rdd, rewrite(to.outputPartitioning, m),
+            to.outputOrdering.map(rewrite(_, m)), o.isStreaming)(
+            ds.sparkSession, Some(LogicalRDD.rewriteStatistics(to.stats, m)),
+            Some(LogicalRDD.rewriteConstraints(to.constraints, m)))
+      }
+      plan.setAnalyzed()
+      plan
+    }
+  }
+
+  /** The superstep of `df`, a frame built over the cut `state`; None when
+    * `state` is not a cut or `df` is nondeterministic. */
+  def superstep(df: DataFrame, state: DataFrame): Option[Superstep] = {
+    val ds = castToImpl(df)
+    castToImpl(state).logicalPlan match {
+      case r: LogicalRDD if ds.queryExecution.analyzed.deterministic =>
+        Some(new Superstep(ds, r.rdd))
+      case _ => None
+    }
+  }
+
+  private[sql] def leafOf(cut: DataFrame): LogicalRDD =
+    castToImpl(cut).logicalPlan match {
+      case r: LogicalRDD => r
+      case p => throw new IllegalArgumentException(s"not a cut frame:\n$p")
+    }
+
+  private def rewrite[T <: Expression](e: T, m: AttributeMap[Attribute]): T =
+    e.transform { case a: Attribute => m.getOrElse(a, a) }.asInstanceOf[T]
+
+  private def rewrite(p: Partitioning, m: AttributeMap[Attribute])
+      : Partitioning = p match {
+    case e: Expression => rewrite[Expression](e, m).asInstanceOf[Partitioning]
+    case other => other
+  }
+
+  private def equal(a: Partitioning, b: Partitioning): Boolean = (a, b) match {
+    case (x: Expression, y: Expression) => x.semanticEquals(y)
+    case _ => a == b
   }
 
   /** Releases the storage behind a cut frame, one [[localCheckpoint]]
     * returned; a frame that is not a scan of one RDD is left alone. Only
     * the owner of a cut releases it: a frame still planned over the cut
-    * can no longer be read. */
+    * can no longer be read. The blocks are dropped through the context,
+    * not `RDD.unpersist`, which warns for every locally checkpointed RDD
+    * that its lineage is gone: for a cut that is the point. */
   def release(cut: DataFrame): Unit = castToImpl(cut).logicalPlan match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: LogicalRDD =>
+      r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
     case _ =>
   }
 

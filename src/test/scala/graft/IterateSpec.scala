@@ -160,4 +160,113 @@ class IterateSpec extends SparkSpec {
       s"held $held, final state's cut $last")
     assert(res.state.agg(sum("n")).head().getLong(0) == 8L * 5)
   }
+
+  test("an invariant step is called once per run, and once by a resumed " +
+      "run") {
+    import spark.implicits._
+    val init = (0L until 6L).toDF("vid").select(col("vid"), lit(0L).as("n"))
+      .repartition(2, col("vid"))
+    var calls = 0
+    def run(rounds: Int, cp: CheckpointConfig) = Iterate.run(init, rounds,
+      Iterate.invariant { s =>
+        calls += 1
+        s.select(col("vid"), (col("n") + col("vid")).as("n"))
+      }, stop = Iterate.fixedRounds, checkpoint = cp)
+    val whole = run(7, CheckpointConfig())
+    assert(calls == 1)
+    assert(whole.state.as[(Long, Long)].collect().toMap ==
+      (0L until 6L).map(v => v -> v * 7).toMap)
+    val cp = CheckpointConfig(
+      Some(Files.createTempDirectory("graft-ckpt-inv").toString), "inv")
+    calls = 0
+    run(3, cp)
+    assert(calls == 1)
+    calls = 0
+    val resumed = run(7, cp)
+    assert(calls == 1, "the resumed run builds its step once")
+    assert(resumed.metrics.map(_.iteration) == (4 to 7))
+    assertSameRows(resumed.state, whole.state)
+  }
+
+  test("an invariant step over a self-join equals the per-round step, " +
+      "bit for bit") {
+    import spark.implicits._
+    val init = (0L until 40L).map(v => (v, v * 0.1)).toDF("vid", "x")
+      .repartition(4, col("vid"))
+    // the state twice: the analyzer gives the second scan its own
+    // attributes, and both must follow the state from round to round
+    def step(s: DataFrame): DataFrame =
+      s.join(s.select(col("vid"), (col("x") * 0.7).as("y")), "vid")
+        .select(col("vid"), (col("x") / 3.0 + col("y") + 0.01).as("x"))
+    def rows(r: Iterate.Result) =
+      r.state.as[(Long, Double)].collect().sortBy(_._1).toSeq
+    val invariant = Iterate.run(init, 6, Iterate.invariant(step),
+      stop = Iterate.fixedRounds)
+    val perRound = Iterate.run(init, 6, (s, _) => step(s),
+      stop = Iterate.fixedRounds)
+    assert(rows(invariant) == rows(perRound))
+    assert(invariant.metrics.map(_.rows) == perRound.metrics.map(_.rows))
+  }
+
+  test("an invariant step is analyzed and optimized once, whatever the " +
+      "round count") {
+    import spark.implicits._
+    val init = (0L until 20L).toDF("vid").select(col("vid"), lit(1L).as("n"))
+      .repartition(4, col("vid"))
+    def step(s: DataFrame): DataFrame = s.join(
+        s.groupBy((col("vid") % 5).as("k")).agg(sum(col("n")).as("t")),
+        (col("vid") % 5) === col("k"), "left")
+      .select(col("vid"), (col("n") + col("t") % 3).as("n"))
+    def passes(rounds: Int, f: (DataFrame, IterMetrics) => DataFrame) = {
+      var optimized = 0L
+      val analyzed = analyzerPasses {
+        optimized = ruleRuns("ColumnPruning") {
+          Iterate.run(init, rounds, f, stop = Iterate.fixedRounds)
+        }
+      }
+      (analyzed, optimized)
+    }
+    val invariant = Iterate.invariant(step)
+    passes(2, invariant) // warm-up
+    val (a2, o2) = passes(2, invariant)
+    val (a6, o6) = passes(6, invariant)
+    assert(a2 > 0 && o2 > 0, "the first round is analyzed and optimized")
+    assert(a6 == a2 && o6 == o2, s"2 rounds: ($a2, $o2), 6 rounds: ($a6, $o6)")
+    // control: a step that may read `prev` is built every round
+    val (b2, _) = passes(2, (s, _) => step(s))
+    val (b6, _) = passes(6, (s, _) => step(s))
+    assert(b6 > b2, s"per-round step: $b2 passes for 2 rounds, $b6 for 6")
+  }
+
+  test("metrics and the snapshot summary report the cut's own partition " +
+      "count") {
+    import spark.implicits._
+    assert(spark.sessionState.conf.numShufflePartitions == 4)
+    val dir = Files.createTempDirectory("graft-ckpt-parts").toString
+    val init = (0L until 12L).toDF("vid").select(col("vid"), lit(0).as("n"))
+      .repartition(3, col("vid"))
+    val res = Iterate.run(init, 2,
+      (s, _) => s.select(col("vid"), (col("n") + 1).as("n")),
+      stop = Iterate.fixedRounds,
+      checkpoint = CheckpointConfig(Some(dir), runId = "p"))
+    assert(res.metrics.map(_.numPartitions) == Seq(3, 3))
+    assert(SnapshotTable.snapshots(spark, s"$dir/p")
+      .map(_.summary("numPartitions")) == Seq("3", "3"))
+  }
+
+  test("a run releases its cuts without Spark's lineage warning") {
+    import spark.implicits._
+    val warning = "was locally checkpointed"
+    // control: Spark's own unpersist of a local checkpoint warns
+    val rdd = spark.sparkContext.parallelize(1 to 4, 2)
+    rdd.localCheckpoint()
+    rdd.count()
+    assert(warningsDuring(rdd.unpersist()).exists(_.contains(warning)))
+    val logged = warningsDuring {
+      Iterate.run((0L until 8L).toDF("vid").select(col("vid"), lit(0).as("n")),
+        5, (s, _) => s.select(col("vid"), (col("n") + 1).as("n")),
+        stop = Iterate.fixedRounds)
+    }
+    assert(!logged.exists(_.contains(warning)), logged.mkString("\n"))
+  }
 }

@@ -2,9 +2,14 @@ package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
@@ -99,6 +104,50 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setLocalProperty("jobs.tag", null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Analyzer passes while `f` runs: the runs of the analyzer-only rule
+    * `ResolveReferences`, which Spark's rule metering counts once per
+    * fixed-point iteration of every analysis (an already-analyzed plan
+    * runs none). The metering is JVM-wide; suites run one at a time. */
+  def analyzerPasses(f: => Unit): Long = ruleRuns("ResolveReferences")(f)
+
+  /** Runs of the Catalyst rule named `rule` (the simple name of its class)
+    * while `f` runs, from Spark's JVM-wide rule metering. */
+  def ruleRuns(rule: String)(f: => Unit): Long = {
+    def runs: Long = RuleExecutor.dumpTimeSpent().linesIterator
+      .map(_.trim.split("\\s+"))
+      .find(_.head.split("[.$]").last == rule)
+      .fold(0L)(_.last.toLong)
+    val before = runs
+    f
+    runs - before
+  }
+
+  /** The messages logged at WARN or above while `f` runs (the session
+    * logs at ERROR otherwise). */
+  def warningsDuring(f: => Unit): Seq[String] = {
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val seen = new ConcurrentLinkedQueue[String]()
+    val name = s"spec-${java.util.UUID.randomUUID()}"
+    val appender = new AbstractAppender(name, null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    spark.sparkContext.setLogLevel("WARN")
+    try f
+    finally {
+      spark.sparkContext.setLogLevel("ERROR")
+      root.removeAppender(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.asScala.toSeq
   }
 
   /** Block-manager storage that `f` created and still holds when it
