@@ -1,6 +1,6 @@
 package graft.apps
 
-import graft.graph.SimpleGraph
+import graft.graph.{SimpleGraph, Strategy}
 import graft.graph.EdgeBlocks.Combine
 import graft.pregel.{CheckpointConfig, Iterate}
 import org.apache.spark.sql.{DataFrame, LineageCut}
@@ -20,6 +20,11 @@ import org.apache.spark.sql.functions._
   * wcc_projected.h:122-178): only vertices whose label changed last round
   * send messages, so late rounds touch a tiny frontier instead of the full
   * edge set.
+  *
+  * Only the Shuffle tier's gather reads the frontier's size (it
+  * broadcasts a small frontier, [[graft.graph.Strategy.frontier]]); at
+  * the other tiers the step is round-invariant and is built once per run
+  * ([[Iterate.invariant]]).
   */
 object WCC {
 
@@ -49,19 +54,24 @@ object WCC {
       .select(col("vid"), col("vid").as("comp"), lit(1).as("_changed"))
       .repartition(p, col("vid"))
 
+    def step(state: DataFrame, frontierRows: Long): DataFrame = {
+      val frontier = state.where(col("_changed") === 1)
+        .select(col("vid"), col("comp").as("value"))
+      val msgs = gather(frontier, frontierRows)
+        .select(col("vid"), col("msg").as("mc"))
+      state.join(msgs, Seq("vid"), "left").select(
+        col("vid"),
+        least(col("comp"), coalesce(col("mc"), col("comp"))).as("comp"),
+        when(coalesce(col("mc"), col("comp")) < col("comp"), lit(1))
+          .otherwise(lit(0)).as("_changed"))
+    }
+
     val res = Iterate.run(
       init, maxRounds,
-      step = (state, prev) => {
-        val frontier = state.where(col("_changed") === 1)
-          .select(col("vid"), col("comp").as("value"))
-        val msgs = gather(frontier, prev.changed)
-          .select(col("vid"), col("msg").as("mc"))
-        state.join(msgs, Seq("vid"), "left").select(
-          col("vid"),
-          least(col("comp"), coalesce(col("mc"), col("comp"))).as("comp"),
-          when(coalesce(col("mc"), col("comp")) < col("comp"), lit(1))
-            .otherwise(lit(0)).as("_changed"))
-      },
+      step =
+        if (Strategy.tier(g.numVertices) == Strategy.Shuffle)
+          (state, prev) => step(state, prev.changed)
+        else Iterate.invariant(step(_, -1L)),
       checkpoint = checkpoint)
 
     (res.state.select("vid", "comp"), res.completedRounds)

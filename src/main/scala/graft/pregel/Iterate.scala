@@ -3,6 +3,7 @@ package graft.pregel
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.{DataFrame, LineageCut}
 import org.apache.spark.sql.LineageCut.Reduction
+import org.apache.spark.sql.types.StructType
 
 /** Per-iteration lineage + convergence metrics, one row per superstep
   * (north rule: "checkpoints per-iteration vertex state ... with
@@ -58,9 +59,11 @@ final case class CheckpointConfig(
   * holds only its last state's. The cut's job also counts the state's
   * rows, sums its `_changed` column and computes the declared reductions
   * — the reference's per-superstep `Communicator` Sum/Max/Min — so a
-  * round's global scalars cost no job of their own (a broadcast-tier
-  * round runs two jobs: the cut, and the broadcast of the state its plan
-  * reads). The snapshot table doubles as the resume point: `run` restarts
+  * round's global scalars cost no job of their own. With a dir, the same
+  * job writes the round's snapshot files, and the driver publishes the
+  * manifest after it: a round, durable or not, is the cut plus, at the
+  * broadcast tier, the broadcast of the state its plan reads. The
+  * snapshot table doubles as the resume point: `run` restarts
   * from its current version, validated against the manifest lineage.
   * Reductions are functions of the stored state, so a resumed run hands
   * its steps the values an uninterrupted run did (a float sum up to the
@@ -172,26 +175,28 @@ object Iterate {
     var metrics = Vector.empty[IterMetrics]
     // an invariant step's plans, built in this run's first round
     var superstep = Option.empty[LineageCut.Superstep]
+    // the snapshot writer of the rounds' state schema, prepared once
+    var writer = Option.empty[SnapshotTable.Writer]
+    def sink(t: String, schema: StructType) = {
+      if (!writer.exists(_.writes(schema)))
+        writer = Some(SnapshotTable.writer(spark, t, schema))
+      writer.get.sink()
+    }
     while (prev.iteration < maxRounds && !(metrics.nonEmpty && stop(metrics))) {
       val began = System.nanoTime()
+      val df = Option.when(superstep.isEmpty)(step(state, prev))
+      if (step.isInstanceOf[Invariant])
+        superstep = superstep.orElse(LineageCut.superstep(df.get, state))
+      val out = table.map(sink(_, superstep.fold(df.get.schema)(_.schema)))
       val c = superstep match {
-        case Some(s) => s.localCheckpoint(state, reduce)
-        case None =>
-          val df = step(state, prev)
-          superstep = step match {
-            case _: Invariant => LineageCut.superstep(df, state)
-            case _ => None
-          }
-          superstep match {
-            case Some(s) => s.localCheckpoint(state, reduce)
-            case None => LineageCut.localCheckpoint(df, reduce)
-          }
+        case Some(s) => s.localCheckpoint(state, reduce, out)
+        case None => LineageCut.localCheckpoint(df.get, reduce, out)
       }
       val next = c.df
       val m = measured(c, prev.iteration + 1, began)
       metrics :+= m
-      table.foreach { t =>
-        SnapshotTable.overwrite(next, t,
+      out.foreach { o =>
+        writer.get.overwrite(o, c.written,
           summary = Map(
             "runId" -> checkpoint.runId,
             "iteration" -> m.iteration.toString,

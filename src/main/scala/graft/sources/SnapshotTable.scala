@@ -36,17 +36,24 @@ import org.json4s.jackson.Serialization
   *  - readers NEVER list the data directory — every read plans exactly
   *    the manifest's file list, so uncommitted/failed writer output is
   *    invisible and object-store LIST storms don't exist;
-  *  - a commit is one atomic metadata operation (hard-link create on
-  *    POSIX, destination-must-not-exist rename on HDFS-likes), so
-  *    concurrent writers conflict on the version file and the loser
-  *    retries against the new current snapshot — optimistic concurrency
-  *    exactly like Iceberg's;
+  *  - writer tasks write their files straight into the commit's fresh
+  *    uuid dir ([[org.apache.spark.sql.LineageWriter]]): there is no
+  *    staging directory and no rename commit of data. The commit is the
+  *    manifest publication alone, one atomic metadata operation
+  *    (hard-link create on POSIX, destination-must-not-exist rename on
+  *    HDFS-likes), so concurrent writers conflict on the version file
+  *    and the loser retries against the new current snapshot —
+  *    optimistic concurrency exactly like Iceberg's, and Delta Lake's
+  *    log-record commit. A file no retained manifest lists (a failed
+  *    job's, a failed or duplicate task attempt's) is garbage that
+  *    [[vacuum]] collects;
   *  - the manifest carries per-FILE lineage (row count + an
   *    order-independent xxhash64 content checksum + column stats),
   *    computed by the writer tasks as they write each file, so a commit
   *    is one job that never re-reads what it wrote, a resume/validate
   *    never scans more than it would to read, and driver memory is
-  *    O(files).
+  *    O(files). A superstep checkpoint costs not even that job: the
+  *    round's cut writes it ([[Writer]]).
   */
 object SnapshotTable {
 
@@ -195,7 +202,7 @@ object SnapshotTable {
         math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
       // nothing to merge (at most one file), or already compact
       if (nFiles >= parent.files.size) Some(curV) else {
-        val dataDir = newDataDir(root)
+        val dataDir = newDataDir(f, root)
         val (_, newFiles) =
           write(readVersion(spark, table, curV).repartition(nFiles), dataDir)
         // Content equality in the table-schema view: the rewrite's files
@@ -235,7 +242,8 @@ object SnapshotTable {
     val spark = df.sparkSession
     val root = new Path(table)
     val f = fileSystem(spark, root)
-    val LineageCut.Cut(dfc, nDelta, _, _, _) = LineageCut.localCheckpoint(df)
+    val LineageCut.Cut(dfc, nDelta, _, _, _, _) =
+      LineageCut.localCheckpoint(df)
     // Uniqueness and the incoming key bounds (the driver-side pruning
     // predicate) in one aggregate: the per-key counts carry the keys.
     val perKey = dfc.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("_n"))
@@ -267,7 +275,7 @@ object SnapshotTable {
       val (touched, untouched) = parent.files.partition(fl =>
         keyFilters.nonEmpty && keyFilters.forall(mightMatch(_, fl, types)))
 
-      val dataDir = newDataDir(root)
+      val dataDir = newDataDir(f, root)
       val keys = dfc.select(keyCols.map(col): _*)
       val survivors = if (touched.isEmpty) readFiles(spark, table, schema, Nil)
         else readFiles(spark, table, schema, touched)
@@ -305,7 +313,7 @@ object SnapshotTable {
       val (touched, untouched) = parent.files.partition(fl =>
         filters.forall(mightMatch(_, fl, types)))
       if (touched.isEmpty) Some(curV) else { // stats prove nothing matches
-        val dataDir = newDataDir(root)
+        val dataDir = newDataDir(f, root)
         // survivors = rows where the predicate is FALSE **or NULL** — SQL
         // DELETE only removes rows the predicate affirms, and a bare
         // where(!pred) would silently drop NULL-predicate rows (and do so
@@ -361,14 +369,59 @@ object SnapshotTable {
       streamBatchGate: Option[Long] = None): Int = {
     val spark = df.sparkSession
     val root = new Path(table)
-    val f = fileSystem(spark, root)
-
     // 1. Write the data files under a fresh uuid dir (invisible to every
     //    reader until a manifest references them), with their lineage.
-    val dataDir = newDataDir(root)
+    val dataDir = newDataDir(fileSystem(spark, root), root)
     val (schema, newFiles) = write(df, dataDir)
+    // 2. Publish the manifest: the commit.
+    publishWrite(spark, table, op, schema, dataDir, newFiles, summary,
+      mergeSchema, streamBatchGate)
+  }
 
-    // 2. Optimistic-concurrency manifest publication.
+  /** Writes of frames of one schema into `table`, each an overwrite
+    * commit whose data files the tasks of the caller's own job write: the
+    * job that cuts a superstep ([[org.apache.spark.sql.LineageCut]])
+    * writes the round's checkpoint. The parquet writer is prepared once;
+    * [[sink]] gives each commit a new data dir. */
+  final class Writer private[SnapshotTable] (spark: SparkSession,
+      table: String, schema: StructType) {
+    private val root = new Path(table)
+    private val fold = new LineageFold(LineageWriter.nullable(schema))
+    // prepared over the data root; each commit writes into a new dir of it
+    private val prepared =
+      LineageWriter.sink(spark, schema, fold, new Path(root, "data").toString)
+
+    /** Whether this writer writes frames of `s`. */
+    def writes(s: StructType): Boolean =
+      LineageWriter.nullable(s) == prepared.schema
+
+    /** The sink of a new commit, into a new data dir (created). */
+    def sink(): LineageWriter.Sink[_] =
+      prepared.to(newDataDir(fileSystem(spark, root), root).toString)
+
+    /** Publishes the files a job wrote through `sink`, the summaries it
+      * returned, as the table's contents, with `summary`. */
+    def overwrite(sink: LineageWriter.Sink[_], written: Seq[(String, Any)],
+        summary: Map[String, String]): Int = {
+      val dataDir = new Path(sink.dir)
+      publishWrite(spark, table, "overwrite", prepared.schema, dataDir,
+        lineage(fold, dataDir, prepared.summaries(written)), summary)
+    }
+  }
+
+  /** The [[Writer]] of frames of `schema` into `table`. */
+  def writer(spark: SparkSession, table: String, schema: StructType)
+      : Writer = new Writer(spark, table, schema)
+
+  /** Publishes a commit `op` of the files `newFiles`, written into
+    * `dataDir` with `schema`, with optimistic concurrency; `dataDir` is
+    * deleted when the commit fails. */
+  private def publishWrite(spark: SparkSession, table: String, op: String,
+      schema: StructType, dataDir: Path, newFiles: Seq[FileLineage],
+      summary: Map[String, String], mergeSchema: Boolean = false,
+      streamBatchGate: Option[Long] = None): Int = {
+    val root = new Path(table)
+    val f = fileSystem(spark, root)
     try retry(table, "commits") {
       val schemaJson = schema.json
       val curV = currentVersionOpt(spark, table)
@@ -451,8 +504,13 @@ object SnapshotTable {
     if (tryPublish(f, root, m)) Some(m.version)
     else { stale.foreach(f.delete(_, true)); None }
 
-  private def newDataDir(root: Path): Path =
-    new Path(root, s"data/${java.util.UUID.randomUUID()}")
+  /** A new data dir of the table at `root`, created: it exists even when
+    * the write puts no file in it. */
+  private def newDataDir(f: FileSystem, root: Path): Path = {
+    val dir = new Path(root, s"data/${java.util.UUID.randomUUID()}")
+    f.mkdirs(dir)
+    dir
+  }
 
   /** Writes `df` as the data files of the new `dataDir`, in one job, and
     * returns the schema a read of them gives and the lineage of each file
@@ -461,11 +519,18 @@ object SnapshotTable {
   private def write(df: DataFrame, dataDir: Path)
       : (StructType, Seq[FileLineage]) = {
     val fold = new LineageFold(df.schema)
-    val (schema, files) = LineageWriter.parquet(df, dataDir.toString, fold)
-    (schema, files.toSeq.map { case (name, a) =>
-      fold.lineage(s"data/${dataDir.getName}/$name", a)
-    }.sortBy(_.path))
+    val sink = LineageWriter.sink(df.sparkSession, df.schema, fold,
+      dataDir.toString)
+    (sink.schema, lineage(fold, dataDir, LineageWriter.parquet(df, sink)))
   }
+
+  /** The manifest entries, sorted by path, of the files of `dataDir`
+    * whose summaries by file name are `files`. */
+  private def lineage(fold: LineageFold, dataDir: Path,
+      files: Map[String, FileAcc]): Seq[FileLineage] =
+    files.toSeq.map { case (name, a) =>
+      fold.lineage(s"data/${dataDir.getName}/$name", a)
+    }.sortBy(_.path)
 
   /** The lineage of each data file `df` reads, re-derived from its rows
     * with the writer's fold, in one job. */
@@ -867,33 +932,45 @@ object SnapshotTable {
     val dropped = vs.dropRight(keepLast)
     if (dropped.isEmpty) return (0, 0)
     val keptDirs = vs.takeRight(keepLast)
-      .flatMap(v => manifest(spark, table, v).files.map(dataDirOf))
+      .flatMap(v => manifest(spark, table, v).files.map(_.path))
+      .map(dataDirOf)
       .toSet
     val droppedDirs = dropped
-      .flatMap(v => manifest(spark, table, v).files.map(dataDirOf))
+      .flatMap(v => manifest(spark, table, v).files.map(_.path))
+      .map(dataDirOf)
       .toSet -- keptDirs
     droppedDirs.foreach(d => f.delete(new Path(root, d), true))
     dropped.foreach(v => f.delete(manifestPath(root, v), false))
     (dropped.size, droppedDirs.size)
   }
 
-  /** Delete data directories referenced by NO retained snapshot —
-    * leftovers of failed/abandoned writes. Single-maintainer operation
-    * (a concurrent writer's not-yet-committed directory would be
-    * collected; same caveat as Iceberg's remove_orphan_files). Returns
-    * the number of directories removed. */
+  /** Delete what NO retained snapshot references — leftovers of failed
+    * or abandoned writes: whole data directories no manifest lists a
+    * file of and, inside the directories one does, every file none lists
+    * (a failed or duplicate task attempt's), with its `.crc` checksum
+    * sibling. Single-maintainer operation (a concurrent writer's
+    * not-yet-committed directory would be collected; same caveat as
+    * Iceberg's remove_orphan_files). Returns the number of directories
+    * and files removed. */
   def vacuum(spark: SparkSession, table: String): Int = {
     val root = new Path(table)
     val f = fileSystem(spark, root)
-    val referenced = snapshots(spark, table)
-      .flatMap(_.files.map(dataDirOf)).toSet
+    val files = snapshots(spark, table).flatMap(_.files.map(_.path)).toSet
+    val dirs = files.map(dataDirOf)
     val dataRoot = new Path(root, "data")
     if (!f.exists(dataRoot)) return 0
-    val onDisk = f.listStatus(dataRoot).toSeq
-      .filter(_.isDirectory)
-      .map(s => s"data/${s.getPath.getName}")
-    val orphans = onDisk.filterNot(referenced)
-    orphans.foreach(d => f.delete(new Path(root, d), true))
+    val checksum = """\.(.+)\.crc""".r
+    val orphans = f.listStatus(dataRoot).toSeq.filter(_.isDirectory)
+      .flatMap { d =>
+        val dir = s"data/${d.getPath.getName}"
+        if (!dirs(dir)) Seq(d.getPath)
+        else f.listStatus(d.getPath).toSeq.map(_.getPath).filterNot(p =>
+          files(s"$dir/" + (p.getName match {
+            case checksum(of) => of
+            case name => name
+          })))
+      }
+    orphans.foreach(f.delete(_, true))
     orphans.size
   }
 
@@ -1109,10 +1186,8 @@ object SnapshotTable {
 
   // ------------------------------------------------------------- plumbing
 
-  private def dataDirOf(fl: FileLineage): String = {
-    val i = fl.path.lastIndexOf('/')
-    fl.path.substring(0, i)
-  }
+  private def dataDirOf(path: String): String =
+    path.substring(0, path.lastIndexOf('/'))
 
   private def manifestPath(root: Path, version: Int): Path =
     new Path(root, f"metadata/v$version%05d.json")

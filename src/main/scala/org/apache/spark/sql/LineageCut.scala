@@ -36,6 +36,10 @@ import org.apache.spark.sql.types._
   * partitions' partials in partition-index order, as `agg(...).head()`
   * merges them, so a run is bit-reproducible.
   *
+  * Given a [[LineageWriter.Sink]], the same job also writes the frame as
+  * parquet files, one per non-empty partition, each with its lineage
+  * summary, so a durable superstep's checkpoint costs no job either.
+  *
   * The method is named `localCheckpoint` so Spark still reports each cut
   * job as `localCheckpoint at <caller>.scala:<line>`.
   *
@@ -57,22 +61,27 @@ object LineageCut {
 
   /** A cut frame with its row count, the sum of its `_changed` column (-1
     * when the frame has none; nulls count as 0), the value of each
-    * declared reduction that has one, and its partition count. */
+    * declared reduction that has one, its partition count, and the
+    * summary of each file its sink wrote, by file name
+    * ([[LineageWriter.Sink.summaries]] types them). */
   final case class Cut(df: DataFrame, rows: Long, changed: Long,
-      values: Map[Reduction, Number], partitions: Int)
+      values: Map[Reduction, Number], partitions: Int,
+      written: Seq[(String, Any)] = Nil)
 
   /** Materializes `df` into local checkpoint storage, cuts its lineage,
-    * counts it and computes `reduce`, in one Spark job. */
-  def localCheckpoint(df: DataFrame, reduce: Seq[Reduction] = Nil): Cut = {
+    * counts it, computes `reduce` and writes it through `sink`, in one
+    * Spark job. */
+  def localCheckpoint(df: DataFrame, reduce: Seq[Reduction] = Nil,
+      sink: Option[LineageWriter.Sink[_]] = None): Cut = {
     val ds = castToImpl(df)
-    cut(ds, ds.queryExecution.executedPlan, reduce)
+    cut(ds, ds.queryExecution.executedPlan, reduce, sink)
   }
 
   /** The cut of `plan`, an executed plan of `ds` (its own, or one with the
     * same output and output partitioning). The cut frame's leaf is marked
     * analyzed, so a frame built on it analyzes only what it adds. */
   private def cut(ds: classic.Dataset[_], plan: SparkPlan,
-      reduce: Seq[Reduction]): Cut = {
+      reduce: Seq[Reduction], sink: Option[LineageWriter.Sink[_]]): Cut = {
     val session = ds.sparkSession
     val names = ds.schema.fieldNames
     val frontier = names.contains(Changed)
@@ -91,10 +100,9 @@ object LineageCut {
     SQLExecution.withSQLConfPropagated(session) {
       val rdd = plan.execute().mapPartitionsInternal(_.map(_.copy()))
       rdd.localCheckpoint()
-      val parts = new Array[(Long, Array[Number])](rdd.partitions.length)
-      session.sparkContext.runJob(rdd, counter(columns),
-        rdd.partitions.indices,
-        (i: Int, p: (Long, Array[Number])) => parts(i) = p)
+      val parts = new Array[Part](rdd.partitions.length)
+      session.sparkContext.runJob(rdd, counter(columns, sink),
+        rdd.partitions.indices, (i: Int, p: Part) => parts(i) = p)
       val values = columns.indices.flatMap { j =>
         val acc = new Acc(columns(j)._1, columns(j)._3)
         parts.foreach(p => acc.add(p._2(j)))
@@ -105,7 +113,8 @@ object LineageCut {
       Cut(classic.Dataset.ofRows(session, leaf),
         parts.map(_._1).sum,
         if (frontier) values.get(Sum(Changed)).fold(0L)(_.longValue) else -1L,
-        values.filter(v => reduce.contains(v._1)), parts.length)
+        values.filter(v => reduce.contains(v._1)), parts.length,
+        parts.flatMap(_._3).toSeq)
     }
   }
 
@@ -155,15 +164,19 @@ object LineageCut {
     /** This step over `state` (the cut it was built over, or a later cut
       * of the same columns), cut as [[LineageCut.localCheckpoint]] cuts a
       * frame. */
-    def localCheckpoint(state: DataFrame, reduce: Seq[Reduction]): Cut = {
+    def localCheckpoint(state: DataFrame, reduce: Seq[Reduction],
+        sink: Option[LineageWriter.Sink[_]] = None): Cut = {
       val to = leafOf(state)
       val plan = swapped(to).getOrElse {
         if (!(to.rdd eq from))
           anchor(classic.Dataset.ofRows(ds.sparkSession, over(to)), to.rdd)
         swapped(to).getOrElse(ds.queryExecution.executedPlan)
       }
-      cut(ds, plan, reduce)
+      cut(ds, plan, reduce, sink)
     }
+
+    /** The schema of the frames this step makes. */
+    def schema: StructType = ds.schema
 
     /** A copy of the executed plan that reads `to`, when it can be reused
       * for `to`. */
@@ -261,22 +274,30 @@ object LineageCut {
       case _ => r => if (!r.isNullAt(i)) acc.add(r.getDouble(i))
     }
 
-  /** The per-partition job: the row count and each reduction's partial
-    * value (null when the partition has none). */
-  private def counter(columns: Seq[(Reduction, Int, DataType)])
-      : (TaskContext, Iterator[InternalRow]) => (Long, Array[Number]) =
-    (_, it) => {
+  /** A partition's row count, its reductions' partial values and the
+    * file its sink wrote. */
+  private type Part = (Long, Array[Number], Option[(String, Any)])
+
+  /** The per-partition job: the row count, each reduction's partial value
+    * (null when the partition has none) and, with a sink, the partition
+    * written as one file. */
+  private def counter(columns: Seq[(Reduction, Int, DataType)],
+      sink: Option[LineageWriter.Sink[_]])
+      : (TaskContext, Iterator[InternalRow]) => Part =
+    (ctx, it) => {
       val accs = columns.map { case (r, _, t) => new Acc(r, t) }.toArray
       val feeds = columns.indices
         .map(j => feed(accs(j), columns(j)._2, columns(j)._3)).toArray
+      val file = sink.map(_.open(ctx))
       var rows = 0L
       while (it.hasNext) {
         val r = it.next()
         rows += 1
         var j = 0
         while (j < feeds.length) { feeds(j)(r); j += 1 }
+        if (file.isDefined) file.get.add(r)
       }
-      (rows, accs.map(_.result))
+      (rows, accs.map(_.result), file.flatMap(_.close()))
     }
 
   /** A running [[Reduction]] with Spark's aggregate buffer semantics: a

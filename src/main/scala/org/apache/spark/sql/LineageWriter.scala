@@ -3,11 +3,14 @@ package org.apache.spark.sql
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources._
+import org.apache.spark.sql.execution.datasources.{OutputWriter,
+  OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, input_file_name}
 import org.apache.spark.sql.types.StructType
@@ -16,15 +19,27 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** graft's parquet write that folds a summary of each file it writes in
   * the write's own job, as Delta Lake's writer collects per-file
-  * statistics: `FileFormatWriter` with the session's commit protocol,
-  * Spark's basic stats tracker and a [[WriteJobStatsTracker]] whose tasks
-  * fold each row as the writer hands it to a file. Only committed task
-  * attempts report. [[fold]] runs the same fold over a read of files.
+  * statistics. A [[Sink]] is prepared on the driver once per schema:
+  * `ParquetFileFormat`'s writer factory and the Hadoop conf its tasks
+  * open files with. Each task of a job that writes through it writes its
+  * partition's rows straight into one file of the sink's directory, named
+  * by its task attempt, folds each row as it writes it, and returns the
+  * file's name and summary as its result. `runJob` delivers one
+  * successful attempt per partition, so no file is counted twice.
   *
-  * Like [[LineageCut]], both run the physical plan without opening a SQL
-  * execution; Spark reports their jobs as `parquet at <caller>` and `fold
-  * at <caller>`. It lives in `org.apache.spark.sql` because the writer
-  * API and `StructType.asNullable` are internal to Spark. */
+  * There is no commit protocol: no staging directory, no rename, no
+  * `_SUCCESS` marker. The caller's commit is the publication of what the
+  * job returned (for `graft.sources.SnapshotTable`, its manifest), and a
+  * file nobody publishes is garbage. A failed attempt deletes its own
+  * file (best effort); what a lost task leaves behind is left to the
+  * caller's orphan collection.
+  *
+  * [[parquet]] runs the write as a job of its own; `LineageCut` runs it
+  * in a cut's job. [[fold]] runs the same fold over a read of files. Both
+  * run the physical plan without opening a SQL execution; Spark reports
+  * their jobs as `parquet at <caller>` and `fold at <caller>`. It lives in
+  * `org.apache.spark.sql` because the writer API, `StructType.asNullable`
+  * and the task's output metrics are internal to Spark. */
 object LineageWriter {
 
   /** Folds rows into one file's mutable, serializable summary `A`. */
@@ -35,31 +50,102 @@ object LineageWriter {
     def merge(a: A, b: A): A
   }
 
-  /** Writes `df` as parquet files into the new directory `path`, in one
-    * job. Returns the schema a read of the files gives and the summary of
-    * each file that holds rows, by file name. */
-  def parquet[A](df: DataFrame, path: String, fold: Fold[A])
-      : (StructType, Map[String, A]) = {
-    val ds = castToImpl(df)
-    val session = ds.sparkSession
-    val conf = session.sessionState.conf
-    SchemaUtils.checkColumnNameDuplication(ds.columns.toSeq,
-      conf.caseSensitiveAnalysis)
-    val plan = ds.queryExecution.executedPlan
-    val hadoopConf = session.sessionState.newHadoopConf()
-    val tracker = new Tracker(fold)
-    SQLExecution.withSQLConfPropagated(session) {
-      FileFormatWriter.write(session, plan, new ParquetFileFormat,
-        FileCommitProtocol.instantiate(conf.fileCommitProtocolClass,
-          java.util.UUID.randomUUID().toString, path),
-        FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
-        hadoopConf, Nil, None, Seq(new BasicWriteJobStatsTracker(
-          new SerializableConfiguration(hadoopConf),
-          BasicWriteJobStatsTracker.metrics), tracker), Map.empty)
+  /** A parquet writer of rows of `schema` into the directory `dir`; see
+    * [[LineageWriter]]. [[to]] gives the same writer for another
+    * directory, so one prepared factory serves many commits. */
+  final class Sink[A] private[LineageWriter] (val dir: String,
+      val schema: StructType, factory: OutputWriterFactory,
+      conf: SerializableConfiguration, fold: Fold[A]) extends Serializable {
+
+    def to(dir: String): Sink[A] = new Sink(dir, schema, factory, conf, fold)
+
+    /** A task's writer; it opens its file at the first row. */
+    def open(ctx: TaskContext): File = new File(ctx)
+
+    /** The summaries a job's tasks returned, by file name. */
+    def summaries(written: Iterable[(String, Any)]): Map[String, A] =
+      written.map { case (f, a) => f -> a.asInstanceOf[A] }.toMap
+
+    /** The file of one task attempt; a failure of the task deletes it. */
+    final class File private[Sink] (ctx: TaskContext) {
+      private var out: OutputWriter = _
+      private var path: Path = _
+      private var acc: A = _
+      private var rows = 0L
+
+      def add(row: InternalRow): Unit = {
+        if (out == null) start()
+        out.write(row)
+        fold.add(acc, row)
+        rows += 1
+      }
+
+      private def start(): Unit = {
+        val attempt = new TaskAttemptID("graft", ctx.stageId(), TaskType.MAP,
+          ctx.partitionId(), ctx.attemptNumber())
+        val hc = new TaskAttemptContextImpl(conf.value, attempt)
+        path = new Path(dir, f"part-${ctx.partitionId()}%05d-" +
+          s"${ctx.taskAttemptId()}${factory.getFileExtension(hc)}")
+        acc = fold.zero()
+        out = factory.newInstance(path.toString, schema, hc)
+        ctx.addTaskFailureListener { (_, _) =>
+          try out.close() catch { case _: Throwable => () }
+          try path.getFileSystem(conf.value).delete(path, false)
+          catch { case _: Throwable => () }
+          ()
+        }
+      }
+
+      /** Closes the file; its name and summary, None when no row came. */
+      def close(): Option[(String, A)] = Option(out).map { o =>
+        o.close()
+        val metrics = ctx.taskMetrics().outputMetrics
+        metrics.setBytesWritten(
+          path.getFileSystem(conf.value).getFileStatus(path).getLen)
+        metrics.setRecordsWritten(rows)
+        path.getName -> acc
+      }
     }
-    (ds.schema.asNullable, tracker.files.map { case (p, a) =>
-      new Path(p).getName -> a })
   }
+
+  /** `schema` with every column nullable, at every depth: the schema the
+    * sinks write, and a read of their files gives. */
+  def nullable(schema: StructType): StructType = schema.asNullable
+
+  /** The sink of rows of `nullable(schema)` into `dir`, prepared with
+    * `session`'s confs. */
+  def sink[A](session: SparkSession, schema: StructType, fold: Fold[A],
+      dir: String): Sink[A] = {
+    val s = castToImpl(session)
+    SchemaUtils.checkColumnNameDuplication(schema.fieldNames.toSeq,
+      s.sessionState.conf.caseSensitiveAnalysis)
+    val job = Job.getInstance(s.sessionState.newHadoopConf())
+    val written = nullable(schema)
+    val factory = new ParquetFileFormat().prepareWrite(s, job, Map.empty,
+      written)
+    new Sink(dir, written, factory,
+      new SerializableConfiguration(job.getConfiguration), fold)
+  }
+
+  /** Writes `df` through `sink`, in one job. Returns the summary of each
+    * file that holds rows, by file name. */
+  def parquet[A](df: DataFrame, sink: Sink[A]): Map[String, A] = {
+    val ds = castToImpl(df)
+    SQLExecution.withSQLConfPropagated(ds.sparkSession) {
+      sink.summaries(ds.sparkSession.sparkContext.runJob(
+        ds.queryExecution.executedPlan.execute(), writer(sink)).toSeq.flatten)
+    }
+  }
+
+  /** The write job's function, declared here so that the closure cleaner
+    * reads this small class file. */
+  private def writer(sink: Sink[_])
+      : (TaskContext, Iterator[InternalRow]) => Option[(String, Any)] =
+    (ctx, it) => {
+      val file = sink.open(ctx)
+      while (it.hasNext) file.add(it.next())
+      file.close()
+    }
 
   /** The summary of each file `df` reads, by `input_file_name()`, in one
     * job; a file split across partitions merges in partition order. */
@@ -77,35 +163,16 @@ object LineageWriter {
     }
   }
 
-  /** A task's summaries by file; as a writer task's stats tracker it
-    * keys them by the path in the attempt directory. */
-  private final class ByFile[A](fold: Fold[A])
-      extends WriteTaskStatsTracker with WriteTaskStats {
+  /** A task's summaries by file. */
+  private final class ByFile[A](fold: Fold[A]) {
     val accs = mutable.LinkedHashMap.empty[String, A]
-    @transient private var file: String = _
-    @transient private var acc: A = _
+    private var file: String = _
+    private var acc: A = _
 
     def add(f: String, row: InternalRow): ByFile[A] = {
       if (f != file) { acc = accs.getOrElseUpdate(f, fold.zero()); file = f }
       fold.add(acc, row)
       this
     }
-
-    override def newPartition(values: InternalRow): Unit = ()
-    override def newFile(filePath: String): Unit = ()
-    override def closeFile(filePath: String): Unit = ()
-    override def newRow(filePath: String, row: InternalRow): Unit =
-      add(filePath, row)
-    override def getFinalStats(taskCommitTime: Long): WriteTaskStats = this
-  }
-
-  /** On the driver, [[files]] holds the committed task attempts' files. */
-  private final class Tracker[A](fold: Fold[A]) extends WriteJobStatsTracker {
-    @transient var files: Map[String, A] = Map.empty
-
-    override def newTaskInstance(): WriteTaskStatsTracker = new ByFile(fold)
-    override def processStats(stats: Seq[WriteTaskStats],
-        jobCommitTime: Long): Unit =
-      files = stats.flatMap(_.asInstanceOf[ByFile[A]].accs).toMap
   }
 }

@@ -143,4 +143,21 @@ class LineageCutSpec extends SparkSpec {
     assert(hits.isEmpty,
       s"Dataset.localCheckpoint outside LineageCut:\n${hits.mkString("\n")}")
   }
+
+  test("src/main calls neither FileFormatWriter nor a FileCommitProtocol: " +
+      "snapshot files have one write path, LineageWriter's sink") {
+    val api = """\b(FileFormatWriter|FileCommitProtocol)\b""".r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if api.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(hits.isEmpty,
+      s"a second write path in src/main:\n${hits.mkString("\n")}")
+  }
 }

@@ -69,6 +69,36 @@ class SnapshotTableSpec extends SparkSpec {
     } finally rmrf(t)
   }
 
+  test("vacuum removes a file no manifest lists from a live data dir; " +
+      "read and validate are unchanged") {
+    val t = tmpTable("snap-orphan-file")
+    try {
+      SnapshotTable.create(docs(0 until 8).repartition(2), t)
+      val v = SnapshotTable.append(docs(8 until 12), t)
+      val live = Paths.get(t, SnapshotTable.manifest(spark, t, v).files.head
+        .path).getParent
+      // a failed task attempt's file, written through the local file
+      // system (with its .crc sibling) into a dir the manifest lists
+      val stray = docs(100 until 140).coalesce(1)
+      val tmp = Files.createTempDirectory("snap-stray").resolve("d")
+      stray.write.parquet(tmp.toString)
+      val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get()
+      val planted = live.resolve("part-00000-999.snappy.parquet")
+      val crc = live.resolve(s".${planted.getFileName}.crc")
+      Files.copy(part, planted)
+      Files.copy(part.resolveSibling(s".${part.getFileName}.crc"), crc)
+      rmrf(tmp.toString)
+      val before = SnapshotTable.read(spark, t).collect().toSet
+      assert(SnapshotTable.vacuum(spark, t) == 1)
+      assert(!Files.exists(planted) && !Files.exists(crc))
+      assert(SnapshotTable.read(spark, t).collect().toSet == before &&
+        before.size == 12)
+      (1 to v).foreach(SnapshotTable.validate(spark, t, _))
+      assert(SnapshotTable.vacuum(spark, t) == 0)
+    } finally rmrf(t)
+  }
+
   test("uncommitted data files are invisible to every reader") {
     val t = tmpTable("snap-orphan")
     try {
@@ -1142,8 +1172,8 @@ class SnapshotTableSpec extends SparkSpec {
     }
   }
 
-  test("a commit is one job, an Iterate round with a checkpoint two, and " +
-      "no job collects lineage") {
+  test("a commit is one job, an Iterate round with a checkpoint is its " +
+      "cut alone, and no job collects lineage") {
     import org.apache.spark.sql.sources.EqualTo
     val t = tmpTable("snap-jobs")
     val dir = Files.createTempDirectory("snap-jobs-iter").toString
@@ -1152,7 +1182,9 @@ class SnapshotTableSpec extends SparkSpec {
       def oneJob(op: String)(f: => Unit): Unit = {
         val js = jobsDuring(f)
         sites ++= js
-        assert(js.size == 1, s"$op ran ${js.size} jobs: $js")
+        assert(js.size == 1 &&
+          js.head.startsWith("parquet at SnapshotTable.scala"),
+          s"$op ran ${js.size} jobs: $js")
       }
       oneJob("create")(SnapshotTable.create(docs(0 until 10), t))
       oneJob("append")(SnapshotTable.append(docs(10 until 20), t))
@@ -1173,7 +1205,11 @@ class SnapshotTableSpec extends SparkSpec {
         stop = Iterate.fixedRounds,
         checkpoint = CheckpointConfig(Some(dir), runId = "r")))
       sites ++= iter
-      assert(iter.size == 2 * rounds + 1, iter)
+      // the initial state's cut, then one cut per round that also writes
+      // the round's snapshot
+      assert(iter.size == rounds + 1 &&
+        iter.forall(_.startsWith("localCheckpoint at Iterate.scala")), iter)
+      assert(SnapshotTable.currentVersionOpt(spark, s"$dir/r") == Some(rounds))
       assert(!sites.exists(_.startsWith("collect at SnapshotTable.scala")),
         sites)
     } finally { rmrf(t); rmrf(s"$dir/r") }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.apps.{CDLP, PageRank}
+import graft.apps.{CDLP, PageRank, WCC}
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
 import graft.pregel.Iterate
@@ -75,6 +75,25 @@ class SuperstepSpec extends SparkSpec {
       stop = Iterate.fixedRounds).state.select("vid", "label")
   }
 
+  /** WCC's step, built every round with the frontier's size. */
+  private def wccPerRound(): DataFrame = {
+    val gather = g.gather("und", Combine.Min, g.numVertices, p)
+    Iterate.run(
+      g.vertices.select(col("vid"), col("vid").as("comp"),
+        lit(1).as("_changed")).repartition(p, col("vid")),
+      200,
+      step = (state, prev) => {
+        val msgs = gather(state.where(col("_changed") === 1)
+            .select(col("vid"), col("comp").as("value")), prev.changed)
+          .select(col("vid"), col("msg").as("mc"))
+        state.join(msgs, Seq("vid"), "left").select(
+          col("vid"),
+          least(col("comp"), coalesce(col("mc"), col("comp"))).as("comp"),
+          when(coalesce(col("mc"), col("comp")) < col("comp"), lit(1))
+            .otherwise(lit(0)).as("_changed"))
+      }).state.select("vid", "comp")
+  }
+
   private def byVid[T](df: DataFrame, get: org.apache.spark.sql.Row => T) =
     df.collect().map(r => r.getLong(0) -> get(r)).sortBy(_._1).toSeq
 
@@ -92,6 +111,22 @@ class SuperstepSpec extends SparkSpec {
     assert(diff.isEmpty, s"${diff.size} ranks differ: ${diff.take(3)}")
     assert(byVid(CDLP.run(g, maxRound = 10), _.getLong(1)) ==
       byVid(cdlpPerRound(10), _.getLong(1)))
+  }
+
+  test("WCC equals its per-round step row for row, and its analyzer " +
+      "passes do not grow with its rounds") {
+    val (labels, rounds) = WCC.runWithRounds(g)
+    assert(rounds > 2, s"$rounds rounds")
+    val got = byVid(labels, _.getLong(1))
+    assert(got.size == g.numVertices &&
+      got == byVid(wccPerRound(), _.getLong(1)))
+    def passes(maxRounds: Int): Long =
+      analyzerPasses(WCC.runWithRounds(g, maxRounds = maxRounds))
+    passes(2)
+    val two = passes(2)
+    val all = passes(rounds)
+    assert(two > 0 && all == two,
+      s"analyzer passes: 2 rounds $two, $rounds rounds $all")
   }
 
   test("a warm PageRank round runs its cut and its state broadcast; a " +
