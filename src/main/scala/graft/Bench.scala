@@ -6,38 +6,43 @@ import graft.graphbuild.CoPurchase
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Benchmark main — prints a JSON line with per-query seconds plus the
+/** Benchmark main: prints one JSON line with per-query seconds plus the
   * north-rule scaling evidence: the same PageRank+WCC jobs on the same
   * input at two parallelism levels (local[N/4] vs local[N], the sandbox
   * stand-in for N vs 4N executors; worker-count-invariance precedent:
   * python/tests/test_scalability.py:42-56), with edges/sec/iteration
   * throughput at both levels and the scaling efficiency between them.
   *
-  * Budget discipline (rounds 1 AND 2 were timeout-killed at rc=124 — the
-  * r2 incremental-emission hardening preserved partial numbers but the
-  * driver records `parsed: null` unless the process EXITS 0 in-window, so
-  * round 3 makes the default path small):
-  *   - DEFAULT: raw headline timings, then the five raw per-query extras
-  *     IMMEDIATELY (r2-r4 ran them post-ladder and three consecutive
-  *     driver runs budget-starved them — the artifact tracked only
-  *     PR/WCC; they cost ~12s, the ladder loses nothing), one
-  *     scaled-graph write, a 2-level scaling ladder (hi/4 and hi — the N
-  *     vs 4N pair the north rule names; a FIXED symmetric 3 passes per
-  *     level, first-pass AND min-folded efficiencies both reported,
-  *     steal_suspected flagged when the min-folded number is outside
-  *     [0.65,1.1], variance_suspected when any level's pass spread
-  *     exceeds 2x — never a value-conditioned retry), executor-JVM
-  *     invariance. Everything else — the 4-level ladder, strategy-tier
-  *     comparison, compute-bound MinHash probe, the timed executor-JVM
-  *     exec_ladder — runs only under SPARK_GRAFT_BENCH_FULL=1;
-  *   - a wall-clock budget (SPARK_GRAFT_BENCH_BUDGET seconds, default 500)
-  *     is checked before each section; once 60% is spent, optional
-  *     sections are skipped and the ladder degrades to whatever levels
-  *     completed;
+  * One shape, in this order:
+  *   - the raw headline: one PageRank(10) and one WCC pass on the raw sf
+  *     graph at hi parallelism;
+  *   - the five raw per-query extras (degree, aggregates, exact dedup,
+  *     CDLP, triangles) on the same warm session;
+  *   - one scaled-graph write;
+  *   - the box's pure-CPU scaling ceiling at lo and hi threads;
+  *   - the 2-level ladder (hi/4 and hi, the N vs 4N pair the north rule
+  *     names): a FIXED symmetric 3 passes per level, first-pass AND
+  *     min-folded efficiencies both reported, `steal_suspected` when the
+  *     min-folded number is outside [0.65, 1.1], `variance_suspected`
+  *     when any level's pass spread exceeds 2x, `results_match` across
+  *     levels — never a value-conditioned retry;
+  *   - executor invariance: PageRank+WCC checksums on 1 vs 4 real
+  *     executor JVMs.
+  *
+  * Environment: SPARK_GRAFT_SF_DIR (input), SPARK_GRAFT_CPUS (hi; lo is
+  * hi/4), SPARK_GRAFT_SCALE_COPIES (replication of the scaled graph,
+  * default 96), SPARK_GRAFT_BENCH_BUDGET (seconds, default 500) and
+  * SPARK_GRAFT_BENCH_OUT (a second copy of the JSON).
+  *
+  * Budget discipline (a run that does not EXIT 0 inside its time window
+  * yields no parsed result):
+  *   - a wall-clock budget is checked before the optional sections: each
+  *     extra starts only while under 25% of it is spent, executor
+  *     invariance only while under 90%;
   *   - a full, valid JSON line is re-printed after EVERY completed section,
   *     so even a kill keeps everything measured so far (the last stdout
   *     line is always the most complete snapshot);
-  *   - the scaled graph is derived ONCE and written to parquet; all
+  *   - the scaled graph is derived ONCE and written to parquet; both
   *     parallelism levels read the identical file (same bytes);
   *   - every section runs under try/catch — one failure cannot zero the
   *     rest;
@@ -153,9 +158,9 @@ object Bench {
     * JVM. Our classes ride to the executors via extraClassPath (the
     * grading driver runs from the repo, where target/scala-2.13/classes
     * exists); build.sbt exports SPARK_SCALA_VERSION for the executor
-    * launcher. */
-  private def clusterSession(executors: Int, coresPer: Int, memMb: Int)
-      : SparkSession = {
+    * launcher. Each executor gets a 4 GB heap. */
+  private def clusterSession(executors: Int, coresPer: Int): SparkSession = {
+    val memMb = 4096
     val classes = new java.io.File("target/scala-2.13/classes")
       .getAbsolutePath
     val s = SparkSession.builder()
@@ -260,41 +265,15 @@ object Bench {
       chk)
   }
 
-  /** Compute-bound scaling probe: MinHash signatures (64 hash functions
-    * over char shingles) on a `copies`-fold replicated documents table.
-    * One stage + one agg — no per-round scheduling — so it isolates how
-    * raw compute scales with cores, complementing the superstep probe. */
-  private def computeProbe(spark: SparkSession, dir: String,
-      copies: Int): Double = {
-    import graft.text.Dedup
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(0), lit(copies - 1))).as("copy"))
-      .select(concat_ws("#", col("text"), col("copy")).as("text"))
-      // The small source parquet arrives as ONE input split and explode
-      // preserves partitioning — without this spread the whole probe runs
-      // on a single core at every parallelism level (r1 defect).
-      .repartition(spark.sparkContext.defaultParallelism * 2)
-    val sigs = docs.select(
-      Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 5), 64)
-        .as("sig"))
-    val (_, t) = time {
-      sigs.agg(sum(element_at(col("sig"), 1).cast("double"))).head()
-    }
-    t
-  }
-
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val hi = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val lo = math.max(1, hi / 4)
-    val full = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "500").toDouble
     def budgetLeft(frac: Double): Boolean = elapsed < frac * budgetSec
-    val repeats = if (full) 2 else 1
     // Measured at sf0.1: copies=16 (38M directed edges) leaves each round
     // overhead-bound — scaling efficiency 0.39; at copies=64 (148M) the
     // full-box 8->32 pair still bounced 0.72-0.88 across runs (per-round
@@ -313,13 +292,13 @@ object Bench {
     fields("sf") = "\"" + sfDir + "\""
 
     // --- per-query timings at hi parallelism, raw sf data ---
-    var spark = session(hi)
+    val spark = session(hi)
     safe("edges_raw") {
       fields("edges_raw") = CoPurchase.graph(spark, sfDir).edges.count()
         .toString
     }
     safe("headline_raw") {
-      val h = headline(CoPurchase.graph(spark, sfDir), repeats)
+      val h = headline(CoPurchase.graph(spark, sfDir), 1)
       queryTimes("g_pagerank") = h.prMin
       queryTimes("g_wcc") = h.wccMin
       putQueries(); emit()
@@ -345,12 +324,8 @@ object Bench {
         putQueries(); emit()
       }
     }
-    val tierPath = new java.io.File(
-      s"target/bench-scaled-c${math.max(1, copies / 4)}").getAbsolutePath
     safe("scaled_write") {
       writeScaledEdges(spark, sfDir, copies, scaledPath)
-      if (full) writeScaledEdges(spark, sfDir,
-        math.max(1, copies / 4), tierPath)
     }
     spark.stop()
 
@@ -372,17 +347,9 @@ object Bench {
       emit()
     }
 
-    // --- scaling ladder: identical jobs, same scaled input file.
-    // Default levels: (hi/4, hi) — the N -> 4N pair the north rule names.
-    // Full mode adds (hi/8, hi/2): both leave the 32-core box headroom, so
-    // neither saturates shared memory bandwidth — the faithful sandbox
-    // analogue of N -> 4N executors, where each executor brings its OWN
-    // bandwidth.
+    // --- scaling ladder: identical jobs, same scaled input file, at
+    // (hi/4, hi) — the N -> 4N pair the north rule names.
     var nEdges = 0L
-    var cpLoT, cpHiT = -1.0
-    val levels =
-      (if (full) Seq(math.max(1, hi / 8), lo, math.max(1, hi / 2), hi)
-       else Seq(lo, hi)).distinct
     val ladder =
       scala.collection.mutable.LinkedHashMap[Int, Headline]()
 
@@ -399,8 +366,6 @@ object Bench {
       if (ladder.contains(a) && ladder.contains(b))
         Some((eps(b) / eps(a)) / (b.toDouble / a))
       else None
-    val ladderMode =
-      scala.collection.mutable.LinkedHashMap[Int, String]()
     // Per-level pass spread (max/min within a level's identical passes).
     // Identical deterministic jobs on an idle box land within ~1.2x; a
     // spread over 2x means hypervisor steal bursts hit SOME passes, so
@@ -420,19 +385,20 @@ object Bench {
           s""""wcc_secs":[${h.wccSecs.map(fmt(_, 2)).mkString(",")}],""" +
           s""""eps":${epsMin(c).round},""" +
           s""""pass_spread":${fmt(spread(h), 2)},""" +
-          s""""mode":"${ladderMode.getOrElse(c, "?")}"}"""
+          s""""mode":"local[$c]"}"""
       }.mkString(",")
       val varianceSuspected = ladder.values.exists(spread(_) > 2.0)
-      // Every completed 4x pair (guarded — r2 hardcoded levels(3) and a
-      // small-cpu run would throw before any output landed). Both the
-      // min-folded estimate (robust to hypervisor steal bursts) and the
-      // untouched first-pass number are reported — the raw measurement
-      // stays visible next to the estimator.
-      val effs = levels.flatMap(a => levels.filter(_ == a * 4).flatMap(
-        b => effNum(a, b).map(v =>
-          s""""efficiency_${a}_${b}":${fmt(v)}""").toSeq ++
-          effNum(a, b, epsFirst).map(v =>
-            s""""efficiency_${a}_${b}_first_pass":${fmt(v)}""")))
+      // The 4x pair, once both levels completed (a small-cpu run whose hi
+      // is not 4 * lo has none). Both the min-folded estimate (robust to
+      // hypervisor steal bursts) and the untouched first-pass number are
+      // reported — the raw measurement stays visible next to the
+      // estimator.
+      val effs =
+        if (hi != lo * 4) Nil
+        else effNum(lo, hi).map(v =>
+            s""""efficiency_${lo}_${hi}":${fmt(v)}""").toSeq ++
+          effNum(lo, hi, epsFirst).map(v =>
+            s""""efficiency_${lo}_${hi}_first_pass":${fmt(v)}""")
       val resultsMatch = ladder.values
         .map(h => (h.checksum, h.wccRounds)).toSet.size == 1
       // Engine efficiency normalized by the hardware ceiling: what
@@ -460,87 +426,40 @@ object Bench {
           s""""results_match":$resultsMatch}""")
       emit()
     }
-    // Ladder levels run in-process (local[cpus]) by default.
-    // SPARK_GRAFT_EXEC_LADDER=1 switches them to REAL separate executor
-    // JVMs — (cpus / lo) executors x lo cores, so lo vs hi is literally
-    // "N executors vs 4N executors" — but on THIS single box the
-    // per-round driver->executor broadcast/RPC transport dominates at
-    // 2e8 edges (measured: the 4x8 level crawled at <2 busy cores per
-    // executor), so the timed ladder stays on threads for the driver
-    // window and real-executor evidence comes from the cheap
-    // executor-invariance section below. A failed cluster level falls
-    // back to threads automatically so the north-rule metric never
-    // vanishes.
-    val threadLadder =
-      !sys.env.get("SPARK_GRAFT_EXEC_LADDER").contains("1")
-    val execMemMb =
-      sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "16384").toInt
-    // Every level runs the SAME fixed number of passes (default 3),
-    // unconditionally and symmetrically — no value-conditioned stopping.
-    val ladderPasses =
-      sys.env.getOrElse("SPARK_GRAFT_LADDER_PASSES", "3").toInt
-    /** One ladder level: `ladderPasses` headline passes; re-runs of the
-      * same level (cluster->thread fallback) append their passes, keeping
-      * the true first pass first. */
-    def runLevel(cpus: Int, cluster: Boolean): Unit = {
-      val execs = math.max(1, cpus / lo)
-      val per = cpus / execs
-      spark =
-        if (cluster) clusterSession(execs, per, execMemMb)
-        else session(cpus)
-      val mode = if (cluster) s"${execs}x$per executors" else s"local[$cpus]"
-      safe(s"scaling_$cpus($mode)") {
-        val g = readScaledGraph(spark, scaledPath)
+    // Each level runs in-process (local[cpus]) with the SAME fixed 3
+    // passes, unconditionally and symmetrically — no value-conditioned
+    // stopping. Real-executor evidence comes from the untimed
+    // executor-invariance section below: on one box the per-round
+    // driver->executor broadcast/RPC transport dominates a timed
+    // executor-JVM ladder at 2e8 edges (measured: a 4x8 level crawled at
+    // <2 busy cores per executor).
+    for (cpus <- Seq(lo, hi).distinct) {
+      val s = session(cpus)
+      try safe(s"scaling_$cpus(local[$cpus])") {
+        val g = readScaledGraph(s, scaledPath)
         nEdges = g.edges.count()
-        val r = headline(g, ladderPasses)
+        ladder(cpus) = headline(g, 3)
         g.unload() // free the big cache before the next section
-        ladder(cpus) = ladder.get(cpus) match {
-          case Some(p) => Headline(p.prSecs ++ r.prSecs,
-            p.wccSecs ++ r.wccSecs, r.wccRounds, r.checksum)
-          case None => r
-        }
-        ladderMode(cpus) = mode
         emitScaling()
-      }
-      if (full && cpus == lo && !ladder.contains(hi) && budgetLeft(0.6))
-        safe("probe_lo") {
-          computeProbe(spark, sfDir, 2) // JIT warm-up for the probe
-          cpLoT = math.min(computeProbe(spark, sfDir, 4),
-            computeProbe(spark, sfDir, 4))
-        }
-      spark.stop()
+      } finally s.stop()
       // Level isolation: leftover garbage from the previous level's
       // cached graph otherwise lands as GC pauses inside the next
       // level's timing.
       System.gc()
     }
-    for (cpus <- levels) {
-      if (cpus == hi || cpus == lo || budgetLeft(0.8)) {
-        runLevel(cpus, cluster = !threadLadder)
-        // thread fallback if the cluster level failed to produce a number
-        if (!threadLadder && !ladder.contains(cpus))
-          runLevel(cpus, cluster = false)
-      }
-    }
-    // (r3's value-conditioned retry loop is GONE: re-measuring only while
-    // the efficiency sat outside the accepted band was selective stopping
-    // — it biased the headline toward the plausible window. The fixed
-    // symmetric 3 passes above + the steal_suspected flag replace it.)
     // Multi-executor invariance (the north rule's "two cluster sizes" on
     // REAL separate executor JVMs; reference precedent:
     // python/tests/test_scalability.py:42-56): PageRank+WCC on the raw
     // graph must produce IDENTICAL checksums on a 1-executor and a
     // 4-executor local-cluster. Cheap (raw sf, two short sessions) and
-    // untimed — correctness across cluster sizes, not throughput.
+    // untimed — correctness across cluster sizes, not throughput. Spark
+    // allows ONE active context per JVM and getOrCreate on an active
+    // session would silently IGNORE the local-cluster master, so every
+    // section above stops its session.
     if (budgetLeft(0.9)) safe("executor_invariance") {
-      // Spark allows ONE active context per JVM — getOrCreate on an
-      // active session would silently IGNORE the local-cluster master
-      // (and the checks would fraudulently run in-process). The ladder
-      // always stops its last session; make it impossible regardless.
-      if (spark != null && !spark.sparkContext.isStopped) spark.stop()
       val per = math.max(2, lo / 2)
       def chk(execs: Int): (Double, Long, Int) = {
-        val s = clusterSession(execs, per, 4096)
+        val s = clusterSession(execs, per)
         try {
           val g = CoPurchase.graph(s, sfDir)
           // vid-weighted checksums — see headline()
@@ -562,151 +481,6 @@ object Bench {
           s""""wcc_checksum":${one._2}}"""
       emit()
     }
-
-    // Later sections (tiers/probe/final stop) need an OPEN hi session —
-    // the invariance section leaves the last session stopped.
-    if (spark == null || spark.sparkContext.isStopped) spark = session(hi)
-    // Strategy-tier comparison (Strategy.Broadcast / Shuffle / CsrGather)
-    // on one quarter-size scaled graph: the same 3 PageRank rounds under
-    // each forced tier. Broadcast wins while the vertex state fits an
-    // executor; past that limit the REAL alternatives are the
-    // co-partitioned shuffle join vs the CSR block gather — the CSR tier
-    // avoids touching/sorting the edge relation per round (measured ~3x
-    // over the shuffle join at 148M edges) at the price of a one-time
-    // block build, which is what survives at 10^9+ vertices.
-    if (full && budgetLeft(0.7)) safe("scaling_tiers") {
-      val results = Seq(
-        "broadcast" -> None,
-        "shuffle" -> Some("graft.force.shuffle"),
-        "csr" -> Some("graft.force.csr")
-      ).map { case (name, prop) =>
-        prop.foreach(sys.props(_) = "true")
-        try {
-          // fresh graph instance per tier: prepared-view caches are
-          // per-instance, so tiers don't reuse each other's placement
-          val g = readScaledGraph(spark, tierPath)
-          val ne = g.edges.count()
-          PageRank.run(g, 0.85, 1).count() // prepare + JIT warmth
-          def once = time {
-            PageRank.run(g, 0.85, 3)
-              .agg(round(sum(col("rank")) * 1e6, 0)).head().getDouble(0)
-          }._2
-          val t = math.min(once, once) // min-of-2: hypervisor-noise robust
-          g.unload()
-          s""""$name":{"pr3_sec":${fmt(t, 2)},""" +
-            s""""eps":${(ne.toDouble * 3 / t).round}}"""
-        } finally prop.foreach(sys.props.remove(_))
-      }
-      fields("scaling_tiers") = results.mkString("{", ",", "}")
-      emit()
-    }
-    // Hub-skew salting probe (north rule: "salting for hub-vertex skew"):
-    // a deterministic graph with one 10M-out-edge hub over a 1M-vertex
-    // space + 20M background edges. Unsalted, the hub's whole adjacency
-    // lands in ONE CSR block (~16x the median block — a straggler task
-    // while the other cores idle); salted at threshold 2M it splits
-    // across k=5 pid slots. Same sum scan, same result, timed both ways.
-    if (full && budgetLeft(0.8)) safe("skew_salting") {
-      import graft.graph.EdgeBlocks
-      val p = spark.sparkContext.defaultParallelism
-      val v = 1000000L
-      val bg = spark.range(20000000L).select(
-        pmod(xxhash64(col("id"), lit(1)), lit(v)).as("src"),
-        pmod(xxhash64(col("id"), lit(2)), lit(v)).as("dst"))
-      val hubDeg = 10000000L
-      val hub = spark.range(hubDeg).select(lit(0L).as("src"),
-        pmod(xxhash64(col("id"), lit(3)), lit(v)).as("dst"))
-      val edges = bg.unionByName(hub).where(col("src") =!= col("dst"))
-        .repartition(p * 2).persist()
-      val ne = edges.count()
-      val state = spark.range(v).select(col("id").as("vid"),
-        lit(1.0).as("value")).persist()
-      state.count()
-      // state values are 1.0 and every per-dst sum is an exact
-      // integer-valued double (< 2^53), so the total is order-independent
-      // and the salted/unsalted checksums compare EXACTLY.
-      def gatherChk(csr: EdgeBlocks.CsrGraph): (Double, Double) =
-        time {
-          EdgeBlocks.scan(csr, EdgeBlocks.Combine.Sum, state, p)
-            .agg(sum(col("msg"))).head().getDouble(0)
-        }.swap
-      def packed(salts: Option[DataFrame]) = {
-        val b = EdgeBlocks.build(edges, p, salts).persist()
-        b.count()
-        EdgeBlocks.CsrGraph(b, salts)
-      }
-      val plain = packed(None)
-      val (tPlain, chkPlain) = Seq.fill(3)(gatherChk(plain)).minBy(_._1)
-      plain.unpersist()
-      val salts = EdgeBlocks.hubSalts(edges, 2000000L, p)
-      val k = salts.map(_.where(col("vid") === 0L).head().getInt(1))
-        .getOrElse(1)
-      val salted = packed(salts)
-      val (tSalted, chkSalted) = Seq.fill(3)(gatherChk(salted)).minBy(_._1)
-      salted.unpersist()
-      edges.unpersist(); state.unpersist()
-      fields("skew_salting") =
-        s"""{"edges":$ne,"hub_degree":$hubDeg,"salt_k":$k,""" +
-          s""""unsalted_gather_sec":${fmt(tPlain, 2)},""" +
-          s""""salted_gather_sec":${fmt(tSalted, 2)},""" +
-          s""""speedup":${fmt(tPlain / tSalted, 2)},""" +
-          s""""results_match":${chkPlain == chkSalted}}"""
-      emit()
-    }
-    if (full && cpLoT > 0 && budgetLeft(0.85)) safe("probe_hi") {
-      computeProbe(spark, sfDir, 2)
-      cpHiT = math.min(computeProbe(spark, sfDir, 4),
-        computeProbe(spark, sfDir, 4))
-      if (cpLoT > 0 && cpHiT > 0) {
-        fields("scaling_compute") =
-          s"""{"minhash_sec_lo":${fmt(cpLoT, 2)},""" +
-          s""""minhash_sec_hi":${fmt(cpHiT, 2)},""" +
-          s""""efficiency":${fmt((cpLoT / cpHiT) / (hi.toDouble / lo))}}"""
-      }
-    }
-    // EXPERIMENTAL timed executor-JVM ladder (FULL only): the same
-    // PageRank+WCC headline on the quarter-size scaled graph at 1 vs 4
-    // REAL executor JVMs (lo cores each, own heap/GC, serialized
-    // driver<->executor transport) — literally the north rule's "N vs 4N
-    // executors", the evidence class the thread ladder can't provide.
-    // Caveat (documented, why this is flagged experimental and runs on
-    // the SMALLER graph): on this single box all executor JVMs share one
-    // memory bus and the per-round broadcast/RPC hop is cross-process
-    // loopback, so absolute eps is transport-bound and NOT comparable to
-    // the thread ladder's — only the 1->4 ratio on identical bytes is
-    // meaningful, and even it understates a real cluster where each
-    // executor brings its own memory bandwidth and NIC.
-    if (full && budgetLeft(0.9)) safe("exec_ladder") {
-      if (spark != null && !spark.sparkContext.isStopped) spark.stop()
-      val runs = Seq(1, 4).map { execs =>
-        val s = clusterSession(execs, lo, execMemMb)
-        try {
-          val g = readScaledGraph(s, tierPath)
-          val ne = g.edges.count()
-          val h = headline(g, 2)
-          g.unload()
-          (execs, ne, h)
-        } finally { s.stop(); System.gc() }
-      }
-      def eps(r: (Int, Long, Headline)): Double =
-        r._2.toDouble * (10 + r._3.wccRounds) / (r._3.prMin + r._3.wccMin)
-      val eff = (eps(runs(1)) / eps(runs(0))) / 4.0
-      val entries = runs.map { case r @ (e, _, h) =>
-        s""""e$e":{"pr_sec":${fmt(h.prMin, 2)},""" +
-          s""""wcc_sec":${fmt(h.wccMin, 2)},""" +
-          s""""eps":${eps(r).round}}"""
-      }
-      val matches = runs.map(r => (r._3.checksum, r._3.wccRounds))
-        .toSet.size == 1
-      fields("exec_ladder") =
-        s"""{"experimental":true,"transport_bound":true,""" +
-          s""""edges":${runs.head._2},"cores_per_executor":$lo,""" +
-          entries.mkString(",") + "," +
-          s""""efficiency_1_4":${fmt(eff)},""" +
-          s""""results_match":$matches}"""
-      emit()
-    }
-    if (spark != null && !spark.sparkContext.isStopped) spark.stop()
     putQueries(); emit()
     System.err.println(f"[bench] done in ${elapsed}%.1fs")
     sys.exit(0)

@@ -150,8 +150,8 @@ object EdgeBlocks {
 
   /** Salt-table default: split a src only when its out-degree exceeds 8M
     * edges (a meaningful fraction of a 10^12/32k ≈ 3e7-edge block; at
-    * test scale nothing triggers). Override with -Dgraft.salt.threshold
-    * for benches and specs. */
+    * test scale nothing triggers). Specs override it with
+    * -Dgraft.salt.threshold. */
   def saltThreshold: Long =
     sys.props.get("graft.salt.threshold").map(_.toLong)
       .getOrElse(8L * 1000 * 1000)
@@ -281,12 +281,19 @@ object EdgeBlocks {
       .repartition(p, col("pid"))
   }
 
-  /** Salt, build, cache and materialize the blocks of an edge view. */
+  /** Salt, build, cache and materialize the blocks of an edge view. The
+    * salt table and the blocks each read the view, so a view that does
+    * not read stored rows already (e.g. `und`'s union + distinct) is
+    * cached for the pack and released once the blocks hold its rows. */
   def pack(edges: DataFrame, p: Int): CsrGraph = {
-    val salts = hubSalts(edges, saltThreshold, p)
-    val b = build(edges, p, salts).persist()
-    b.count()
-    CsrGraph(b, salts)
+    val own = SimpleGraph.storedLeaf(edges).isEmpty
+    if (own) edges.persist()
+    try {
+      val salts = hubSalts(edges, saltThreshold, p)
+      val b = build(edges, p, salts).persist()
+      b.count()
+      CsrGraph(b, salts)
+    } finally if (own) edges.unpersist()
   }
 
   /** A state row inside a bundle: the value rides in `lv` for the long

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, LineageCut, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
@@ -263,39 +264,36 @@ final case class SimpleGraph(
     * algorithm result column to the vertices. */
   def addColumn(result: DataFrame): SimpleGraph =
     copy(vertices = vertices.join(result, Seq("vid"), "left"))
-
-  /** Hash-partition edges by src and cache — the analogue of the reference's
-    * edge-cut fragment placement (arrow_fragment_loader.h:65). Iterative apps
-    * call this once so the per-superstep `join(state, "src")` reuses the
-    * exchange instead of reshuffling the (large) edge side every round. */
-  def partitioned(numPartitions: Int): SimpleGraph = {
-    val e = edges.repartition(numPartitions, col("src"))
-    val v = vertices.repartition(numPartitions, col("vid"))
-    SimpleGraph(v, e, directed)
-  }
 }
 
 object SimpleGraph {
+  /** The stored rows `df` reads through column selections and renames
+    * only — a cached frame's relation or a lineage cut's leaf — if any. */
+  private[graph] def storedLeaf(df: DataFrame): Option[LogicalPlan] = {
+    def leaf(plan: LogicalPlan): Option[LogicalPlan] = plan match {
+      case _: InMemoryRelation | _: LogicalRDD => Some(plan)
+      case Project(list, child) if list.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } => leaf(child)
+      case _ => None
+    }
+    leaf(df.queryExecution.optimizedPlan)
+  }
+
   /** Whether `df` reads a cached frame through column selections and
     * renames only, and its rows are hash-partitioned by `key` into `p`
     * partitions. */
   private def placed(df: DataFrame, key: String, p: Int): Boolean = {
     val qe = df.queryExecution
-    def cached(plan: LogicalPlan): Boolean = plan match {
-      case _: InMemoryRelation => true
-      case Project(list, child) => list.forall {
-        case _: Attribute | Alias(_: Attribute, _) => true
+    storedLeaf(df).exists(_.isInstanceOf[InMemoryRelation]) &&
+      (qe.executedPlan.outputPartitioning match {
+        case h: HashPartitioning => h.numPartitions == p &&
+          h.expressions.size == 1 &&
+          qe.executedPlan.output.exists(a =>
+            a.name == key && a.semanticEquals(h.expressions.head))
         case _ => false
-      } && cached(child)
-      case _ => false
-    }
-    cached(qe.optimizedPlan) && (qe.executedPlan.outputPartitioning match {
-      case h: HashPartitioning => h.numPartitions == p &&
-        h.expressions.size == 1 &&
-        qe.executedPlan.output.exists(a =>
-          a.name == key && a.semanticEquals(h.expressions.head))
-      case _ => false
-    })
+      })
   }
 
   private[graph] def reverseEdges(edges: DataFrame): DataFrame = {

@@ -22,9 +22,8 @@ import org.apache.spark.sql.functions.broadcast
   *      arrays locally. Mirrors the reference fragment's CSR layout
   *      (arrow_projected_fragment.h:431-470).
   *
-  * [[EdgeBlocks.superstep]] plans each tier's gather. Overrides for
-  * testing/benching: -Dgraft.force.shuffle pins tier 2, -Dgraft.force.csr
-  * pins tier 3.
+  * [[EdgeBlocks.superstep]] plans each tier's gather. Test overrides:
+  * -Dgraft.force.shuffle pins tier 2, -Dgraft.force.csr pins tier 3.
   */
 object Strategy {
 

@@ -1,9 +1,10 @@
 package graft
 
-import graft.graph.{EdgeBlocks, Strategy}
+import graft.graph.{EdgeBlocks, SimpleGraph, Strategy}
 import graft.graph.EdgeBlocks.Combine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import scala.util.Random
 
@@ -152,6 +153,34 @@ class EdgeBlocksSpec extends SparkSpec {
         s"salted $c")
     }
     salts.foreach(_.unpersist())
+  }
+
+  test("packing und of a non-simple graph runs its dedup exchange once " +
+      "and keeps only the blocks") {
+    val g = SimpleGraph(
+      Seq(0L, 1L, 2L, 3L, 4L).toDF("vid"),
+      Seq((0L, 1L), (1L, 0L), (1L, 2L), (1L, 2L), (2L, 2L), (2L, 3L),
+        (3L, 4L), (4L, 0L), (4L, 3L)).toDF("src", "dst"),
+      directed = true)
+    var csr: EdgeBlocks.CsrGraph = null
+    var stages = Seq.empty[Set[String]]
+    val held = heldBy {
+      stages = stageScopesDuring { csr = g.preparedBlocks("und", 4) }
+    }
+    try {
+      // the union + distinct's map side is the one stage with a Union
+      assert(stages.count(_.contains("Union")) == 1, stages.mkString("\n"))
+      assert(g.undirectedDedup.storageLevel == StorageLevel.NONE,
+        "the view stays cached after the pack")
+      assert(held.size == 1, s"held: $held")
+      val packed = csr.blocks.collect().toSeq.flatMap { b =>
+        b.srcIds.indices.flatMap(i =>
+          (b.dstOffsets(i) until b.dstOffsets(i + 1)).map(j =>
+            (b.srcIds(i), b.dstUnique(b.dstIndex(j)))))
+      }
+      assert(packed.sorted ==
+        g.undirectedDedup.as[(Long, Long)].collect().toSeq.sorted)
+    } finally g.unload()
   }
 
   test("empty state and disjoint state both gather to zero rows") {

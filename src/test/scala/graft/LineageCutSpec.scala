@@ -160,4 +160,38 @@ class LineageCutSpec extends SparkSpec {
     assert(hits.isEmpty,
       s"a second write path in src/main:\n${hits.mkString("\n")}")
   }
+
+  test("src/main reads only the listed system properties and environment " +
+      "variables, each by a literal key") {
+    val knobs = Set(
+      // tier and threshold overrides that specs set
+      "graft.force.shuffle", "graft.force.csr",
+      "graft.frontier.broadcast.max", "graft.salt.threshold",
+      // graft.Bench, graft.Verify and graft.Submit
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SCALE_COPIES",
+      "SPARK_GRAFT_BENCH_BUDGET", "SPARK_GRAFT_BENCH_OUT",
+      "SPARK_GRAFT_TIME_BUDGET", "SPARK_GRAFT_VERIFY_THREADS")
+    val access = """\b(?:sys\.(?:props|env)|System\.get(?:Property|env))\b""".r
+    val literal = ("""(?:sys\.(?:props|env)(?:\.(?:get|getOrElse|contains))?""" +
+      """|System\.get(?:Property|env))\s*\(\s*"([^"]+)"""").r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val reads = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val text = Files.readString(p)
+        access.findAllMatchIn(text).map { m =>
+          val at = s"$p:${text.take(m.start).count(_ == '\n') + 1}"
+          at -> literal.findPrefixMatchOf(text.substring(m.start))
+            .map(_.group(1))
+        }
+      }.toList
+    val unkeyed = reads.collect { case (at, None) => at }
+    val read = reads.flatMap(_._2).toSet
+    def names(keys: Set[String]) = keys.toSeq.sorted.mkString(", ")
+    assert(unkeyed.isEmpty && read == knobs,
+      s"reads without a literal key: ${unkeyed.mkString(", ")}; " +
+        s"unlisted: ${names(read -- knobs)}; " +
+        s"listed but never read: ${names(knobs -- read)}")
+  }
 }

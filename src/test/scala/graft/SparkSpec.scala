@@ -7,7 +7,7 @@ import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
+  SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.SQLExecution
@@ -68,7 +68,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * inherit the caller's local properties). A marker job started
     * afterwards flushes the listener queue, which delivers in order. */
   def jobsDuring(f: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
     val actions = new ConcurrentHashMap[String, String]()
     val seen = new ConcurrentLinkedQueue[(String, String)]()
@@ -88,6 +87,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
                 .flatMap(id => Option(actions.get(id))).getOrElse(own))
           }
     }
+    listening(listener, tag, () => seen.asScala.exists(_._1 == "marker"))(f)
+    seen.asScala.toSeq.collect { case (`tag`, site) => site }
+  }
+
+  /** The RDD operation scopes (the physical operators' names: "Union",
+    * "Exchange", "HashAggregate", ...) of each stage that the jobs the
+    * calling thread starts while `f` runs submit, in submission order. A
+    * stage whose shuffle output already exists is skipped, not
+    * submitted. */
+  def stageScopesDuring(f: => Unit): Seq[Set[String]] = {
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[(String, Set[String])]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("jobs.tag")))
+          .foreach(t => seen.add(t ->
+            e.stageInfo.rddInfos.flatMap(_.scope).map(_.name).toSet))
+    }
+    listening(listener, tag, () => seen.asScala.exists(_._1 == "marker"))(f)
+    seen.asScala.toSeq.collect { case (`tag`, scopes) => scopes }
+  }
+
+  /** Runs `f` with `listener` registered and the calling thread's jobs
+    * tagged `tag` (local property "jobs.tag"), then runs a job tagged
+    * "marker" and waits until `sawMarker` — the listener queue delivers
+    * in order, so every event of `f` has been handled by then. */
+  private def listening(listener: SparkListener, tag: String,
+      sawMarker: () => Boolean)(f: => Unit): Unit = {
+    val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty("jobs.tag", tag)
@@ -95,11 +123,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setLocalProperty("jobs.tag", "marker")
       sc.parallelize(Seq(1), 1).count()
       val deadline = System.currentTimeMillis() + 60000
-      while (!seen.asScala.exists(_._1 == "marker") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.asScala.exists(_._1 == "marker"),
-        "listener never saw the marker job")
-      seen.asScala.toSeq.collect { case (`tag`, site) => site }
+      while (!sawMarker() && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(sawMarker(), "listener never saw the marker job")
     } finally {
       sc.setLocalProperty("jobs.tag", null)
       sc.removeSparkListener(listener)
