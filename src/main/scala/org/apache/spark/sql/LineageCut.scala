@@ -4,7 +4,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
-  Expression, SortOrder}
+  Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning,
   UnknownPartitioning}
@@ -13,19 +13,26 @@ import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec,
   SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.{Platform, UnsafeAlignedOffset}
 
 /** graft's one lineage cut: the in-memory checkpoint of Spark's eager
   * `Dataset.localCheckpoint(eager = true)` that also counts the frame it
   * cuts and computes its declared reductions, in the same job.
   *
-  * The result equals Spark's eager local checkpoint: same rows, same schema
-  * (nullability included), same storage level, and the same output
-  * partitioning, so a state hash-partitioned by `vid` joins the next
-  * round's messages without an exchange on its side. What it drops is
-  * the driver work of a Dataset action, which dominates a superstep on
-  * small graphs: no SQL execution is opened (no explain string, no SQL
-  * tab entry; session confs still reach the tasks), the row copy is a
-  * `mapPartitionsInternal` (no closure scan), and the one job's function
+  * The cut frame equals Spark's eager local checkpoint in its rows, schema
+  * (nullability included), output partitioning and ordering, so a state
+  * hash-partitioned by `vid` joins the next round's messages without an
+  * exchange on its side. Its storage is packed: each partition is kept,
+  * at Spark's local checkpoint level (`MEMORY_AND_DISK`), as a few byte
+  * chunks of consecutive `(size, UnsafeRow bytes)` records, each chunk
+  * closing at [[ChunkBytes]], instead of as one stored object per row,
+  * whose size the block store would estimate by walking sampled rows.
+  * The cut frame's leaf reads a view that yields rows pointing into the
+  * stored chunks; reading copies nothing. What the cut drops is the
+  * driver work of a Dataset action, which dominates a superstep on small
+  * graphs: no SQL execution is opened (no explain string, no SQL tab
+  * entry; session confs still reach the tasks), the pack and the view are
+  * `mapPartitionsInternal`s (no closure scan), and the one job's function
   * is declared in this small object, so Spark's closure cleaner parses
   * this class file instead of `Dataset`'s, `RDD`'s or `SparkContext`'s.
   *
@@ -98,8 +105,10 @@ object LineageCut {
         (r, i, t)
       }
     SQLExecution.withSQLConfPropagated(session) {
-      val rdd = plan.execute().mapPartitionsInternal(_.map(_.copy()))
-      rdd.localCheckpoint()
+      val chunks = plan.execute().mapPartitionsInternal(pack(plan.schema))
+      chunks.localCheckpoint()
+      val width = plan.output.size
+      val rdd = chunks.mapPartitionsInternal(_.flatMap(unpack(_, width)))
       val parts = new Array[Part](rdd.partitions.length)
       session.sparkContext.runJob(rdd, counter(columns, sink),
         rdd.partitions.indices, (i: Int, p: Part) => parts(i) = p)
@@ -134,8 +143,11 @@ object LineageCut {
     * the plan assumed none, an ordering that satisfies the old one),
     * every analyzed occurrence to reach the executed plan as a visible
     * scan (not hidden in a cached relation or an adaptive plan), and no
-    * reused exchange or subquery. Otherwise the round plans the swapped
-    * analyzed plan, and that plan becomes the one later rounds reuse.
+    * reused exchange or subquery. Otherwise, or when the new cut is
+    * ordered more strongly than the old one (round 2's state, sorted by
+    * round 1's `vid` join, against the unordered initial state), the round
+    * plans the swapped analyzed plan, and that plan becomes the one later
+    * rounds reuse.
     *
     * The kept plans hold the RDD object of the cut they were built over,
     * never its blocks. A frame with a nondeterministic expression has no
@@ -167,7 +179,7 @@ object LineageCut {
     def localCheckpoint(state: DataFrame, reduce: Seq[Reduction],
         sink: Option[LineageWriter.Sink[_]] = None): Cut = {
       val to = leafOf(state)
-      val plan = swapped(to).getOrElse {
+      val plan = swapped(to).filterNot(_ => sharper(to)).getOrElse {
         if (!(to.rdd eq from))
           anchor(classic.Dataset.ofRows(ds.sparkSession, over(to)), to.rdd)
         swapped(to).getOrElse(ds.queryExecution.executedPlan)
@@ -198,6 +210,18 @@ object LineageCut {
         }
         Option.when(placed)(plan)
       }
+
+    /** Whether `to` is ordered more strongly than a state scan of the kept
+      * plan expects, e.g. a later round's cut, sorted by the `vid` join that
+      * made it, against round 1's unordered initial state: planned over
+      * `to`, a round needs no sort of the state. */
+    private def sharper(to: LogicalRDD): Boolean = executed.exists {
+      case s: RDDScanExec if s.rdd eq from =>
+        val m = AttributeMap(to.output.zip(s.output))
+        !SortOrder.orderingSatisfies(s.outputOrdering,
+          to.outputOrdering.map(rewrite(_, m)))
+      case _ => false
+    }
 
     /** The analyzed plan with `to` in place of the state's leaf, marked
       * analyzed. */
@@ -247,16 +271,87 @@ object LineageCut {
   }
 
   /** Releases the storage behind a cut frame, one [[localCheckpoint]]
-    * returned; a frame that is not a scan of one RDD is left alone. Only
+    * returned: its [[stored]] chunks; any other frame is left alone. Only
     * the owner of a cut releases it: a frame still planned over the cut
     * can no longer be read. The blocks are dropped through the context,
     * not `RDD.unpersist`, which warns for every locally checkpointed RDD
     * that its lineage is gone: for a cut that is the point. */
-  def release(cut: DataFrame): Unit = castToImpl(cut).logicalPlan match {
-    case r: LogicalRDD =>
-      r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
-    case _ =>
+  def release(cut: DataFrame): Unit = stored(cut).foreach { c =>
+    c.sparkContext.unpersistRDD(c.id, blocking = false)
   }
+
+  /** The stored chunk RDD behind a cut frame's leaf; None for a frame that
+    * is not a scan of a view over a checkpointed RDD. */
+  def stored(cut: DataFrame): Option[RDD[_]] =
+    castToImpl(cut).logicalPlan match {
+      case r: LogicalRDD => r.rdd.dependencies match {
+        case Seq(d) if d.rdd.isCheckpointedAndMaterialized => Some(d.rdd)
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** The byte bound at which a packed chunk closes. A chunk always takes
+    * its first record, so a row larger than the bound is a chunk of its
+    * own; no other chunk exceeds it. */
+  val ChunkBytes: Int = 1 << 20
+
+  /** The bytes of a record's size field: an int, or a long where the
+    * platform reads unaligned words slowly (as Spark's sorter pages). */
+  private val SizeBytes = UnsafeAlignedOffset.getUaoSize
+
+  /** Packs a partition's rows into chunks of consecutive `(size, UnsafeRow
+    * bytes)` records; a row that is not an `UnsafeRow` is projected to one
+    * first. Each chunk is trimmed to its records, and the buffer it is
+    * built in is reused for the next one. */
+  private def pack(schema: StructType)
+      : Iterator[InternalRow] => Iterator[Array[Byte]] = rows =>
+    new Iterator[Array[Byte]] {
+      private var buf = new Array[Byte](64 << 10)
+      private var pending: UnsafeRow = _
+      private lazy val project = UnsafeProjection.create(schema)
+
+      def hasNext: Boolean = pending != null || rows.hasNext
+
+      def next(): Array[Byte] = {
+        var len = 0
+        def take(): Boolean = {
+          if (pending == null) pending = rows.next() match {
+            case u: UnsafeRow => u
+            case r => project(r)
+          }
+          len == 0 || len + SizeBytes + pending.getSizeInBytes <= ChunkBytes
+        }
+        while (hasNext && take()) {
+          val size = pending.getSizeInBytes
+          val end = len + SizeBytes + size
+          if (end > buf.length) buf = java.util.Arrays.copyOf(buf,
+            math.max(end, math.min(buf.length.toLong * 2, ChunkBytes).toInt))
+          val at = Platform.BYTE_ARRAY_OFFSET + len
+          UnsafeAlignedOffset.putSize(buf, at, size)
+          pending.writeToMemory(buf, at + SizeBytes)
+          pending = null
+          len = end
+        }
+        java.util.Arrays.copyOf(buf, len)
+      }
+    }
+
+  /** The rows of a packed chunk, each an `UnsafeRow` of `width` fields
+    * over the chunk's bytes. */
+  private def unpack(chunk: Array[Byte], width: Int): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private var at = 0
+      def hasNext: Boolean = at < chunk.length
+      def next(): InternalRow = {
+        val base = Platform.BYTE_ARRAY_OFFSET + at
+        val size = UnsafeAlignedOffset.getSize(chunk, base)
+        val row = new UnsafeRow(width)
+        row.pointTo(chunk, base + SizeBytes, size)
+        at += SizeBytes + size
+        row
+      }
+    }
 
   /** Feeds column `i`'s non-null values to `acc`, with the getter of its
     * type chosen once, not per row; a boolean reads as 0/1. */

@@ -154,8 +154,9 @@ class IterateSpec extends SparkSpec {
         (s, _) => s.select(col("vid"), (col("n") + 1).as("n")),
         stop = Iterate.fixedRounds)
     }
+    // a cut's storage is the chunk RDD its leaf's view reads
     val last = res.state.queryExecution.logical
-      .collect { case r: LogicalRDD => r.rdd.id }
+      .collect { case r: LogicalRDD => r.rdd.dependencies.head.rdd.id }
     assert(held.keySet == last.toSet && held.size == 1,
       s"held $held, final state's cut $last")
     assert(res.state.agg(sum("n")).head().getLong(0) == 8L * 5)

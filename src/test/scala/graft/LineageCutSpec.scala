@@ -3,10 +3,19 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.pregel.Iterate
-import org.apache.spark.sql.{DataFrame, LineageCut}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, LineageCut, Row}
 import org.apache.spark.sql.LineageCut.{Max, Min, Sum}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute,
+  GenericInternalRow, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+  LogicalPlan}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.{LeafExecNode, LogicalRDD, SparkPlan,
+  SparkStrategy}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.UnsafeAlignedOffset
 import scala.jdk.CollectionConverters._
 
 /** The engine's one lineage cut ([[LineageCut]]) against Spark's eager
@@ -22,21 +31,126 @@ class LineageCutSpec extends SparkSpec {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
+  /** A collected value compared exactly: a double by its bits (NaN and
+    * -0.0 included), binary by content, nested values likewise. */
+  private def exact(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(exact)
+    case s: scala.collection.Seq[_] => s.map(exact)
+    case m: scala.collection.Map[_, _] =>
+      m.map(kv => exact(kv._1) -> exact(kv._2))
+    case x => x
+  }
+
+  /** The rows of a frame with their partition ids, in the order a scan of
+    * the frame yields them. */
+  private def placed(df: DataFrame): Seq[Any] =
+    df.select(spark_partition_id().as("pid"), struct(col("*")).as("r"))
+      .collect().toSeq.map(exact)
+
+  /** Asserts that `df`'s cut equals Spark's eager local checkpoint of it:
+    * rows (each in the same partition), schema, output partitioning and
+    * ordering. Returns the cut and the checkpoint. */
+  private def assertCutsLikeSpark(df: DataFrame)
+      : (LineageCut.Cut, DataFrame) = {
+    val ref = df.localCheckpoint(true)
+    val cut = LineageCut.localCheckpoint(df)
+    assert(cut.rows == ref.count())
+    assert(placed(cut.df).sortBy(_.toString) ==
+      placed(ref).sortBy(_.toString))
+    assert(cut.df.schema == ref.schema)
+    val (plan, want) = (cut.df.queryExecution.executedPlan,
+      ref.queryExecution.executedPlan)
+    assert(plan.outputPartitioning == want.outputPartitioning)
+    assert(plan.outputOrdering.map(_.sql) == want.outputOrdering.map(_.sql))
+    (cut, ref)
+  }
+
   test("rows, schema and output partitioning equal Spark's local " +
       "checkpoint") {
     val df = (0L until 50L).map(v => (v, if (v % 3 == 0) None else Some(v)))
       .toDF("vid", "x")
-      .select(col("vid"), col("x"), array(col("vid")).as("a"))
-      .repartition(4, col("vid"))
-    val ref = df.localCheckpoint(true)
-    val cut = LineageCut.localCheckpoint(df)
+      .select(col("vid"), col("x"), array(col("vid")).as("a"),
+        when(col("vid") % 5 =!= 0, concat(lit("s"), col("vid"))).as("s"))
+      .select(col("*"), col("s").cast("binary").as("b"),
+        (col("vid") * lit(BigDecimal("1.25"))).cast("decimal(10,2)").as("dc"),
+        (col("vid") * lit(BigDecimal("1.25"))).cast("decimal(38,10)").as("dw"),
+        map(col("vid"), col("s")).as("m"), struct(col("x"), col("s")).as("st"),
+        lit(null).as("n"), element_at(array(lit(Double.NaN), lit(-0.0),
+          lit(0.0), lit(1.5)), (col("vid") % 4 + 1).cast("int")).as("d"))
+      .repartition(4, col("vid")).sortWithinPartitions("vid")
+    val (cut, ref) = assertCutsLikeSpark(df)
     assert(cut.rows == 50L && cut.changed == -1L)
-    assertSameRows(cut.df, ref)
-    assert(cut.df.schema == ref.schema)
     assert(!cut.df.schema("vid").nullable && cut.df.schema("x").nullable)
-    val part = cut.df.queryExecution.executedPlan.outputPartitioning
-    assert(part == ref.queryExecution.executedPlan.outputPartitioning)
-    assert(part.numPartitions == 4, part)
+    val plan = cut.df.queryExecution.executedPlan
+    assert(plan.outputPartitioning.numPartitions == 4 &&
+      plan.outputOrdering.nonEmpty, plan)
+    // sorted by vid within each partition, so also in the same order
+    assert(placed(cut.df) == placed(ref))
+    // -0.0 and NaN keep their bits
+    val d = cut.df.select("d").as[Double].collect()
+    assert(d.exists(_.isNaN) && d.exists(x => 1.0 / x < 0))
+  }
+
+  test("a cut stores empty partitions and a frame with no rows") {
+    val df = (0L until 3L).toDF("vid").repartition(8, col("vid"))
+    val (cut, _) = assertCutsLikeSpark(df)
+    assert(cut.partitions == 8 && cut.rows == 3L)
+    val sizes = cut.df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.count(_ == 0) >= 5, sizes.toSeq)
+    val (none, _) = assertCutsLikeSpark(df.where(lit(false)))
+    assert(none.rows == 0L && none.df.collect().isEmpty)
+  }
+
+  test("a partition spans several chunks; only a row larger than the " +
+      "bound makes a larger chunk") {
+    val big = LineageCut.ChunkBytes / 3
+    val df = (0L until 10L).toDF("vid")
+      .select(col("vid"), expr(s"repeat('x', $big + cast(vid as int))")
+        .as("s"))
+      .union(Seq((10L, "y" * (LineageCut.ChunkBytes + 1))).toDF("vid", "s"))
+      .repartition(1)
+    val (cut, _) = assertCutsLikeSpark(df)
+    val chunks = LineageCut.stored(cut.df).getOrElse(fail("no stored chunks"))
+      .asInstanceOf[RDD[Array[Byte]]].map(_.length).collect()
+    assert(chunks.length >= 4 &&
+      chunks.count(_ > LineageCut.ChunkBytes) == 1, chunks.toSeq)
+  }
+
+  test("a plan that emits rows other than UnsafeRows is packed through " +
+      "a projection") {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val keep = session.experimental.extraStrategies
+    session.experimental.extraStrategies = keep :+ GenericRowsStrategy
+    try {
+      val df = (0L until 20L).map(v => (v, if (v % 4 == 0) null else s"r$v"))
+        .toDF(GenericRowsStrategy.Marker, "s")
+      val kinds = df.queryExecution.executedPlan.execute()
+        .map(_.isInstanceOf[UnsafeRow]).collect().toSet
+      assert(kinds == Set(false), s"the plan emits UnsafeRows: $kinds\n" +
+        df.queryExecution.executedPlan)
+      val (cut, _) = assertCutsLikeSpark(df)
+      assert(cut.rows == 20L)
+    } finally session.experimental.extraStrategies = keep
+  }
+
+  test("a cut's storage is its packed records: 100k (vid, x) rows hold " +
+      "their bytes within 10% plus 1 KB per partition") {
+    val sc = spark.sparkContext
+    val n = 100000L
+    val df = spark.range(0L, n, 1L, 4)
+      .select(col("id").as("vid"), (col("id") * 0.5).as("x"))
+    val mark = sc.emptyRDD[Int].id
+    val cut = LineageCut.localCheckpoint(df)
+    val Seq(info) = sc.getRDDStorageInfo.filter(_.id > mark).toSeq
+    // a record is its size field and the row: a null bitset word and two
+    // 8-byte fields
+    val packed = n * (UnsafeAlignedOffset.getUaoSize + 24)
+    assert(info.diskSize == 0L && math.abs(info.memSize - packed) <=
+      packed / 10 + 1024L * cut.partitions,
+      s"${info.memSize} bytes stored for $packed packed bytes")
+    LineageCut.release(cut.df)
   }
 
   test("the cut frame's plan is a LogicalRDD leaf") {
@@ -193,5 +307,27 @@ class LineageCutSpec extends SparkSpec {
       s"reads without a literal key: ${unkeyed.mkString(", ")}; " +
         s"unlisted: ${names(read -- knobs)}; " +
         s"listed but never read: ${names(knobs -- read)}")
+  }
+}
+
+/** Plans a local relation whose first column is named [[Marker]] as a scan
+  * that emits its rows as `GenericInternalRow`s, as no built-in operator
+  * of Spark's executed plans does. */
+object GenericRowsStrategy extends SparkStrategy {
+  val Marker = "generic_vid"
+
+  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case l: LocalRelation if l.output.headOption.exists(_.name == Marker) =>
+      GenericRowsExec(l.output, l.data) :: Nil
+    case _ => Nil
+  }
+
+  final case class GenericRowsExec(output: Seq[Attribute],
+      rows: Seq[InternalRow]) extends LeafExecNode {
+    protected def doExecute(): RDD[InternalRow] = {
+      val types = output.map(_.dataType)
+      sparkContext.parallelize(
+        rows.map(r => new GenericInternalRow(r.toSeq(types).toArray)), 2)
+    }
   }
 }

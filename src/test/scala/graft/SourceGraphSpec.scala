@@ -115,8 +115,9 @@ class SourceGraphSpec extends SparkSpec {
     val rg = GraphBuilder.build(held)
     val g = rg.simple()
     assert(PageRank.run(g, maxRound = 2).count() == g.numVertices)
+    // a cut's storage is the chunk RDD its leaf's view reads
     val Seq(dict) = rg.vertices.queryExecution.logical
-      .collect { case r: LogicalRDD => r.rdd.id }
+      .collect { case r: LogicalRDD => r.rdd.dependencies.head.rdd.id }
     assert(sc.getPersistentRDDs.contains(dict) && rg.edges.storageLevel.isValid)
     g.unload()
     assert(!sc.getPersistentRDDs.contains(dict),

@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import graft.graph.SimpleGraph
 import graft.graph.EdgeBlocks.Combine
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -79,6 +79,46 @@ class SuperstepPlanSpec extends graft.SparkSpec {
       // and round 2 cuts the rows its own plan would
       assert(rows(ss.localCheckpoint(c1.df, Nil).df) ==
         rows(LineageCut.localCheckpoint(step(c1.df)).df))
+    }
+  }
+
+  test("round 2 is planned once over its vid-ordered cut, without " +
+      "analysis; from round 3 a round reuses that plan, which does not " +
+      "sort the state") {
+    hintedOnly {
+      def stateSorts(plan: SparkPlan) = plan
+        .collectFirst { case j: SortMergeJoinExec => j.left }
+        .getOrElse(fail(s"no sort-merge join in\n$plan"))
+        .collect { case s: SortExec => s }
+      /** The analyzer and optimizer passes of `f`. */
+      def passes(f: => Unit): (Long, Long) = {
+        var optimized = 0L
+        val analyzed =
+          analyzerPasses { optimized = ruleRuns("ColumnPruning")(f) }
+        (analyzed, optimized)
+      }
+      val s0 = start
+      val ss = LineageCut.superstep(step(s0), s0)
+        .getOrElse(fail("no superstep"))
+      // the initial state is not ordered: round 1 sorts it
+      val r1 = ss.swapped(LineageCut.leafOf(s0)).getOrElse(fail("replans"))
+      assert(stateSorts(r1).nonEmpty, r1)
+      val c1 = ss.localCheckpoint(s0, Nil)
+      assert(c1.df.queryExecution.executedPlan.outputOrdering.nonEmpty)
+      var c2: LineageCut.Cut = null
+      val (a2, o2) = passes { c2 = ss.localCheckpoint(c1.df, Nil) }
+      assert(a2 == 0 && o2 > 0, s"round 2: ($a2, $o2) passes")
+      var c = c2
+      for (round <- 3 to 4) {
+        val plan = ss.swapped(LineageCut.leafOf(c.df))
+          .getOrElse(fail(s"round $round replans"))
+        assert(stateSorts(plan).isEmpty, s"round $round:\n$plan")
+        var next: LineageCut.Cut = null
+        assert(passes { next = ss.localCheckpoint(c.df, Nil) } == ((0L, 0L)))
+        assert(rows(next.df) ==
+          rows(LineageCut.localCheckpoint(step(c.df)).df))
+        c = next
+      }
     }
   }
 
